@@ -1,7 +1,9 @@
 .PHONY: test oracle bench zip submit
 
+# the Tier-1 command from ROADMAP.md
 test:
-	python -m pytest tests/ -x -q
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+	  timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 oracle:
 	python scripts/check_oracles.py /root/testdata/sf0.01
@@ -13,4 +15,4 @@ zip:
 	python -m zipfile -c sparkh3.zip sparkh3
 
 submit: zip
-	spark-submit --master 'local[8]' --py-files sparkh3.zip jobs/pipeline_job.py
+	spark-submit --master "local[$$(nproc)]" --py-files sparkh3.zip jobs/pipeline_job.py

@@ -253,7 +253,7 @@ def _warmup(spark) -> None:
     )
     df = df.withColumn("ll", H3F.cell_to_latlng_udf()(F.col("c")))
     df = df.withColumn("lll", H3F.cell_to_latlng_long_udf()(F.col("cl")))
-    df = df.withColumn("ring", udfs.k_ring_udf_int(1)(F.col("c")))
+    df = df.withColumn("ring", udfs.k_ring_udf_int(1)(F.col("cl")))
     df = df.withColumn(
         "pip",
         udfs.point_in_flat_polygon_udf()(

@@ -513,13 +513,6 @@ def s2_level_int(v: Column) -> Column:
     )
 
 
-def s2_range(v: Column) -> tuple[Column, Column]:
-    """(range_min, range_max) of a cell's leaf descendants — id-range
-    containment pruning (parquet min/max stats), native bit math."""
-    lsb = v.bitwiseAND(-v)
-    return v - (lsb - F.lit(1)), v + (lsb - F.lit(1))
-
-
 def latlng_to_s2_udf(level: int):
     """lat/lng -> int64 S2 cell id at `level` (Arrow-vectorized)."""
 

@@ -203,12 +203,3 @@ def multipolygon_to_cells(polys: list[Rings], res: int) -> np.ndarray:
     if not out:
         return np.array([], dtype=np.uint64)
     return np.unique(np.concatenate(out))
-
-
-def multipolygon_cover_cells(polys: list[Rings], res: int) -> np.ndarray:
-    out: list[np.ndarray] = []
-    for rings in polys:
-        out.append(polygon_cover_cells(rings, res))
-    if not out:
-        return np.array([], dtype=np.uint64)
-    return np.unique(np.concatenate(out))

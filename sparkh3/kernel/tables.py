@@ -135,6 +135,7 @@ def face_ijk_tables() -> tuple[np.ndarray, np.ndarray, np.ndarray]:
 
 
 def write_tables_cache() -> None:
+    """Regenerate ``_tables_cache.npz``: the only writer of the committed cache."""
     bc, rot, cw = _solve_tables()
     np.savez_compressed(_CACHE_FILE, bc=bc, rot=rot, cw=cw)
 

@@ -8,23 +8,35 @@
   theta-join while shuffling only co-located cells. Small polygon sides
   are broadcast (no shuffle of the points at all).
 
-* ``knn_join``: exact k-nearest-neighbors via iterative k_ring expansion:
-  candidates = points within grid-ring r of each query cell, r doubling
-  until every query has k neighbors with a safety margin that guarantees
-  no closer point can exist outside the ring; final exact haversine
-  top-k via a window.
+* ``knn_join``: exact k-nearest-neighbors. Three strategies, chosen by
+  the query side's size, share two primitives: ``_score_all`` scores a
+  few queries against every point, and ``_ring_round`` scores the points
+  inside int64 H3 disks around the queries and certifies each query
+  whose k-th neighbor lies within the disk's margin.
 """
 
 from __future__ import annotations
 
 import math
+from functools import reduce
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import functions as H3F
 
 EARTH_RADIUS_KM = 6371.007180918475
+
+# knn_join strategy thresholds on the query side's size: up to
+# NESTED_LOOP_QUERIES queries score every point; up to BROADCAST_QUERIES
+# take the broadcast certificate round; more run the iterative rounds
+NESTED_LOOP_QUERIES = 32
+BROADCAST_QUERIES = 1024
+# disk radius of the broadcast certificate round
+CERT_RINGS = 8
+_OUT = ("_qid", "_pid", "_dist", "_rank")
 
 
 def haversine_km(lat1: Column, lng1: Column, lat2: Column, lng2: Column) -> Column:
@@ -40,61 +52,15 @@ def haversine_km(lat1: Column, lng1: Column, lat2: Column, lng2: Column) -> Colu
     return F.lit(2.0 * EARTH_RADIUS_KM) * F.asin(F.sqrt(a))
 
 
-def _bounded_collect(df: DataFrame, n: int) -> list:
-    """``limit(n).collect()`` in ONE job. A bare CollectLimit runs the
-    incremental executeTake ladder (1, 4, 16, ... partitions — default
-    ``spark.sql.limit.initialNumPartitions=1``), which costs several
-    SEQUENTIAL scheduling round-trips just to fetch a handful of rows
-    from a many-partition frame (measured ~0.9 s vs ~0.4 s for a 28-row
-    query side on this host).
-
-    Small ``n`` (the common guard probe): raise
-    ``spark.sql.limit.initialNumPartitions`` for the one collect so the
-    ladder degenerates to a single all-partition pass — one job, ONE
-    stage, no exchange (measured 0.22 s vs 0.30 s for the two-stage
-    form). The driver receives at most n rows per partition, bounded by
-    the small n.
-
-    Large ``n`` (the 65k/100k misdeclared-huge-side guards): first run
-    the same one-stage pass bounded at the small probe size — when it
-    comes back non-full, the limit was not binding, so those rows ARE
-    the complete frame (the overwhelmingly common case for a
-    declared-small side) and the two-stage path is skipped. Only a side
-    that overflows the probe pays the repartition(1) form, whose
-    single-partition exchange means the DRIVER still receives only n
-    rows even from a truly huge side (the executeTake form would pull
-    n per partition to the driver), keeping the size guard
-    driver-safe."""
-    probe_cap = 4096
-
-    def _one_stage(m: int) -> list:
-        # first executeTake batch = 64 partitions: one scheduling round
-        # for any frame up to 64 partitions (every realistic
-        # declared-small side) while the driver's per-round intake
-        # stays bounded at 64 * m rows — a much larger first batch
-        # would make a many-partition misdeclared side ship
-        # partitions * m rows to the driver in one round
-        spark = df.sparkSession
-        key = "spark.sql.limit.initialNumPartitions"
-        try:
-            old = spark.conf.get(key)
-        except Exception:
-            old = None
-        spark.conf.set(key, "64")
-        try:
-            return df.limit(m).collect()
-        finally:
-            if old is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, old)
-
-    if n <= probe_cap:
-        return _one_stage(n)
-    probe = _one_stage(probe_cap)
-    if len(probe) < probe_cap:
-        return probe
-    return df.limit(n).repartition(1).collect()
+def _bounded_collect(df: DataFrame, n: int) -> pa.Table:
+    """At most ``n`` rows of ``df`` on the driver, as an Arrow table, in
+    one job and without touching session conf. ``toArrow`` executes the
+    whole CollectLimit plan (a per-partition limit, one single-partition
+    exchange, a global limit), so the driver receives at most ``n`` rows
+    whatever the partition count. ``limit(n).collect()`` would instead
+    run the incremental take ladder (1, 4, 16, ... partitions): one
+    sequential job per step on a many-partition frame."""
+    return df.limit(n).toArrow()
 
 
 def _avg_hex_area_km2(res: int) -> float:
@@ -156,6 +122,8 @@ def pip_join(
     validate it (``validate_key=False`` skips the one-job check when the
     caller already guarantees uniqueness, e.g. keys from a groupBy).
     """
+    from pyspark.sql.conversion import ArrowTableToRowsConversion
+
     from . import udfs
 
     poly_key = [c for c in polygons.columns if c != geometry_col][0]
@@ -169,7 +137,10 @@ def pip_join(
         # Guardrail: the collect is bounded at max_broadcast_rows + 1 —
         # a misdeclared huge polygon side falls back to the shuffle path
         # instead of OOMing the driver.
-        rows = _bounded_collect(polygons, max_broadcast_rows + 1)
+        rows = ArrowTableToRowsConversion.convert(
+            _bounded_collect(polygons, max_broadcast_rows + 1),
+            polygons.schema,
+        )
         if len(rows) > max_broadcast_rows:
             if resolution is None:
                 # the shuffle path needs one explicit cover resolution:
@@ -340,490 +311,257 @@ def knn_join(
     q_lng: str = "lng",
     p_lat: str = "lat",
     p_lng: str = "lng",
-    broadcast_threshold: int = 1024,
-    nested_loop_queries: int = 32,
 ) -> DataFrame:
     """Exact kNN join. Output: (query_id, point_id, dist_km, rank).
     Deterministic tie-break: (dist_km, point_id) ascending.
 
-    Three physical strategies, chosen by query-side size:
+    Three strategies, chosen by the query side's size and built on two
+    shared primitives (``_score_all``: every point against a few
+    broadcast queries; ``_ring_round``: the points in int64 H3 disks
+    around the queries, with a per-query exactness certificate):
 
-    * <= `nested_loop_queries` (default 32): score every point against
-      every query in one broadcast nested-loop codegen pass — no H3
-      encode (no Python boundary), no certificate, one job. Cheaper
-      than the disk join at any corpus size while |Q| stays this small.
-    * <= `broadcast_threshold` queries (the common analytics case): the
-      ring-distance-labeled disks of every query cell are computed
-      in-process by the kernel and broadcast; ONE join against the
-      points' cells + one window yields candidates with an exactness
-      certificate (kth distance within the covered ring margin).
-      Stragglers (sparse regions) fall through to the iterative path.
-    * larger query sides: iterative ring expansion at `resolution`,
-      escalating to coarser resolutions, brute-force for final
-      stragglers — exact in every density regime. The satisfied-query
-      set stays a DataFrame (broadcast semi/anti-joins); only scalar
-      counts reach the driver.
+    * <= ``NESTED_LOOP_QUERIES`` (32) queries: ``_score_all`` alone. No
+      H3 encode, no Python boundary, no certificate; cheaper than any
+      disk join at every corpus size while the query side is this small.
+    * <= ``BROADCAST_QUERIES`` (1024) queries (``_knn_broadcast``): one
+      ring round against disks computed in-process by the kernel and
+      broadcast. Queries it cannot certify (sparse regions) take
+      ``_score_all`` when there are at most 32 of them, else the
+      iterative rounds.
+    * larger query sides (``_knn_iterative``): ring rounds at
+      ``resolution`` and every 3 resolutions coarser, ``_score_all`` for
+      whatever is left at res <= 0. The open-query set stays a
+      DataFrame; only counts reach the driver.
+
+    The query side is read once, by a bounded one-job collect that is
+    both the size probe and the broadcast input; it writes no session
+    conf, so concurrent callers on one session do not interfere.
     """
-    # one bounded limit-collect is BOTH the strategy-switch size probe
-    # and the broadcast input (no separate count job): > threshold rows
-    # means the extra collect work was one wasted row batch, not a scan
-    qrows = _bounded_collect(
-        queries.select(query_id, q_lat, q_lng), broadcast_threshold + 1
-    )
-    if 0 < len(qrows) <= min(nested_loop_queries, broadcast_threshold):
-        return _knn_nested_loop(
-            points, k, query_id, point_id, q_lat, q_lng, p_lat, p_lng,
-            qrows=qrows,
-        )
-    if 0 < len(qrows) <= broadcast_threshold:
-        return _knn_broadcast(
-            queries, points, k, resolution,
-            query_id, point_id, q_lat, q_lng, p_lat, p_lng,
-            qrows=qrows,
-        )
-    return _knn_iterative(
-        queries, points, k, resolution,
-        query_id, point_id, q_lat, q_lng, p_lat, p_lng,
-    )
-
-
-def _validate_qrows(qrows, query_id: str, q_lat: str, q_lng: str) -> None:
-    """Reject null/NaN query coordinates up front: a NaN would encode to
-    a garbage cell (or poison every haversine) and the join would
-    silently return arbitrary rows instead of failing."""
-    bad = [
-        r[query_id]
-        for r in qrows
-        if r[q_lat] is None
-        or r[q_lng] is None
-        or r[q_lat] != r[q_lat]
-        or r[q_lng] != r[q_lng]
-    ]
-    if bad:
-        raise ValueError(
-            f"null/NaN query coordinates (ids {bad[:5]}...) — they would "
-            "encode to garbage cells and return arbitrary neighbors"
-        )
-
-
-def _knn_nested_loop(
-    points: DataFrame,
-    k: int,
-    query_id: str,
-    point_id: str,
-    q_lat: str,
-    q_lng: str,
-    p_lat: str,
-    p_lng: str,
-    qrows,
-) -> DataFrame:
-    """Tiny-query-side exact kNN: broadcast the queries themselves and
-    score every point against every query in ONE codegen pass — no H3
-    encode, no Python boundary, no certificate machinery.
-
-    Scale rationale (guide §1.1 first-principles): per point the
-    certificate path pays one Arrow round-trip + NumPy cell encode plus
-    a broadcast hash probe; this path pays |Q| haversines of pure JVM
-    codegen. For |Q| <= ~32 the nested loop is cheaper at ANY corpus
-    size, and the rank-limit pushdown (WindowGroupLimit) keeps only the
-    per-task top-k per query, so the exchange after the 32x row
-    inflation moves O(tasks * |Q| * k) rows, not the inflated scan.
-    Exact by construction (every pair is scored), so no straggler or
-    fallback passes exist — one job end to end."""
-    import pandas as pd
-
-    _validate_qrows(qrows, query_id, q_lat, q_lng)
-    sq = points.sparkSession.createDataFrame(
-        pd.DataFrame(
-            {
-                "_qid": [r[query_id] for r in qrows],
-                "_qlat": [float(r[q_lat]) for r in qrows],
-                "_qlng": [float(r[q_lng]) for r in qrows],
-            }
-        )
-    )
-    pts = points.select(
-        F.col(point_id).alias("_pid"),
-        F.col(p_lat).alias("_plat"),
-        F.col(p_lng).alias("_plng"),
-    )
-    cand = pts.crossJoin(F.broadcast(sq)).withColumn(
-        "_dist",
-        haversine_km(
-            F.col("_qlat"), F.col("_qlng"), F.col("_plat"), F.col("_plng")
-        ),
-    )
-    w = Window.partitionBy("_qid").orderBy(
-        F.col("_dist").asc(), F.col("_pid").asc()
-    )
-    return (
-        cand.withColumn("_rank", F.row_number().over(w))
-        .filter(F.col("_rank") <= k)
-        .select(
-            F.col("_qid").alias(query_id),
-            F.col("_pid").alias(point_id),
-            F.col("_dist").alias("dist_km"),
-            F.col("_rank").alias("rank"),
-        )
-    )
-
-
-def _query_disks(
-    spark,
-    qrows,
-    query_id: str,
-    q_lat: str,
-    q_lng: str,
-    resolution: int,
-    n_rings: int,
-) -> DataFrame:
-    """Ring-labeled broadcast disks (_qid, _qlat, _qlng, _cell0) for a
-    collected query side — the shared scaffold of the kNN broadcast
-    path and radius_join. Cells ride as INT64 (the at-scale storage
-    form): the equi-join probes a long column instead of allocating a
-    hex string per point row, and the cell ids are dropped before the
-    result surfaces, so the representation is invisible to callers.
-    Rejects null/NaN coordinates up front: a NaN would encode to a
-    garbage cell and the join would silently return arbitrary rows
-    instead of failing."""
-    import numpy as np
-
-    from ..kernel import geo as kgeo
-    from ..kernel import traversal as tv
-
-    _validate_qrows(qrows, query_id, q_lat, q_lng)
-    qla = np.array([r[q_lat] for r in qrows], dtype=np.float64)
-    qlo = np.array([r[q_lng] for r in qrows], dtype=np.float64)
-    qcells = kgeo.latlng_to_cell(qla, qlo, resolution)
-    # the full disk(n_rings) in ONE BFS (per-ring calls would re-expand
-    # the whole neighborhood once per ring — O(k^2) probe levels)
-    o, c, _ = tv.grid_disk_distances_grouped(qcells, n_rings)
-    # build through pandas so createDataFrame takes the Arrow path —
-    # the row-list path pickles every disk row through py4j (a few
-    # thousand rows x ~0.2 s of pure serialization per call)
-    import pandas as pd
-
-    ids = [r[query_id] for r in qrows]
-    disks = pd.DataFrame(
-        {
-            "_qid": [ids[oi] for oi in o.tolist()],
-            "_qlat": qla[o],
-            "_qlng": qlo[o],
-            "_cell0": c.view(np.int64),
-        }
-    )
-    return spark.createDataFrame(disks)
-
-
-def _knn_broadcast(
-    queries: DataFrame,
-    points: DataFrame,
-    k: int,
-    resolution: int,
-    query_id: str,
-    point_id: str,
-    q_lat: str,
-    q_lng: str,
-    p_lat: str,
-    p_lng: str,
-    max_ring: int = 8,
-    qrows=None,
-) -> DataFrame:
-    """Fused small-query-side kNN: broadcast ring-labeled query disks,
-    one equi-join + one window; exact-by-certificate, iterative fallback
-    for queries the `max_ring` disk cannot certify.
-
-    The narrow (id, lat, lng, cell) point projection is persisted for
-    the duration of the call (and unpersisted before returning): the
-    certificate action and the straggler pass both scan it, and
-    without the cache the second pass re-runs the caller's entire
-    point-side pipeline (e.g. a span-extraction chain) — guide §5's
-    "reused AND expensive to recompute" case. Blocks that don't fit
-    memory spill to disk; at worst the straggler pass degrades to the
-    rescan it always was."""
-    if qrows is None:
-        # same guardrail as knn_join's dispatch (VERDICT r5 #7): this
-        # path broadcasts the query side, so a misdeclared huge query
-        # frame must fail fast, not OOM the driver
-        qrows = _bounded_collect(
-            queries.select(query_id, q_lat, q_lng), 65537
-        )
-        if len(qrows) > 65536:
-            raise ValueError(
-                "_knn_broadcast: query side exceeds 65536 rows — use "
-                "_knn_iterative (knn_join dispatches automatically)"
-            )
-    qdf = _query_disks(
-        points.sparkSession, qrows, query_id, q_lat, q_lng,
-        resolution, max_ring,
-    )
-    cell = H3F.latlng_to_cell_long_udf(resolution)
-    pts = points.select(
-        F.col(point_id).alias("_pid"),
-        F.col(p_lat).alias("_plat"),
-        F.col(p_lng).alias("_plng"),
-    ).withColumn("_cell0", cell(F.col("_plat"), F.col("_plng")))
-    pts = pts.persist()
-    cand = pts.join(F.broadcast(qdf), "_cell0").withColumn(
-        "_dist",
-        haversine_km(
-            F.col("_qlat"), F.col("_qlng"), F.col("_plat"), F.col("_plng")
-        ),
-    )
-    w = Window.partitionBy("_qid").orderBy(F.col("_dist").asc(), F.col("_pid").asc())
-    topk = (
-        cand.withColumn("_rank", F.row_number().over(w))
-        .filter(F.col("_rank") <= k)
-        .persist()
-    )
-    # exactness certificate: every point outside the max_ring disk is at
-    # haversine >= (max_ring-1) * min cell width. The certified-query
-    # set is bounded by the path's own <=threshold query contract, so it
-    # collects to the driver in ONE action that doubles as the straggler
-    # count — certification, straggler routing, and result assembly then
-    # need no extra semi/anti-join jobs (2 actions total, not 3; each
-    # Spark job re-scans a derived points frame and pays a scheduling
-    # round trip, so action count IS the cost at every scale)
-    margin = (max_ring - 1) * min_cell_width_km(resolution)
-    per_q = topk.groupBy("_qid").agg(
-        F.count("*").alias("_n"), F.max("_dist").alias("_kth")
-    )
-    if len(qrows) <= 32:
-        # tiny query side (crossJoin fallback is safe for ALL of it):
-        # certification, straggler routing and the fallback stay
-        # DataFrames — semi/anti joins on the certified set replace the
-        # driver collect, so ONE localCheckpoint action materializes
-        # the whole result instead of a certificate collect followed by
-        # a second assembly action. Same sets by construction.
-        import pandas as pd
-
-        safe = per_q.filter(
-            (F.col("_n") >= k) & (F.col("_kth") <= F.lit(margin))
-        ).select("_qid")
-        done = topk.join(F.broadcast(safe), "_qid", "semi").select(
-            F.col("_qid").alias(query_id),
-            F.col("_pid").alias(point_id),
-            F.col("_dist").alias("dist_km"),
-            F.col("_rank").alias("rank"),
-        )
-        q_small = points.sparkSession.createDataFrame(
-            pd.DataFrame(
-                {
-                    "_qid": [r[query_id] for r in qrows],
-                    "_qlat": [float(r[q_lat]) for r in qrows],
-                    "_qlng": [float(r[q_lng]) for r in qrows],
-                }
-            )
-        )
-        sq = q_small.join(F.broadcast(safe), "_qid", "anti")
-        cand2 = pts.crossJoin(F.broadcast(sq)).withColumn(
-            "_dist",
-            haversine_km(
-                F.col("_qlat"), F.col("_qlng"), F.col("_plat"), F.col("_plng")
-            ),
-        )
-        rest = (
-            cand2.withColumn("_rank", F.row_number().over(w))
-            .filter(F.col("_rank") <= k)
-            .select(
-                F.col("_qid").alias(query_id),
-                F.col("_pid").alias(point_id),
-                F.col("_dist").alias("dist_km"),
-                F.col("_rank").alias("rank"),
-            )
-        )
-        out = done.unionByName(rest).localCheckpoint(eager=True)
-        topk.unpersist()
-        pts.unpersist()
-        return out
-    safe_ids = [
-        r["_qid"]
-        for r in per_q.filter(
-            (F.col("_n") >= k) & (F.col("_kth") <= F.lit(margin))
-        )
-        .select("_qid")
-        .collect()
-    ]
-    n_safe = len(safe_ids)
-    done = (
-        topk.filter(
-            F.col("_qid").isin(safe_ids) if safe_ids else F.lit(False)
-        )
-        .select(
-            F.col("_qid").alias(query_id),
-            F.col("_pid").alias(point_id),
-            F.col("_dist").alias("dist_km"),
-            F.col("_rank").alias("rank"),
-        )
-    )
-    if n_safe == len(qrows):
-        # localCheckpoint (not persist): materializes the result in this
-        # one action AND is GC-cleaned when the caller drops it
-        out = done.localCheckpoint(eager=True)
-        topk.unpersist()
-        pts.unpersist()
-        return out
-    stragglers = queries.filter(
-        ~F.col(query_id).isin(safe_ids) if safe_ids else F.lit(True)
-    )
-    n_strag = len(qrows) - n_safe
-    if n_strag <= 32:
-        # few uncertified (sparse-region) queries: ONE broadcast
-        # nested-loop pass over the points beats several ring-join
-        # rounds that each rescan the points anyway
-        sq = stragglers.select(
-            F.col(query_id).alias("_qid"),
-            F.col(q_lat).alias("_qlat"),
-            F.col(q_lng).alias("_qlng"),
-        )
-        cand2 = pts.crossJoin(F.broadcast(sq)).withColumn(
-            "_dist",
-            haversine_km(
-                F.col("_qlat"), F.col("_qlng"), F.col("_plat"), F.col("_plng")
-            ),
-        )
-        rest = (
-            cand2.withColumn("_rank", F.row_number().over(w))
-            .filter(F.col("_rank") <= k)
-            .select(
-                F.col("_qid").alias(query_id),
-                F.col("_pid").alias(point_id),
-                F.col("_dist").alias("dist_km"),
-                F.col("_rank").alias("rank"),
-            )
-        )
+    q = _query_side(queries, query_id, q_lat, q_lng)
+    qt = _collect_queries(q, BROADCAST_QUERIES + 1)
+    pts = _point_side(points, point_id, p_lat, p_lng)
+    if qt.num_rows <= NESTED_LOOP_QUERIES:
+        out = _score_all(pts, pts.sparkSession.createDataFrame(qt), k)
     else:
-        rest = _knn_iterative(
-            stragglers, points, k, resolution,
-            query_id, point_id, q_lat, q_lng, p_lat, p_lng,
-        )
-    out = done.unionByName(rest).localCheckpoint(eager=True)
-    topk.unpersist()
-    pts.unpersist()
-    return out
-
-
-def _knn_iterative(
-    queries: DataFrame,
-    points: DataFrame,
-    k: int,
-    resolution: int,
-    query_id: str = "query_id",
-    point_id: str = "point_id",
-    q_lat: str = "lat",
-    q_lng: str = "lng",
-    p_lat: str = "lat",
-    p_lng: str = "lng",
-) -> DataFrame:
-    from . import udfs
-
-    cell = H3F.latlng_to_cell_udf(resolution)
-    pts = points.select(
-        F.col(point_id).alias("_pid"),
-        F.col(p_lat).alias("_plat"),
-        F.col(p_lng).alias("_plng"),
-    ).withColumn("_cell0", cell(F.col("_plat"), F.col("_plng")))
-    q_all = queries.select(
-        F.col(query_id).alias("_qid"),
-        F.col(q_lat).alias("_qlat"),
-        F.col(q_lng).alias("_qlng"),
-    ).withColumn("_qcell0", cell(F.col("_qlat"), F.col("_qlng")))
-    # localCheckpoint (GC-cleaned), not persist (leaks a CacheManager
-    # entry per call): both sides are re-scanned every ring round
-    q_all = q_all.localCheckpoint(eager=True)
-    pts = pts.localCheckpoint(eager=True)
-
-    def topk_of(cand: DataFrame) -> DataFrame:
-        cand = cand.withColumn(
-            "_dist",
-            haversine_km(
-                F.col("_qlat"), F.col("_qlng"), F.col("_plat"), F.col("_plng")
-            ),
-        )
-        w = Window.partitionBy("_qid").orderBy(
-            F.col("_dist").asc(), F.col("_pid").asc()
-        )
-        return cand.withColumn("_rank", F.row_number().over(w)).filter(
-            F.col("_rank") <= k
-        )
-
-    remaining = q_all
-    n_remaining = q_all.count()
-    done_parts: list[DataFrame] = []
-    res_cur = resolution
-    if n_remaining == 0:
-        empty = topk_of(q_all.limit(0).crossJoin(pts.limit(0))).drop(
-            "_cell0", "_qcell0"
-        )
-        return empty.select(
-            F.col("_qid").alias(query_id),
-            F.col("_pid").alias(point_id),
-            F.col("_dist").alias("dist_km"),
-            F.col("_rank").alias("rank"),
-        )
-    while n_remaining > 0:
-        if res_cur <= 0:
-            # brute force the stragglers (few by construction)
-            cand = remaining.crossJoin(pts)
-            part = topk_of(cand).drop("_cell0", "_qcell0").localCheckpoint(
-                eager=True
-            )
-            done_parts.append(part)
-            break
-        w_min = min_cell_width_km(res_cur)
-        qc = (
-            F.col("_qcell0")
-            if res_cur == resolution
-            else H3F.h3_parent("_qcell0", res_cur)
-        )
-        pc = (
-            F.col("_cell0")
-            if res_cur == resolution
-            else H3F.h3_parent("_cell0", res_cur)
-        )
-        rem = remaining.withColumn("_qcell", qc)
-        pts_r = pts.withColumn("_cell", pc)
-        for r in (2, 8):
-            ring = udfs.k_ring_udf_int(r)
-            cand = rem.withColumn("_cell", F.explode(ring(F.col("_qcell"))))
-            cand = cand.join(pts_r, "_cell", "inner")
-            topk = topk_of(cand).persist()
-            per_q = topk.groupBy("_qid").agg(
-                F.count("*").alias("_n"), F.max("_dist").alias("_kth")
-            )
-            # any point outside ring r is at haversine >= (r-1)*w_min
-            safe = (
-                per_q.filter(
-                    (F.col("_n") >= k)
-                    & (F.col("_kth") <= F.lit(max(r - 1, 1) * w_min))
-                )
-                .select("_qid")
-                .localCheckpoint(eager=True)
-            )
-            n_safe = safe.count()
-            if n_safe:
-                done = (
-                    topk.join(F.broadcast(safe), "_qid", "semi")
-                    .drop("_cell", "_cell0", "_qcell", "_qcell0")
-                    .localCheckpoint(eager=True)
-                )
-                done_parts.append(done)
-                remaining = remaining.join(F.broadcast(safe), "_qid", "anti")
-                rem = rem.join(F.broadcast(safe), "_qid", "anti")
-                n_remaining -= n_safe
-            topk.unpersist()
-            if n_remaining == 0:
-                break
-        res_cur -= 3
-    out = done_parts[0]
-    for p in done_parts[1:]:
-        out = out.unionByName(p)
+        # the int64 cell projection is shared by every ring round and the
+        # straggler pass; cached for the call so none of them re-runs the
+        # caller's point pipeline or the encode (the strategies return
+        # only frames that no longer read it)
+        pts = _with_cells(pts, resolution).persist()
+        try:
+            if qt.num_rows <= BROADCAST_QUERIES:
+                out = _knn_broadcast(qt, pts, k, resolution)
+            else:
+                out = _knn_iterative(q, pts, k, resolution)
+        finally:
+            pts.unpersist()
     return out.select(
         F.col("_qid").alias(query_id),
         F.col("_pid").alias(point_id),
         F.col("_dist").alias("dist_km"),
         F.col("_rank").alias("rank"),
     )
+
+
+def _query_side(
+    queries: DataFrame, query_id: str, q_lat: str, q_lng: str
+) -> DataFrame:
+    return queries.select(
+        F.col(query_id).alias("_qid"),
+        F.col(q_lat).cast("double").alias("_qlat"),
+        F.col(q_lng).cast("double").alias("_qlng"),
+    )
+
+
+def _point_side(
+    points: DataFrame, point_id: str, p_lat: str, p_lng: str
+) -> DataFrame:
+    return points.select(
+        F.col(point_id).alias("_pid"),
+        F.col(p_lat).alias("_plat"),
+        F.col(p_lng).alias("_plng"),
+    )
+
+
+def _collect_queries(q: DataFrame, n: int) -> pa.Table:
+    """At most ``n`` rows of a (_qid, _qlat, _qlng) query side. Null/NaN
+    coordinates raise: they would encode to garbage cells (or poison
+    every haversine) and the join would silently return arbitrary rows
+    instead of failing."""
+    qt = _bounded_collect(q, n)
+    bad = pc.or_(
+        pc.is_nan(pc.fill_null(qt["_qlat"], math.nan)),
+        pc.is_nan(pc.fill_null(qt["_qlng"], math.nan)),
+    )
+    if pc.any(bad).as_py():
+        ids = qt["_qid"].filter(bad).to_pylist()
+        raise ValueError(
+            f"null/NaN query coordinates (ids {ids[:5]}...) — they would "
+            "encode to garbage cells and return arbitrary neighbors"
+        )
+    return qt
+
+
+def _with_cells(pts: DataFrame, resolution: int) -> DataFrame:
+    """(_pid, _plat, _plng) points plus their int64 cell ``_cell0`` at
+    ``resolution``: the projection every ring round joins through."""
+    cell = H3F.latlng_to_cell_long_udf(resolution)
+    return pts.withColumn("_cell0", cell(F.col("_plat"), F.col("_plng")))
+
+
+def _top_k(cand: DataFrame, k: int) -> DataFrame:
+    """Each query's k nearest candidate rows: haversine ``_dist`` and
+    ``_rank`` in the (dist_km, point_id) order every strategy shares."""
+    w = Window.partitionBy("_qid").orderBy(
+        F.col("_dist").asc(), F.col("_pid").asc()
+    )
+    return (
+        cand.withColumn(
+            "_dist",
+            haversine_km(
+                F.col("_qlat"), F.col("_qlng"), F.col("_plat"), F.col("_plng")
+            ),
+        )
+        .withColumn("_rank", F.row_number().over(w))
+        .filter(F.col("_rank") <= k)
+    )
+
+
+def _score_all(pts: DataFrame, queries: DataFrame, k: int) -> DataFrame:
+    """Exact top-k by scoring every point against every query: the
+    (_qid, _qlat, _qlng) queries are broadcast and crossed with the
+    (_pid, _plat, _plng) points in one codegen pass. The rank-limit
+    pushdown (WindowGroupLimit) keeps each task's top k per query, so
+    the exchange after the |Q|-fold row inflation moves O(tasks·|Q|·k)
+    rows, not the inflated scan. Serves the nested-loop strategy, the
+    straggler pass and the coarsest-resolution fallback."""
+    return _top_k(pts.crossJoin(F.broadcast(queries)), k).select(*_OUT)
+
+
+def _ring_round(
+    pts: DataFrame, disks: DataFrame, k: int, res: int, rings: int
+) -> DataFrame:
+    """One ring round. ``disks`` holds (_qid, _qlat, _qlng, _cell): the
+    int64 cells at ``res`` of each query's ``rings``-disk; the points
+    join it through the parent at ``res`` of their ``_cell0``. Every
+    point outside a disk is at least (rings - 1) min cell widths away,
+    so a query is certified (``_ok``) once it has k candidates and its
+    k-th lies within that margin. Count and k-th distance come out of
+    the ranking's own window pass. The result is materialised once,
+    since both the certified-set read and the output scan it
+    (localCheckpoint, not persist: its blocks are GC-cleaned once the
+    caller drops the frame)."""
+    margin = (rings - 1) * min_cell_width_km(res)
+    per_q = Window.partitionBy("_qid")
+    cand = pts.withColumn(
+        "_cell", H3F.h3_parent_int(F.col("_cell0"), res)
+    ).join(disks, "_cell")
+    return (
+        _top_k(cand, k)
+        .withColumn(
+            "_ok",
+            (F.count("*").over(per_q) >= k)
+            & (F.max("_dist").over(per_q) <= F.lit(margin)),
+        )
+        .select(*_OUT, "_ok")
+        .localCheckpoint(eager=True)
+    )
+
+
+def _certified(ranked: DataFrame) -> DataFrame:
+    """The ids a ring round certified, one row each."""
+    return ranked.filter(F.col("_ok") & (F.col("_rank") == 1)).select("_qid")
+
+
+def _query_disks(
+    spark, qt: pa.Table, resolution: int, n_rings: int
+) -> DataFrame:
+    """(_qid, _qlat, _qlng, _cell) rows: every cell of each collected
+    query's ``n_rings``-disk at ``resolution``, computed in-process by
+    the kernel. Cells ride as int64, so the equi-join probes a long
+    column instead of allocating a hex string per point row; they are
+    dropped before any result surfaces. Built from Arrow, so the frame
+    is a local relation (no per-row pickling through py4j)."""
+    import numpy as np
+
+    from ..kernel import geo as kgeo
+    from ..kernel import traversal as tv
+
+    qcells = kgeo.latlng_to_cell(
+        qt["_qlat"].to_numpy(), qt["_qlng"].to_numpy(), resolution
+    )
+    owner, cells = tv.grid_disk_grouped(qcells, n_rings)
+    disks = qt.take(owner).append_column(
+        "_cell", pa.array(cells.view(np.int64))
+    )
+    return spark.createDataFrame(disks)
+
+
+def _knn_broadcast(
+    qt: pa.Table, pts: DataFrame, k: int, resolution: int
+) -> DataFrame:
+    """Certificate strategy for a collected query side ``qt``: one ring
+    round of ``CERT_RINGS`` rings against broadcast disks. Only the
+    certified ids (<= |Q| rows) reach the driver; the rest take
+    ``_score_all`` when at most ``NESTED_LOOP_QUERIES`` remain (one pass
+    beats several ring rounds that each rescan the points), else the
+    iterative rounds. ``pts`` carries ``_cell0`` (``_with_cells``)."""
+    spark = pts.sparkSession
+    disks = _query_disks(spark, qt, resolution, CERT_RINGS)
+    ranked = _ring_round(pts, F.broadcast(disks), k, resolution, CERT_RINGS)
+    ok = _certified(ranked).toArrow()["_qid"].combine_chunks()
+    left = qt.filter(pc.invert(pc.is_in(qt["_qid"], value_set=ok)))
+    done = ranked.filter(F.col("_ok")).select(*_OUT)
+    if left.num_rows == 0:
+        return done
+    sq = spark.createDataFrame(left)
+    if left.num_rows <= NESTED_LOOP_QUERIES:
+        rest = _score_all(pts, sq, k).localCheckpoint(eager=True)
+    else:
+        rest = _knn_iterative(sq, pts, k, resolution)
+    return done.unionByName(rest)
+
+
+def _knn_iterative(
+    q: DataFrame, pts: DataFrame, k: int, resolution: int
+) -> DataFrame:
+    """Iterative strategy for a non-empty (_qid, _qlat, _qlng) query
+    side of any size: ring rounds of 2, then 8 rings at ``resolution``,
+    then every 3 resolutions coarser; queries still open at res <= 0
+    take ``_score_all``. The open set stays a DataFrame (broadcast
+    anti-joins against each round's certified ids); only counts reach
+    the driver. ``pts`` carries ``_cell0`` (``_with_cells``)."""
+    from . import udfs
+
+    cell = H3F.latlng_to_cell_long_udf(resolution)
+    # every round rescans the open queries
+    left = q.withColumn(
+        "_qcell0", cell(F.col("_qlat"), F.col("_qlng"))
+    ).localCheckpoint(eager=True)
+    n_left = left.count()
+    parts: list[DataFrame] = []
+    res = resolution
+    while n_left and res > 0:
+        for rings in (2, 8):
+            disk = udfs.k_ring_udf_int(rings)(
+                H3F.h3_parent_int(F.col("_qcell0"), res)
+            )
+            disks = left.withColumn("_cell", F.explode(disk)).drop("_qcell0")
+            ranked = _ring_round(pts, disks, k, res, rings)
+            ok = _certified(ranked)
+            n_ok = ok.count()
+            if n_ok:
+                parts.append(ranked.filter(F.col("_ok")).select(*_OUT))
+                left = left.join(F.broadcast(ok), "_qid", "anti")
+                n_left -= n_ok
+            if not n_left:
+                break
+        res -= 3
+    if n_left:
+        parts.append(
+            _score_all(pts, left.drop("_qcell0"), k).localCheckpoint(eager=True)
+        )
+    return reduce(DataFrame.unionByName, parts)
 
 
 def radius_join(
@@ -859,8 +597,6 @@ def radius_join(
     side is declared-small (<= max_queries, enforced by a bounded
     limit-collect, same guardrail discipline as pip_join).
     """
-    from .. import functions as H3F
-
     if radius_km <= 0:
         raise ValueError(f"radius_km must be positive, got {radius_km}")
     if resolution is None:
@@ -880,37 +616,23 @@ def radius_join(
                 else "use a coarser resolution or raise max_ring"
             )
         )
-    qrows = _bounded_collect(
-        queries.select(query_id, q_lat, q_lng), max_queries + 1
+    qt = _collect_queries(
+        _query_side(queries, query_id, q_lat, q_lng), max_queries + 1
     )
-    if len(qrows) > max_queries:
+    if qt.num_rows > max_queries:
         raise ValueError(
             f"radius_join broadcasts the query side; got > {max_queries} "
             "rows — pre-aggregate or raise max_queries explicitly"
         )
-    if not qrows:
-        return (
-            queries.select(F.col(query_id)).limit(0)
-            .crossJoin(points.select(F.col(point_id)).limit(0))
-            .withColumn("dist_km", F.lit(0.0))
-            .select(query_id, point_id, "dist_km")
-        )
-    qdf = _query_disks(
-        points.sparkSession, qrows, query_id, q_lat, q_lng,
-        resolution, k_rings,
-    )
-    # int64 cells (see _query_disks): no per-point hex-string
-    # allocation, long equi-join key; dropped before the output.
-    # asNondeterministic: the equi-join infers IsNotNull(_cell0), and
+    qdf = _query_disks(points.sparkSession, qt, resolution, k_rings)
+    # asNondeterministic: the equi-join infers IsNotNull(_cell), and
     # pushing that filter below the projection makes the optimizer
     # evaluate the encode UDF TWICE per point (guide §4.4 — the before
     # plan carried two ArrowEvalPython nodes for one call site)
     cell = H3F.latlng_to_cell_long_udf(resolution).asNondeterministic()
-    pts = points.select(
-        F.col(point_id).alias("_pid"),
-        F.col(p_lat).alias("_plat"),
-        F.col(p_lng).alias("_plng"),
-    ).withColumn("_cell0", cell(F.col("_plat"), F.col("_plng")))
+    pts = _point_side(points, point_id, p_lat, p_lng).withColumn(
+        "_cell", cell(F.col("_plat"), F.col("_plng"))
+    )
     dist = F.round(
         haversine_km(
             F.col("_qlat"), F.col("_qlng"), F.col("_plat"), F.col("_plng")
@@ -918,7 +640,7 @@ def radius_join(
         6,
     )
     return (
-        pts.join(F.broadcast(qdf), "_cell0")
+        pts.join(F.broadcast(qdf), "_cell")
         .withColumn("_dist", dist)
         .filter(F.col("_dist") <= F.lit(float(radius_km)))
         .select(

@@ -90,26 +90,6 @@ def _hyperplane(dim: int, table: int, bit: int) -> list[float]:
     return out
 
 
-def lsh_signature(vec: Column, dim: int, table: int, n_bits: int = 12) -> Column:
-    """Random-hyperplane signature: n_bits sign bits packed to a long."""
-    sig = F.lit(0).cast("long")
-    for b in range(n_bits):
-        plane = _hyperplane(dim, table, b)
-        proj = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(x) for x in plane]),
-                lambda x, w: x.cast("double") * w,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        sig = sig + F.when(proj > 0, F.lit(1 << b).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return sig
-
-
 def cosine_neardup_pairs(
     corpus: DataFrame,
     threshold: float,

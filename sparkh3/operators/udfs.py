@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, BooleanType, StringType
+from pyspark.sql.types import ArrayType, BooleanType, LongType, StringType
 
 
 def polyfill_cover_udf(res: int):
@@ -270,31 +270,32 @@ def pip_broadcast_fused(
 
 
 def k_ring_udf_int(k: int):
-    """cell -> array<string> disk (internal: kNN expansion). Null rows
-    must be EXCLUDED before the kernel call, not just masked after:
-    grid_disk_grouped takes the batch resolution from its first cell,
-    so a null (folded to cell 0, res 0) would poison every other row's
-    disk in the Arrow batch."""
+    """int64 cell -> array<bigint> disk (internal: kNN ring rounds).
+    Nulls are gated JVM-side (``functions._null_safe_int_udf``), so the
+    Arrow batch stays exact int64. grid_disk takes a batch's resolution
+    from its first cell, so cells are grouped by resolution first: the
+    res-0 null sentinel must not set the resolution of the real cells."""
+    from ..functions import _H3_CELL_SENTINEL, _null_safe_int_udf
 
-    @F.pandas_udf(ArrayType(StringType()))
+    @F.pandas_udf(ArrayType(LongType()))
     def f(cell: pd.Series) -> pd.Series:
         import numpy as np
 
-        from ..functions import _grouped_to_lists, _np_str_cells
+        from ..kernel import index as ix
         from ..kernel import traversal as tv
 
-        cells, null = _np_str_cells(cell)
-        n = len(cells)
-        out: list = [None] * n
-        sel = np.where(~null)[0]
-        if sel.size:
+        cells = cell.to_numpy(dtype=np.int64).view(np.uint64)
+        res = ix.get_resolution(cells)
+        out = np.empty(len(cells), dtype=object)
+        for r in np.unique(res):
+            sel = np.flatnonzero(res == r)
             o, c = tv.grid_disk_grouped(cells[sel], k)
-            lists = _grouped_to_lists(o, c, len(sel))
-            for li, gi in enumerate(sel):
-                out[gi] = lists[li]
+            bounds = np.cumsum(np.bincount(o, minlength=len(sel)))[:-1]
+            for gi, disk in zip(sel, np.split(c.view(np.int64), bounds)):
+                out[gi] = disk
         return pd.Series(out)
 
     # the disk column always feeds a non-outer explode, whose inferred
     # size(...) > 0 filter would otherwise push below the projection and
     # double-evaluate the UDF (guide §4.4)
-    return f.asNondeterministic()
+    return _null_safe_int_udf(f.asNondeterministic(), _H3_CELL_SENTINEL)

@@ -200,43 +200,48 @@ class TestKnnJoin:
         assert got.count() == 0
         assert set(got.columns) == {"query_id", "point_id", "dist_km", "rank"}
 
-    def test_knn_nested_loop_equals_certificate_path(self, spark):
-        """The tiny-query-side nested-loop strategy and the
-        ring-certificate broadcast strategy (forced via
-        nested_loop_queries=0) must produce identical (qid, rank) ->
-        pid assignments AND identical distances."""
+    @staticmethod
+    def _strategy_inputs(spark, queries, resolution):
+        """The internal frames knn_join hands its strategies: the query
+        side as a local frame and as a collected Arrow table, the points
+        as (_pid, _plat, _plng), and those plus int64 cells."""
         sdf = datagen.interleaved_documents(spark, SF_DIR)
-        pts = spans.extract_geometry(sdf).select(
-            F.col("doc_id").alias("point_id"), "lat", "lng"
+        pts = joins._point_side(
+            spans.extract_geometry(sdf), "doc_id", "lat", "lng"
         )
+        q = joins._query_side(queries, "query_id", "lat", "lng")
+        qt = joins._collect_queries(q, 1000)
+        return (
+            spark.createDataFrame(qt), qt, pts,
+            joins._with_cells(pts, resolution),
+        )
+
+    def test_knn_nested_loop_equals_certificate_path(self, spark):
+        """The tiny-query-side nested-loop strategy (_score_all) and the
+        ring-certificate broadcast strategy must produce identical
+        (qid, rank) -> pid assignments AND identical distances."""
         queries = spark.createDataFrame(
             [Row(query_id=1, lat=40.75, lng=-73.99),
              Row(query_id=2, lat=51.5, lng=-0.1),
              Row(query_id=3, lat=0.0, lng=0.0)]
         )
-        nested = joins.knn_join(queries, pts, k=5, resolution=5)
-        cert = joins.knn_join(
-            queries, pts, k=5, resolution=5, nested_loop_queries=0
-        )
+        qdf, qt, pts, cells = self._strategy_inputs(spark, queries, 5)
+        nested = joins._score_all(pts, qdf, 5)
+        cert = joins._knn_broadcast(qt, cells, 5, 5)
         key = lambda rows: {
-            (r.query_id, r.rank): (r.point_id, r.dist_km) for r in rows
+            (r._qid, r._rank): (r._pid, r._dist) for r in rows
         }
         assert key(nested.collect()) == key(cert.collect())
 
     def test_knn_broadcast_equals_iterative(self, spark):
-        sdf = datagen.interleaved_documents(spark, SF_DIR)
-        pts = spans.extract_geometry(sdf).select(
-            F.col("doc_id").alias("point_id"), "lat", "lng"
-        )
         queries = spark.createDataFrame(
             [Row(query_id=1, lat=40.75, lng=-73.99),
              Row(query_id=2, lat=51.5, lng=-0.1)]
         )
-        fast = joins.knn_join(queries, pts, k=4, resolution=5)
-        slow = joins.knn_join(
-            queries, pts, k=4, resolution=5, broadcast_threshold=0
-        )
-        key = lambda rows: {(r.query_id, r.rank): r.point_id for r in rows}
+        qdf, qt, _, cells = self._strategy_inputs(spark, queries, 5)
+        fast = joins._knn_broadcast(qt, cells, 4, 5)
+        slow = joins._knn_iterative(qdf, cells, 4, 5)
+        key = lambda rows: {(r._qid, r._rank): r._pid for r in rows}
         assert key(fast.collect()) == key(slow.collect())
 
     def test_knn_matches_bruteforce(self, spark):
