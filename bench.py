@@ -278,9 +278,8 @@ def _warmup(spark) -> None:
 
 def run_scaling_workload(spark, sf_dir: str, amp: int) -> int:
     """The compute-dominated core pipeline used for the N->4N scaling
-    evidence: multi-resolution encode -> cell-center snap distance ->
-    skew-salted aggregate -> parent rollup -> PIP join, over `amp`x
-    amplified points. Returns rows processed.
+    evidence: res-8 encode -> skew-salted aggregate -> parent rollup ->
+    PIP join, over `amp`x amplified points. Returns rows processed.
 
     Cells ride as INT64 (the at-scale storage form — latlng_to_cell_long
     + h3_parent_int bit math): hex-string object arrays are the measured
@@ -298,27 +297,11 @@ def run_scaling_workload(spark, sf_dir: str, amp: int) -> int:
     # parallel speedup
     n = spark.read.parquet(f"{sf_dir}/events.parquet").count() * amp
     pts = _points(spark, sf_dir, amp).persist()
-    # multi-resolution index (res 6/8/12/15 — the rollup ladder) plus
-    # snap distances to the res-8 and res-12 centroids: kernel-dense,
-    # byte-light narrow maps (all fused into the pre-shuffle stage)
-    cells = pts
-    for r in (6, 8, 12, 15):
-        cells = cells.withColumn(
-            f"c{r}",
-            H3F.latlng_to_cell_long_udf(r)(F.col("lat"), F.col("lng")),
-        )
-    cells = cells.drop("c6", "c15")
-    cells = cells.withColumn("_c8", H3F.cell_to_latlng_long_udf()(F.col("c8")))
-    cells = cells.withColumn("_c12", H3F.cell_to_latlng_long_udf()(F.col("c12")))
-    cells = cells.withColumn(
-        "snap_km",
-        joins.haversine_km(
-            F.col("lat"), F.col("lng"), F.col("_c8.lat"), F.col("_c8.lng")
-        )
-        + joins.haversine_km(
-            F.col("lat"), F.col("lng"), F.col("_c12.lat"), F.col("_c12.lng")
-        ),
-    ).drop("_c8", "_c12")
+    # the aggregate reads only (c8, value): one res-8 encode per point,
+    # fused into the pre-shuffle stage
+    cells = pts.withColumn(
+        "c8", H3F.latlng_to_cell_long_udf(8)(F.col("lat"), F.col("lng"))
+    )
     agg = skew.salted_cell_count(
         cells.select("c8", "value"), "c8", value_col="value"
     )

@@ -158,14 +158,26 @@ def cell_to_latlng(h) -> tuple[np.ndarray, np.ndarray]:
 def _latlng_to_cell_impl(lat, lng, res: int, tables, debug=False):
     """Radians in. `tables` = (bc_table, rot_table, pent_cw).
     Returns cells (and optionally (bc, face, lead))."""
-    bc_table, rot_table, pent_cw = tables
     lat = np.atleast_1d(np.asarray(lat, dtype=np.float64))
     lng = np.atleast_1d(np.asarray(lng, dtype=np.float64))
     face, r_ang = proj.nearest_face(lat, lng)
     pt = proj.geo_to_hex2d_on_face(lat, lng, face, res, r_ang=r_ang)
-    ijk = IJK.hex2d_to_ijk(pt)
+    return faceijk_to_cell(face, IJK.hex2d_to_ijk(pt), res, tables, debug)
 
-    n = lat.shape[0]
+
+def faceijk_to_cell(face, ijk, res: int, tables=None, debug=False):
+    """Lattice coords `ijk` (N, 3) at `res` in `face`'s frame -> cells:
+    the digit ladder up to res 0, the base-cell lookup and the
+    canonical-orientation rotations (public spec _faceIjkToH3). `tables`
+    defaults to the cached (bc_table, rot_table, pent_cw); `debug` also
+    returns (bc, face, leading digit)."""
+    if tables is None:
+        from .tables import face_ijk_tables
+
+        tables = face_ijk_tables()
+    bc_table, rot_table, pent_cw = tables
+    face = np.asarray(face, dtype=np.int64)
+    n = ijk.shape[0]
     digits = np.full((n, 15), ix.INVALID_DIGIT, dtype=np.int64)
     cur = ijk
     for r in range(res, 0, -1):
@@ -337,32 +349,43 @@ def cell_to_local_ijk(cell: int, frame_face: int):
     return v
 
 
-def local_ijk_to_cell(ijk: np.ndarray, frame_face: int, res: int):
-    """Inverse of cell_to_local_ijk: lattice coords in `frame_face`'s
-    frame -> cell id. Off-face coords walk the overage transform to the
-    owning face (exact integer map), then snap on-face."""
-    v = ijk[None, :].astype(np.int64)
+def owning_faceijk(face, ijk, res: int):
+    """Lattice coords (N, 3) at `res` in `face`'s frame, possibly past
+    the face's edges -> (face, ijk) on the face that owns each point.
+    Class III rows go through the aperture-7r substrate (a clean integer
+    map); the overage transform then walks the rows past an edge across
+    it (pentagon corners may need more than one step)."""
+    face = np.array(face, dtype=np.int64)
+    v = np.array(ijk, dtype=np.int64)
     cls3 = res % 2 == 1
     if cls3:
         v = IJK.down_ap7r(v)
-        adj_res = res + 1
-    else:
-        adj_res = res
-    face = np.array([frame_face], dtype=np.int64)
-    adj_arr = np.array([adj_res], dtype=np.int64)
-    act = np.ones(1, dtype=bool)
+    adj_res = res + int(cls3)
+    idx = np.flatnonzero(v.sum(axis=-1) > MAX_DIM_BY_CII_RES[adj_res])
     for _ in range(4):
-        code, face, v = _adjust_overage_class2(
-            face, v, adj_arr, np.zeros(1, bool), substrate=False, active=act
-        )
-        if code[0] != _NEW_FACE:
+        if len(idx) == 0:
             break
+        m = len(idx)
+        code, face[idx], v[idx] = _adjust_overage_class2(
+            face[idx],
+            v[idx],
+            np.full(m, adj_res, dtype=np.int64),
+            np.zeros(m, dtype=bool),
+            substrate=False,
+            active=np.ones(m, dtype=bool),
+        )
+        idx = idx[code == _NEW_FACE]
     if cls3:
         v = IJK.up_ap7r(v)
-    la, lo = proj.hex2d_to_geo(IJK.ijk_to_hex2d(v), face, res=res, substrate=False)
-    from .tables import face_ijk_tables
+    return face, v
 
-    return _latlng_to_cell_impl(la, lo, res, face_ijk_tables())[0]
+
+def local_ijk_to_cell(ijk: np.ndarray, frame_face: int, res: int):
+    """Inverse of cell_to_local_ijk: lattice coords in `frame_face`'s
+    frame -> cell id. Off-face coords walk the overage transform to the
+    owning face (exact integer map), then encode there."""
+    face, v = owning_faceijk([frame_face], ijk[None, :], res)
+    return faceijk_to_cell(face, v, res)[0]
 
 
 from functools import lru_cache

@@ -27,8 +27,8 @@ UNIT_VECS = np.array(
 
 def normalize(ijk: np.ndarray) -> np.ndarray:
     """Normalize to the canonical form with min(i,j,k) == 0."""
-    m = ijk.min(axis=-1, keepdims=True)
-    return ijk - m
+    m = np.minimum(np.minimum(ijk[..., 0], ijk[..., 1]), ijk[..., 2])
+    return ijk - m[..., None]
 
 
 def unit_ijk_to_digit(ijk: np.ndarray) -> np.ndarray:

@@ -7,7 +7,11 @@ behavior (reference h3pandas.py:357-407, tests/util/test_shapely.py:39-57).
 Algorithm: densified edge trace -> candidate band (edge cells + 1-ring)
 -> BFS interior fill through center-inside cells. Exact w.r.t.
 center-containment; no bounding-box scans, so cost scales with the
-polygon's cell count, not its bbox.
+polygon's cell count, not its bbox. `cover_bfs` runs that BFS for many
+polygons of one resolution at once, each (owner, cell) pair tagged with
+its polygon: one encode of all edge traces, then one neighbor call and
+one center decode per BFS level, whatever the polygon count. The
+single-polygon entry points call it with one polygon.
 """
 
 from __future__ import annotations
@@ -134,14 +138,16 @@ _EDGE_DEG_RES0 = 20.0
 def polygon_to_cells(rings: Rings, res: int) -> np.ndarray:
     """Cells at `res` whose center falls inside the polygon (first ring =
     shell, remaining rings = holes, even-odd)."""
-    return _polygon_cells_impl(rings, res, cover=False)
+    _, cells, _ = cover_bfs([rings], res, cover=False)
+    return cells
 
 
 def polygon_cover_cells(rings: Rings, res: int) -> np.ndarray:
     """Superset cover: every cell that intersects the polygon (center
     inside OR boundary-crossing band). Candidate set for exact PIP joins —
     no point inside the polygon can fall outside these cells."""
-    return _polygon_cells_impl(rings, res, cover=True)
+    _, cells, _ = cover_bfs([rings], res, cover=True)
+    return cells
 
 
 def polygon_cover_cells_classified(
@@ -155,51 +161,88 @@ def polygon_cover_cells_classified(
     the WHOLE cell is inside. PIP joins skip the exact per-point ray
     cast for points landing in interior cells; only boundary-band cells
     pay it — at scale that is the region's perimeter, not its area."""
-    cells, band = _polygon_cells_impl(rings, res, cover=True, with_band=True)
-    return cells, ~np.isin(cells, band)
+    _, cells, interior = cover_bfs([rings], res, cover=True)
+    return cells, interior
 
 
-def _polygon_cells_impl(
-    rings: Rings, res: int, cover: bool, with_band: bool = False
-):
-    rings = [np.asarray(r, dtype=np.float64) for r in rings if len(r) >= 3]
-    if not rings:
-        empty = np.array([], dtype=np.uint64)
-        return (empty, empty) if with_band else empty
+def _centers_inside(owner, cells, polys: list[Rings]) -> np.ndarray:
+    """Even-odd test of each pair's cell center against its owner's
+    rings: one center decode for all pairs (sorted by owner), then one
+    vectorized ray cast per owner."""
+    uniq, inv = np.unique(cells, return_inverse=True)
+    clat, clng = geo.cell_to_latlng(uniq)
+    clat = clat[inv]
+    clng = clng[inv]
+    out = np.zeros(len(cells), dtype=bool)
+    owners, starts = np.unique(owner, return_index=True)
+    ends = np.append(starts[1:], len(owner))
+    for o, a, b in zip(owners.tolist(), starts.tolist(), ends.tolist()):
+        out[a:b] = points_in_rings(clat[a:b], clng[a:b], polys[o])
+    return out
+
+
+def cover_bfs(polys: list[Rings], res: int, cover: bool = True):
+    """Cells of many polygons at one resolution from one owner-tagged
+    BFS: (owner, cell, interior) sorted by (owner, cell), where owner
+    indexes `polys`.
+
+    Each polygon's densified edge trace encodes in one batch; its cells
+    plus their 1-ring form the boundary band. Band cells whose center is
+    inside seed the fill, and each BFS level then takes one neighbor call
+    and one center decode over every polygon's frontier at once. With
+    `cover`, the band joins the center-inside cells (the superset cover
+    PIP joins probe); `interior` marks the cells outside the band, which
+    are center-inside and never crossed by the boundary. A polygon with
+    no ring of 3+ vertices owns no cells."""
+    polys = [
+        [np.asarray(r, dtype=np.float64) for r in rings if len(r) >= 3]
+        for rings in polys
+    ]
     step = max(_EDGE_DEG_RES0 / (7 ** (res / 2.0)) * 0.4, 1e-9)
-    elat, elng = _densify_edges(rings, step)
-    edge_cells = np.unique(geo.latlng_to_cell(elat, elng, res))
-    # candidate band: edge cells + their neighbors
-    _, nb = tv._neighbors_with_owner(edge_cells)
-    band = np.unique(np.concatenate([edge_cells, nb]))
-    clat, clng = geo.cell_to_latlng(band)
-    inside_mask = points_in_rings(clat, clng, rings)
-    result = set(band[inside_mask].tolist())
-    visited = set(band.tolist())
-    frontier = np.array(sorted(result), dtype=np.uint64)
-    while len(frontier):
-        _, nb = tv._neighbors_with_owner(frontier)
-        nb = np.unique(nb)
-        nb = np.array([c for c in nb.tolist() if c not in visited], dtype=np.uint64)
-        if len(nb) == 0:
+    lats, lngs, owners = [], [], []
+    for o, rings in enumerate(polys):
+        if rings:
+            elat, elng = _densify_edges(rings, step)
+            lats.append(elat)
+            lngs.append(elng)
+            owners.append(np.full(len(elat), o, dtype=np.int64))
+    if not owners:
+        empty = np.array([], dtype=np.uint64)
+        return np.array([], dtype=np.int64), empty, np.array([], dtype=bool)
+    e_o, e_c = tv._unique_pairs(
+        np.concatenate(owners),
+        geo.latlng_to_cell(np.concatenate(lats), np.concatenate(lngs), res),
+    )
+    n_o, n_c = tv._expand(e_o, e_c)
+    band_o, band_c = tv._unique_pairs(
+        np.concatenate([e_o, n_o]), np.concatenate([e_c, n_c])
+    )
+    inside = _centers_inside(band_o, band_c, polys)
+    seen_o, seen_c = band_o, band_c
+    f_o, f_c = band_o[inside], band_c[inside]
+    found_o, found_c = [f_o], [f_c]
+    while len(f_o):
+        n_o, n_c = tv._unique_pairs(*tv._expand(f_o, f_c))
+        n_o, n_c = tv._setdiff_pairs(n_o, n_c, seen_o, seen_c)
+        if len(n_o) == 0:
             break
-        visited.update(nb.tolist())
-        nlat, nlng = geo.cell_to_latlng(nb)
-        keep = points_in_rings(nlat, nlng, rings)
-        new_inside = nb[keep]
-        result.update(new_inside.tolist())
-        frontier = new_inside
+        seen_o = np.concatenate([seen_o, n_o])
+        seen_c = np.concatenate([seen_c, n_c])
+        inside = _centers_inside(n_o, n_c, polys)
+        f_o, f_c = n_o[inside], n_c[inside]
+        found_o.append(f_o)
+        found_c.append(f_c)
     if cover:
-        result.update(band.tolist())
-    out = np.array(sorted(result), dtype=np.uint64)
-    return (out, band) if with_band else out
+        found_o.append(band_o)
+        found_c.append(band_c)
+    out_o, out_c = tv._unique_pairs(
+        np.concatenate(found_o), np.concatenate(found_c)
+    )
+    interior = ~tv._isin_pairs(out_o, out_c, band_o, band_c)
+    return out_o, out_c, interior
 
 
 def multipolygon_to_cells(polys: list[Rings], res: int) -> np.ndarray:
     """Union of polygon_to_cells over MultiPolygon parts."""
-    out: list[np.ndarray] = []
-    for rings in polys:
-        out.append(polygon_to_cells(rings, res))
-    if not out:
-        return np.array([], dtype=np.uint64)
-    return np.unique(np.concatenate(out))
+    _, cells, _ = cover_bfs(polys, res, cover=False)
+    return np.unique(cells)

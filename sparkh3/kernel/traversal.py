@@ -1,11 +1,17 @@
 """Grid traversal: neighbors, grid_disk (k_ring), grid_ring (hex_ring),
 grid_path (linetrace support).
 
-Neighbor discovery is geometric and exact: for each boundary edge, sample
-a point just beyond the edge midpoint (in 3D, then renormalized to the
-sphere) and snap it with latlng_to_cell — the ground-truth point locator.
-This handles pentagons, icosahedron-edge crossings and both grid classes
-uniformly, with no base-cell neighbor tables.
+Neighbors are lattice steps: each cell's face coords (cell_to_faceijk)
+plus the six unit IJK vectors, moved to the owning face by the
+icosahedron overage transform (Class III through the aperture-7r
+substrate) and encoded in one faceijk_to_cell batch — integer math, no
+trigonometry, pentagons and face crossings included. Disk and cover
+BFS levels make one such call over every frontier cell of every owner.
+
+The geometric edge probe (`_probe_neighbors`: snap a point just beyond
+each boundary-edge midpoint with latlng_to_cell) stays only behind
+`neighbors_ordered`, which needs boundary-edge order for directed
+edges, and as the tests' reference for the lattice steps.
 
 Goldens: reference tests/test_h3pandas.py:471-601 (k_ring / hex_ring),
 :309-439 + tests/util/test_shapely.py:60-78 (linetrace paths).
@@ -40,25 +46,24 @@ def _probe_neighbors(cells: np.ndarray, res: int) -> np.ndarray:
 
 
 def _neighbors_with_owner(cells: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """All edge-adjacent neighbors of each cell.
+    """All edge-adjacent neighbors of each cell: the six unit lattice
+    steps from each cell's face coords, moved to their owning face and
+    encoded in one batch.
 
-    Returns (owner_idx, neighbor_cell) flat arrays (deduped per owner,
-    self excluded). `cells` must be uniform resolution.
+    Returns (owner_idx, neighbor_cell) flat arrays sorted by (owner,
+    neighbor) and deduped per owner (a pentagon's step into its deleted
+    wedge repeats another neighbor). `cells` must be uniform resolution.
     """
     cells = np.atleast_1d(np.asarray(cells, dtype=np.uint64))
     n = len(cells)
     if n == 0:
         return np.array([], dtype=np.int64), np.array([], dtype=np.uint64)
     res = int(ix.get_resolution(cells[:1])[0])
-    nb = _probe_neighbors(cells, res).reshape(-1)
-    owner = np.repeat(np.arange(n, dtype=np.int64), 6)
-    keep = nb != cells[owner]
-    owner = owner[keep]
-    nb = nb[keep]
-    # dedupe (owner, nb) pairs
-    pair = np.stack([owner.astype(np.uint64), nb], axis=1)
-    pair = np.unique(pair, axis=0)
-    return pair[:, 0].astype(np.int64), pair[:, 1]
+    face, ijk, _ = geo.cell_to_faceijk(cells)
+    steps = (ijk[:, None, :] + IJK.UNIT_VECS[None, 1:, :]).reshape(-1, 3)
+    face, steps = geo.owning_faceijk(np.repeat(face, 6), IJK.normalize(steps), res)
+    nb = geo.faceijk_to_cell(face, steps, res)
+    return _unique_pairs(np.repeat(np.arange(n, dtype=np.int64), 6), nb)
 
 
 def neighbors(cell) -> np.ndarray:
@@ -67,44 +72,82 @@ def neighbors(cell) -> np.ndarray:
     return nb
 
 
-def _disk_bfs(cells: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
-    """One BFS to depth k over many origins: ((owner, cell) pairs sorted
-    by (owner, cell), grid distance of each pair). The distance array is
-    what lets disk, ring, and all-rings callers share a single
-    expansion instead of re-running the BFS per ring."""
+def _unique_pairs(owner: np.ndarray, cell: np.ndarray):
+    """(owner, cell) pairs de-duplicated and sorted by (owner, cell)."""
+    order = np.lexsort((cell, owner))
+    owner = owner[order]
+    cell = cell[order]
+    keep = np.ones(len(owner), dtype=bool)
+    keep[1:] = (owner[1:] != owner[:-1]) | (cell[1:] != cell[:-1])
+    return owner[keep], cell[keep]
+
+
+def _isin_pairs(owner, cell, b_owner, b_cell) -> np.ndarray:
+    """Mask of the (owner, cell) pairs present in (b_owner, b_cell);
+    pairs are unique within each side, so a shared pair shows up as one
+    adjacent duplicate in the two-key sort of both sides."""
+    n = len(owner)
+    if n == 0 or len(b_owner) == 0:
+        return np.zeros(n, dtype=bool)
+    o = np.concatenate([owner, b_owner])
+    c = np.concatenate([cell, b_cell])
+    order = np.lexsort((c, o))
+    o = o[order]
+    c = c[order]
+    dup = (o[1:] == o[:-1]) & (c[1:] == c[:-1])
+    hit = np.zeros(len(o), dtype=bool)
+    hit[order[1:][dup]] = True
+    hit[order[:-1][dup]] = True
+    return hit[:n]
+
+
+def _setdiff_pairs(owner, cell, b_owner, b_cell):
+    """The (owner, cell) pairs not present in (b_owner, b_cell)."""
+    keep = ~_isin_pairs(owner, cell, b_owner, b_cell)
+    return owner[keep], cell[keep]
+
+
+def _expand(owner: np.ndarray, cells: np.ndarray):
+    """Neighbors of owner-tagged cells, tagged with the same owners, from
+    one neighbor call over the distinct cells (un-deduped)."""
+    uniq, inv = np.unique(cells, return_inverse=True)
+    nb_o, nb_c = _neighbors_with_owner(uniq)  # sorted by owner
+    counts = np.bincount(nb_o, minlength=len(uniq))
+    starts = np.cumsum(counts) - counts
+    reps = counts[inv]
+    total = int(reps.sum())
+    offset = np.arange(total) - np.repeat(np.cumsum(reps) - reps, reps)
+    return np.repeat(owner, reps), nb_c[np.repeat(starts[inv], reps) + offset]
+
+
+def _disk_bfs(cells: np.ndarray, k: int):
+    """One BFS to depth k over many origins: (owner, cell, grid
+    distance) sorted by (owner, cell). The distance array is what lets
+    disk, ring, and all-rings callers share a single expansion instead
+    of re-running the BFS per ring."""
     cells = np.atleast_1d(np.asarray(cells, dtype=np.uint64))
-    n = len(cells)
-    owner_all = np.arange(n, dtype=np.int64)
-    pairs_all = np.stack([owner_all.astype(np.uint64), cells], axis=1)
-    dist_all = np.zeros(n, dtype=np.int64)
-    frontier = pairs_all
-    for step in range(1, k + 1):
-        f_owner = frontier[:, 0].astype(np.int64)
-        f_cells = frontier[:, 1]
-        # expand: neighbors of frontier cells, attributed to their owners
-        uniq_cells, inv = np.unique(f_cells, return_inverse=True)
-        nb_o, nb_c = _neighbors_with_owner(uniq_cells)
-        order = np.argsort(nb_o, kind="stable")
-        nb_o = nb_o[order]
-        nb_c = nb_c[order]
-        counts = np.bincount(nb_o, minlength=len(uniq_cells))
-        starts = np.concatenate([[0], np.cumsum(counts)])
-        reps = counts[inv]
-        exp_owner = np.repeat(f_owner, reps)
-        idx = np.concatenate(
-            [np.arange(starts[i], starts[i + 1]) for i in inv]
-        ) if len(inv) else np.array([], dtype=np.int64)
-        exp_cells = nb_c[idx]
-        new_pairs = np.stack([exp_owner.astype(np.uint64), exp_cells], axis=1)
-        frontier = _setdiff_pairs(np.unique(new_pairs, axis=0), pairs_all)
-        if len(frontier) == 0:
-            break
-        pairs_all = np.concatenate([pairs_all, frontier])
-        dist_all = np.concatenate(
-            [dist_all, np.full(len(frontier), step, dtype=np.int64)]
+    levels = [(np.arange(len(cells), dtype=np.int64), cells)]
+    for _ in range(k):
+        n_o, n_c = _unique_pairs(*_expand(*levels[-1]))
+        # a cell adjacent to level s-1 sits at level s-2, s-1 or s, so
+        # only the two levels before the new one can already hold it
+        near = levels[-2:]
+        n_o, n_c = _setdiff_pairs(
+            n_o,
+            n_c,
+            np.concatenate([lv[0] for lv in near]),
+            np.concatenate([lv[1] for lv in near]),
         )
-    order = np.lexsort((pairs_all[:, 1], pairs_all[:, 0]))
-    return pairs_all[order], dist_all[order]
+        if len(n_o) == 0:
+            break
+        levels.append((n_o, n_c))
+    o = np.concatenate([lv[0] for lv in levels])
+    c = np.concatenate([lv[1] for lv in levels])
+    dist = np.repeat(
+        np.arange(len(levels), dtype=np.int64), [len(lv[0]) for lv in levels]
+    )
+    order = np.lexsort((c, o))
+    return o[order], c[order], dist[order]
 
 
 def grid_disk_grouped(cells: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
@@ -114,8 +157,8 @@ def grid_disk_grouped(cells: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray
     disk including the origin. Output size per owner: 1+3k(k+1) (less near
     pentagons).
     """
-    pairs, _ = _disk_bfs(cells, k)
-    return pairs[:, 0].astype(np.int64), pairs[:, 1]
+    owner, cell, _ = _disk_bfs(cells, k)
+    return owner, cell
 
 
 def grid_disk_distances_grouped(
@@ -124,19 +167,7 @@ def grid_disk_distances_grouped(
     """(owner_idx, cell, grid_distance) for the full disk(k) — every
     ring 0..k from ONE BFS (the shape the kNN/radius disk builders
     want: per-ring calls would redo the expansion per ring)."""
-    pairs, dist = _disk_bfs(cells, k)
-    return pairs[:, 0].astype(np.int64), pairs[:, 1], dist
-
-
-def _setdiff_pairs(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Rows of a (unique (M,2)) not present in b (unique)."""
-    if len(b) == 0:
-        return a
-    # encode rows as structured void for fast membership
-    a_view = a.view([("o", np.uint64), ("c", np.uint64)]).reshape(-1)
-    b_view = b.view([("o", np.uint64), ("c", np.uint64)]).reshape(-1)
-    mask = ~np.isin(a_view, b_view)
-    return a[mask]
+    return _disk_bfs(cells, k)
 
 
 def grid_ring_grouped(cells: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
@@ -145,10 +176,9 @@ def grid_ring_grouped(cells: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray
     cells = np.atleast_1d(np.asarray(cells, dtype=np.uint64))
     if k == 0:
         return np.arange(len(cells), dtype=np.int64), cells.copy()
-    pairs, dist = _disk_bfs(cells, k)
+    owner, cell, dist = _disk_bfs(cells, k)
     m = dist == k
-    ring = pairs[m]
-    return ring[:, 0].astype(np.int64), ring[:, 1]
+    return owner[m], cell[m]
 
 
 def grid_disk(cell, k: int) -> np.ndarray:

@@ -148,50 +148,25 @@ def pip_broadcast_fused(
 
     keys: list = []
     rings_list: list = []
-    covers: list = []
-    interiors: list = []
     res_list: list = []
     for r, res_p in zip(poly_rows, resolutions):
         raw = r[geometry_col]
         if raw is None or len(raw) == 0:
             continue
         keys.append(r[poly_key])
-        rings_list.append(
-            [
-                np.array([(p["lat"], p["lng"]) for p in ring], dtype=np.float64)
-                for ring in raw
-            ]
-        )
-        # classified cover: interior cells (proven fully inside) let
-        # their points skip the exact ray cast entirely — only
-        # boundary-band candidates pay it
-        cov_cells, cov_int = pg.polygon_cover_cells_classified(
-            _rings_from_raw(raw), res_p
-        )
-        covers.append(cov_cells)
-        interiors.append(cov_int)
+        rings_list.append(_rings_from_raw(raw))
         res_list.append(res_p)
+    # one classified-cover BFS per cover resolution: interior cells
+    # (proven fully inside) let their points skip the exact ray cast
+    # entirely — only boundary-band candidates pay it
+    res_arr = np.asarray(res_list, dtype=np.int64)
     levels = []
-    if covers:
-        res_fine = max(res_list)
-        for lvl in sorted(set(res_list)):
-            cc = np.concatenate(
-                [c for c, rp in zip(covers, res_list) if rp == lvl]
-            ).astype(np.uint64)
-            cp = np.repeat(
-                np.array(
-                    [i for i, rp in enumerate(res_list) if rp == lvl],
-                    dtype=np.int64,
-                ),
-                [len(c) for c, rp in zip(covers, res_list) if rp == lvl],
-            )
-            ci = np.concatenate(
-                [c for c, rp in zip(interiors, res_list) if rp == lvl]
-            )
-            order = np.argsort(cc, kind="stable")
-            levels.append((lvl, cc[order], cp[order], ci[order]))
-    else:
-        res_fine = 0
+    for lvl in sorted(set(res_list)):
+        idx = np.flatnonzero(res_arr == lvl)
+        owner, cc, ci = pg.cover_bfs([rings_list[i] for i in idx], lvl)
+        order = np.argsort(cc, kind="stable")
+        levels.append((lvl, cc[order], idx[owner][order], ci[order]))
+    res_fine = max(res_list) if res_list else 0
     # lifetime note: the broadcast is captured by the returned frame's
     # UDF closure, so Spark's ContextCleaner reclaims it once the caller
     # drops the DataFrame (broadcasts, unlike cache entries, are

@@ -1,6 +1,9 @@
 """Interleaved-documents synthesis (Spark vs DuckDB bit parity),
 span invariants, and spatial joins (PIP + kNN) vs brute-force truth."""
 
+import math
+import random
+
 import duckdb
 import pytest
 from pyspark.sql import Row
@@ -71,16 +74,68 @@ class TestSpanInvariant:
         assert after.count() == before.count()
 
 
+def _even_odd(lat, lng, rings):
+    """Plain even-odd ray cast in planar lat/lng. A polygon whose rings
+    span more than 180 degrees of longitude is read in a [0, 360) frame,
+    so a transmeridian shell and its holes stay continuous."""
+    shift = any(
+        max(p[1] for p in r) - min(p[1] for p in r) > 180.0 for r in rings
+    )
+
+    def x(v):
+        return v + 360.0 if shift and v < 0.0 else v
+
+    px = x(lng)
+    inside = False
+    for ring in rings:
+        pts = [(p[0], x(p[1])) for p in ring]
+        for (y1, x1), (y2, x2) in zip(pts, pts[1:] + pts[:1]):
+            if (y1 > lat) != (y2 > lat) and px < (x2 - x1) * (lat - y1) / (
+                y2 - y1
+            ) + x1:
+                inside = not inside
+    return inside
+
+
 class TestPipJoin:
     def test_pip_join_matches_rect_truth(self, spark):
-        # points: synthesized from documents; polygons: lat/lng rectangles
+        # points: synthesized from documents plus a seeded patch across
+        # the antimeridian; polygons: lat/lng rectangles, a concave star,
+        # a transmeridian shell with a hole and an empty geometry
         sdf = datagen.interleaved_documents(spark, SF_DIR)
         pts = spans.extract_geometry(sdf).select("doc_id", "lat", "lng")
+        rnd = random.Random(7)
+        patch = [
+            (
+                f"tm{i}",
+                rnd.uniform(-4.0, 4.0),
+                (rnd.uniform(170.0, 190.0) + 180.0) % 360.0 - 180.0,
+            )
+            for i in range(300)
+        ]
+        pts = pts.unionByName(spark.createDataFrame(patch, pts.schema))
         rects = [
             ("nyc", 39.0, 42.0, -75.5, -72.0),
             ("eu", 45.0, 56.0, -3.0, 15.0),
             ("empty", -89.0, -88.0, 10.0, 11.0),
         ]
+        shapes = {
+            # 10-point star over the Tokyo hub's point box
+            "star": [
+                [
+                    (35.18 + r * math.sin(a), 138.26 + r * math.cos(a))
+                    for a, r in (
+                        (i * math.pi / 5 + 0.2, 0.45 if i % 2 == 0 else 0.2)
+                        for i in range(11)
+                    )
+                ]
+            ],
+            "shell": [
+                [(-3.0, 176.0), (-3.0, -176.0), (3.0, -176.0), (3.0, 176.0)],
+                [(-1.0, 179.0), (-1.0, -179.0), (1.0, -179.0), (1.0, 179.0)],
+            ],
+            "nogeom": [],
+        }
         poly_rows = []
         for pid, y0, y1, x0, x1 in rects:
             ring = [
@@ -91,16 +146,37 @@ class TestPipJoin:
                 {"lng": x0, "lat": y0},
             ]
             poly_rows.append(Row(poly_id=pid, geometry=[ring]))
-        polys = spark.createDataFrame(poly_rows)
+        for pid, rings in shapes.items():
+            geom = [[{"lng": x, "lat": y} for y, x in ring] for ring in rings]
+            poly_rows.append(Row(poly_id=pid, geometry=geom))
+        polys = spark.createDataFrame(
+            poly_rows,
+            "poly_id string, geometry array<array<struct<lng:double,lat:double>>>",
+        )
+        # the adaptive broadcast call covers at 3+ resolutions at once
+        assert len({
+            joins.adaptive_cover_res(
+                [[(p["lat"], p["lng"]) for p in ring] for ring in r.geometry]
+            )
+            for r in polys.collect()
+            if r.geometry
+        }) >= 3
         got = joins.pip_join(pts, polys, resolution=5)
         got_set = {(r.doc_id, r.poly_id) for r in got.collect()}
+        point_rows = pts.collect()
         truth = set()
-        for r in pts.collect():
+        for r in point_rows:
             for pid, y0, y1, x0, x1 in rects:
                 if y0 < r.lat < y1 and x0 < r.lng < x1:
                     truth.add((r.doc_id, pid))
+            for pid, rings in shapes.items():
+                if _even_odd(r.lat, r.lng, rings):
+                    truth.add((r.doc_id, pid))
         assert got_set == truth
-        assert len(got_set) > 0
+        for pid in ("nyc", "eu", "star", "shell"):
+            assert any(p == pid for _, p in truth), pid
+        # the hole subtracts: the patch has points inside it
+        assert any(-1.0 < r.lat < 1.0 and abs(r.lng) > 179.0 for r in point_rows)
         # non-broadcast path (shuffle join + flat-coords geometry rejoin,
         # no driver collect) produces identical rows
         got_nb = joins.pip_join(pts, polys, resolution=5, broadcast=False)

@@ -327,3 +327,104 @@ class TestTransmeridianHole:
             # disk sizes still the hexagonal closed form (no pentagons here)
             per_owner = np.bincount(o_d)
             assert all(int(x) == 1 + 3 * k * (k + 1) for x in per_owner)
+
+
+def _sphere_cells(rng, n, res):
+    """n uniform-on-the-sphere points encoded at res (deduped)."""
+    lat = np.degrees(np.arcsin(rng.uniform(-1.0, 1.0, n)))
+    lng = rng.uniform(-180.0, 180.0, n)
+    return np.unique(geo.latlng_to_cell(lat, lng, res))
+
+
+def _pentagons(res):
+    base = ix.build_cell(
+        np.array(sorted(ix.PENTAGON_BASE_CELLS), dtype=np.uint64),
+        0,
+        np.full((12, 15), 7, dtype=np.int64),
+    )
+    return ix.cell_to_center_child(base, res) if res else base
+
+
+class TestLatticeNeighbors:
+    @pytest.mark.parametrize("res", range(16))
+    def test_lattice_steps_equal_edge_probe(self, res):
+        """The lattice neighbor step (face coords + unit vectors, moved
+        to the owning face, one encode) finds exactly the cells the
+        geometric edge probe snaps to, de-duplicated and self-excluded:
+        a seeded full-sphere sample plus every pentagon and the cells
+        around it (icosahedron vertices, where faces and the deleted
+        pentagon wedge meet)."""
+        rng = np.random.default_rng(1000 + res)
+        pent = _pentagons(res)
+        assert ix.is_pentagon(pent).all()
+        _, near = tv.grid_disk_grouped(pent, 2)
+        cells = np.unique(
+            np.concatenate([_sphere_cells(rng, 400, res), pent, near])
+        )
+        probe = tv._probe_neighbors(cells, res)
+        want = {
+            (i, int(c))
+            for i in range(len(cells))
+            for c in probe[i]
+            if c != cells[i]
+        }
+        owner, nb = tv._neighbors_with_owner(cells)
+        got = list(zip(owner.tolist(), nb.tolist()))
+        assert len(got) == len(set(got))
+        assert set(got) == want
+        # sorted by (owner, neighbor), like every grouped traversal output
+        assert got == sorted(got)
+        counts = np.bincount(owner, minlength=len(cells))
+        assert (counts == np.where(ix.is_pentagon(cells), 5, 6)).all()
+
+
+def _star(lat, lng, r_out, r_in, n=10):
+    ang = np.arange(n) * 2 * np.pi / n + 0.3
+    rad = np.where(np.arange(n) % 2 == 0, r_out, r_in)
+    return np.stack([lat + rad * np.sin(ang), lng + rad * np.cos(ang)], axis=1)
+
+
+class TestBatchedCover:
+    # rectangles, a concave star, a transmeridian shell with a hole, a
+    # polygon too small to hold a cell center and a degenerate ring
+    POLYS = [
+        [box(10.0, 45.0, 12.0, 46.5)],
+        [box(-60.2, -30.0, -59.0, -29.1)],
+        [_star(35.2, 138.3, 1.2, 0.5)],
+        [
+            np.array([(-3.0, 176.0), (-3.0, -176.0), (3.0, -176.0), (3.0, 176.0)]),
+            np.array([(-1.0, 179.0), (-1.0, -179.0), (1.0, -179.0), (1.0, 179.0)]),
+        ],
+        [box(2.0, 2.0, 2.001, 2.001)],
+        [np.array([(0.0, 0.0), (1.0, 1.0)])],
+    ]
+
+    @pytest.mark.parametrize("res", [3, 4, 6])
+    def test_one_bfs_equals_one_call_per_polygon(self, res):
+        for cover in (True, False):
+            owner, cells, interior = pg.cover_bfs(self.POLYS, res, cover=cover)
+            assert np.array_equal(np.lexsort((cells, owner)), np.arange(len(cells)))
+            for o, rings in enumerate(self.POLYS):
+                m = owner == o
+                if cover:
+                    want, want_int = pg.polygon_cover_cells_classified(rings, res)
+                    assert np.array_equal(interior[m], want_int)
+                else:
+                    want = pg.polygon_to_cells(rings, res)
+                assert np.array_equal(cells[m], want)
+        # the tiny box holds no cell center; the degenerate ring owns nothing
+        assert len(pg.polygon_to_cells(self.POLYS[4], res)) == 0
+        assert len(pg.polygon_cover_cells(self.POLYS[4], res)) > 0
+        assert len(pg.polygon_cover_cells(self.POLYS[5], res)) == 0
+        # the hole subtracts: no center-inside cell has its center in it
+        fill = pg.polygon_to_cells(self.POLYS[3], res)
+        clat, clng = geo.cell_to_latlng(fill)
+        assert len(fill) and not pg.points_in_rings(clat, clng, [self.POLYS[3][1]]).any()
+
+    def test_multipolygon_is_union_of_parts(self):
+        parts = [self.POLYS[0], self.POLYS[2], self.POLYS[5]]
+        want = np.unique(
+            np.concatenate([pg.polygon_to_cells(p, 4) for p in parts])
+        )
+        assert np.array_equal(pg.multipolygon_to_cells(parts, 4), want)
+        assert len(pg.multipolygon_to_cells([], 4)) == 0
