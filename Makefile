@@ -10,8 +10,11 @@ kernel:
 	python -m pytest tests/test_kernel_geo.py tests/test_kernel_properties.py \
 	  tests/test_index_bits.py tests/test_traversal_polygon.py -q -p no:cacheprovider
 
+# SF=sf0.001 LANES="dedup_keep dsir" gates a lane subset at another scale
+SF ?= sf0.01
+LANES ?=
 oracle:
-	python scripts/check_oracles.py /root/testdata/sf0.01
+	python scripts/check_oracles.py /root/testdata/$(SF) $(LANES)
 
 bench:
 	python bench.py

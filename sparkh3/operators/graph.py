@@ -18,8 +18,11 @@ training-data workload (brief: dedup as first-class).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import DataType, StructField, StructType
 
 __all__ = [
     "connected_components",
@@ -68,19 +71,25 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return out.filter(F.col("src") != F.col("dst")).distinct()
 
 
-def _cc_driver(raw: DataFrame, nodes: DataFrame) -> DataFrame:
-    """In-process union-find over a bounded, already-materialized pair
-    list. Semantics mirror the distributed loop exactly: the node
-    universe is every src/dst value (self-loop-only nodes map to
-    themselves, null nodes ride through as their own singleton), edges
-    are the non-null src != dst pairs, and each node maps to the
-    minimum id of its component. Output schema matches the distributed
-    path (node/cluster_id at the unified src/dst type)."""
-    from pyspark.sql.types import StructField, StructType
+DRIVER_CC_PAIRS = 65536
+"""Pair lists up to this many rows (a few MB, the order of a broadcast
+relation) are clustered on the driver by ``_cc_driver``; larger ones
+run the distributed star loop ``_cc_star``."""
 
-    rows = raw.collect()
-    node_set = set()
-    parent: dict = {}
+
+def _cc_driver(spark, pairs: pa.Table, ntype: DataType) -> DataFrame:
+    """In-process union-find over a bounded pair list already on the
+    driver as Arrow (``src``, ``dst``). Semantics mirror the distributed
+    loop exactly: the node universe is every src/dst value (self-loop-
+    only nodes map to themselves, null nodes ride through as their own
+    singleton), edges are the non-null src != dst pairs, and each node
+    maps to the minimum id of its component. The result is handed back
+    as an Arrow table at the unified node type ``ntype`` (node,
+    cluster_id), so it becomes a local relation with no per-row pickling
+    through py4j."""
+    src = pairs.column(0).to_pylist()
+    dst = pairs.column(1).to_pylist()
+    parent = {n: n for n in src + dst}
 
     def find(x):
         while parent[x] != x:
@@ -88,79 +97,35 @@ def _cc_driver(raw: DataFrame, nodes: DataFrame) -> DataFrame:
             x = parent[x]
         return x
 
-    edge_list = []
-    for r in rows:
-        a, b = r[0], r[1]
-        node_set.add(a)
-        node_set.add(b)
+    for a, b in zip(src, dst):
         if a is not None and b is not None and a != b:
-            edge_list.append((a, b))
-    for n in node_set:
-        parent[n] = n
-    for a, b in edge_list:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            if rb < ra:
-                ra, rb = rb, ra
-            parent[rb] = ra
-    out_rows = [(n, find(n) if n is not None else None) for n in node_set]
-    ntype = nodes.schema[0].dataType
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                if rb < ra:
+                    ra, rb = rb, ra
+                parent[rb] = ra
+    atype = to_arrow_type(ntype)
+    nodes = list(parent)
+    out = pa.table(
+        {
+            "node": pa.array(nodes, atype),
+            "cluster_id": pa.array([find(n) for n in nodes], atype),
+        }
+    )
     schema = StructType(
         [StructField("node", ntype, True), StructField("cluster_id", ntype, True)]
     )
-    return raw.sparkSession.createDataFrame(out_rows, schema)
+    return spark.createDataFrame(out, schema)
 
 
-def connected_components(
-    pairs: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 25,
-    driver_threshold: int = 65536,
-) -> DataFrame:
-    """(src, dst) undirected pair list -> (node, cluster_id) where
-    cluster_id is the minimum node id in the component. Every node that
-    appears in `pairs` gets a row (component minima map to themselves).
-
-    Pair lists up to `driver_threshold` rows (a few MB — the same order
-    as a broadcast relation) are clustered with an in-process
-    union-find: the star-contraction loop costs one scheduling
-    round-trip per round, which dominates end-to-end latency when the
-    edge set is tiny (measured ~1 s for a 256-edge graph = pure
-    per-action overhead). The result is identical by construction —
-    union-find with min-id roots computes the same (node, min-id)
-    mapping the star fixed point converges to. Larger pair lists run
-    the distributed loop below; the threshold is a row count, not a
-    tuned-to-host constant.
-
-    Distributed path: convergence is detected by an order-insensitive
-    fingerprint of the edge set (count + xor-ish sum of per-edge
-    hashes) — one tiny aggregate per round, no driver-side edge
-    materialization. `max_iter` bounds the worst case (a path graph
-    needs O(log n) rounds); dedup graphs converge in 2-3.
-    """
-    raw = pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    # materialize the RAW pair list exactly once: nodes, the empty
-    # check and round 1 each run an action over it, and without this
-    # every one of those re-derives the entire upstream pair pipeline
-    # (a minhash-LSH chain costs as much as the whole CC loop —
-    # measured ~2x the operator in bench x3). The pair list is the
-    # small end of the pipeline by design, so this is the cheap side
-    # of the trade; localCheckpoint (not persist) keeps no CacheManager
-    # entry alive past the call.
-    raw = raw.localCheckpoint(eager=True)
-    # node universe from the RAW pairs (self-loop-only nodes still get
-    # a row mapping to themselves); lazy — read again only by the final
-    # roots anti-join
-    nodes = (
-        raw.select(F.col("src").alias("node"))
-        .unionByName(raw.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    # cheap on the materialized checkpoint (no recompute); decides the
-    # in-process vs distributed strategy
-    if raw.count() <= driver_threshold:
-        return _cc_driver(raw, nodes)
+def _cc_star(raw: DataFrame, nodes: DataFrame, max_iter: int = 25) -> DataFrame:
+    """Distributed alternating large-star/small-star loop over the
+    materialized (src, dst) pair list ``raw``; ``nodes`` is its node
+    universe. Convergence is detected by an order-insensitive
+    fingerprint of the edge set (count + xor of per-edge hashes) — one
+    tiny aggregate per round, no driver-side edge materialization.
+    `max_iter` bounds the worst case (a path graph needs O(log n)
+    rounds); dedup graphs converge in 2-3."""
     edges = (
         raw.filter(F.col("src") != F.col("dst"))
         .distinct()
@@ -201,7 +166,7 @@ def connected_components(
             f"connected_components: no fixed point after {max_iter} "
             "rounds; results may be partially merged — raise max_iter",
             RuntimeWarning,
-            stacklevel=2,
+            stacklevel=3,
         )
     # fixed point: stars centered on component minima. Roots (the
     # minima) have no outgoing src row — they map to themselves.
@@ -215,6 +180,51 @@ def connected_components(
     # (the result is one small row per node; recomputing it later would
     # re-derive the full pair lineage)
     return assigned.unionByName(roots).localCheckpoint(eager=True)
+
+
+def connected_components(
+    pairs: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    max_iter: int = 25,
+) -> DataFrame:
+    """(src, dst) undirected pair list -> (node, cluster_id) where
+    cluster_id is the minimum node id in the component. Every node that
+    appears in `pairs` gets a row (component minima map to themselves).
+
+    Pair lists up to ``DRIVER_CC_PAIRS`` rows are clustered with an
+    in-process union-find (``_cc_driver``): the star-contraction loop
+    costs one scheduling round-trip per round, which dominates
+    end-to-end latency when the edge set is tiny (measured ~1 s for a
+    256-edge graph = pure per-action overhead). The result is
+    identical by construction — union-find with min-id roots computes
+    the same (node, min-id) mapping the star fixed point converges to.
+    Larger pair lists run the distributed loop (``_cc_star``); the
+    threshold is a row count, not a tuned-to-host constant.
+    """
+    raw = pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    # materialize the RAW pair list exactly once: the bounded read and
+    # the distributed loop each run actions over it, and without this
+    # every one of those re-derives the entire upstream pair pipeline
+    # (a minhash-LSH chain costs as much as the whole CC loop —
+    # measured ~2x the operator in bench x3). The pair list is the
+    # small end of the pipeline by design, so this is the cheap side
+    # of the trade; localCheckpoint (not persist) keeps no CacheManager
+    # entry alive past the call.
+    raw = raw.localCheckpoint(eager=True)
+    # node universe from the RAW pairs; lazy — analysed for its unified
+    # type, and read again only by the distributed loop
+    nodes = (
+        raw.select(F.col("src").alias("node"))
+        .unionByName(raw.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+    # one job decides the strategy AND carries the small pair list to
+    # the driver (at most DRIVER_CC_PAIRS + 1 rows, whatever its size)
+    head = raw.limit(DRIVER_CC_PAIRS + 1).toArrow()
+    if head.num_rows <= DRIVER_CC_PAIRS:
+        return _cc_driver(raw.sparkSession, head, nodes.schema[0].dataType)
+    return _cc_star(raw, nodes, max_iter)
 
 
 def pagerank(

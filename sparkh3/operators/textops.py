@@ -177,38 +177,39 @@ def exact_dedup(
 
 
 def ngrams(text: Column, n: int) -> Column:
-    """Word n-gram shingles — native, with the token split evaluated a
-    CONSTANT number of times per row.
+    """Word n-gram shingles — native codegen expressions, no lambda.
 
-    The natural sequence+slice form (`transform(sequence(...), i ->
-    concat_ws(' ', slice(tokens, i+1, n)))`) inlines the `tokens`
-    subexpression into the lambda body, and higher-order-function
-    lambdas are interpreted per element — one regex split of the full
-    text per shingle POSITION, O(T^2) per document (dominant cost of
-    every shingling operator in the before profile). Zipping the n
-    shifted token arrays instead materializes per-position structs, so
-    the per-element lambda only reads struct fields: the split runs
-    n+2 times per row, not T times. Output is element-for-element
-    identical (concat_ws skips the nulls that padding introduces only
-    in the T < n row, reproducing the short-document shingle)."""
+    The tokens are re-joined with single spaces (``norm``), and one
+    ``regexp_extract_all`` over ``norm`` emits every shingle: the
+    pattern matches the empty string at each token start and captures
+    the next n tokens in a lookahead, so positions with fewer than n
+    tokens left emit nothing. Tokens never contain a space (the split
+    is on runs of spaces), so each capture is exactly
+    ``concat_ws(' ', slice(tokens, i+1, n))`` of the sequence+slice
+    form, whose higher-order lambda is interpreted per shingle.
+
+    The token start is a POSITIVE lookbehind, ``(?<=^| )``. The
+    negated form ``(?<![^ ])`` reads the same but is not: after each
+    zero-width match the matcher retries one UTF-16 unit further on,
+    which can land between the two halves of a non-BMP character.
+    There, ``[^ ]`` read backwards consumes the whole surrogate pair
+    and overshoots the position, so "no non-space before" holds, the
+    position counts as a token start, and a spurious shingle starting
+    with the lone low surrogate (``?`` once encoded) is emitted. The
+    positive form needs an actual space, or the input start, right
+    before the match.
+
+    Edge values of the sequence+slice form are kept: null text gives
+    ``['']``, and a document of at most n tokens gives ``[norm]`` (one
+    shingle of all its tokens)."""
     toks = tokens(text)
-    pos_len = F.greatest(F.size(toks), F.lit(1))
-    shifted = [
-        (toks if i == 0 else F.slice(toks, i + 1, pos_len)).alias(f"t{i}")
-        for i in range(n)
-    ]
-    z = F.slice(
-        F.arrays_zip(*shifted),
-        1,
-        F.greatest(F.size(toks) - (n - 1), F.lit(1)),
+    norm = F.array_join(toks, " ")
+    grams = F.regexp_extract_all(
+        norm, F.lit(f"(?<=^| )(?=([^ ]+( [^ ]+){{{n - 1}}}))"), F.lit(1)
     )
-    out = F.transform(
-        z, lambda s: F.concat_ws(" ", *[s[f"t{i}"] for i in range(n)])
+    return F.when(F.size(toks) > n, grams).otherwise(
+        F.array(F.coalesce(norm, F.lit("")))
     )
-    # null text: the sequence+slice form yielded [''] (greatest(NULL,0)
-    # -> one position; concat_ws over a null slice -> ''); the zipped
-    # form nulls out instead — coalesce restores the exact old value
-    return F.coalesce(out, F.array(F.lit("")))
 
 
 def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -384,10 +385,16 @@ def minhash_lsh_dedup(
     exactly once — candidate pairs come from ONE groupBy over the
     banded ``(_id, _bucket)`` stream (in-bucket ordered combinations
     via explode), not a bucket self-join whose two branches would each
-    re-run the signature subtree. Document text NEVER enters a
-    shuffle: the exact-Jaccard verify broadcasts the (tiny by
-    construction) pair list into two plain document scans, so the text
-    side streams with no exchange on either verify join.
+    re-run the signature subtree. The exact-Jaccard verify broadcasts
+    the (tiny by construction) pair list into a plain document scan, so
+    the text side streams with no exchange on either verify join.
+
+    When text moves: only when ``_spread`` widened a narrow scan (a
+    single small file on a many-core host). Then the whole scan is
+    repartitioned for the signature pass, and the candidates' text,
+    after the semi-join and before shingling, is repartitioned for the
+    verify, so both run on every core. An input that is already wide
+    gets neither, so at scale document text never enters a shuffle.
     """
     if not 1 <= bands <= n_hashes or n_hashes % bands != 0:
         # bands > n_hashes degenerates every bucket to hash(band) — an
@@ -400,6 +407,7 @@ def minhash_lsh_dedup(
     sig_udf = minhash_signature_udf(n_hashes)
     raw = df
     df = _spread(df)
+    spread = df is not raw
     # one JVM xxhash64 pass over shingles -> one Arrow NumPy pass for the
     # n_hashes permuted mins; slim (_id, _sig) is all that gets banded
     base = df.select(
@@ -471,7 +479,13 @@ def minhash_lsh_dedup(
     pair_ids = pairs.select(
         F.explode(F.array("id_a", "id_b")).alias("_tid")
     ).distinct()
-    sh = texts.join(F.broadcast(pair_ids), "_tid", "semi").select(
+    cand = texts.join(F.broadcast(pair_ids), "_tid", "semi")
+    if spread:
+        # the scan is one narrow task: move only the candidates' text so
+        # their shingling runs on every core
+        par = raw.sparkSession.sparkContext.defaultParallelism
+        cand = cand.repartition(par)
+    sh = cand.select(
         "_tid",
         F.array_distinct(ngrams(F.col("_t"), shingle_n)).alias("_sh"),
     )

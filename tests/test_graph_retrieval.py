@@ -14,7 +14,7 @@ from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 from sparkh3.operators import joins, textops
-from sparkh3.operators.graph import connected_components
+from sparkh3.operators.graph import _cc_driver, _cc_star, connected_components
 
 
 def _uf_components(edges, nodes):
@@ -33,37 +33,47 @@ def _uf_components(edges, nodes):
     return {n: find(n) for n in nodes}
 
 
+def _mapping(cc):
+    """A (node, cluster_id) frame as a set of pairs."""
+    return {(r["node"], r["cluster_id"]) for r in cc.collect()}
+
+
 class TestConnectedComponents:
     def _check(self, spark, edges):
         nodes = sorted({n for e in edges for n in e})
         df = spark.createDataFrame(
             [(int(a), int(b)) for a, b in edges], "src long, dst long"
         )
-        got = {
-            (r["node"], r["cluster_id"])
-            for r in connected_components(df).collect()
-        }
         want = set(_uf_components(edges, nodes).items())
-        assert got == want
+        assert _mapping(connected_components(df)) == want
 
     def test_two_components_and_chain(self, spark):
         self._check(spark, [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12)])
 
+    def _both_paths(self, df):
+        """(driver, star) results over the same pair list, each as a
+        (node, cluster_id) set, plus the driver frame's schema."""
+        raw = df.select(
+            F.col(df.columns[0]).alias("src"), F.col(df.columns[1]).alias("dst")
+        )
+        nodes = (
+            raw.select(F.col("src").alias("node"))
+            .unionByName(raw.select(F.col("dst").alias("node")))
+            .distinct()
+        )
+        fast = _cc_driver(
+            df.sparkSession, raw.toArrow(), nodes.schema[0].dataType
+        )
+        slow = _cc_star(raw, nodes)
+        return _mapping(fast), _mapping(slow), fast.schema
+
     def test_driver_path_equals_distributed_loop(self, spark):
         """The bounded in-process union-find (default for small pair
-        lists) and the star-contraction loop (forced via
-        driver_threshold=0) must agree exactly — including self-loop
-        singletons and duplicate/reversed edges."""
+        lists) and the star-contraction loop must agree exactly —
+        including self-loop singletons and duplicate/reversed edges."""
         edges = [(1, 2), (2, 3), (3, 1), (9, 9), (7, 5), (5, 7), (4, 8)]
         df = spark.createDataFrame(edges, "src long, dst long")
-        fast = {
-            (r["node"], r["cluster_id"])
-            for r in connected_components(df).collect()
-        }
-        slow = {
-            (r["node"], r["cluster_id"])
-            for r in connected_components(df, driver_threshold=0).collect()
-        }
+        fast, slow, _ = self._both_paths(df)
         assert fast == slow
         want = set(
             _uf_components(
@@ -72,6 +82,36 @@ class TestConnectedComponents:
             ).items()
         )
         assert fast == want
+        assert _mapping(connected_components(df)) == want
+
+    @pytest.mark.parametrize(
+        "ddl, edges",
+        [
+            ("bigint", [(1, 2), (2, 3), (9, 9), (7, 5), (None, 4)]),
+            ("int", [(1, 2), (2, 3), (9, 9), (7, 5), (4, None)]),
+            ("string", [("b", "a"), ("c", "b"), ("z", "z"), (None, "q")]),
+            ("bigint", []),
+        ],
+    )
+    def test_driver_path_types_nulls_empty(self, spark, ddl, edges):
+        """Driver path == star loop == plain-Python union-find for each
+        node type, with a null node (its own singleton, cluster_id
+        null) and for the empty pair list; the result keeps the input
+        type."""
+        df = spark.createDataFrame(edges, f"src {ddl}, dst {ddl}")
+        fast, slow, schema = self._both_paths(df)
+        nodes = {n for e in edges for n in e}
+        want = set(
+            _uf_components(
+                [(a, b) for a, b in edges if None not in (a, b) and a != b],
+                nodes,
+            ).items()
+        )
+        assert fast == slow == want
+        assert [(f.name, f.dataType.simpleString()) for f in schema] == [
+            ("node", ddl),
+            ("cluster_id", ddl),
+        ]
 
     def test_long_path_worst_case(self, spark):
         # a 40-node path: the shape that defeats naive one-hop label

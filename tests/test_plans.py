@@ -91,6 +91,47 @@ def test_minhash_banding_shuffles_no_text(spark):
     assert keyed_on_text == 0, plan
 
 
+def _text_exchanges(df):
+    """Every Exchange node of ``df``'s physical plan that carries a
+    string column, each with whether a left-semi join sits below it."""
+    found = []
+
+    def walk(p):
+        if p.nodeName() == "AdaptiveSparkPlan":
+            return walk(p.executedPlan())
+        kids = p.children()
+        below = [walk(kids.apply(i)) for i in range(kids.size())]
+        semi = any(below) or (
+            "Join" in p.nodeName() and p.joinType().toString() == "LeftSemi"
+        )
+        out = p.output()
+        if "Exchange" in p.nodeName() and any(
+            out.apply(i).dataType().typeName() == "string"
+            for i in range(out.size())
+        ):
+            found.append(semi)
+        return semi
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return found
+
+
+def test_minhash_verify_moves_text_only_when_spread(spark):
+    """The exact-Jaccard verify repartitions the candidates' text only
+    when ``_spread`` widened a narrow scan, and then above the
+    semi-join, so only candidate text moves. An input that is already
+    wide keeps every text column out of every Exchange."""
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    wide = spark.createDataFrame(docs.toArrow())
+    assert textops._spread(wide) is wide
+    assert textops._spread(docs) is not docs
+    mh = textops.minhash_lsh_dedup(wide, jaccard_threshold=0.4)
+    assert _text_exchanges(mh) == [], _plan(mh)
+    mh = textops.minhash_lsh_dedup(docs, jaccard_threshold=0.4)
+    above_semi = _text_exchanges(mh)
+    assert above_semi and all(above_semi), _plan(mh)
+
+
 def test_lsh_ann_single_signature_pass(spark):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     q = emb.limit(3).select(F.col("vec_id").alias("query_id"), "embedding")

@@ -1,6 +1,8 @@
 """Training-data operators: dedup (exact + MinHash + SimHash), text
 analysis, similarity search, multimodal plumbing."""
 
+import random
+
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -1787,10 +1789,10 @@ class TestBandValidation:
 
 
 class TestNgramsRewrite:
-    """The zipped-shift ngrams (constant token-split count per row) must
-    be element-for-element identical to the sequence+slice form it
-    replaced — shingle values feed MinHash banding and every shingling
-    oracle lane."""
+    """The regex ngrams (one regexp_extract_all, no lambda) must be
+    element-for-element identical to the sequence+slice form —
+    shingle values feed MinHash banding and every shingling oracle
+    lane."""
 
     def _old_ngrams(self, text, n):
         toks = textops.tokens(text)
@@ -1812,6 +1814,11 @@ class TestNgramsRewrite:
                 ("a  b   c",),
                 ("  pad  ",),
                 ("w " * 40,),
+                ("a\tb c\nd e\t\nf",),
+                ("\tlead trail\n",),
+                # non-BMP char starting a token after another token
+                ("𝔘𝔫𝔦 co de 𝔴𝔬𝔯𝔡 s",),
+                ("   ",),
             ],
             "text string",
         )
@@ -1819,12 +1826,35 @@ class TestNgramsRewrite:
             "text"
         )
         for d in (edge, docs):
-            bad = (
-                d.select(
-                    self._old_ngrams(F.col("text"), n).alias("o"),
-                    textops.ngrams(F.col("text"), n).alias("g"),
-                )
-                .filter(~F.col("o").eqNullSafe(F.col("g")))
-                .count()
+            assert self._mismatches(d, n) == 0
+
+    @pytest.mark.parametrize("n", [1, 2, 3, 5])
+    def test_identical_on_seeded_fuzz(self, spark, n):
+        rng = random.Random(4242)
+        alphabet = ["a", "b", " ", "\t", "\n", "é", "𝔘"]
+        rows = [
+            ("".join(rng.choice(alphabet) for _ in range(rng.randint(0, 16))),)
+            for _ in range(3000)
+        ]
+        d = spark.createDataFrame(rows, "text string")
+        assert self._mismatches(d, n) == 0
+
+    def test_no_lambda_in_plan(self, spark):
+        d = spark.createDataFrame([("a b c d",)], "text string")
+        plan = (
+            d.select(textops.ngrams(F.col("text"), 3))
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
+        assert "lambda" not in plan and "arrays_zip" not in plan, plan
+
+    def _mismatches(self, d, n):
+        return (
+            d.select(
+                self._old_ngrams(F.col("text"), n).alias("o"),
+                textops.ngrams(F.col("text"), n).alias("g"),
             )
-            assert bad == 0
+            .filter(~F.col("o").eqNullSafe(F.col("g")))
+            .count()
+        )
