@@ -22,7 +22,8 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# the cores this process may run on, unless SPARK_GRAFT_CPUS overrides
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 DO_SCALING = os.environ.get("SPARK_GRAFT_SCALING", "1") == "1"
 AMP = int(os.environ.get("SPARK_GRAFT_BENCH_AMP", "8"))  # point amplification
 # per-query min-of-N: this host has multi-minute load phases that shift
@@ -47,6 +48,14 @@ HUB_RECTS = [
 ]
 
 
+def _driver_memory_mb() -> int:
+    """A quarter of the host's RAM, clamped to 1-24 GiB: the heap fits
+    the box the bench runs on instead of assuming a large one."""
+    with open("/proc/meminfo") as f:
+        total_kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return int(min(24 << 10, max(1 << 10, total_kb / 1024 / 4)))
+
+
 def _session(threads: int):
     from pyspark.sql import SparkSession
 
@@ -58,7 +67,7 @@ def _session(threads: int):
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "50000")
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", f"{_driver_memory_mb()}m")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

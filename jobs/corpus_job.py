@@ -108,7 +108,7 @@ def main() -> None:
     )
 
     # stage 6: manifest commit — generic hash-keyed table (the table
-    # layer is key-agnostic: top bits of any int64 key bucket the files)
+    # layer is key-agnostic: any int64 key range-clusters the files)
     final = packed.withColumn("_key", F.xxhash64("doc_id"))
     snap = manifest.write_table(final, out_root, "_key", key_is_int=True)
 

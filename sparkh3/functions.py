@@ -3,7 +3,7 @@
 Two tiers, chosen per the SURVEY §4 optimization table:
 
 * **Native bit-math expressions** (resolution, base cell, parent, center
-  child, prefix bucketing): pure Catalyst ``Column`` algebra over int64 —
+  child): pure Catalyst ``Column`` algebra over int64 —
   run inside WholeStageCodegen on the JVM, no Python in the hot path.
 * **Arrow-vectorized pandas UDFs** for the geometric kernels
   (latlng_to_cell, centroids, boundaries, rings, polyfill, linetrace):
@@ -108,12 +108,6 @@ def h3_center_child(col: Column | str, res: int) -> Column:
     return h3_int_to_str(h3_center_child_int(h3_str_to_int(col), res))
 
 
-def h3_prefix_bucket(v: Column, bits: int = 12) -> Column:
-    """Leading `bits` of base-cell+digit bits — a spatial-locality bucket
-    for partitioning/clustering (int64 prefix order ~ spatial order)."""
-    return F.shiftrightunsigned(v, 52 - bits).bitwiseAND(F.lit((1 << bits) - 1))
-
-
 # ---------------------------------------------------------------------------
 # Arrow-vectorized kernel tier (pandas UDFs)
 # ---------------------------------------------------------------------------
@@ -167,8 +161,8 @@ def latlng_to_cell_long_udf(res: int):
     """Int64 cell ids — the at-scale storage form: no hex-string object
     arrays, so Arrow batches stay flat numeric buffers (first-touch page
     faults on per-row string allocation are the measured scaling ceiling
-    of this host; int64 avoids them). Pair with h3_parent_int /
-    h3_prefix_bucket for fully JVM-native rollups and bucketing."""
+    of this host; int64 avoids them). Pair with h3_parent_int for fully
+    JVM-native rollups."""
 
     @F.pandas_udf(LongType())
     def f(lat: pd.Series, lng: pd.Series) -> pd.Series:

@@ -261,8 +261,8 @@ def ivf_cosine_topk(
     (narrow int64 key), queries probe their `n_probe` nearest lists,
     exact cosine re-rank among candidates. Complements hyperplane LSH:
     recall tracks data clustering instead of random projections, and the
-    inverted-list layout is the natural bucketed-parquet partitioning
-    for a 100 TB corpus.
+    inverted-list layout is the natural list-major, range-pruned parquet
+    layout for a 100 TB corpus.
 
     ``table_root`` is the at-scale read path: the corpus was
     materialized list-major by ``ivf_write_corpus`` and only the FILES
@@ -402,11 +402,10 @@ def ivf_cosine_topk(
 # ---------------------------------------------------------------------------
 
 # key = (_list << IVF_LIST_SHIFT) | (xxhash64(id) & low-bit mask): list id
-# in the top bits makes manifest bucketing (top 64-IVF_LIST_SHIFT bits of
-# the key) EQUAL the list id, and the hashed low bits keep within-list
-# file clustering spread. Key stays < 2^63 for n_lists <= 2^15.
+# in the top bits makes every list ONE contiguous range of the key-sorted
+# manifest files, so a probe set prunes files and pages by key min/max.
+# Key stays < 2^63 for n_lists <= 2^15.
 IVF_LIST_SHIFT = 48
-_IVF_BUCKET_BITS = 64 - IVF_LIST_SHIFT
 
 
 def ivf_list_ranges(lists) -> list[tuple[int, int]]:
@@ -430,7 +429,7 @@ def ivf_write_corpus(
 ) -> dict:
     """Materialize the IVF inverted-list layout through the manifest
     table layer: one deterministic list assignment pass, rows written
-    list-major (manifest bucket == list id), codebook persisted beside
+    list-major (each list one contiguous key range), codebook persisted beside
     the snapshot so reads assign queries with the exact centroids the
     corpus was partitioned by. Returns the snapshot dict.
 
@@ -475,9 +474,7 @@ def ivf_write_corpus(
     )
     if not store_vec:
         keyed = keyed.drop(vec_col)
-    snap = manifest.write_table(
-        keyed, root, "_ivf_key", key_is_int=True, bucket_bits=_IVF_BUCKET_BITS
-    )
+    snap = manifest.write_table(keyed, root, "_ivf_key", key_is_int=True)
     codebook = {
         "n_lists": int(n_lists),
         "list_shift": IVF_LIST_SHIFT,
@@ -512,7 +509,8 @@ def ivf_read_corpus(
 ) -> DataFrame:
     """Read only the inverted lists in ``probe_lists``: the manifest
     prunes data FILES to the probe set's key ranges before Spark plans,
-    and the residual range filter pushes down to parquet row groups."""
+    and the residual range filter pushes down to parquet row groups and
+    pages."""
     from ..sources import manifest
 
     return manifest.read_table(

@@ -83,19 +83,20 @@ def ingest_table(
     fmt: str | None = None,
     schema=None,
     mode: str = "overwrite",
-    bucket_bits: int | None = None,
+    target_file_bytes: int | None = None,
     **options,
 ) -> dict:
     """``read_any`` -> manifest table: one call lands a CSV/JSON/parquet
     source in the snapshot-versioned, key-range-prunable layout
     (``sources.manifest.write_table``). ``key_col`` declares the H3
     string (default) or int64 (``key_is_int=True``) clustering key,
-    exactly as parquet-born tables declare it. Returns the snapshot
+    exactly as parquet-born tables declare it; ``target_file_bytes``
+    overrides the table's target file size. Returns the snapshot
     dict."""
     from . import manifest
 
     df = read_any(spark, path, fmt=fmt, schema=schema, **options)
     kwargs = dict(mode=mode, key_is_int=key_is_int)
-    if bucket_bits is not None:
-        kwargs["bucket_bits"] = bucket_bits
+    if target_file_bytes is not None:
+        kwargs["target_file_bytes"] = target_file_bytes
     return manifest.write_table(df, root, key_col, **kwargs)

@@ -1,21 +1,28 @@
-"""Iceberg-style table layer: snapshot manifests over H3-clustered Parquet.
+"""Iceberg-style table layer: snapshot manifests over key-sorted Parquet.
 
 No Iceberg jar ships in this runtime, so we emulate the pieces the
 engine needs — atomic snapshot commits, per-file statistics, and
 planning-time file pruning — with a JSON metadata layer:
 
-    <root>/metadata/v<N>.json   snapshot: files + per-file h3 min/max
+    <root>/metadata/v<N>.json   snapshot: files + per-file key min/max
     <root>/metadata/current     atomic pointer to the live snapshot
-    <root>/data/h3_bucket=<b>/  Parquet, rows sorted by h3 int64
+    <root>/data/part-*.parquet  Parquet files, each one key range,
+                                rows sorted by the int64 key
 
 Layout decisions that carry to 100 TB:
-* H3 stored as int64; files CLUSTERED by (bucket, h3) so int64 prefix
-  order = spatial locality -> parquet min/max chunks are tight ranges.
-* ``h3_bucket`` (leading bits of base-cell+digits) is the partition
-  column: coarse enough to bound file counts, fine enough to prune.
-* ``read_table(cells=...)`` prunes files whose [h3_min, h3_max] range
-  misses every queried cell's descendant range — the scan list shrinks
-  before Spark ever plans, exactly like Iceberg manifest pruning.
+* H3 stored as int64 (``_h3_int``); int64 order = spatial locality, so
+  a range exchange on the key gives every file a disjoint, tight range.
+* No partition directories: the file count is the optimizer's size
+  estimate over a target file size (one file at small scale), so the
+  layout adds no files and a read lists only the files it names.
+* Pruning reads value ranges at three grains — the snapshot's per-file
+  [h3_min, h3_max] drops files before Spark plans (Iceberg manifest
+  pruning), and the exact residual range filter pushes down to Parquet
+  row-group stats and, through PAGE_ROWS-row pages, the page index.
+
+Snapshots written by the older layout (one ``data/<column>=<b>/``
+directory per key-prefix bucket) read and append unchanged: a snapshot
+lists its files by path, and readers never infer partition columns.
 
 A real Iceberg catalog can replace this by mapping write_table ->
 append/commit and read_table -> table scan with a cell-range predicate.
@@ -24,8 +31,10 @@ append/commit and read_table -> table scan with a cell-range predicate.
 from __future__ import annotations
 
 import json
+import math
 import os
 import time
+from functools import reduce
 from pathlib import Path
 
 import numpy as np
@@ -35,7 +44,14 @@ from pyspark.sql import functions as F
 from .. import functions as H3F
 from ..kernel import index as ix
 
-BUCKET_BITS = 10
+TARGET_FILE_BYTES = 128 << 20
+# rows per Parquet page: the page index then narrows a pruned read to a
+# few hundred rows around each query range inside a file
+PAGE_ROWS = 256
+# a write estimated at more than this many target-sized files takes its
+# file count from AQE's measured shuffle instead: unknown-size inputs
+# (Python-built frames) report Long.MaxValue, and joins report products
+MAX_ESTIMATED_FILES = 1 << 16
 
 
 def _signed_ranges(ranges) -> list[tuple[int, int]]:
@@ -79,25 +95,43 @@ def cell_descendant_range(cell: int, storage_res: int) -> tuple[int, int]:
     return int(lo), int(v[0])
 
 
-def _with_key_cols(
-    df: DataFrame, h3_col: str, key_is_int: bool, bucket_bits: int
-) -> DataFrame:
-    """Attach the layout columns (_h3_int, _h3_bucket) exactly as the
-    table stores them — shared by write_table and merge_table so an
-    upsert buckets identically to the original write."""
-    if key_is_int:
-        out = df.withColumn("_h3_int", F.col(h3_col).cast("long"))
-        if bucket_bits == 0:
-            # shift-by-64 is a no-op under Java shift semantics (masked
-            # mod 64) — it would bucket on the FULL key, one file per
-            # distinct cell
-            bucket = F.lit(0)
-        else:
-            bucket = F.shiftrightunsigned(F.col("_h3_int"), 64 - bucket_bits)
-        return out.withColumn("_h3_bucket", bucket)
-    out = df.withColumn("_h3_int", H3F.h3_str_to_int(h3_col))
-    return out.withColumn(
-        "_h3_bucket", H3F.h3_prefix_bucket(F.col("_h3_int"), bucket_bits)
+def _with_key_col(df: DataFrame, h3_col: str, key_is_int: bool) -> DataFrame:
+    """Attach the int64 layout key ``_h3_int`` exactly as the table
+    stores it — shared by every writer so a rewrite keys identically to
+    the original write."""
+    key = F.col(h3_col).cast("long") if key_is_int else H3F.h3_str_to_int(h3_col)
+    return df.withColumn("_h3_int", key)
+
+
+def _data_cols(df: DataFrame) -> list[str]:
+    """The table's own columns: all but the ``_h3_``-prefixed layout
+    columns (``_h3_int``, and the bucket column that snapshots of the
+    older directory layout still carry in their schema)."""
+    return [c for c in df.columns if not c.startswith("_h3_")]
+
+
+def _write_clustered(
+    out: DataFrame, data_dir: Path, target_file_bytes: int
+) -> None:
+    """The one data writer (write_table and every copy-on-write commit):
+    range-cluster ``out`` on ``_h3_int`` into ceil(estimated bytes /
+    target_file_bytes) files, sorted by key inside each, in PAGE_ROWS-row
+    pages. The estimate is the optimizer's ``sizeInBytes``, the statistic
+    Spark's broadcast threshold reads; one file is a single-partition
+    exchange with no range-sampling job. Past MAX_ESTIMATED_FILES the
+    estimate is not trusted and AQE coalesces the range exchange by the
+    bytes it actually moves."""
+    est = out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    n = max(1, math.ceil(est / target_file_bytes))
+    if n > MAX_ESTIMATED_FILES:
+        out = out.repartitionByRange("_h3_int")
+    else:
+        out = out.repartitionByRange(n, "_h3_int")
+    (
+        out.sortWithinPartitions("_h3_int")
+        .write.mode("overwrite")
+        .option("parquet.page.row.count.limit", PAGE_ROWS)
+        .parquet(str(data_dir))
     )
 
 
@@ -167,19 +201,21 @@ def write_table(
     h3_col: str,
     mode: str = "overwrite",
     key_is_int: bool = False,
-    bucket_bits: int = BUCKET_BITS,
+    target_file_bytes: int = TARGET_FILE_BYTES,
     data_subdir: str = "data",
     properties: dict | None = None,
 ) -> dict:
     """Write a cell-keyed table with snapshot manifest. `h3_col` is a
     15-hex-char H3 string column by default; ``key_is_int=True`` takes
-    an int64 key column as-is (e.g. an S2 cell id) and buckets on its
-    top bits (the spatial prefix in both the S2 and any
-    Hilbert/Z-ordered layout). Rows are clustered by key either way.
-    ``bucket_bits`` sets the partition-column width (file count scales
-    with 2^bits — compaction rewrites with fewer bits); ``data_subdir``
-    lets maintenance write a NEW data generation next to the one it is
-    reading (a snapshot commit must never overwrite its own input)."""
+    an int64 key column as-is (e.g. an S2 cell id, or any
+    Hilbert/Z-ordered key). Either way the rows land in range-clustered,
+    key-sorted files with no partition directories, about
+    ``target_file_bytes`` each by the optimizer's size estimate (one file
+    for a small table); the snapshot records each file's key min/max for
+    pruning, and the target, which merge/delete rewrites reuse.
+    ``data_subdir`` lets maintenance write a NEW data generation next to
+    the one it is reading (a snapshot commit must never overwrite its
+    own input)."""
     root_p = Path(root)
     (root_p / "metadata").mkdir(parents=True, exist_ok=True)
     cur_file = root_p / "metadata" / "current"
@@ -216,13 +252,9 @@ def write_table(
         # a later commit (exactly-once for foreachBatch sinks)
         data_subdir = f"data_a{version}"
     data_dir = root_p / data_subdir
-    out = _with_key_cols(df, h3_col, key_is_int, bucket_bits)
+    out = _with_key_col(df, h3_col, key_is_int)
     schema_json = _evolve_schema(prev_snap, out.schema)
-    # cluster: partition by bucket, sort within partitions by cell int
-    out = out.repartition("_h3_bucket").sortWithinPartitions("_h3_int")
-    out.write.partitionBy("_h3_bucket").mode("overwrite").parquet(
-        str(data_dir)
-    )
+    _write_clustered(out, data_dir, target_file_bytes)
 
     files = _scan_file_stats(root_p, data_dir)
     if is_append:
@@ -238,7 +270,7 @@ def write_table(
         "ts": time.time(),
         "h3_col": h3_col,
         "key_kind": "int" if key_is_int else "h3_str",
-        "bucket_bits": bucket_bits,
+        "target_file_bytes": target_file_bytes,
         "files": files,
         "total_rows": sum(f["rows"] for f in files),
         "properties": properties or {},
@@ -272,6 +304,23 @@ def _cells_to_ranges(snap: dict, cells: list[str]) -> list[tuple[int, int]]:
     return [cell_descendant_range(c, storage_res) for c in cell_ints]
 
 
+def _key_ranges(snap: dict, cells, ranges) -> list[tuple[int, int]]:
+    if cells and ranges:
+        raise ValueError("pass cells= or ranges=, not both")
+    return _cells_to_ranges(snap, cells) if cells else _signed_ranges(ranges)
+
+
+def _overlapping(files: list[dict], key_ranges) -> list[dict]:
+    """File entries whose [h3_min, h3_max] meets any key range (files
+    without key stats always stay)."""
+    return [
+        f
+        for f in files
+        if f["h3_min"] is None
+        or any(not (f["h3_max"] < lo or f["h3_min"] > hi) for lo, hi in key_ranges)
+    ]
+
+
 def read_table(
     spark: SparkSession,
     root: str,
@@ -279,65 +328,30 @@ def read_table(
     ranges=None,
     version: int | None = None,
 ) -> DataFrame:
-    """Read a table, pruning files by manifest key ranges.
+    """Read a table, pruning by key ranges at file, row-group and page
+    grain.
 
     ``cells``: H3 query cells (any resolution coarser-or-equal than
     storage) — H3-string-keyed tables only. ``ranges``: generic [lo, hi]
     uint64 key ranges (e.g. ``kernel.s2.merge_ranges`` output for an S2
     region covering, sign-split internally) — works for any int-keyed
-    table. Either way the file list shrinks BEFORE Spark plans (Iceberg
-    manifest-pruning shape) and an exact residual range filter pushes
-    down to parquet row groups."""
+    table. Either way the file list shrinks to the files whose recorded
+    key min/max meets a range BEFORE Spark plans (Iceberg manifest
+    pruning), and an exact residual range filter pushes down to the
+    Parquet row-group stats and page index of the sorted files. The
+    snapshot's schema is passed to the reader, so a read lists only the
+    files it names and infers nothing."""
     snap = load_snapshot(root, version)
-    root_p = Path(root)
-    paths = [str(root_p / f["path"]) for f in snap["files"]]
-    if cells and ranges:
-        raise ValueError("pass cells= or ranges=, not both")
-    key_ranges = None
-    if cells:
-        key_ranges = _cells_to_ranges(snap, cells)
-    elif ranges is not None:
-        key_ranges = _signed_ranges(ranges)
-    if key_ranges is not None:
-        keep = []
-        for f in snap["files"]:
-            if f["h3_min"] is None:
-                keep.append(f)
-                continue
-            if any(
-                not (f["h3_max"] < lo or f["h3_min"] > hi)
-                for lo, hi in key_ranges
-            ):
-                keep.append(f)
-        paths = [str(root_p / f["path"]) for f in keep]
-        if not paths:
-            first = str(root_p / snap["files"][0]["path"])
-            if snap.get("schema"):
-                from pyspark.sql.types import StructType
-
-                return (
-                    spark.read.schema(StructType.fromJson(snap["schema"]))
-                    .parquet(first)
-                    .limit(0)
-                )
-            return spark.read.parquet(first).limit(0)
-    if snap.get("schema"):
-        from pyspark.sql.types import StructType
-
-        reader = spark.read.schema(StructType.fromJson(snap["schema"]))
-        df = reader.parquet(*paths)
-    else:
-        df = spark.read.parquet(*paths)
-    if key_ranges is not None:
-        # exact residual filter (file pruning keeps a superset); range
-        # predicates on the int64 cell push down to parquet row groups
-        conds = None
-        for lo, hi in key_ranges:
-            cond = (F.col("_h3_int") >= F.lit(lo)) & (F.col("_h3_int") <= F.lit(hi))
-            conds = cond if conds is None else (conds | cond)
-        if conds is not None:
-            df = df.filter(conds)
-    return df
+    if not cells and ranges is None:
+        return _read_entries(spark, Path(root), snap, snap["files"])
+    key_ranges = _key_ranges(snap, cells, ranges)
+    df = _read_entries(
+        spark, Path(root), snap, _overlapping(snap["files"], key_ranges)
+    )
+    # exact residual filter (file pruning keeps a superset)
+    key = F.col("_h3_int")
+    conds = [(key >= F.lit(lo)) & (key <= F.lit(hi)) for lo, hi in key_ranges]
+    return df.filter(reduce(lambda x, y: x | y, conds)) if conds else df
 
 
 def pruned_file_count(
@@ -347,27 +361,8 @@ def pruned_file_count(
     if not cells and ranges is None:
         raise ValueError("pass cells= or ranges=")
     snap = load_snapshot(root)
-    key_ranges = (
-        _cells_to_ranges(snap, cells) if cells else _signed_ranges(ranges)
-    )
-    kept = sum(
-        1
-        for f in snap["files"]
-        if f["h3_min"] is None
-        or any(
-            not (f["h3_max"] < lo or f["h3_min"] > hi)
-            for lo, hi in key_ranges
-        )
-    )
-    return kept, len(snap["files"])
-
-
-def _bucket_of_path(path: str) -> int | None:
-    for part in Path(path).parts:
-        if part.startswith("_h3_bucket="):
-            v = part.split("=", 1)[1]
-            return None if v == "__HIVE_DEFAULT_PARTITION__" else int(v)
-    return None
+    kept = _overlapping(snap["files"], _key_ranges(snap, cells, ranges))
+    return len(kept), len(snap["files"])
 
 
 def _read_entries(
@@ -411,7 +406,7 @@ def merge_table(
     rewritten (found with one column-pruned key scan collecting
     distinct ``input_file_name`` — the same find-touched-files join a
     Delta/Iceberg MERGE plans, so a key whose update moves it to a
-    different cell/bucket still has its OLD row rewritten away); every
+    different cell or file still has its OLD row rewritten away); every
     other file carries over into the new snapshot BY REFERENCE (its
     path is reused, no data moves), which is what bounds merge rewrite
     cost by the matched footprint instead of the table size at 100 TB.
@@ -422,19 +417,15 @@ def merge_table(
     atomic tmp+rename, with an optimistic-concurrency check that the
     `current` pointer still names the snapshot the merge planned
     against. Null merge keys or null layout keys in `updates` are
-    rejected (they would land in the hive default partition and escape
-    every range read)."""
+    rejected (a null key matches no key range, so the row would escape
+    every pruned read)."""
     snap = load_snapshot(root)
     root_p = Path(root)
     key_is_int = snap.get("key_kind") == "int"
-    bits = snap["bucket_bits"]
     h3_col = snap["h3_col"]
     if not snap["files"]:
         raise ValueError("merge_table requires a non-empty table")
-    sample = _read_entries(spark, root_p, snap, snap["files"][:1])
-    data_cols = [
-        c for c in sample.columns if c not in ("_h3_int", "_h3_bucket")
-    ]
+    data_cols = _data_cols(_read_entries(spark, root_p, snap, snap["files"][:1]))
     missing = set(data_cols) - set(updates.columns)
     if missing:
         raise ValueError(
@@ -450,15 +441,13 @@ def merge_table(
             f"updates contain null {merge_key!r} or {h3_col!r} rows — "
             "they would be unreachable after the write"
         )
-    up = _with_key_cols(updates, h3_col, key_is_int, bits).localCheckpoint(
-        eager=True
-    )
+    up = _with_key_col(updates, h3_col, key_is_int).localCheckpoint(eager=True)
     if up.isEmpty():
         return snap
     # find-touched-files: one column-pruned scan of the merge-key
     # column, semi-joined with the update keys, collecting only the
     # distinct file names that contain a match (file-count-bounded).
-    # Scanning by key — not by the updates' target buckets — is what
+    # Scanning by key — not by the updates' target key ranges — is what
     # keeps the replace contract when an update MOVES a key to a new
     # cell: the old row's file is still rewritten without it.
     up_keys = up.select(merge_key).distinct()
@@ -510,16 +499,12 @@ def _commit_cow(
     entries by reference, and atomically advance `current` — with an
     optimistic-concurrency check that no other writer committed since
     `snap` was loaded (the planned parent)."""
-    key_is_int = snap.get("key_kind") == "int"
-    bits = snap["bucket_bits"]
     h3_col = snap["h3_col"]
     version = snap["version"] + 1
     data_dir = root_p / f"data_m{version}"
-    out = _with_key_cols(pieces, h3_col, key_is_int, bits)
-    out = out.repartition("_h3_bucket").sortWithinPartitions("_h3_int")
-    out.write.partitionBy("_h3_bucket").mode("overwrite").parquet(
-        str(data_dir)
-    )
+    target = snap.get("target_file_bytes", TARGET_FILE_BYTES)
+    out = _with_key_col(pieces, h3_col, snap.get("key_kind") == "int")
+    _write_clustered(out, data_dir, target)
     new_files = _scan_file_stats(root_p, data_dir)
     cur_file = root_p / "metadata" / "current"
     if int(cur_file.read_text()) != snap["version"]:
@@ -533,7 +518,7 @@ def _commit_cow(
         "ts": time.time(),
         "h3_col": h3_col,
         "key_kind": snap.get("key_kind", "h3_str"),
-        "bucket_bits": bits,
+        "target_file_bytes": target,
         "files": carried + new_files,
         "total_rows": sum(f["rows"] for f in carried + new_files),
         "rewritten_files": n_rewritten,
@@ -590,14 +575,9 @@ def delete_table(
         return snap  # no matching rows: the snapshot is unchanged
     affected = [f for f in snap["files"] if f["path"] in hit_rel]
     carried = [f for f in snap["files"] if f["path"] not in hit_rel]
-    data_cols_df = _read_entries(spark, root_p, snap, affected)
-    data_cols = [
-        c for c in data_cols_df.columns if c not in ("_h3_int", "_h3_bucket")
-    ]
+    old = _read_entries(spark, root_p, snap, affected)
     # NULL-predicate rows survive, exactly like SQL DELETE
-    pieces = data_cols_df.filter(~F.coalesce(pred, F.lit(False))).select(
-        *data_cols
-    )
+    pieces = old.filter(~F.coalesce(pred, F.lit(False))).select(*_data_cols(old))
     return _commit_cow(
         spark, snap, root_p, pieces, carried, len(affected),
         {"deleted_from": snap["version"], "deleted_rows": int(n_deleted)},
@@ -619,13 +599,13 @@ def table_changes(
 
     Cost is bounded by the snapshots' FILE diff, not the table size:
     files carried between snapshots by reference (identical manifest
-    path — the untouched buckets of every merge/delete) are never
+    path — the untouched files of every merge/delete) are never
     opened; only files added or removed between the two versions are
     read, then rows identical on both sides cancel (a rewrite that
     copies a row to a new file emits nothing — so a pure compaction
     diffs to zero changes over any number of rewritten bytes). This is
     what lets a 100 TB downstream consumer process a day's merges by
-    reading the day's rewritten buckets instead of rescanning the
+    reading the day's rewritten files instead of rescanning the
     table."""
     sf = load_snapshot(root, from_version)
     st = load_snapshot(root, to_version)
@@ -653,9 +633,7 @@ def table_changes(
 
     new_side = _read(added)
     old_side = _read(removed)
-    data_cols = [
-        c for c in new_side.columns if c not in ("_h3_int", "_h3_bucket")
-    ]
+    data_cols = _data_cols(new_side)
     if key_col not in data_cols:
         raise ValueError(f"key_col {key_col!r} is not a table column")
     pa = new_side.select(
@@ -746,39 +724,27 @@ def maintain_rollup(
 def compact_table(
     spark: SparkSession,
     root: str,
-    target_file_bytes: int = 128 << 20,
+    target_file_bytes: int = TARGET_FILE_BYTES,
 ) -> dict:
     """Table maintenance: rewrite the CURRENT snapshot's rows into
     fewer, larger files (Iceberg rewrite_data_files semantics) and
     commit the result as a new snapshot.
 
-    The bucket width shrinks to roughly total_bytes / target files
-    (file count tracks 2^bits), the rewrite lands in a NEW data
-    generation directory (`data_v<N>`) so readers of the old snapshot
-    are never disturbed, and clustering/pruning behavior is preserved —
-    only the file granularity changes. Old generations are reclaimed by
-    `expire_snapshots`."""
-    import math
-
+    The rows go through ``write_table``'s clustered writer with the new
+    ``target_file_bytes``, sized from the scan's estimate (the files'
+    bytes), into a NEW data generation directory (`data_v<N>`), so
+    readers of the old snapshot are never disturbed; key order and
+    min/max pruning are preserved — only the file granularity changes.
+    Old generations are reclaimed by `expire_snapshots`."""
     snap = load_snapshot(root)
     root_p = Path(root)
-    total_bytes = sum(
-        (root_p / f["path"]).stat().st_size for f in snap["files"]
-    )
-    bits = max(
-        0,
-        min(
-            BUCKET_BITS,
-            math.ceil(math.log2(max(1.0, total_bytes / target_file_bytes))),
-        ),
-    )
-    df = read_table(spark, root).drop("_h3_int", "_h3_bucket")
+    df = read_table(spark, root)
     new = write_table(
-        df,
+        df.select(*_data_cols(df)),
         root,
         snap["h3_col"],
         key_is_int=snap.get("key_kind") == "int",
-        bucket_bits=bits,
+        target_file_bytes=target_file_bytes,
         data_subdir=f"data_v{snap['version'] + 1}",
     )
     new["compacted_from"] = snap["version"]

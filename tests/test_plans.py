@@ -1,7 +1,6 @@
 """Physical-plan regression gates for the 100 TB design claims
-(BENCH/BASELINE.md §4) — the assertions scripts/show_plans.py prints,
-promoted to pytest so a plan regression fails CI instead of relying on
-a manual run.
+(BENCH/BASELINE.md §4), as pytest assertions so a plan regression fails
+CI instead of relying on a manual run.
 
 Each test inspects the *executed* plan string:
 

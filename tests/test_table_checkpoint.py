@@ -1,6 +1,7 @@
 """Table layer (manifest pruning, snapshots) + checkpointed-stage resume."""
 
 import json
+import uuid
 from pathlib import Path
 
 import pytest
@@ -13,6 +14,9 @@ from sparkh3.plans import checkpoint
 from sparkh3.sources import manifest
 
 SF_DIR = "/root/testdata/sf0.001"
+# a target file size that splits the sf0.001 fixtures (~34 KB estimated)
+# into several range files, so file pruning has files to drop
+SMALL_FILES = 4096
 
 
 @pytest.fixture(scope="module")
@@ -34,7 +38,7 @@ class TestManifestTable:
 
     def test_file_pruning(self, spark, h3_docs, tmp_path):
         root = str(tmp_path / "tbl")
-        manifest.write_table(h3_docs, root, "h3_07")
+        manifest.write_table(h3_docs, root, "h3_07", target_file_bytes=SMALL_FILES)
         # query one hub's res-3 ancestor: only a few files should survive
         one = h3_docs.filter(
             (F.abs(F.col("lat") - 40.75) < 3) & (F.abs(F.col("lng") + 73.99) < 3)
@@ -147,7 +151,9 @@ class TestS2IntKeyedTable:
         from sparkh3.kernel import s2 as s2k
 
         root = str(tmp_path / "s2tbl")
-        snap = manifest.write_table(s2_docs, root, "s2_14", key_is_int=True)
+        snap = manifest.write_table(
+            s2_docs, root, "s2_14", key_is_int=True, target_file_bytes=SMALL_FILES
+        )
         assert snap["key_kind"] == "int"
         assert manifest.read_table(spark, root).count() == snap["total_rows"]
 
@@ -183,7 +189,9 @@ class TestS2IntKeyedTable:
         from sparkh3.kernel import s2 as s2k
 
         root = str(tmp_path / "s2tbl_poly")
-        manifest.write_table(s2_docs, root, "s2_14", key_is_int=True)
+        manifest.write_table(
+            s2_docs, root, "s2_14", key_is_int=True, target_file_bytes=SMALL_FILES
+        )
         tri = [(38.0, -76.0), (40.5, -70.5), (43.0, -75.0)]
         cov = s2k.polygon_covering(tri, 7)
         lo, hi = s2k.merge_ranges(cov)
@@ -249,9 +257,11 @@ class TestTableMaintenance:
         from pyspark.sql import functions as F
 
         root = str(tmp_path / "mnt")
-        snap1 = manifest.write_table(h3_docs, root, "h3_07")
+        snap1 = manifest.write_table(
+            h3_docs, root, "h3_07", target_file_bytes=SMALL_FILES
+        )
         n_files1 = len(snap1["files"])
-        assert n_files1 > 4  # default bucket width scatters a small table
+        assert n_files1 > 4  # a small target scatters a small table
 
         snap2 = manifest.compact_table(spark, root, target_file_bytes=1 << 30)
         assert snap2["version"] == snap1["version"] + 1
@@ -339,7 +349,9 @@ class TestTableChanges:
         unchanged rows in rewritten buckets cancel, and the diff only
         READS files added/removed between the snapshots."""
         root = str(tmp_path / "cdc")
-        snap1 = manifest.write_table(h3_docs, root, "h3_07")
+        snap1 = manifest.write_table(
+            h3_docs, root, "h3_07", target_file_bytes=SMALL_FILES
+        )
         rows = h3_docs.orderBy("doc_id").limit(3).collect()
         upd = spark.createDataFrame(
             [
@@ -428,7 +440,7 @@ class TestTableChanges:
             manifest.read_table(spark, root)
             .orderBy("doc_id")
             .limit(1)
-            .drop("_h3_int", "_h3_bucket")
+            .drop("_h3_int")
             .withColumn("lat", F.col("lat") + 1.0)
         )
         snap3 = manifest.merge_table(spark, root, one, "doc_id")
@@ -549,7 +561,9 @@ class TestDeleteTable:
         """Predicate delete rewrites only files containing matches;
         NULL-predicate rows survive (SQL DELETE semantics)."""
         root = str(tmp_path / "del")
-        snap1 = manifest.write_table(h3_docs, root, "h3_07")
+        snap1 = manifest.write_table(
+            h3_docs, root, "h3_07", target_file_bytes=SMALL_FILES
+        )
         victim = h3_docs.orderBy("doc_id").first()
         snap2 = manifest.delete_table(
             spark, root, F.col("doc_id") == victim.doc_id
@@ -655,27 +669,29 @@ class TestSchemaEvolution:
 
 class TestCowRegressions:
     """Regression gates for the copy-on-write layer: key moves across
-    buckets, schema evolution through merge/delete/CDC rewrites, and
+    files, schema evolution through merge/delete/CDC rewrites, and
     crash-replay orphan files."""
 
     def test_merge_key_move_leaves_no_stale_row(self, spark, h3_docs, tmp_path):
-        """An update that MOVES a key to a different cell/bucket must
+        """An update that MOVES a key to a different cell/file must
         rewrite the old row away — the replace contract holds wherever
-        the old row lives, not only in the buckets the update targets."""
+        the old row lives, not only in the files whose key range the
+        update targets."""
         root = str(tmp_path / "mvkey")
-        snap1 = manifest.write_table(h3_docs, root, "h3_07")
-        by_bucket = {}
-        for f in snap1["files"]:
-            bkt = manifest._bucket_of_path(f["path"])
-            if bkt not in by_bucket:
-                by_bucket[bkt] = (
-                    spark.read.parquet(str(Path(root) / f["path"]))
-                    .select("doc_id", "lat", "lng", "h3_07")
-                    .first()
-                )
-        assert len(by_bucket) >= 2, "fixture must span multiple buckets"
-        (a, b) = list(by_bucket.values())[:2]
-        # move a's key into b's cell (a different bucket)
+        snap1 = manifest.write_table(
+            h3_docs, root, "h3_07", target_file_bytes=SMALL_FILES
+        )
+        assert len(snap1["files"]) >= 2, "fixture must span multiple files"
+        fa, fb = snap1["files"][:2]
+        (a, b) = (
+            spark.read.parquet(str(Path(root) / f["path"]))
+            .select("doc_id", "lat", "lng", "h3_07")
+            .first()
+            for f in (fa, fb)
+        )
+        # b's cell lies outside a's file's key range
+        assert not fa["h3_min"] <= int(b.h3_07, 16) <= fa["h3_max"]
+        # move a's key into b's cell (a different file)
         upd = spark.createDataFrame(
             [(a.doc_id, b.lat, b.lng, b.h3_07)],
             "doc_id string, lat double, lng double, h3_07 string",
@@ -784,7 +800,7 @@ class TestCowRegressions:
         # into BOTH the live generation and the next append's target
         src = root_p / snap1["files"][0]["path"]
         for gen in ("data", "data_a2"):
-            dst = root_p / gen / "_h3_bucket=999" / "stray.parquet"
+            dst = root_p / gen / "stray.parquet"
             dst.parent.mkdir(parents=True, exist_ok=True)
             shutil.copy(src, dst)
         extra = h3_docs.limit(3)
@@ -798,6 +814,155 @@ class TestCowRegressions:
         )
         with pytest.raises(Exception, match="unknown _change_type"):
             manifest.rollup_delta(ch, ["g"], ["v"]).collect()
+
+
+def _cell_frame(spark, tmp_path, n: int, seed: int):
+    """Seeded globe-wide res-8 cells as a parquet-backed frame (so the
+    optimizer knows its size): (h3_08 string, id long), plus the cells
+    as uint64 in id order."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sparkh3.kernel import geo
+    from sparkh3.kernel import index as ix
+
+    rng = np.random.default_rng(seed)
+    lat = np.degrees(np.arcsin(rng.uniform(-1.0, 1.0, n)))
+    lng = rng.uniform(-180.0, 180.0, n)
+    cells = geo.latlng_to_cell(lat, lng, 8)
+    path = tmp_path / f"cells_{seed}.parquet"
+    pq.write_table(
+        pa.table({"h3_08": ix.int_to_str(cells), "id": np.arange(n)}), path
+    )
+    return spark.read.parquet(str(path)), cells
+
+
+def _under(cells, query: list[str]):
+    """Mask of `cells` that descend from any query cell, by the kernel's
+    cell_to_parent (independent of the table's descendant-range math)."""
+    import numpy as np
+
+    from sparkh3.kernel import index as ix
+
+    mask = np.zeros(len(cells), dtype=bool)
+    for q in query:
+        qi = np.uint64(int(q, 16))
+        res = int(ix.get_resolution(np.array([qi]))[0])
+        mask |= ix.cell_to_parent(cells, res) == qi
+    return mask
+
+
+def _ids(df) -> list[int]:
+    return sorted(r.id for r in df.select("id").collect())
+
+
+class TestRangeFileLayout:
+    """The flat layout: range-clustered, key-sorted files, no partition
+    directories; pruned reads exact at any file count; snapshots of the
+    older bucket-directory layout still read and append."""
+
+    @pytest.mark.parametrize("target, many", [(None, False), (8 << 10, True)])
+    def test_pruned_read_exact(self, spark, tmp_path, target, many):
+        import numpy as np
+
+        from sparkh3.kernel import geo
+        from sparkh3.kernel import index as ix
+
+        df, cells = _cell_frame(spark, tmp_path, 5000, seed=11)
+        root = str(tmp_path / "tbl")
+        kw = {"target_file_bytes": target} if target else {}
+        snap = manifest.write_table(df, root, "h3_08", **kw)
+        n_files = len(snap["files"])
+        assert n_files >= 8 if many else n_files == 1
+        assert not any("=" in f["path"] for f in snap["files"])
+        full = manifest.read_table(spark, root).select("id", "_h3_int").toPandas()
+        stored = full["_h3_int"].to_numpy().astype(np.int64).view(np.uint64)
+        assert np.array_equal(np.sort(stored), np.sort(cells))
+        ids = full["id"].to_numpy()
+        rng = np.random.default_rng(12)
+        for res in range(9):
+            picks = cells[rng.choice(len(cells), 3, replace=False)]
+            stray = geo.latlng_to_cell(
+                rng.uniform(-80, 80, 1), rng.uniform(-180, 180, 1), res
+            )
+            query = list(ix.int_to_str(ix.cell_to_parent(picks, res)))
+            query += list(ix.int_to_str(stray))
+            got = _ids(manifest.read_table(spark, root, cells=query))
+            want = sorted(ids[_under(stored, query)].tolist())
+            assert got == want and len(got) >= 1, res
+
+    def test_bucket_dir_snapshot_reads_and_appends(self, spark, tmp_path):
+        """A hand-built v1 in the old layout (files under
+        data/_h3_bucket=<b>/, a snapshot carrying bucket_bits and the
+        bucket column in its schema) reads at v1 and, after an append
+        by the range writer, at v2 — full and pruned."""
+        import numpy as np
+
+        from sparkh3 import functions as H3F
+        from sparkh3.kernel import index as ix
+
+        df, cells = _cell_frame(spark, tmp_path, 2000, seed=21)
+        old, new = df.filter(F.col("id") < 1500), df.filter(F.col("id") >= 1500)
+        root = tmp_path / "legacy"
+        keyed = old.withColumn("_h3_int", H3F.h3_str_to_int("h3_08")).withColumn(
+            "_h3_bucket",
+            F.shiftrightunsigned(F.col("_h3_int"), 42).bitwiseAND(F.lit(1023)),
+        )
+        keyed.repartition("_h3_bucket").sortWithinPartitions("_h3_int").write.partitionBy(
+            "_h3_bucket"
+        ).parquet(str(root / "data"))
+        files = manifest._scan_file_stats(root, root / "data")
+        assert len(files) > 32 and all("_h3_bucket=" in f["path"] for f in files)
+        (root / "metadata").mkdir()
+        (root / "metadata" / "v1.json").write_text(json.dumps({
+            "version": 1, "parent": None, "ts": 0.0, "h3_col": "h3_08",
+            "key_kind": "h3_str", "bucket_bits": 10, "files": files,
+            "total_rows": 1500, "properties": {},
+            "schema": keyed.schema.jsonValue(),
+        }))
+        (root / "metadata" / "current").write_text("1")
+
+        snap2 = manifest.write_table(new, str(root), "h3_08", mode="append")
+        assert snap2["version"] == 2 and snap2["total_rows"] == 2000
+        query = list(ix.int_to_str(ix.cell_to_parent(cells[:40:4], 2)))
+        for version, n in ((1, 1500), (2, 2000)):
+            assert _ids(manifest.read_table(spark, str(root), version=version)) == list(
+                range(n)
+            )
+            got = _ids(
+                manifest.read_table(spark, str(root), cells=query, version=version)
+            )
+            want = np.flatnonzero(_under(cells[:n], query)).tolist()
+            assert got == want and len(want) > 0, version
+
+    def test_read_lists_without_jobs_and_write_budget(self, spark, tmp_path):
+        """Counter gate on a fresh ~20k-row table: the write runs 2 Spark
+        jobs (the single-partition exchange and the write; a range-sampling
+        job would make 3), and an unpruned read_table runs none (it lists
+        few enough paths to stay under Spark's parallel-listing
+        threshold of 32)."""
+        sc = spark.sparkContext
+
+        def jobs_in(fn):
+            group = f"layout-gate-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, group)
+            try:
+                out = fn()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+            return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+        df, cells = _cell_frame(spark, tmp_path, 20_000, seed=31)
+        root = str(tmp_path / "gate")
+        snap, write_jobs = jobs_in(lambda: manifest.write_table(df, root, "h3_08"))
+        assert snap["total_rows"] == 20_000
+        assert write_jobs <= 2
+        back, read_jobs = jobs_in(lambda: manifest.read_table(spark, root))
+        assert read_jobs == 0
+        assert back.count() == 20_000
 
 
 class TestCheckpointGuardrails:

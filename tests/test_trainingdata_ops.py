@@ -17,6 +17,24 @@ def docs(spark):
     return spark.read.parquet(f"{SF_DIR}/documents.parquet")
 
 
+def _scan_output_rows(df) -> int:
+    """Run `df` and return the rows its Parquet scans produced: the Scan
+    node's output-row metric, counted after file, row-group and page
+    pruning and before any residual filter."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    rows, stack = 0, [plan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName().startswith("Scan"):
+            rows += node.metrics().apply("numOutputRows").value()
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return rows
+
+
 class TestExactDedup:
     @pytest.mark.parametrize("hash_key", [False, True])
     def test_groups(self, spark, hash_key):
@@ -565,11 +583,9 @@ class TestSimilarity:
     def test_ivf_manifest_table_prunes_and_matches(self, emb, spark, tmp_path):
         """The declared 100 TB IVF layout as a TESTED path: the corpus is
         materialized list-major through the manifest table layer, a probe
-        set with n_probe < n_lists prunes data FILES before Spark plans,
-        and the pruned-table read path returns exactly the in-memory
-        path's results (same codebook, same assignment)."""
-        from sparkh3.sources import manifest
-
+        set with n_probe < n_lists prunes the scan by key range, and the
+        pruned-table read path returns exactly the in-memory path's
+        results (same codebook, same assignment)."""
         root = str(tmp_path / "ivf_table")
         n_lists = 16
         cents = similarity.ivf_train_centroids(emb, n_lists)
@@ -582,15 +598,12 @@ class TestSimilarity:
             F.col("vec_id").alias("query_id"), "embedding"
         )
         n_probe = 3
-        # file pruning is real: a sub-full probe set keeps strictly
-        # fewer files than the table holds
+        # pruning is real: a sub-full probe set scans strictly fewer
+        # rows than the table holds
         probe = list(range(n_probe))
-        kept, total = manifest.pruned_file_count(
-            root, ranges=similarity.ivf_list_ranges(probe)
-        )
-        assert kept < total
-        # probed lists' rows are all present and list-pure after pruning
         pruned = similarity.ivf_read_corpus(spark, root, probe)
+        assert len(pruned.collect()) <= _scan_output_rows(pruned) < snap["total_rows"]
+        # probed lists' rows are all present and list-pure after pruning
         assert set(
             r._list for r in pruned.select("_list").distinct().collect()
         ) <= set(probe)
@@ -664,17 +677,15 @@ class TestSimilarity:
 
         root = str(tmp_path / "ivfpq")
         n_lists = 8
-        similarity.ivfpq_write_corpus(
+        snap = similarity.ivfpq_write_corpus(
             emb, root, n_lists=n_lists, m=16, k=64
         )
         queries = emb.limit(5).select(
             F.col("vec_id").alias("query_id"), "embedding"
         )
         # pruning is real for a sub-full probe set
-        kept, total = manifest.pruned_file_count(
-            root, ranges=similarity.ivf_list_ranges([0, 1])
-        )
-        assert kept < total
+        pruned = similarity.ivf_read_corpus(spark, root, [0, 1])
+        assert len(pruned.collect()) <= _scan_output_rows(pruned) < snap["total_rows"]
         got = similarity.ivfpq_topk(queries, root, topk=10, n_probe=4)
         a = {(r.query_id, r.vec_id) for r in got.collect()}
         e = {
