@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import DataType, StructField, StructType
 
+from .driver import bounded_collect
+
 __all__ = [
     "connected_components",
     "dedup_by_pairs",
@@ -221,7 +223,7 @@ def connected_components(
     )
     # one job decides the strategy AND carries the small pair list to
     # the driver (at most DRIVER_CC_PAIRS + 1 rows, whatever its size)
-    head = raw.limit(DRIVER_CC_PAIRS + 1).toArrow()
+    head = bounded_collect(raw, DRIVER_CC_PAIRS + 1)
     if head.num_rows <= DRIVER_CC_PAIRS:
         return _cc_driver(raw.sparkSession, head, nodes.schema[0].dataType)
     return _cc_star(raw, nodes, max_iter)

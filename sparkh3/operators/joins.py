@@ -8,7 +8,7 @@
   theta-join while shuffling only co-located cells. Small polygon sides
   are broadcast (no shuffle of the points at all).
 
-* ``knn_join``: exact k-nearest-neighbors. Three strategies, chosen by
+* ``knn_join``: exact k-nearest-neighbors. Two strategies, chosen by
   the query side's size, share two primitives: ``_score_all`` scores a
   few queries against every point, and ``_ring_round`` scores the points
   inside int64 H3 disks around the queries and certifies each query
@@ -26,14 +26,17 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import functions as H3F
+from .driver import bounded_collect
 
 EARTH_RADIUS_KM = 6371.007180918475
 
-# knn_join strategy thresholds on the query side's size: up to
-# NESTED_LOOP_QUERIES queries score every point; up to BROADCAST_QUERIES
-# take the broadcast certificate round; more run the iterative rounds
-NESTED_LOOP_QUERIES = 32
+# knn_join strategy threshold on the query side's size: up to
+# BROADCAST_QUERIES queries take the broadcast certificate round; more
+# run the iterative rounds
 BROADCAST_QUERIES = 1024
+# at most this many queries the certificate round left open are scored
+# against every point (_score_all) instead of taking the iterative rounds
+STRAGGLER_QUERIES = 32
 # disk radius of the broadcast certificate round
 CERT_RINGS = 8
 _OUT = ("_qid", "_pid", "_dist", "_rank")
@@ -50,17 +53,6 @@ def haversine_km(lat1: Column, lng1: Column, lat2: Column, lng2: Column) -> Colu
         + F.cos(rl1) * F.cos(rl2) * F.sin(dlng / 2) * F.sin(dlng / 2)
     )
     return F.lit(2.0 * EARTH_RADIUS_KM) * F.asin(F.sqrt(a))
-
-
-def _bounded_collect(df: DataFrame, n: int) -> pa.Table:
-    """At most ``n`` rows of ``df`` on the driver, as an Arrow table, in
-    one job and without touching session conf. ``toArrow`` executes the
-    whole CollectLimit plan (a per-partition limit, one single-partition
-    exchange, a global limit), so the driver receives at most ``n`` rows
-    whatever the partition count. ``limit(n).collect()`` would instead
-    run the incremental take ladder (1, 4, 16, ... partitions): one
-    sequential job per step on a many-partition frame."""
-    return df.limit(n).toArrow()
 
 
 def _avg_hex_area_km2(res: int) -> float:
@@ -138,7 +130,7 @@ def pip_join(
         # a misdeclared huge polygon side falls back to the shuffle path
         # instead of OOMing the driver.
         rows = ArrowTableToRowsConversion.convert(
-            _bounded_collect(polygons, max_broadcast_rows + 1),
+            bounded_collect(polygons, max_broadcast_rows + 1),
             polygons.schema,
         )
         if len(rows) > max_broadcast_rows:
@@ -315,23 +307,28 @@ def knn_join(
     """Exact kNN join. Output: (query_id, point_id, dist_km, rank).
     Deterministic tie-break: (dist_km, point_id) ascending.
 
-    Three strategies, chosen by the query side's size and built on two
+    Two strategies, chosen by the query side's size and built on two
     shared primitives (``_score_all``: every point against a few
     broadcast queries; ``_ring_round``: the points in int64 H3 disks
     around the queries, with a per-query exactness certificate):
 
-    * <= ``NESTED_LOOP_QUERIES`` (32) queries: ``_score_all`` alone. No
-      H3 encode, no Python boundary, no certificate; cheaper than any
-      disk join at every corpus size while the query side is this small.
-    * <= ``BROADCAST_QUERIES`` (1024) queries (``_knn_broadcast``): one
-      ring round against disks computed in-process by the kernel and
-      broadcast. Queries it cannot certify (sparse regions) take
-      ``_score_all`` when there are at most 32 of them, else the
-      iterative rounds.
+    * <= ``BROADCAST_QUERIES`` (1024) queries, however few
+      (``_knn_broadcast``): one ring round against disks computed
+      in-process by the kernel and broadcast. Queries it cannot certify
+      (sparse regions) take ``_score_all`` when at most
+      ``STRAGGLER_QUERIES`` (32) remain, else the iterative rounds.
     * larger query sides (``_knn_iterative``): ring rounds at
       ``resolution`` and every 3 resolutions coarser, ``_score_all`` for
       whatever is left at res <= 0. The open-query set stays a
       DataFrame; only counts reach the driver.
+
+    ``_score_all`` is not a strategy of its own for small query sides:
+    each task sorts all of its |points| x |queries| rows, so its cost
+    grows with the point count. Measured on 4 cores (k=5, res 6, hub
+    queries), it took 3.0-3.2 s for 32 queries on 20k points against
+    1.4-1.6 s for the certificate round, and 9.0-9.3 s for 8 queries on
+    200k points against 2.0-2.4 s. It was faster for 8 queries on 20k
+    points (1.0-1.5 s against 1.4-1.8 s) and on a 500-point input.
 
     The query side is read once, by a bounded one-job collect that is
     both the size probe and the broadcast input; it writes no session
@@ -339,22 +336,20 @@ def knn_join(
     """
     q = _query_side(queries, query_id, q_lat, q_lng)
     qt = _collect_queries(q, BROADCAST_QUERIES + 1)
-    pts = _point_side(points, point_id, p_lat, p_lng)
-    if qt.num_rows <= NESTED_LOOP_QUERIES:
-        out = _score_all(pts, pts.sparkSession.createDataFrame(qt), k)
-    else:
-        # the int64 cell projection is shared by every ring round and the
-        # straggler pass; cached for the call so none of them re-runs the
-        # caller's point pipeline or the encode (the strategies return
-        # only frames that no longer read it)
-        pts = _with_cells(pts, resolution).persist()
-        try:
-            if qt.num_rows <= BROADCAST_QUERIES:
-                out = _knn_broadcast(qt, pts, k, resolution)
-            else:
-                out = _knn_iterative(q, pts, k, resolution)
-        finally:
-            pts.unpersist()
+    # the int64 cell projection is shared by every ring round and the
+    # straggler pass; cached for the call so none of them re-runs the
+    # caller's point pipeline or the encode (the strategies return only
+    # frames that no longer read it)
+    pts = _with_cells(
+        _point_side(points, point_id, p_lat, p_lng), resolution
+    ).persist()
+    try:
+        if qt.num_rows <= BROADCAST_QUERIES:
+            out = _knn_broadcast(qt, pts, k, resolution)
+        else:
+            out = _knn_iterative(q, pts, k, resolution)
+    finally:
+        pts.unpersist()
     return out.select(
         F.col("_qid").alias(query_id),
         F.col("_pid").alias(point_id),
@@ -388,7 +383,7 @@ def _collect_queries(q: DataFrame, n: int) -> pa.Table:
     coordinates raise: they would encode to garbage cells (or poison
     every haversine) and the join would silently return arbitrary rows
     instead of failing."""
-    qt = _bounded_collect(q, n)
+    qt = bounded_collect(q, n)
     bad = pc.or_(
         pc.is_nan(pc.fill_null(qt["_qlat"], math.nan)),
         pc.is_nan(pc.fill_null(qt["_qlng"], math.nan)),
@@ -433,8 +428,8 @@ def _score_all(pts: DataFrame, queries: DataFrame, k: int) -> DataFrame:
     (_pid, _plat, _plng) points in one codegen pass. The rank-limit
     pushdown (WindowGroupLimit) keeps each task's top k per query, so
     the exchange after the |Q|-fold row inflation moves O(tasks·|Q|·k)
-    rows, not the inflated scan. Serves the nested-loop strategy, the
-    straggler pass and the coarsest-resolution fallback."""
+    rows, not the inflated scan. Serves the straggler pass and the
+    coarsest-resolution fallback."""
     return _top_k(pts.crossJoin(F.broadcast(queries)), k).select(*_OUT)
 
 
@@ -503,7 +498,7 @@ def _knn_broadcast(
     """Certificate strategy for a collected query side ``qt``: one ring
     round of ``CERT_RINGS`` rings against broadcast disks. Only the
     certified ids (<= |Q| rows) reach the driver; the rest take
-    ``_score_all`` when at most ``NESTED_LOOP_QUERIES`` remain (one pass
+    ``_score_all`` when at most ``STRAGGLER_QUERIES`` remain (one pass
     beats several ring rounds that each rescan the points), else the
     iterative rounds. ``pts`` carries ``_cell0`` (``_with_cells``)."""
     spark = pts.sparkSession
@@ -515,7 +510,7 @@ def _knn_broadcast(
     if left.num_rows == 0:
         return done
     sq = spark.createDataFrame(left)
-    if left.num_rows <= NESTED_LOOP_QUERIES:
+    if left.num_rows <= STRAGGLER_QUERIES:
         rest = _score_all(pts, sq, k).localCheckpoint(eager=True)
     else:
         rest = _knn_iterative(sq, pts, k, resolution)

@@ -1,23 +1,51 @@
 """Similarity search over embedding columns (array<float>).
 
-* ``cosine_topk``: exact brute-force top-k cosine — the correctness
-  baseline. Queries are broadcast; the scan side streams (no shuffle of
-  the corpus), score + window top-k.
-* ``lsh_cosine_topk``: random-hyperplane LSH bucketing as the scale
-  path — candidates only from matching signature buckets (multi-probe via
-  several tables), exact cosine re-rank among candidates.
+Five top-k operators, each returning (query_id, vec_id, <score>, rank)
+with the (score desc, vec_id asc) tie-break and self-matches excluded
+when ids collide:
 
-All dot products run as native ``zip_with``/``aggregate`` column algebra
-(JVM) — no Python UDF in the scoring loop.
+* ``cosine_topk``: exact brute-force cosine, the correctness baseline.
+  Queries are broadcast; the corpus streams (no shuffle of it).
+* ``ivf_cosine_topk``: IVF inverted lists. Each query re-ranks, by
+  exact cosine, only the corpus rows in its ``n_probe`` nearest lists;
+  the rows come from an in-memory corpus or a list-major manifest table
+  pruned to the probed lists.
+* ``lsh_cosine_topk``: random-hyperplane LSH buckets (several tables),
+  exact cosine re-rank among the candidates.
+* ``pq_topk``: product-quantized codes scored by per-query ADC lookup
+  tables.
+* ``ivfpq_topk``: IVF list pruning plus residual PQ codes, with an
+  optional exact re-rank from a cold vector table.
+
+They share three primitives: ``_rank_topk`` (the one top-k window),
+``_collect_queries`` (the bounded, null-checked, normalized query
+collect of the driver-side paths) and ``_probe`` (query-to-list
+assignment, which is also the body of the corpus assignment UDF).
+Cosine scores are native ``zip_with``/``aggregate`` column algebra
+(JVM), with no Python UDF in the scoring loop.
 """
 
 from __future__ import annotations
 
+import json
+from pathlib import Path
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
+
+from ..sources import manifest
+from .driver import bounded_collect
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -47,6 +75,120 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / F.greatest(_norm(a) * _norm(b), F.lit(1e-12))
 
 
+def _side(
+    df: DataFrame, id_col: str, vec_col: str, p: str, *extra
+) -> DataFrame:
+    """(_<p>id, _<p>v, *extra): a corpus (``p="c"``) or query (``"q"``)
+    side under the internal column names."""
+    return df.select(
+        F.col(id_col).alias(f"_{p}id"), F.col(vec_col).alias(f"_{p}v"), *extra
+    )
+
+
+def _with_cosine(pairs: DataFrame, score_col: str) -> DataFrame:
+    """(_qv, _cv) pairs scored by cosine rounded to 6 decimals."""
+    return pairs.withColumn(
+        score_col, F.round(cosine(F.col("_qv"), F.col("_cv")), 6)
+    )
+
+
+def _rank_topk(scored: DataFrame, score_col: str, k: int) -> DataFrame:
+    """Each query's top ``k`` rows of a (_qid, _cid, <score_col>) frame
+    in (score desc, _cid asc) order, as (query_id, vec_id, <score>,
+    rank): the one top-k window of every operator here."""
+    w = Window.partitionBy("_qid").orderBy(
+        F.col(score_col).desc(), F.col("_cid").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            F.col("_qid").alias("query_id"),
+            F.col("_cid").alias("vec_id"),
+            score_col,
+            "rank",
+        )
+    )
+
+
+def _unit(v: np.ndarray) -> np.ndarray:
+    """Rows L2-normalized, norms clamped at 1e-12 (a zero vector stays
+    zero)."""
+    return v / np.maximum(np.linalg.norm(v, axis=1, keepdims=True), 1e-12)
+
+
+def _empty_topk(
+    queries: DataFrame, query_id_col: str, vid_type, score_col: str
+) -> DataFrame:
+    """Zero-query result frame with the standard (query_id, vec_id,
+    score, rank) shape — createDataFrame([]) cannot infer a schema, so
+    the empty edge gets an explicit one."""
+    return queries.sparkSession.createDataFrame(
+        [],
+        StructType(
+            [
+                StructField("query_id", queries.schema[query_id_col].dataType),
+                StructField("vec_id", vid_type),
+                StructField(score_col, DoubleType()),
+                StructField("rank", IntegerType()),
+            ]
+        ),
+    )
+
+
+def _collect_queries(
+    queries: DataFrame,
+    query_id_col: str,
+    query_vec_col: str,
+    max_queries: int,
+    op: str,
+) -> tuple[pa.Table, np.ndarray] | None:
+    """The declared-small query side on the driver, read by one bounded
+    job: ``(qt, qvn)``, the (_qid, _qv) rows as an Arrow table and their
+    unit-normalized vectors, or None when there are no queries. More
+    than ``max_queries`` rows raise (the side is broadcast downstream),
+    and so does a null query vector."""
+    qt = bounded_collect(
+        _side(queries, query_id_col, query_vec_col, "q"), max_queries + 1
+    )
+    if qt.num_rows > max_queries:
+        raise ValueError(
+            f"{op} broadcasts the query side; got > {max_queries} rows "
+            "— pre-aggregate or raise max_queries explicitly"
+        )
+    if qt.num_rows == 0:
+        return None
+    if qt["_qv"].null_count:
+        raise ValueError(
+            f"{op}: query side contains null embeddings — filter "
+            f"{query_vec_col} IS NOT NULL first"
+        )
+    return qt, _unit(np.array(qt["_qv"].to_pylist(), dtype=np.float64))
+
+
+def _probe(
+    qvn: np.ndarray, centroids: np.ndarray, n_probe: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """``(order, q·c)``: each unit row's ``n_probe`` nearest lists by
+    cosine to the centroids, nearest first, and the (rows, n_lists)
+    dot products with the normalized centroids."""
+    cn = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
+    qdotc = qvn @ cn.T
+    return np.argsort(-qdotc, axis=1)[:, :n_probe], qdotc
+
+
+def _probe_frame(spark, qt: pa.Table, order: np.ndarray, **cols) -> DataFrame:
+    """One row per (query, probed list): ``qt``'s columns repeated per
+    list, ``_list``, and any per-pair ``cols`` (arrays shaped like
+    ``order``). Built from Arrow, so it is a local relation that
+    broadcasts into the corpus join."""
+    owner = np.repeat(np.arange(qt.num_rows), order.shape[1])
+    t = qt.take(owner).append_column("_list", pa.array(order.reshape(-1)))
+    for name, v in cols.items():
+        t = t.append_column(name, pa.array(np.asarray(v).reshape(-1)))
+    return spark.createDataFrame(t)
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -59,22 +201,10 @@ def cosine_topk(
     """Exact top-k by cosine. Output (query_id, vec_id, sim, rank);
     deterministic tie-break (sim desc, vec_id asc); self-matches excluded
     when ids collide."""
-    q = queries.select(
-        F.col(query_id_col).alias("_qid"), F.col(query_vec_col).alias("_qv")
-    )
-    c = corpus.select(F.col(id_col).alias("_cid"), F.col(vec_col).alias("_cv"))
+    q = _side(queries, query_id_col, query_vec_col, "q")
+    c = _side(corpus, id_col, vec_col, "c")
     joined = c.crossJoin(F.broadcast(q)).filter(F.col("_cid") != F.col("_qid"))
-    scored = joined.withColumn("sim", F.round(cosine(F.col("_qv"), F.col("_cv")), 6))
-    w = Window.partitionBy("_qid").orderBy(F.col("sim").desc(), F.col("_cid").asc())
-    out = scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-    return out.select(
-        F.col("_qid").alias("query_id"),
-        F.col("_cid").alias("vec_id"),
-        "sim",
-        "rank",
-    )
+    return _rank_topk(_with_cosine(joined, "sim"), "sim", k)
 
 
 def _hyperplane(dim: int, table: int, bit: int) -> list[float]:
@@ -110,7 +240,7 @@ def cosine_neardup_pairs(
     banding — vectors re-attach by id), exact cosine verify on the
     candidate pairs. Approximate (recall < 1), like MinHash for text.
     """
-    c = corpus.select(F.col(id_col).alias("_cid"), F.col(vec_col).alias("_cv"))
+    c = _side(corpus, id_col, vec_col, "c")
     if use_lsh:
         if dim is None:
             raise ValueError("dim is required for the LSH path")
@@ -157,27 +287,21 @@ def _valid_batch(vec: pd.Series):
 
 
 def _normalized_valid_batch(vec: pd.Series):
-    """``_valid_batch`` plus L2 normalization (norm clamping lives in
-    exactly one place)."""
+    """``_valid_batch`` plus L2 normalization (``_unit``)."""
     emb, idx = _valid_batch(vec)
-    if not idx:
-        return emb, idx
-    emb = emb / np.maximum(np.linalg.norm(emb, axis=1, keepdims=True), 1e-12)
-    return emb, idx
+    return (_unit(emb) if idx else emb), idx
 
 
 def _ivf_assign_udf(centroids: np.ndarray, n_probe: int):
-    """embedding -> array of the n_probe nearest centroid ids (by cosine;
-    centroids are L2-normalized so one matrix multiply per Arrow batch)."""
-    cn = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
+    """embedding -> array of the n_probe nearest centroid ids
+    (``_probe``: one matrix multiply per Arrow batch)."""
 
     @F.pandas_udf(ArrayType(LongType()))
     def f(vec: pd.Series) -> pd.Series:
         res: list = [None] * len(vec)
         emb, idx = _normalized_valid_batch(vec)
         if idx:
-            sims = emb @ cn.T  # (n, n_lists)
-            top = np.argsort(-sims, axis=1)[:, :n_probe]
+            top = _probe(emb, centroids, n_probe)[0]
             for j, i in enumerate(idx):
                 res[i] = top[j].tolist()
         return pd.Series(res)
@@ -202,14 +326,6 @@ def ivf_train_centroids(
     assign (vectorized matrix multiply) -> groupBy(list) mean via
     applyInPandas. The codebook (n_lists x dim floats) is driver-held by
     design — it is the broadcastable dimension table of IVF."""
-    from pyspark.sql.types import (
-        ArrayType as AT,
-        DoubleType,
-        LongType as LT,
-        StructField,
-        StructType,
-    )
-
     seeds = (
         corpus.select(F.col(vec_col).alias("_v"), F.xxhash64(F.col(id_col)).alias("_h"))
         .filter(F.col("_v").isNotNull())
@@ -219,7 +335,10 @@ def ivf_train_centroids(
     )
     cents = np.stack([np.asarray(r["_v"], dtype=np.float64) for r in seeds])
     schema = StructType(
-        [StructField("_list", LT()), StructField("_mean", AT(DoubleType()))]
+        [
+            StructField("_list", LongType()),
+            StructField("_mean", ArrayType(DoubleType())),
+        ]
     )
 
     def mean_of(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -264,135 +383,60 @@ def ivf_cosine_topk(
     inverted-list layout is the natural list-major, range-pruned parquet
     layout for a 100 TB corpus.
 
-    ``table_root`` is the at-scale read path: the corpus was
-    materialized list-major by ``ivf_write_corpus`` and only the FILES
-    of the probed lists are read — the manifest layer prunes the scan
-    list before Spark plans (``corpus`` may be None then; the codebook
-    is loaded from the table's metadata so assignment is guaranteed
-    consistent with what was written)."""
-    q = queries.select(
-        F.col(query_id_col).alias("_qid"), F.col(query_vec_col).alias("_qv")
-    )
+    The query side (<= ``max_queries`` rows, null vectors raise) is
+    collected once and assigned to its lists driver-side; the
+    (query, list) pairs broadcast into the corpus join. The two paths
+    differ only in where corpus rows come from: ``corpus`` rows are
+    assigned to lists by one Arrow UDF pass, while ``table_root`` is the
+    at-scale read path: the corpus was materialized list-major by
+    ``ivf_write_corpus`` and only the FILES of the probed lists are read
+    (the manifest layer prunes the scan list before Spark plans;
+    ``corpus`` may be None then, and the codebook is loaded from the
+    table's metadata so assignment is consistent with what was
+    written)."""
+    spark = queries.sparkSession
     if table_root is not None:
         # resolve ONE snapshot version up front and thread it through
         # both the codebook load and the pruned read — a concurrent
         # writer commit between the two must not mix old centroids with
         # new data files (same single-version rule as ivfpq_topk)
-        from ..sources import manifest
-
-        spark = queries.sparkSession
         version = manifest.load_snapshot(table_root)["version"]
-        cb = _ivf_load_codebook(table_root, version)
-        centroids = cb["centroids"]
-        # the query side is broadcast into the probed lists downstream,
-        # so it is driver-bounded by construction — collect it ONCE
-        # (bounded) and assign lists driver-side with the same
-        # normalized-matmul + argsort the Arrow UDF uses; this replaces
-        # the old persist()-without-unpersist of the assignment scan
-        # (one leaked cached Dataset per call) and its second scan
-        qrows = q.limit(max_queries + 1).collect()
-        if len(qrows) > max_queries:
-            raise ValueError(
-                "ivf_cosine_topk(table_root=...) broadcasts the query "
-                f"side; got > {max_queries} rows — pre-aggregate or "
-                "raise max_queries explicitly"
-            )
-        if not qrows:
-            table_schema = ivf_read_corpus(
-                spark, table_root, [], version=version
-            ).schema
-            return _empty_topk(
-                spark,
-                queries.schema[query_id_col].dataType,
-                table_schema[cb["id_col"]].dataType,
-                "sim",
-            )
-        if any(r["_qv"] is None for r in qrows):
-            raise ValueError(
-                "ivf_cosine_topk: query side contains null embeddings "
-                f"— filter {query_vec_col} IS NOT NULL first"
-            )
-        qv = np.array(
-            [np.asarray(r["_qv"], dtype=np.float64) for r in qrows]
+        cb = _load_codebook(table_root, version, "ivf")
+        centroids = np.asarray(cb["centroids"], dtype=np.float64)
+        id_col, vec_col = cb["id_col"], cb["vec_col"]
+    elif corpus is None:
+        raise ValueError(
+            "ivf_cosine_topk needs either a corpus DataFrame or "
+            "table_root (a corpus written by ivf_write_corpus)"
         )
-        qvn = qv / np.maximum(
-            np.linalg.norm(qv, axis=1, keepdims=True), 1e-12
+    got = _collect_queries(
+        queries, query_id_col, query_vec_col, max_queries, "ivf_cosine_topk"
+    )
+    if got is None:
+        if table_root is not None:
+            corpus = ivf_read_corpus(spark, table_root, [], version=version)
+        return _empty_topk(
+            queries, query_id_col, corpus.schema[id_col].dataType, "sim"
         )
-        cn = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-        order = np.argsort(-(qvn @ cn.T), axis=1)[:, :n_probe]
-        from pyspark.sql.types import (
-            ArrayType as _AT,
-            DoubleType as _DT,
-            LongType as _LT,
-            StructField as _SF,
-            StructType as _ST,
-        )
-
-        pair_rows = [
-            (r["_qid"], [float(x) for x in r["_qv"]], int(lst))
-            for r, lists in zip(qrows, order)
-            for lst in lists
-        ]
-        q_l = spark.createDataFrame(
-            pair_rows,
-            _ST(
-                [
-                    _SF("_qid", queries.schema[query_id_col].dataType),
-                    _SF("_qv", _AT(_DT())),
-                    _SF("_list", _LT()),
-                ]
-            ),
-        )
-        probe = sorted({int(lst) for lists in order for lst in lists})
-        c_l = ivf_read_corpus(
-            spark, table_root, probe, version=version
-        ).select(
-            F.col(cb["id_col"]).alias("_cid"),
-            F.col(cb["vec_col"]).alias("_cv"),
-            "_list",
+    qt, qvn = got
+    if centroids is None:
+        centroids = ivf_train_centroids(corpus, n_lists, id_col, vec_col)
+    order, _ = _probe(qvn, centroids, n_probe)
+    if table_root is not None:
+        c_l = _side(
+            ivf_read_corpus(spark, table_root, order.ravel(), version=version),
+            id_col, vec_col, "c", "_list",
         )
     else:
-        if corpus is None:
-            raise ValueError(
-                "ivf_cosine_topk needs either a corpus DataFrame or "
-                "table_root (a corpus written by ivf_write_corpus)"
-            )
-        # the query side is broadcast into the probed lists below, so
-        # the max_queries bound must hold on THIS path too (one bounded
-        # count, same guardrail as the table_root path / radius_join)
-        if q.limit(max_queries + 1).count() > max_queries:
-            raise ValueError(
-                "ivf_cosine_topk broadcasts the query side; got > "
-                f"{max_queries} rows — pre-aggregate or raise "
-                "max_queries explicitly"
-            )
-        if centroids is None:
-            centroids = ivf_train_centroids(corpus, n_lists, id_col, vec_col)
-        c = corpus.select(
-            F.col(id_col).alias("_cid"), F.col(vec_col).alias("_cv")
+        assign = _ivf_assign_udf(centroids, 1)
+        c_l = _side(corpus, id_col, vec_col, "c").withColumn(
+            "_list", F.element_at(assign(F.col("_cv")), 1)
         )
-        c_assign = _ivf_assign_udf(centroids, 1)
-        q_assign = _ivf_assign_udf(centroids, n_probe)
-        c_l = c.withColumn("_list", F.element_at(c_assign(F.col("_cv")), 1))
-        q_l = q.select(
-            "_qid", "_qv", F.explode(q_assign(F.col("_qv"))).alias("_list")
-        )
+    q_l = _probe_frame(spark, qt, order)
     cands = c_l.join(F.broadcast(q_l), "_list").filter(
         F.col("_cid") != F.col("_qid")
     )
-    scored = cands.withColumn(
-        "sim", F.round(cosine(F.col("_qv"), F.col("_cv")), 6)
-    )
-    w = Window.partitionBy("_qid").orderBy(F.col("sim").desc(), F.col("_cid").asc())
-    out = scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-    return out.select(
-        F.col("_qid").alias("query_id"),
-        F.col("_cid").alias("vec_id"),
-        "sim",
-        "rank",
-    )
+    return _rank_topk(_with_cosine(cands, "sim"), "sim", k)
 
 
 # ---------------------------------------------------------------------------
@@ -445,11 +489,6 @@ def ivf_write_corpus(
     from stored vectors). ``list_col`` names an existing list-id column
     to reuse (caller already assigned, e.g. to compute residuals) —
     the centroids passed MUST be the ones that produced it."""
-    import json as _json
-    from pathlib import Path
-
-    from ..sources import manifest
-
     if not 1 <= n_lists <= (1 << (63 - IVF_LIST_SHIFT)):
         raise ValueError(
             f"n_lists must be 1..{1 << (63 - IVF_LIST_SHIFT)}, got {n_lists}"
@@ -475,33 +514,34 @@ def ivf_write_corpus(
     if not store_vec:
         keyed = keyed.drop(vec_col)
     snap = manifest.write_table(keyed, root, "_ivf_key", key_is_int=True)
-    codebook = {
-        "n_lists": int(n_lists),
-        "list_shift": IVF_LIST_SHIFT,
-        "id_col": id_col,
-        "vec_col": vec_col,
-        "centroids": np.asarray(centroids, dtype=np.float64).tolist(),
-    }
-    (
-        Path(root) / "metadata" / f"ivf_codebook_v{snap['version']}.json"
-    ).write_text(_json.dumps(codebook))
+    _save_codebook(
+        root,
+        snap["version"],
+        "ivf",
+        {
+            "n_lists": int(n_lists),
+            "list_shift": IVF_LIST_SHIFT,
+            "id_col": id_col,
+            "vec_col": vec_col,
+            "centroids": np.asarray(centroids, dtype=np.float64).tolist(),
+        },
+    )
     return snap
 
 
-def _ivf_load_codebook(root: str, version: int | None = None) -> dict:
-    import json as _json
-    from pathlib import Path
+def _codebook_path(root: str, version: int, kind: str) -> Path:
+    return Path(root) / "metadata" / f"{kind}_codebook_v{version}.json"
 
-    from ..sources import manifest
 
-    snap = manifest.load_snapshot(root, version)
-    cb = _json.loads(
-        (
-            Path(root) / "metadata" / f"ivf_codebook_v{snap['version']}.json"
-        ).read_text()
-    )
-    cb["centroids"] = np.asarray(cb["centroids"], dtype=np.float64)
-    return cb
+def _save_codebook(root: str, version: int, kind: str, book: dict) -> None:
+    """Persist a codebook (``kind`` "ivf" or "pq") beside snapshot
+    ``version``, so reads of that version score with the exact
+    codebooks its data was written with."""
+    _codebook_path(root, version, kind).write_text(json.dumps(book))
+
+
+def _load_codebook(root: str, version: int, kind: str) -> dict:
+    return json.loads(_codebook_path(root, version, kind).read_text())
 
 
 def ivf_read_corpus(
@@ -511,8 +551,6 @@ def ivf_read_corpus(
     prunes data FILES to the probe set's key ranges before Spark plans,
     and the residual range filter pushes down to parquet row groups and
     pages."""
-    from ..sources import manifest
-
     return manifest.read_table(
         spark, root, ranges=ivf_list_ranges(probe_lists), version=version
     )
@@ -567,10 +605,8 @@ def lsh_cosine_topk(
     scanned once, only (id, table, sig) rides the explode, and vectors
     re-attach to the (small) candidate set by id."""
     sig_udf = lsh_signatures_udf(dim, n_tables, n_bits)
-    c = corpus.select(F.col(id_col).alias("_cid"), F.col(vec_col).alias("_cv"))
-    q = queries.select(
-        F.col(query_id_col).alias("_qid"), F.col(query_vec_col).alias("_qv")
-    )
+    c = _side(corpus, id_col, vec_col, "c")
+    q = _side(queries, query_id_col, query_vec_col, "q")
     c_b = c.withColumn("_sigs", sig_udf(F.col("_cv"))).select(
         "_cid", F.posexplode("_sigs").alias("_t", "_sig")
     )
@@ -586,17 +622,7 @@ def lsh_cosine_topk(
     # vectors attach to candidates only (candidate set is small by
     # construction; AQE broadcasts it into the corpus scan)
     cands = cand_ids.join(c, "_cid").join(F.broadcast(q), "_qid")
-    scored = cands.withColumn("sim", F.round(cosine(F.col("_qv"), F.col("_cv")), 6))
-    w = Window.partitionBy("_qid").orderBy(F.col("sim").desc(), F.col("_cid").asc())
-    out = scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-    return out.select(
-        F.col("_qid").alias("query_id"),
-        F.col("_cid").alias("vec_id"),
-        "sim",
-        "rank",
-    )
+    return _rank_topk(_with_cosine(cands, "sim"), "sim", k)
 
 
 # ---------------------------------------------------------------------------
@@ -653,9 +679,7 @@ def pq_train(
     )
     if normalize:
         # normalize so PQ inner products track cosine
-        sample = sample / np.maximum(
-            np.linalg.norm(sample, axis=1, keepdims=True), 1e-12
-        )
+        sample = _unit(sample)
     books = np.empty((m, k, dsub), dtype=np.float64)
     for s in range(m):
         sub = sample[:, s * dsub : (s + 1) * dsub]
@@ -701,28 +725,17 @@ def pq_encode_udf(codebooks: np.ndarray, normalize: bool = True):
     return f
 
 
-def _empty_topk(spark, qid_type, vid_type, score_name: str) -> DataFrame:
-    """Zero-query result frame with the standard (query_id, vec_id,
-    score, rank) shape — createDataFrame([]) cannot infer a schema, so
-    the empty edge gets an explicit one."""
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
+def _adc_tables(qvn: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """Per-query ADC lookup tables, (nq, m, k): tables[q, s, c] =
+    q_sub(s) . codebook[s, c]."""
+    m, _, dsub = books.shape
+    return np.einsum("qsd,scd->qsc", qvn.reshape(len(qvn), m, dsub), books)
 
-    return spark.createDataFrame(
-        [],
-        StructType(
-            [
-                StructField("query_id", qid_type),
-                StructField("vec_id", vid_type),
-                StructField(score_name, DoubleType()),
-                StructField("rank", IntegerType()),
-            ]
-        ),
-    )
+
+def _adc(table: np.ndarray, codes: np.ndarray) -> np.ndarray:
+    """ADC scores of (n, m) PQ ``codes`` against one query's (m, k)
+    lookup table: sum over subspaces s of table[s, codes[:, s]]."""
+    return table[np.arange(table.shape[0])[None, :], codes].sum(axis=1)
 
 
 def pq_topk(
@@ -752,69 +765,33 @@ def pq_topk(
     (topk+1) rows, so the top-k window shuffles nq x (topk+1) x
     n_batches rows, not nq x n. The query side is declared-small
     (<= max_queries, enforced by a bounded collect)."""
-    m, k, dsub = codebooks.shape
-    qrows = (
-        queries.select(query_id_col, query_vec_col)
-        .limit(max_queries + 1)
-        .collect()
+    got = _collect_queries(
+        queries, query_id_col, query_vec_col, max_queries, "pq_topk"
     )
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"pq_topk broadcasts per-query ADC tables; got > {max_queries} "
-            "query rows — pre-aggregate or raise max_queries explicitly"
-        )
-    if not qrows:
+    if got is None:
         return _empty_topk(
-            queries.sparkSession,
-            queries.schema[query_id_col].dataType,
-            corpus.schema[id_col].dataType,
-            "score",
+            queries, query_id_col, corpus.schema[id_col].dataType, "score"
         )
-    if any(r[query_vec_col] is None for r in qrows):
-        raise ValueError(
-            "pq_topk: query side contains null embeddings — filter "
-            f"{query_vec_col} IS NOT NULL first"
-        )
-    qids = [r[query_id_col] for r in qrows]
-    qv = np.array(
-        [np.asarray(r[query_vec_col], dtype=np.float64) for r in qrows]
+    qt, qvn = got
+    qids = qt["_qid"].to_pylist()
+    codes = (
+        pq_encode_udf(codebooks)(F.col(vec_col))
+        if code_col is None
+        else F.col(code_col)
     )
-    qv = qv / np.maximum(np.linalg.norm(qv, axis=1, keepdims=True), 1e-12)
-    # ADC tables: tables[q, s, c] = q_sub(s) . codebook[s, c]
-    tables = np.einsum(
-        "qsd,scd->qsc", qv.reshape(len(qids), m, dsub), codebooks
+    c = corpus.select(
+        F.col(id_col).alias("_cid"), codes.alias("_codes")
+    ).filter(F.col("_codes").isNotNull())
+    bc = corpus.sparkSession.sparkContext.broadcast(
+        (qids, _adc_tables(qvn, codebooks))
     )
-    if code_col is None:
-        c = corpus.select(
-            F.col(id_col).alias("_cid"),
-            pq_encode_udf(codebooks)(F.col(vec_col)).alias("_codes"),
-        )
-    else:
-        c = corpus.select(
-            F.col(id_col).alias("_cid"), F.col(code_col).alias("_codes")
-        )
-    bc = corpus.sparkSession.sparkContext.broadcast((qids, tables))
-    from pyspark.sql.types import (
-        DoubleType,
-        StructField,
-        StructType,
-    )
-
-    id_field = next(
-        f for f in c.schema.fields if f.name == "_cid"
-    ).dataType
-    qid_field = next(
-        f for f in queries.schema.fields if f.name == query_id_col
-    ).dataType
     out_schema = StructType(
         [
-            StructField("query_id", qid_field),
-            StructField("vec_id", id_field),
+            StructField("_qid", queries.schema[query_id_col].dataType),
+            StructField("_cid", c.schema["_cid"].dataType),
             StructField("score", DoubleType()),
         ]
     )
-
-    c = c.filter(F.col("_codes").isNotNull())
 
     def fn(batches):
         ids, tabs = bc.value
@@ -834,17 +811,15 @@ def pq_topk(
             )
             n = len(codes)
             vids = pdf["_cid"].to_numpy()
-            # scores[q, i] = sum_s tabs[q, s, codes[i, s]]
-            sub_idx = np.arange(m)
             scores = np.zeros((nq, n), dtype=np.float64)
             for q in range(nq):
-                scores[q] = tabs[q][sub_idx[None, :], codes].sum(axis=1)
+                scores[q] = _adc(tabs[q], codes)
             scores = np.round(scores, 6)
             if n <= keep_n:
                 yield pd.DataFrame(
                     {
-                        "query_id": np.repeat(ids, n),
-                        "vec_id": np.tile(vids, nq),
+                        "_qid": np.repeat(ids, n),
+                        "_cid": np.tile(vids, nq),
                         "score": scores.reshape(-1),
                     }
                 )
@@ -857,8 +832,8 @@ def pq_topk(
             )  # (nq, keep_n)
             yield pd.DataFrame(
                 {
-                    "query_id": np.repeat(ids, keep_n),
-                    "vec_id": vids[sel.reshape(-1)],
+                    "_qid": np.repeat(ids, keep_n),
+                    "_cid": vids[sel.reshape(-1)],
                     "score": np.take_along_axis(scores, sel, axis=1).reshape(
                         -1
                     ),
@@ -866,14 +841,9 @@ def pq_topk(
             )
 
     scored = c.mapInPandas(fn, out_schema).filter(
-        F.col("vec_id") != F.col("query_id")
+        F.col("_cid") != F.col("_qid")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= topk
-    )
+    return _rank_topk(scored, "score", topk)
 
 
 def ivfpq_write_corpus(
@@ -899,9 +869,6 @@ def ivfpq_write_corpus(
     exact per (query, list); only the small second term is quantized).
     Both codebooks persist beside the snapshot; assignment runs ONCE
     (the list column is reused for residuals AND the table layout)."""
-    import json as _json
-    from pathlib import Path
-
     dim_row = (
         corpus.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
     )
@@ -911,15 +878,11 @@ def ivfpq_write_corpus(
         )
     dim = len(dim_row[0])
     cents = ivf_train_centroids(corpus, n_lists, id_col, vec_col)
-    cn = cents / np.maximum(
-        np.linalg.norm(cents, axis=1, keepdims=True), 1e-12
-    )
+    cn = _unit(cents)
     assign = _ivf_assign_udf(cents, 1)
     listed = corpus.withColumn(
         "_list", F.element_at(assign(F.col(vec_col)), 1)
     )
-
-    from pyspark.sql.types import DoubleType
 
     @F.pandas_udf(ArrayType(DoubleType()))
     def residual(vec: pd.Series, lst: pd.Series) -> pd.Series:
@@ -955,12 +918,11 @@ def ivfpq_write_corpus(
         )
     finally:
         resd.unpersist()
-    (
-        Path(root) / "metadata" / f"pq_codebook_v{snap['version']}.json"
-    ).write_text(
-        _json.dumps(
-            {"m": m, "k": k, "residual": True, "books": books.tolist()}
-        )
+    _save_codebook(
+        root,
+        snap["version"],
+        "pq",
+        {"m": m, "k": k, "residual": True, "books": books.tolist()},
     )
     return snap
 
@@ -1009,94 +971,38 @@ def ivfpq_topk(
     concurrent writer commit cannot mix centroids, PQ codebook, and
     data files from different versions. The query side is
     declared-small (<= max_queries, enforced by a bounded collect)."""
-    import json as _json
-    from pathlib import Path
-
-    from ..sources import manifest
-
     spark = queries.sparkSession
-    snap = manifest.load_snapshot(root)
-    version = snap["version"]
-    cb = _ivf_load_codebook(root, version)
-    pq = _json.loads(
-        (
-            Path(root) / "metadata" / f"pq_codebook_v{version}.json"
-        ).read_text()
+    version = manifest.load_snapshot(root)["version"]
+    cb = _load_codebook(root, version, "ivf")
+    pq = _load_codebook(root, version, "pq")
+    got = _collect_queries(
+        queries, query_id_col, query_vec_col, max_queries, "ivfpq_topk"
     )
-    books = np.asarray(pq["books"], dtype=np.float64)
-    is_residual = bool(pq.get("residual"))
-    m, k, dsub = books.shape
-    qrows = (
-        queries.select(query_id_col, query_vec_col)
-        .limit(max_queries + 1)
-        .collect()
-    )
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"ivfpq_topk broadcasts per-query ADC tables; got > "
-            f"{max_queries} query rows — pre-aggregate or raise "
-            "max_queries explicitly"
-        )
-    if not qrows:
-        table_schema = ivf_read_corpus(spark, root, [], version=version).schema
+    if got is None:
+        table = ivf_read_corpus(spark, root, [], version=version)
         return _empty_topk(
-            spark,
-            queries.schema[query_id_col].dataType,
-            table_schema[cb["id_col"]].dataType,
-            "score",
+            queries, query_id_col, table.schema[cb["id_col"]].dataType, "score"
         )
-    if any(r[query_vec_col] is None for r in qrows):
-        raise ValueError(
-            "ivfpq_topk: query side contains null embeddings — filter "
-            f"{query_vec_col} IS NOT NULL first"
-        )
-    qids = [r[query_id_col] for r in qrows]
-    qv = np.array(
-        [np.asarray(r[query_vec_col], dtype=np.float64) for r in qrows]
+    qt, qvn = got
+    order, qdotc = _probe(
+        qvn, np.asarray(cb["centroids"], dtype=np.float64), n_probe
     )
-    qvn = qv / np.maximum(np.linalg.norm(qv, axis=1, keepdims=True), 1e-12)
-    # per-query probe lists, assigned driver-side with the stored coarse
-    # codebook (queries are the declared-small broadcast side)
-    cn = cb["centroids"] / np.linalg.norm(
-        cb["centroids"], axis=1, keepdims=True
+    # the exact coarse term of residual tables, one per (query, list)
+    bias = (
+        np.take_along_axis(qdotc, order, axis=1)
+        if pq.get("residual")
+        else np.zeros(order.shape)
     )
-    qdotc = qvn @ cn.T  # (nq, n_lists): the exact coarse term
-    order = np.argsort(-qdotc, axis=1)[:, :n_probe]
-    pair_rows = [
-        (
-            qid,
-            int(lst),
-            float(qdotc[i, lst]) if is_residual else 0.0,
-        )
-        for i, (qid, lists) in enumerate(zip(qids, order))
-        for lst in lists
-    ]
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType as _LT,
-        StructField,
-        StructType,
+    q_l = _probe_frame(spark, qt.select(["_qid"]), order, _bias=bias)
+    cand = (
+        ivf_read_corpus(spark, root, order.ravel(), version=version)
+        .select(F.col(cb["id_col"]).alias("_cid"), "_codes", "_list")
+        .join(F.broadcast(q_l), "_list")
     )
-
-    q_l = spark.createDataFrame(
-        pair_rows,
-        StructType(
-            [
-                StructField("_qid", queries.schema[query_id_col].dataType),
-                StructField("_list", _LT()),
-                StructField("_bias", DoubleType()),
-            ]
-        ),
+    tables = _adc_tables(qvn, np.asarray(pq["books"], dtype=np.float64))
+    bc = spark.sparkContext.broadcast(
+        {qid: tables[i] for i, qid in enumerate(qt["_qid"].to_pylist())}
     )
-    probe = sorted({lst for _, lst, _ in pair_rows})
-    pruned = ivf_read_corpus(spark, root, probe, version=version)
-    cand = pruned.select(
-        F.col(cb["id_col"]).alias("_cid"), "_codes", "_list"
-    ).join(F.broadcast(q_l), "_list")
-    # ADC tables: tables[q, s, c] = q_sub(s) . codebook[s, c]
-    tables = np.einsum("qsd,scd->qsc", qvn.reshape(len(qids), m, dsub), books)
-    tmap = {qid: tables[i] for i, qid in enumerate(qids)}
-    bc = spark.sparkContext.broadcast(tmap)
 
     @F.pandas_udf("double")
     def adc(qid: pd.Series, codes: pd.Series) -> pd.Series:
@@ -1106,70 +1012,32 @@ def ivfpq_topk(
             return pd.Series(out)
         cmat = np.stack([np.asarray(x, dtype=np.int64) for x in codes])
         grp, uniq = pd.factorize(qid)
-        sub = np.arange(cmat.shape[1])
         for g, key in enumerate(uniq):
             mask = grp == g
-            out[mask] = tabs[key][sub[None, :], cmat[mask]].sum(axis=1)
+            out[mask] = _adc(tabs[key], cmat[mask])
         return pd.Series(out)
 
     scored = cand.withColumn(
         "score",
         F.round(F.col("_bias") + adc(F.col("_qid"), F.col("_codes")), 6),
     ).filter(F.col("_cid") != F.col("_qid"))
-    w = Window.partitionBy("_qid").orderBy(
-        F.col("score").desc(), F.col("_cid").asc()
-    )
     if rerank_corpus is None:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= topk)
-            .select(
-                F.col("_qid").alias("query_id"),
-                F.col("_cid").alias("vec_id"),
-                "score",
-                "rank",
-            )
-        )
+        return _rank_topk(scored, "score", topk)
     n_short = shortlist if shortlist is not None else max(4 * topk, 50)
-    short = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= n_short)
-        .select("_qid", "_cid")
+    short = _rank_topk(scored, "score", n_short).select(
+        F.col("query_id").alias("_qid"), F.col("vec_id").alias("_cid")
     )
-    from pyspark.sql.types import ArrayType as _AT
-
-    qvec_df = spark.createDataFrame(
-        [(qid, qvn[i].tolist()) for i, qid in enumerate(qids)],
-        StructType(
-            [
-                StructField("_qid", queries.schema[query_id_col].dataType),
-                StructField("_qv", _AT(DoubleType())),
-            ]
-        ),
-    )
-    cvec = rerank_corpus.select(
-        F.col(id_col).alias("_cid"), F.col(vec_col).alias("_cv")
+    qvec = spark.createDataFrame(
+        qt.select(["_qid"]).append_column("_qv", pa.array(qvn.tolist()))
     )
     # the shortlist (nq x n_short ids) is the broadcast side; the cold
     # vector table streams through the join untouched otherwise
     rescored = (
-        cvec.join(F.broadcast(short), "_cid")
-        .join(F.broadcast(qvec_df), "_qid")
-        .withColumn("score", F.round(cosine(F.col("_qv"), F.col("_cv")), 6))
+        _side(rerank_corpus, id_col, vec_col, "c")
+        .join(F.broadcast(short), "_cid")
+        .join(F.broadcast(qvec), "_qid")
     )
-    w2 = Window.partitionBy("_qid").orderBy(
-        F.col("score").desc(), F.col("_cid").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= topk)
-        .select(
-            F.col("_qid").alias("query_id"),
-            F.col("_cid").alias("vec_id"),
-            "score",
-            "rank",
-        )
-    )
+    return _rank_topk(_with_cosine(rescored, "score"), "score", topk)
 
 
 def embedding_centroids(
@@ -1220,9 +1088,7 @@ def semantic_neardup_pairs(
     exactly like IVF."""
     if n_clusters < 1:
         raise ValueError("n_clusters must be >= 1")
-    c = corpus.select(
-        F.col(id_col).alias("_cid"), F.col(vec_col).alias("_cv")
-    ).filter(F.col("_cv").isNotNull())
+    c = _side(corpus, id_col, vec_col, "c").filter(F.col("_cv").isNotNull())
     if n_clusters == 1:
         labeled = c.withColumn("_k", F.lit(0))
     else:

@@ -36,6 +36,7 @@ import os
 import time
 from functools import reduce
 from pathlib import Path
+from urllib.parse import unquote, urlparse
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -394,6 +395,16 @@ def _read_entries(
     return spark.read.parquet(*paths)
 
 
+def _root_relative(root_p: Path, uri: str) -> str:
+    """The manifest's root-relative path of a data file named by
+    ``input_file_name()``. That name is a percent-encoded URI, so it is
+    decoded before resolving: a table root with a space or another
+    encoded character would otherwise fail ``relative_to``."""
+    parsed = urlparse(uri)
+    p = unquote(parsed.path) if parsed.scheme else uri
+    return str(Path(p).resolve().relative_to(root_p.resolve()))
+
+
 def merge_table(
     spark: SparkSession,
     root: str,
@@ -461,16 +472,7 @@ def merge_table(
         .distinct()
         .collect()
     )
-    hit_rel = set()
-    for r in hit:
-        # input_file_name() returns a percent-encoded URI (ADVICE r5):
-        # decode it before resolving, or a table root with spaces/
-        # encoded characters crashes relative_to() instead of matching
-        from urllib.parse import unquote, urlparse
-
-        parsed = urlparse(r["_f"])
-        p = unquote(parsed.path) if parsed.scheme else r["_f"]
-        hit_rel.add(str(Path(p).resolve().relative_to(root_p.resolve())))
+    hit_rel = {_root_relative(root_p, r["_f"]) for r in hit}
     affected = [f for f in snap["files"] if f["path"] in hit_rel]
     carried = [f for f in snap["files"] if f["path"] not in hit_rel]
     pieces = up.select(*data_cols)
@@ -564,13 +566,8 @@ def delete_table(
         .count()
         .collect()
     )
-    # normalize to the manifest's relative-path form
-    hit_rel, n_deleted = set(), 0
-    for r in hit:
-        p = r["_f"]
-        p = p[len("file:"):] if p.startswith("file:") else p
-        hit_rel.add(str(Path(p).resolve().relative_to(root_p.resolve())))
-        n_deleted += r["count"]
+    hit_rel = {_root_relative(root_p, r["_f"]) for r in hit}
+    n_deleted = sum(r["count"] for r in hit)
     if not hit_rel:
         return snap  # no matching rows: the snapshot is unchanged
     affected = [f for f in snap["files"] if f["path"] in hit_rel]

@@ -9,23 +9,13 @@ indefinitely and be queryable per update. State is a single (keeper_id,
 n_seen) tuple per 64-bit content hash, sharded by the state-store key
 partitioning — at cluster scale this is the same layout as the batch
 `exact_dedup` shuffle key (textops.py), so the streaming and batch
-paths converge on one keying scheme.
-
-Two engines, same semantics:
-
-* ``engine="apis"`` (default) — ``applyInPandasWithState``, fully
-  supported in this runtime; the checkpointed cross-run test gates it.
-* ``engine="tws"`` — ``transformWithStateInPandas`` (the Spark 4.x
-  StatefulProcessor API, RocksDB-backed state, per-variable state
-  types). Its Python client imports ``google.protobuf``, which this
-  container does not ship, so the path is import-gated: the processor
-  class below is complete, and the gate raises a clear error instead of
-  the opaque worker crash Spark would give.
+paths converge on one keying scheme. The state lives in
+``applyInPandasWithState``; the checkpointed cross-run test gates it.
 """
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING, Any, Iterator, Tuple
+from typing import Any, Iterator, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -39,16 +29,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-
-if TYPE_CHECKING:  # pragma: no cover
-    from pyspark.sql.streaming.stateful_processor import TimerValues
-
-try:  # transformWithState's python client hard-requires protobuf
-    import google.protobuf  # noqa: F401
-
-    HAS_TWS_DEPS = True
-except ImportError:  # pragma: no cover - absent in this container
-    HAS_TWS_DEPS = False
 
 OUT_SCHEMA = StructType(
     [
@@ -76,14 +56,16 @@ def _batch_stats(rows: Iterator[pd.DataFrame]) -> Tuple[str | None, int]:
     return first_id, batch_n
 
 
-def _keyed(stream: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    return stream.select(
-        F.xxhash64(F.col(text_col)).alias("text_hash"),
-        F.col(id_col).cast("string").alias("doc_id"),
-    )
+def streaming_exact_dedup(
+    stream: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Update stream of (text_hash, keeper_id, n_seen, is_new) per
+    content hash touched in each micro-batch. ``is_new`` marks the batch
+    that first saw the hash — downstream keeps those rows to build the
+    deduplicated table incrementally."""
 
-
-def _apis_dedup(keyed: DataFrame) -> DataFrame:
     def update(
         key: Tuple[Any, ...],
         pdfs: Iterator[pd.DataFrame],
@@ -107,6 +89,10 @@ def _apis_dedup(keyed: DataFrame) -> DataFrame:
             }
         )
 
+    keyed = stream.select(
+        F.xxhash64(F.col(text_col)).alias("text_hash"),
+        F.col(id_col).cast("string").alias("doc_id"),
+    )
     return keyed.groupBy("text_hash").applyInPandasWithState(
         update,
         OUT_SCHEMA,
@@ -114,48 +100,6 @@ def _apis_dedup(keyed: DataFrame) -> DataFrame:
         "update",
         GroupStateTimeout.NoTimeout,
     )
-
-
-def _make_tws_processor():
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class FirstSeenProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._st = handle.getValueState(
-                "first_seen", "keeper_id string, n long"
-            )
-
-        def handleInputRows(
-            self,
-            key: Any,
-            rows: Iterator[pd.DataFrame],
-            timerValues: "TimerValues",
-        ) -> Iterator[pd.DataFrame]:
-            (h,) = key
-            first_id, batch_n = _batch_stats(rows)
-            if self._st.exists():
-                keeper, n = self._st.get()
-                is_new = False
-            else:
-                keeper, n, is_new = first_id, 0, True
-            n += batch_n
-            self._st.update((keeper, n))
-            yield pd.DataFrame(
-                {
-                    "text_hash": [h],
-                    "keeper_id": [keeper],
-                    "n_seen": [n],
-                    "is_new": [is_new],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return FirstSeenProcessor()
 
 
 BLOOM_OUT_SCHEMA = StructType(
@@ -259,31 +203,3 @@ def streaming_bloom_dedup(
         GroupStateTimeout.NoTimeout,
     )
 
-
-def streaming_exact_dedup(
-    stream: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    engine: str = "apis",
-) -> DataFrame:
-    """Update stream of (text_hash, keeper_id, n_seen, is_new) per
-    content hash touched in each micro-batch. ``is_new`` marks the batch
-    that first saw the hash — downstream keeps those rows to build the
-    deduplicated table incrementally."""
-    keyed = _keyed(stream, text_col, id_col)
-    if engine == "apis":
-        return _apis_dedup(keyed)
-    if engine == "tws":
-        if not HAS_TWS_DEPS:
-            raise ImportError(
-                "engine='tws' (transformWithStateInPandas) requires the "
-                "google.protobuf package, which is not installed in this "
-                "environment; use engine='apis' (same semantics)"
-            )
-        return keyed.groupBy("text_hash").transformWithStateInPandas(
-            _make_tws_processor(),
-            outputStructType=OUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    raise ValueError(f"unknown engine {engine!r}; use 'apis' or 'tws'")

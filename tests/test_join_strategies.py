@@ -1,9 +1,9 @@
 """kNN strategy boundaries and join-layer concurrency.
 
-knn_join picks one of three strategies by the size of its query side
-(<= 32 queries: score every point; <= 1024: one broadcast certificate
-round; more: iterative ring rounds). The answers must not depend on that
-choice, so they are checked against DuckDB haversine SQL with the same
+knn_join picks one of two strategies by the size of its query side
+(<= 1024: one broadcast certificate round, whose <= 32 uncertified
+queries score every point; more: iterative ring rounds). The answers
+must not depend on that choice, so they are checked against DuckDB haversine SQL with the same
 (dist_km, point_id) tie-break on both sides of each threshold, over
 points at the poles, across the antimeridian, at a pentagon center and
 with duplicate coordinates under different ids. The join guard must
@@ -22,7 +22,7 @@ import pytest
 
 from sparkh3.kernel import geo
 from sparkh3.kernel import index as ix
-from sparkh3.operators import joins
+from sparkh3.operators import driver, joins
 
 RES = 3
 K = 3
@@ -167,7 +167,8 @@ def test_knn_threshold_sides_match_duckdb(spark, data, n):
 
 
 def test_each_strategy_matches_duckdb(spark, data):
-    """The three strategies called directly on one 33-query side."""
+    """Both strategies and the exhaustive pass, called directly on one
+    33-query side."""
     pts, pool, pts_df = data
     queries = pool.iloc[:33]
     want = _duck_knn(pts, queries, K)
@@ -203,7 +204,7 @@ def test_bounded_collect_is_one_job_and_bounded(spark):
     df = spark.range(0, 10_000, 1, 64)
     sc.setJobGroup("bounded-collect-probe", "probe")
     try:
-        t = joins._bounded_collect(df, 100)
+        t = driver.bounded_collect(df, 100)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert t.num_rows == 100

@@ -143,6 +143,13 @@ def test_lsh_ann_single_signature_pass(spark):
     assert plan.count("Scan parquet") <= 4, plan.count("Scan parquet")
 
 
+def test_ivf_ann_one_python_node(spark):
+    """In-memory IVF assigns queries to lists on the driver: the only
+    Arrow UDF left in the plan is the corpus list assignment."""
+    plan = _plan(E.q_ivf_ann(spark, SF_DIR))
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
 def test_stratified_split_is_narrow_map(spark):
     """The split assignment itself must be a zero-shuffle narrow map —
     the 100 TB claim in textops.stratified_split."""

@@ -198,9 +198,9 @@ class TestStreaming:
 
 class TestTransformWithState:
     def test_streaming_exact_dedup_across_batches(self, spark, tmp_path):
-        """transformWithStateInPandas keeps keeper identity + lifetime
-        dup counts across micro-batches AND across restarted
-        availableNow runs (checkpointed state)."""
+        """Streaming exact dedup keeps keeper identity + lifetime dup
+        counts across micro-batches AND across restarted availableNow
+        runs (checkpointed state)."""
         from pyspark.sql import Row
 
         from sparkh3.streaming import dedup
@@ -313,30 +313,6 @@ class TestTransformWithState:
             dedup.streaming_bloom_dedup(src, m_bits=100, n_shards=8)
         with pytest.raises(ValueError, match="k must be positive"):
             dedup.streaming_bloom_dedup(src, k=0)
-
-    def test_tws_engine_gate(self, spark):
-        """The transformWithStateInPandas path is import-gated on
-        protobuf: clear error when absent, identical plumbing when
-        present (processor builds against the live API either way)."""
-        from sparkh3.streaming import dedup
-
-        proc = dedup._make_tws_processor()
-        assert hasattr(proc, "handleInputRows")
-        if not dedup.HAS_TWS_DEPS:
-            src = spark.readStream.format("rate").load().selectExpr(
-                "cast(value as string) AS doc_id",
-                "cast(value as string) AS text",
-            )
-            with pytest.raises(ImportError, match="protobuf"):
-                dedup.streaming_exact_dedup(src, engine="tws")
-        with pytest.raises(ValueError, match="unknown engine"):
-            dedup.streaming_exact_dedup(
-                spark.readStream.format("rate").load().selectExpr(
-                    "cast(value as string) AS doc_id",
-                    "cast(value as string) AS text",
-                ),
-                engine="bogus",
-            )
 
 
 class TestExactlyOnceSink:

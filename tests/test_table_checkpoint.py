@@ -609,6 +609,22 @@ class TestDeleteTable:
         assert snap["deleted_rows"] == n_match
         assert manifest.read_table(spark, root).filter("lat > 0").count() == 0
 
+    def test_delete_under_root_with_space(self, spark, tmp_path):
+        """input_file_name() percent-encodes the space in the table
+        root; delete decodes it like merge does."""
+        root = str(tmp_path / "a table")
+        manifest.write_table(
+            spark.createDataFrame(
+                [("87283472bffffff", 1), ("87283472cffffff", 2)],
+                ["h3_07", "n"],
+            ),
+            root,
+            "h3_07",
+        )
+        snap = manifest.delete_table(spark, root, "n = 1")
+        assert snap["deleted_rows"] == 1
+        assert [r.n for r in manifest.read_table(spark, root).collect()] == [2]
+
 
 class TestSchemaEvolution:
     def test_append_adds_column_old_files_null_fill(self, spark, tmp_path):

@@ -869,6 +869,16 @@ class TestSimilarity:
             similarity.ivf_cosine_topk(
                 None, queries, k=3, table_root=iroot, max_queries=2
             )
+        # ivf in-memory path: the same three query-side edges
+        out4 = similarity.ivf_cosine_topk(emb, none, k=3, n_lists=4)
+        assert out4.count() == 0
+        assert out4.columns == ["query_id", "vec_id", "sim", "rank"]
+        with pytest.raises(ValueError, match="max_queries"):
+            similarity.ivf_cosine_topk(
+                emb, queries, k=3, n_lists=4, max_queries=2
+            )
+        with pytest.raises(ValueError, match="null embeddings"):
+            similarity.ivf_cosine_topk(emb_d, nullq, k=3, n_lists=4)
 
     def test_lsh_recall(self, emb):
         queries = emb.limit(5).select(
