@@ -212,8 +212,10 @@ def connected_components(
     # measured ~2x the operator in bench x3). The pair list is the
     # small end of the pipeline by design, so this is the cheap side
     # of the trade; localCheckpoint (not persist) keeps no CacheManager
-    # entry alive past the call.
-    raw = raw.localCheckpoint(eager=True)
+    # entry alive past the call. A caller that cached ``pairs`` has
+    # already paid for that: its cache serves every read, one job less.
+    if not pairs.is_cached:
+        raw = raw.localCheckpoint(eager=True)
     # node universe from the RAW pairs; lazy — analysed for its unified
     # type, and read again only by the distributed loop
     nodes = (

@@ -336,6 +336,16 @@ def knn_join(
     """
     q = _query_side(queries, query_id, q_lat, q_lng)
     qt = _collect_queries(q, BROADCAST_QUERIES + 1)
+    if qt.num_rows == 0:
+        # no query: nothing to encode, persist or certify. limit(0)
+        # plans as an empty local relation, so collecting it runs no job
+        pid = _point_side(points, point_id, p_lat, p_lng).schema["_pid"]
+        return q.select(
+            F.col("_qid").alias(query_id),
+            F.lit(None).cast(pid.dataType).alias(point_id),
+            F.lit(None).cast("double").alias("dist_km"),
+            F.lit(None).cast("int").alias("rank"),
+        ).limit(0)
     # the int64 cell projection is shared by every ring round and the
     # straggler pass; cached for the call so none of them re-runs the
     # caller's point pipeline or the encode (the strategies return only

@@ -3,20 +3,25 @@
 quality scoring, token counting, fingerprinting.
 
 Everything that a DuckDB oracle can replicate uses only deterministic
-native column algebra (split/filter/length arithmetic). MinHash/SimHash
-use Spark's native xxhash64 (JVM, codegen) — deterministic within the
-engine, verified by property tests instead of a SQL oracle.
+native column algebra (split/filter/length arithmetic). SimHash uses
+Spark's native xxhash64 (JVM, codegen); MinHash shingles and hashes in
+NumPy inside its one Arrow UDF (``kernel.text``), with an XXH64
+bit-identical to Spark's. Both are deterministic and verified by
+property and bit-identity tests instead of a SQL oracle.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import ArrayType, LongType
 
-_M64 = (1 << 64) - 1
+from ..kernel import text as ktext
 
 STOPWORDS = {
     "en": ["the", "a", "of", "and", "to"],
@@ -302,33 +307,14 @@ def winnow_fingerprints(
     return df.withColumn("fingerprints", winnow_udf(window)(base))
 
 
-def _splitmix64(x: int) -> int:
-    """Deterministic 64-bit mix (public splitmix64 constants) — seeds the
-    MinHash permutation coefficients without RNG state."""
-    x = (x + 0x9E3779B97F4A7C15) & _M64
-    x = ((x ^ (x >> 30)) * 0xBF58476D1CE4E5B9) & _M64
-    x = ((x ^ (x >> 27)) * 0x94D049BB133111EB) & _M64
-    return x ^ (x >> 31)
-
-
-def _minhash_coeffs(n_hashes: int) -> tuple[np.ndarray, np.ndarray]:
-    a = np.array(
-        [_splitmix64(2 * j + 1) | 1 for j in range(n_hashes)], dtype=np.uint64
-    )
-    b = np.array([_splitmix64(2 * j + 2) for j in range(n_hashes)], dtype=np.uint64)
-    return a, b
-
-
 def minhash_signature_udf(n_hashes: int = 16):
     """array<long> base shingle hashes -> array<long> MinHash signature.
 
     One Arrow batch of NumPy arithmetic: sig[j] = min over shingles of
-    ((a_j * h + b_j) mod 2^64) >> 1. Replaces n_hashes interpreted
-    Catalyst HOF passes (each re-hashing every shingle string) with one
-    vectorized pass — the base hashes are computed once, JVM-side, via
-    native xxhash64.
+    ((a_j * h + b_j) mod 2^64) >> 1 (``kernel.text.permuted_mins``, the
+    arithmetic ``minhash_band_keys_udf`` applies to its own hashes).
     """
-    A, B = _minhash_coeffs(n_hashes)
+    A, B = ktext.minhash_coeffs(n_hashes)
 
     @F.pandas_udf(ArrayType(LongType()))
     def f(hashes: pd.Series) -> pd.Series:
@@ -343,13 +329,8 @@ def minhash_signature_udf(n_hashes: int = 16):
         if valid:
             flat = np.concatenate(valid).view(np.uint64)
             vlens = np.array([len(a) for a in valid], dtype=np.int64)
-            starts = np.zeros(len(valid), dtype=np.int64)
-            starts[1:] = np.cumsum(vlens)[:-1]
-            sig = np.empty((len(valid), n_hashes), dtype=np.int64)
-            with np.errstate(over="ignore"):
-                for j in range(n_hashes):
-                    hv = (A[j] * flat + B[j]) >> np.uint64(1)
-                    sig[:, j] = np.minimum.reduceat(hv, starts).astype(np.int64)
+            starts = np.cumsum(vlens) - vlens
+            sig = ktext.permuted_mins(flat, starts, A, B).view(np.int64)
             vi = 0
             for i, a in enumerate(arrs):
                 if a is not None:
@@ -360,11 +341,35 @@ def minhash_signature_udf(n_hashes: int = 16):
     return f
 
 
-def minhash_signature(text: Column, n_hashes: int = 16, shingle_n: int = 3) -> Column:
-    """Base shingle hashes for the MinHash signature: ONE native xxhash64
-    pass over the shingles (JVM codegen); feed through
-    ``minhash_signature_udf`` for the permuted mins."""
-    return F.transform(ngrams(text, shingle_n), lambda s: F.xxhash64(s))
+def minhash_band_keys_udf(n_hashes: int, bands: int, shingle_n: int):
+    """text -> array<long> of the document's ``bands`` LSH bucket keys.
+
+    One Arrow UDF whose body is the Spark-free ``kernel.text`` pass over
+    the batch's UTF-8 buffer: ``ngrams(text, shingle_n)`` shingles, each
+    hashed with an XXH64 bit-identical to Spark's ``xxhash64``, the
+    ``n_hashes`` permuted mins, then per band k the ``xxhash64`` of
+    ``concat_ws(',', k, <the band's signature values>)``. Null text is
+    the empty shingle, as in ``ngrams``."""
+    A, B = ktext.minhash_coeffs(n_hashes)
+
+    @arrow_udf(ArrayType(LongType()))
+    def f(text: pa.Array) -> pa.Array:
+        if text.null_count:
+            text = pc.fill_null(text, "")
+        wide = pa.types.is_large_string(text.type)
+        _, off, data = text.buffers()
+        offsets = np.frombuffer(off, dtype=np.int64 if wide else np.int32)
+        offsets = offsets[text.offset : text.offset + len(text) + 1]
+        data = np.frombuffer(data, dtype=np.uint8) if data else np.empty(0, np.uint8)
+        keys = ktext.band_keys(
+            ktext.signatures(data, offsets, shingle_n, A, B), bands
+        )
+        return pa.ListArray.from_arrays(
+            pa.array(np.arange(len(text) + 1, dtype=np.int32) * bands),
+            pa.array(keys.ravel()),
+        )
+
+    return f
 
 
 def minhash_lsh_dedup(
@@ -379,19 +384,24 @@ def minhash_lsh_dedup(
     """Near-duplicate pairs via MinHash banding + exact n-gram Jaccard
     verification. Returns (id_a, id_b, jaccard) with id_a < id_b.
 
-    Scale shape (100 TB): the signature is built from ONE native
-    xxhash64 pass over the shingles plus one Arrow pandas-UDF pass of
-    NumPy arithmetic (no interpreted HOF chains), and it is built
+    Scale shape (100 TB): one Arrow UDF (``minhash_band_keys_udf``)
+    takes the text column and returns each document's ``bands`` bucket
+    keys; its body shingles, hashes, min-hashes and bands every batch in
+    NumPy (``kernel.text``, bit-identical to the former JVM chain
+    ``transform(ngrams(text, n), xxhash64)`` -> permuted mins ->
+    ``xxhash64(concat_ws(',', band, slot...))``), so only text goes in
+    and ``bands`` longs per document come out. The keys are computed
     exactly once — candidate pairs come from ONE groupBy over the
-    banded ``(_id, _bucket)`` stream (in-bucket ordered combinations
+    exploded ``(_id, _bucket)`` stream (in-bucket ordered combinations
     via explode), not a bucket self-join whose two branches would each
-    re-run the signature subtree. The exact-Jaccard verify broadcasts
-    the (tiny by construction) pair list into a plain document scan, so
-    the text side streams with no exchange on either verify join.
+    re-run the key subtree. The exact-Jaccard verify broadcasts the
+    (tiny by construction) pair list into a plain document scan, so the
+    text side streams with no exchange on either verify join, and each
+    pair's intersection is computed once.
 
     When text moves: only when ``_spread`` widened a narrow scan (a
     single small file on a many-core host). Then the whole scan is
-    repartitioned for the signature pass, and the candidates' text,
+    repartitioned for the band-key pass, and the candidates' text,
     after the semi-join and before shingling, is repartitioned for the
     verify, so both run on every core. An input that is already wide
     gets neither, so at scale document text never enters a shuffle.
@@ -403,43 +413,19 @@ def minhash_lsh_dedup(
         raise ValueError(
             f"bands ({bands}) must divide n_hashes ({n_hashes})"
         )
-    rows_per_band = n_hashes // bands
-    sig_udf = minhash_signature_udf(n_hashes)
+    keys = minhash_band_keys_udf(n_hashes, bands, shingle_n)
     raw = df
     df = _spread(df)
     spread = df is not raw
-    # one JVM xxhash64 pass over shingles -> one Arrow NumPy pass for the
-    # n_hashes permuted mins; slim (_id, _sig) is all that gets banded
-    base = df.select(
+    # the UDF turns text into band keys in one pass; only the slim
+    # (_id, _bucket) stream is banded
+    banded = df.select(
         F.col(id_col).alias("_id"),
-        sig_udf(minhash_signature(F.col(text_col), n_hashes, shingle_n)).alias(
-            "_sig"
-        ),
-    )
-    banded = (
-        base.withColumn(
-            "_band", F.explode(F.array(*[F.lit(b) for b in range(bands)]))
-        )
-        .withColumn(
-            "_bucket",
-            F.xxhash64(
-                F.concat_ws(
-                    ",",
-                    F.col("_band"),
-                    *[
-                        F.element_at(
-                            F.col("_sig"), F.col("_band") * rows_per_band + i + 1
-                        )
-                        for i in range(rows_per_band)
-                    ],
-                )
-            ),
-        )
-        .select("_id", "_bucket")
+        F.explode(keys(F.col(text_col))).alias("_bucket"),
     )
     # in-bucket ordered combinations from one grouped pass: identical
     # pair set to the former a><b self-join on _bucket, but the banded
-    # stream (and the whole signature subtree feeding it) is scanned
+    # stream (and the whole band-key subtree feeding it) is scanned
     # once instead of twice, and one join + one exchange disappear.
     # Degenerate giant buckets blow up either formulation identically
     # (b^2 pairs); the per-bucket id array is b longs.
@@ -456,7 +442,7 @@ def minhash_lsh_dedup(
     )
     # exact-Jaccard verify, per-DOCUMENT shingling: the candidate list
     # is checkpointed once (it is the small end of the operator — and
-    # the whole signature/banding chain above therefore runs exactly
+    # the whole band-key/banding chain above therefore runs exactly
     # once per call); the distinct ids in it semi-join the raw text
     # scan, so each candidate document's distinct-shingle set is
     # computed ONE time and the per-pair work is a single
@@ -498,15 +484,25 @@ def minhash_lsh_dedup(
             sh.select(F.col("_tid").alias("id_b"), F.col("_sh").alias("_sb")),
             "id_b",
         )
-        .withColumn(
-            "_i", F.size(F.array_intersect(F.col("_sa"), F.col("_sb")))
+        # a Generate is a barrier Catalyst does not collapse: without
+        # it, _i is inlined into the projection and again into the
+        # filter pushed into the join condition (3 array_intersects)
+        .select(
+            "id_a",
+            "id_b",
+            F.inline(
+                F.array(
+                    F.struct(
+                        F.size(F.array_intersect("_sa", "_sb")).alias("_i"),
+                        (F.size("_sa") + F.size("_sb")).alias("_n"),
+                    )
+                )
+            ),
         )
         .withColumn(
             "jaccard",
             F.round(
-                F.col("_i").cast("double")
-                / (F.size("_sa") + F.size("_sb") - F.col("_i")),
-                6,
+                F.col("_i").cast("double") / (F.col("_n") - F.col("_i")), 6
             ),
         )
         .filter(F.col("jaccard") >= jaccard_threshold)

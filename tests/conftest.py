@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -23,3 +24,23 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture
+def jobs_in(spark):
+    """``jobs_in(fn)`` runs ``fn()`` under a fresh job group and returns
+    ``(its result, the number of Spark jobs it ran)``."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

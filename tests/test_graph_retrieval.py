@@ -39,6 +39,23 @@ def _mapping(cc):
 
 
 class TestConnectedComponents:
+    def test_cached_input_is_not_checkpointed(self, spark, jobs_in):
+        """A cached pair list serves every read of the call: one job (the
+        bounded collect), against two when the pairs must be checkpointed
+        first."""
+        pairs = spark.createDataFrame(
+            [(1, 2), (2, 3), (7, 8)], "src long, dst long"
+        )
+        want = {(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)}
+        pairs.persist().count()
+        try:
+            out, jobs = jobs_in(lambda: connected_components(pairs))
+            assert (_mapping(out), jobs) == (want, 1)
+        finally:
+            pairs.unpersist()
+        out, jobs = jobs_in(lambda: connected_components(pairs))
+        assert (_mapping(out), jobs) == (want, 2)
+
     def _check(self, spark, edges):
         nodes = sorted({n for e in edges for n in e})
         df = spark.createDataFrame(

@@ -19,6 +19,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from sparkh3.kernel import geo
 from sparkh3.kernel import index as ix
@@ -197,6 +198,23 @@ def test_knn_empty_query_side(spark, data):
     none = pool.iloc[:0]
     assert _knn_rows(spark, pts_df, none) == []
     assert _duck_knn(pts, none, K) == {}
+
+
+def test_knn_zero_queries_touch_no_point(spark, data, jobs_in):
+    """An empty query side ends at the bounded query collect: one job in
+    the call, none to collect the typed empty frame, over 20k points."""
+    pts = spark.range(20_000).select(
+        F.col("id").alias("point_id"),
+        (F.col("id") % 170 - 85.0).alias("lat"),
+        (F.col("id") % 359 - 179.0).alias("lng"),
+    )
+    _, pool, _ = data
+    q = spark.createDataFrame(pool.iloc[:5]).limit(0)
+    out, call_jobs = jobs_in(lambda: joins.knn_join(q, pts, k=K, resolution=RES))
+    rows, collect_jobs = jobs_in(out.collect)
+    assert (rows, call_jobs, collect_jobs) == ([], 1, 0)
+    one = joins.knn_join(spark.createDataFrame(pool.iloc[:1]), pts, k=K, resolution=RES)
+    assert out.dtypes == one.dtypes
 
 
 def test_bounded_collect_is_one_job_and_bounded(spark):

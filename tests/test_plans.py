@@ -8,7 +8,8 @@ Each test inspects the *executed* plan string:
 2. filters + column pruning reach the parquet scan through geo_to_h3,
 3. broadcast pip_join never shuffles the point side and runs exactly
    one fused Python pass,
-4. minhash banding exchanges carry zero text columns,
+4. minhash banding exchanges carry zero text columns, and its verify
+   intersects each pair's shingle sets once,
 5. LSH-ANN computes all tables' signatures in one corpus pass
    (bounded parquet scan count).
 """
@@ -88,6 +89,17 @@ def test_minhash_banding_shuffles_no_text(spark):
         "text#" in seg.split("\n")[0] for seg in exchanges
     )
     assert keyed_on_text == 0, plan
+
+
+def test_minhash_verify_intersects_each_pair_once(spark):
+    """The exact-Jaccard verify computes a pair's array_intersect once:
+    an inlined ``_i`` would appear in the projection and again in the
+    filter pushed into the join condition (3 times in the final plan)."""
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    mh = textops.minhash_lsh_dedup(docs, jaccard_threshold=0.4)
+    mh.collect()
+    final = mh._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert final.count("array_intersect(") == 1, final
 
 
 def _text_exchanges(df):

@@ -1,7 +1,6 @@
 """Table layer (manifest pruning, snapshots) + checkpointed-stage resume."""
 
 import json
-import uuid
 from pathlib import Path
 
 import pytest
@@ -952,25 +951,14 @@ class TestRangeFileLayout:
             want = np.flatnonzero(_under(cells[:n], query)).tolist()
             assert got == want and len(want) > 0, version
 
-    def test_read_lists_without_jobs_and_write_budget(self, spark, tmp_path):
+    def test_read_lists_without_jobs_and_write_budget(
+        self, spark, tmp_path, jobs_in
+    ):
         """Counter gate on a fresh ~20k-row table: the write runs 2 Spark
         jobs (the single-partition exchange and the write; a range-sampling
         job would make 3), and an unpruned read_table runs none (it lists
         few enough paths to stay under Spark's parallel-listing
         threshold of 32)."""
-        sc = spark.sparkContext
-
-        def jobs_in(fn):
-            group = f"layout-gate-{uuid.uuid4().hex}"
-            sc.setJobGroup(group, group)
-            try:
-                out = fn()
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-                sc.setLocalProperty("spark.job.description", None)
-            sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-            return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
         df, cells = _cell_frame(spark, tmp_path, 20_000, seed=31)
         root = str(tmp_path / "gate")
         snap, write_jobs = jobs_in(lambda: manifest.write_table(df, root, "h3_08"))

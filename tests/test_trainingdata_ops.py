@@ -3,10 +3,12 @@ analysis, similarity search, multimodal plumbing."""
 
 import random
 
+import numpy as np
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from sparkh3.kernel import text as ktext
 from sparkh3.operators import multimodal, similarity, textops
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -1879,3 +1881,98 @@ class TestNgramsRewrite:
             .filter(~F.col("o").eqNullSafe(F.col("g")))
             .count()
         )
+
+
+ADVERSARIAL_TEXTS = [
+    None,
+    "",
+    " ",
+    "   ",
+    "one",
+    "one two",
+    "one two three",
+    "one two three four",
+    "a  b   c    d",
+    "  pad  both  ends  ",
+    "a\tb c\nd e\t\nf",
+    "\tlead trail\n",
+    "𝔘𝔫𝔦 co de 𝔴𝔬𝔯𝔡 s",
+    "é ü 😀 x😀y 中文 字",
+    "x" * 33 + " " + "y" * 40 + " short " + "z" * 71,
+    "w " * 40,
+    " ".join(f"tok{i % 7}" for i in range(300)),
+]
+
+
+class TestMinHashBandKeys:
+    """The Arrow UDF's NumPy shingle/hash/band pass must give exactly
+    the longs of the JVM chain it replaced: ``transform(ngrams(text,
+    n), xxhash64)`` -> ``minhash_signature_udf`` -> per band
+    ``xxhash64(concat_ws(',', band, slot...))``."""
+
+    N_HASHES = 16
+
+    def _old_chain(self, d, n, bands):
+        r = self.N_HASHES // bands
+        sig = textops.minhash_signature_udf(self.N_HASHES)(
+            F.transform(textops.ngrams(F.col("text"), n), lambda s: F.xxhash64(s))
+        )
+        return (
+            d.withColumn("_sig", sig)
+            .withColumn(
+                "_band", F.explode(F.array(*[F.lit(b) for b in range(bands)]))
+            )
+            .withColumn(
+                "_bucket",
+                F.xxhash64(
+                    F.concat_ws(
+                        ",",
+                        F.col("_band"),
+                        *[
+                            F.element_at(F.col("_sig"), F.col("_band") * r + i + 1)
+                            for i in range(r)
+                        ],
+                    )
+                ),
+            )
+            .groupBy("i")
+            .agg(
+                F.first("_sig").alias("sig"),
+                F.sort_array(F.collect_list(F.struct("_band", "_bucket"))).alias("k"),
+            )
+        )
+
+    def _frames(self, spark):
+        rng = random.Random(977)
+        alphabet = ["a", "b", "cc", " ", "  ", "\t", "\n", "é", "𝔘", "x" * 35]
+        fuzz = [
+            "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 24)))
+            for _ in range(400)
+        ]
+        texts = ADVERSARIAL_TEXTS + fuzz
+        edge = spark.createDataFrame(list(enumerate(texts)), "i long, text string")
+        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+            F.col("doc_id").alias("i"), "text"
+        )
+        return edge, docs
+
+    @pytest.mark.parametrize("n", [2, 3])
+    def test_signatures_and_keys_match_jvm_chain(self, spark, n):
+        a, b = ktext.minhash_coeffs(self.N_HASHES)
+        for d in self._frames(spark):
+            for bands in (2, 4, 8):
+                want = {r.i: r for r in self._old_chain(d, n, bands).collect()}
+                keys = textops.minhash_band_keys_udf(self.N_HASHES, bands, n)
+                got = {
+                    r.i: r.k
+                    for r in d.select("i", keys(F.col("text")).alias("k")).collect()
+                }
+                assert got.keys() == want.keys()
+                for i, k in got.items():
+                    assert k == [row._bucket for row in want[i].k], (i, bands)
+            rows = d.orderBy("i").collect()
+            blobs = [(r.text or "").encode() for r in rows]
+            data = np.frombuffer(b"".join(blobs), dtype=np.uint8)
+            offsets = np.cumsum([0] + [len(x) for x in blobs])
+            sig = ktext.signatures(data, offsets, n, a, b).view(np.int64)
+            assert [s.tolist() for s in sig] == [want[r.i].sig for r in rows]
