@@ -8,11 +8,15 @@
   theta-join while shuffling only co-located cells. Small polygon sides
   are broadcast (no shuffle of the points at all).
 
-* ``knn_join``: exact k-nearest-neighbors. Two strategies, chosen by
-  the query side's size, share two primitives: ``_score_all`` scores a
-  few queries against every point, and ``_ring_round`` scores the points
-  inside int64 H3 disks around the queries and certifies each query
-  whose k-th neighbor lies within the disk's margin.
+* ``knn_join``: exact k-nearest-neighbors. Both strategies certify a
+  query once its k-th neighbor lies within the margin of an int64 H3
+  disk around it. Up to 1024 queries, the disks are broadcast and one
+  fused Python pass over the points (``_cert_candidates``: encode,
+  sorted-cell probe, NumPy prune, like ``pip_join``'s) feeds one bounded
+  collect; exact distances and ranks come from the JVM's
+  ``haversine_km`` over a local relation on the driver. Larger query
+  sides run ``_ring_round`` joins at coarsening resolutions. Whatever
+  stays uncertified is scored against every point (``_score_all``).
 """
 
 from __future__ import annotations
@@ -39,6 +43,18 @@ BROADCAST_QUERIES = 1024
 STRAGGLER_QUERIES = 32
 # disk radius of the broadcast certificate round
 CERT_RINGS = 8
+# rows the certificate round may bring to the driver (each task keeps
+# about k per query); a call that would bring more takes the iterative
+# rounds instead
+DRIVER_KNN_ROWS = 1 << 18
+# NumPy distances prune the certificate round's candidates only within
+# this slack of a k-th distance; it must exceed twice the worst
+# difference between _np_haversine_km and the JVM's haversine_km
+SLACK_KM = 1e-2
+# (point, query) pairs one task of the certificate round scores at once:
+# bounds its Python memory when disks overlap heavily (coarse
+# resolutions, many queries)
+PAIR_CHUNK = 1 << 20
 _OUT = ("_qid", "_pid", "_dist", "_rank")
 
 
@@ -309,14 +325,20 @@ def knn_join(
 
     Two strategies, chosen by the query side's size and built on two
     shared primitives (``_score_all``: every point against a few
-    broadcast queries; ``_ring_round``: the points in int64 H3 disks
-    around the queries, with a per-query exactness certificate):
+    broadcast queries; a per-query exactness certificate over the
+    points in int64 H3 disks around the queries):
 
     * <= ``BROADCAST_QUERIES`` (1024) queries, however few
-      (``_knn_broadcast``): one ring round against disks computed
-      in-process by the kernel and broadcast. Queries it cannot certify
-      (sparse regions) take ``_score_all`` when at most
+      (``_knn_broadcast``): one certificate round in two jobs, the query
+      collect and one bounded collect of a fused Python pass over the
+      points (no exchange, persist or checkpoint). Its certified answer
+      is a local relation, so collecting it runs no job. Queries it
+      cannot certify (sparse regions) take ``_score_all`` when at most
       ``STRAGGLER_QUERIES`` (32) remain, else the iterative rounds.
+      Traced on 4 cores (perfbench ``spatial_join`` seed 1: 40 hub
+      queries, 20k points, k=5, res 6), the call takes 0.67 s and 2
+      jobs, against 1.29 s and 6 jobs for the persisted-projection ring
+      round with an eager checkpoint that it replaced.
     * larger query sides (``_knn_iterative``): ring rounds at
       ``resolution`` and every 3 resolutions coarser, ``_score_all`` for
       whatever is left at res <= 0. The open-query set stays a
@@ -325,10 +347,11 @@ def knn_join(
     ``_score_all`` is not a strategy of its own for small query sides:
     each task sorts all of its |points| x |queries| rows, so its cost
     grows with the point count. Measured on 4 cores (k=5, res 6, hub
-    queries), it took 3.0-3.2 s for 32 queries on 20k points against
-    1.4-1.6 s for the certificate round, and 9.0-9.3 s for 8 queries on
-    200k points against 2.0-2.4 s. It was faster for 8 queries on 20k
-    points (1.0-1.5 s against 1.4-1.8 s) and on a 500-point input.
+    queries, best 3 of 4 calls with collect), it took 1.46-1.51 s for
+    32 queries on 20k points against 0.72-0.81 s for the certificate
+    round, and 3.4-3.5 s for 8 queries on 200k points against 1.0-1.1 s.
+    For 8 queries on 20k points the two are even (0.68-0.87 s against
+    0.82-0.93 s).
 
     The query side is read once, by a bounded one-job collect that is
     both the size probe and the broadcast input; it writes no session
@@ -336,30 +359,20 @@ def knn_join(
     """
     q = _query_side(queries, query_id, q_lat, q_lng)
     qt = _collect_queries(q, BROADCAST_QUERIES + 1)
+    pts = _point_side(points, point_id, p_lat, p_lng)
     if qt.num_rows == 0:
-        # no query: nothing to encode, persist or certify. limit(0)
-        # plans as an empty local relation, so collecting it runs no job
-        pid = _point_side(points, point_id, p_lat, p_lng).schema["_pid"]
+        # no query: nothing to encode or certify. limit(0) plans as an
+        # empty local relation, so collecting it runs no job
         return q.select(
             F.col("_qid").alias(query_id),
-            F.lit(None).cast(pid.dataType).alias(point_id),
+            F.lit(None).cast(pts.schema["_pid"].dataType).alias(point_id),
             F.lit(None).cast("double").alias("dist_km"),
             F.lit(None).cast("int").alias("rank"),
         ).limit(0)
-    # the int64 cell projection is shared by every ring round and the
-    # straggler pass; cached for the call so none of them re-runs the
-    # caller's point pipeline or the encode (the strategies return only
-    # frames that no longer read it)
-    pts = _with_cells(
-        _point_side(points, point_id, p_lat, p_lng), resolution
-    ).persist()
-    try:
-        if qt.num_rows <= BROADCAST_QUERIES:
-            out = _knn_broadcast(qt, pts, k, resolution)
-        else:
-            out = _knn_iterative(q, pts, k, resolution)
-    finally:
-        pts.unpersist()
+    if qt.num_rows <= BROADCAST_QUERIES:
+        out = _knn_broadcast(qt, pts, k, resolution)
+    else:
+        out = _iterate(q, pts, k, resolution)
     return out.select(
         F.col("_qid").alias(query_id),
         F.col("_pid").alias(point_id),
@@ -439,8 +452,16 @@ def _score_all(pts: DataFrame, queries: DataFrame, k: int) -> DataFrame:
     pushdown (WindowGroupLimit) keeps each task's top k per query, so
     the exchange after the |Q|-fold row inflation moves O(tasks·|Q|·k)
     rows, not the inflated scan. Serves the straggler pass and the
-    coarsest-resolution fallback."""
-    return _top_k(pts.crossJoin(F.broadcast(queries)), k).select(*_OUT)
+    coarsest-resolution fallback. Points with a null or NaN coordinate
+    are skipped, as on the ring-round path (a null distance would sort
+    first)."""
+    located = reduce(
+        Column.__and__,
+        [F.col(c).isNotNull() & ~F.isnan(c) for c in ("_plat", "_plng")],
+    )
+    return _top_k(
+        pts.filter(located).crossJoin(F.broadcast(queries)), k
+    ).select(*_OUT)
 
 
 def _ring_round(
@@ -502,29 +523,227 @@ def _query_disks(
     return spark.createDataFrame(disks)
 
 
+def _np_haversine_km(lat1, lng1, lat2, lng2):
+    """``haversine_km``'s formula in NumPy, with ``a`` clamped to 1 so a
+    near-antipodal pair scores pi * R instead of NaN. It only prunes the
+    certificate round's candidates, so it need not match the JVM's
+    value bit for bit, only stay within ``SLACK_KM / 2`` of it. The two
+    agree to 1e-10 km on random pairs; the difference peaks near
+    antipodes, where asin's slope diverges: one ulp of ``sqrt(a)`` just
+    below 1 moves the distance by 2R * sqrt(2 * 2**-53) = 1.9e-4 km, and
+    m ulps by sqrt(m) times that. Measured worst: 1.9e-4 km over 200k
+    near-antipodal pairs, so ``SLACK_KM`` = 0.01 km holds for up to ~690
+    ulps (tests/test_join_strategies.py checks the bound)."""
+    import numpy as np
+
+    rl1 = np.radians(lat1)
+    rl2 = np.radians(lat2)
+    sdlat = np.sin((rl2 - rl1) / 2)
+    sdlng = np.sin((np.radians(lng2) - np.radians(lng1)) / 2)
+    a = sdlat * sdlat + np.cos(rl1) * np.cos(rl2) * sdlng * sdlng
+    return 2.0 * EARTH_RADIUS_KM * np.arcsin(np.sqrt(np.minimum(a, 1.0)))
+
+
+def _runs(sorted_keys):
+    """Start and length of each run of equal values in ``sorted_keys``."""
+    import numpy as np
+
+    starts = np.flatnonzero(
+        np.r_[True, sorted_keys[1:] != sorted_keys[:-1]]
+    )[: len(sorted_keys)]
+    return starts, np.diff(np.r_[starts, len(sorted_keys)])
+
+
+def _prune(qi, d, k: int):
+    """Mask of the rows within ``SLACK_KM`` of their query's k-th
+    smallest distance ``d`` (all rows of a query with fewer than k).
+    The exact top k, and every row tied with its k-th, survive: a row
+    dropped here trails k rows by more than ``SLACK_KM``, i.e. by more
+    than twice the worst NumPy/JVM difference, so it trails them in
+    the JVM's distances too."""
+    import numpy as np
+
+    order = np.lexsort((d, qi))
+    ds = d[order]
+    starts, counts = _runs(qi[order])
+    kth = np.full(len(starts), np.inf)
+    full = counts >= k
+    kth[full] = ds[starts[full] + k - 1]
+    keep = np.empty(len(d), dtype=bool)
+    keep[order] = ds <= np.repeat(kth, counts) + SLACK_KM
+    return keep
+
+
+def _cert_candidates(
+    pts: DataFrame, qt: pa.Table, k: int, resolution: int
+) -> DataFrame:
+    """The certificate round's candidates, in one ``mapInArrow`` pass
+    over the (_pid, _plat, _plng) points (no exchange). The queries'
+    ``CERT_RINGS``-disks at ``resolution`` ship as a broadcast of sorted
+    int64 cells with their owners' positions in ``qt``. Each batch
+    (sliced to at most ``PAIR_CHUNK`` pairs) encodes its points, probes
+    the disks (``udfs.match_sorted``) and
+    scores the matches with ``_np_haversine_km``; each task keeps, per
+    query, the rows ``_prune`` keeps. Rows: (_qi, the query's position
+    in ``qt``; _pid, _plat, _plng; _d, the NumPy distance). Points with
+    a null or NaN coordinate never match, as their cell is null on the
+    ring-round path."""
+    import numpy as np
+    from pyspark.sql.types import (
+        DoubleType, IntegerType, StructField, StructType,
+    )
+
+    from ..kernel import geo as kgeo
+    from ..kernel import traversal as tv
+    from .udfs import match_sorted
+
+    qla = qt["_qlat"].to_numpy()
+    qlo = qt["_qlng"].to_numpy()
+    owner, cells = tv.grid_disk_grouped(
+        kgeo.latlng_to_cell(qla, qlo, resolution), CERT_RINGS
+    )
+    order = np.argsort(cells, kind="stable")
+    cells = cells[order]
+    # a point lies in at most `most` disks, so a slice of
+    # PAIR_CHUNK // most rows scores at most PAIR_CHUNK pairs
+    most = int(_runs(cells)[1].max())
+    step = max(1, PAIR_CHUNK // most)
+    # captured by the returned frame's closure: ContextCleaner reclaims
+    # the broadcast once the caller drops the frame
+    bc = pts.sparkSession.sparkContext.broadcast(
+        (cells, owner[order].astype(np.int32), qla, qlo)
+    )
+    schema = StructType([
+        StructField("_qi", IntegerType()),
+        pts.schema["_pid"],
+        StructField("_plat", DoubleType()),
+        StructField("_plng", DoubleType()),
+        StructField("_d", DoubleType()),
+    ])
+
+    def fn(batches):
+        cc, co, qa, qo = bc.value
+        kept = None
+        for b in (
+            batch.slice(at, step)
+            for batch in batches
+            for at in range(0, batch.num_rows, step)
+        ):
+            la = pc.fill_null(b.column("_plat"), math.nan).to_numpy()
+            lo = pc.fill_null(b.column("_plng"), math.nan).to_numpy()
+            vi = np.flatnonzero(~(np.isnan(la) | np.isnan(lo)))
+            if len(vi) == 0:
+                continue
+            ri, fi = match_sorted(
+                cc, kgeo.latlng_to_cell(la[vi], lo[vi], resolution)
+            )
+            rows, qi = vi[ri], co[fi]
+            d = _np_haversine_km(qa[qi], qo[qi], la[rows], lo[rows])
+            hit = b.take(pa.array(rows))
+            part = pa.table(
+                [qi, *hit.columns, d], names=["_qi", *hit.schema.names, "_d"]
+            )
+            kept = part if kept is None else pa.concat_tables([kept, part])
+            kept = kept.filter(_prune(
+                kept["_qi"].to_numpy(), kept["_d"].to_numpy(), k
+            ))
+        if kept is not None:
+            yield from kept.combine_chunks().to_batches()
+
+    return pts.select(
+        "_pid",
+        F.col("_plat").cast("double").alias("_plat"),
+        F.col("_plng").cast("double").alias("_plng"),
+    ).mapInArrow(fn, schema)
+
+
 def _knn_broadcast(
     qt: pa.Table, pts: DataFrame, k: int, resolution: int
 ) -> DataFrame:
-    """Certificate strategy for a collected query side ``qt``: one ring
-    round of ``CERT_RINGS`` rings against broadcast disks. Only the
-    certified ids (<= |Q| rows) reach the driver; the rest take
+    """Certificate strategy for a collected query side ``qt`` over the
+    (_pid, _plat, _plng) points: one ``_cert_candidates`` pass, whose
+    kept rows reach the driver in one bounded collect (past
+    ``DRIVER_KNN_ROWS`` the call takes the iterative rounds instead).
+    There they are pruned once more across tasks and scored exactly by
+    ``haversine_km`` over a local relation (folded into the relation on
+    the driver, so that read runs no job either); ranks follow
+    (dist_km, point_id). A query is certified when it has k candidates
+    and its k-th lies within the disk's margin, as in ``_ring_round``.
+    The certified answer is a local relation; the rest take
     ``_score_all`` when at most ``STRAGGLER_QUERIES`` remain (one pass
     beats several ring rounds that each rescan the points), else the
-    iterative rounds. ``pts`` carries ``_cell0`` (``_with_cells``)."""
+    iterative rounds."""
+    import numpy as np
+
     spark = pts.sparkSession
-    disks = _query_disks(spark, qt, resolution, CERT_RINGS)
-    ranked = _ring_round(pts, F.broadcast(disks), k, resolution, CERT_RINGS)
-    ok = _certified(ranked).toArrow()["_qid"].combine_chunks()
-    left = qt.filter(pc.invert(pc.is_in(qt["_qid"], value_set=ok)))
-    done = ranked.filter(F.col("_ok")).select(*_OUT)
+    kept = bounded_collect(
+        _cert_candidates(pts, qt, k, resolution), DRIVER_KNN_ROWS + 1
+    )
+    if kept.num_rows > DRIVER_KNN_ROWS:
+        return _iterate(spark.createDataFrame(qt), pts, k, resolution)
+    kept = kept.filter(
+        _prune(kept["_qi"].to_numpy(), kept["_d"].to_numpy(), k)
+    )
+    qi = kept["_qi"].to_numpy()
+    exact = spark.createDataFrame(pa.table({
+        "_qlat": qt["_qlat"].take(qi), "_qlng": qt["_qlng"].take(qi),
+        "_plat": kept["_plat"], "_plng": kept["_plng"],
+    })).select(haversine_km(
+        F.col("_qlat"), F.col("_qlng"), F.col("_plat"), F.col("_plng")
+    ))
+    dist = np.array([r[0] for r in exact.collect()], dtype=np.float64)
+    # rows rank per query id, so copies of one id rank together as in
+    # the ring round's window: each id maps to its first position in qt
+    first = pc.index_in(
+        qt["_qid"], value_set=qt["_qid"].combine_chunks()
+    ).to_numpy()
+    # Spark's ascending order: NaN after every distance, null ids first
+    order = pc.sort_indices(
+        pa.table({
+            "q": first[qi],
+            "d": np.where(np.isnan(dist), np.inf, dist),
+            "p": kept["_pid"],
+        }),
+        sort_keys=[(c, "ascending") for c in ("q", "d", "p")],
+        null_placement="at_start",
+    ).to_numpy()
+    qs, ds = first[qi][order], dist[order]
+    starts, counts = _runs(qs)
+    rank = np.arange(len(qs)) - np.repeat(starts, counts) + 1
+    full = counts >= k
+    ok_q = np.zeros(qt.num_rows, dtype=bool)
+    ok_q[qs[starts[full]]] = ds[starts[full] + k - 1] <= (
+        (CERT_RINGS - 1) * min_cell_width_km(resolution)
+    )
+    top = ok_q[qs] & (rank <= k)
+    sel = order[top]
+    done = spark.createDataFrame(pa.table({
+        "_qid": qt["_qid"].take(qs[top]),
+        "_pid": kept["_pid"].take(sel),
+        "_dist": dist[sel],
+        "_rank": rank[top].astype(np.int32),
+    }))
+    left = qt.filter(pa.array(~ok_q[first]))
     if left.num_rows == 0:
         return done
     sq = spark.createDataFrame(left)
     if left.num_rows <= STRAGGLER_QUERIES:
-        rest = _score_all(pts, sq, k).localCheckpoint(eager=True)
-    else:
-        rest = _knn_iterative(sq, pts, k, resolution)
-    return done.unionByName(rest)
+        return done.unionByName(_score_all(pts, sq, k))
+    return done.unionByName(_iterate(sq, pts, k, resolution))
+
+
+def _iterate(
+    q: DataFrame, pts: DataFrame, k: int, resolution: int
+) -> DataFrame:
+    """``_knn_iterative`` over the (_pid, _plat, _plng) points, whose
+    int64 cells are cached for the call so no round re-runs the
+    caller's point pipeline or the encode (the result reads only
+    checkpoints, never the cache)."""
+    cells = _with_cells(pts, resolution).persist()
+    try:
+        return _knn_iterative(q, cells, k, resolution)
+    finally:
+        cells.unpersist()
 
 
 def _knn_iterative(

@@ -455,10 +455,12 @@ def minhash_lsh_dedup(
     # |A ∪ B| = |A| + |B| − |A ∩ B| (ngram arrays have no nulls;
     # array_union deduplicated exactly like the distinct sets), so the
     # jaccard values are bit-identical to the old expression.
-    # lazy: the pair_ids broadcast build is the materializing job (its
-    # distinct aggregates every partition, so the checkpoint is fully
-    # populated before lineage truncation) — no separate caching action
-    pairs = pairs.localCheckpoint(eager=False)
+    # eager: a lazy checkpoint is first computed by whichever AQE stages
+    # read it, and two of them (the pair_ids broadcast build and the
+    # id_a side) then compute the same partition at once, which logs
+    # "Block ... already exists" and drops that task's accumulator
+    # updates. One job up front builds the pair list exactly once
+    pairs = pairs.localCheckpoint(eager=True)
     texts = raw.select(
         F.col(id_col).alias("_tid"), F.col(text_col).alias("_t")
     )

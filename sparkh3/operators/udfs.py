@@ -114,6 +114,21 @@ def point_in_flat_polygon_udf():
     return f
 
 
+def match_sorted(sorted_keys, keys):
+    """Every ``(i, j)`` with ``keys[i] == sorted_keys[j]``, as two index
+    arrays ordered by ``i``: the probe side of a broadcast join against
+    a sorted int64 cell array. Two ``searchsorted`` bounds per key give
+    its run of matches; ``repeat`` expands the runs into flat pairs."""
+    import numpy as np
+
+    left = np.searchsorted(sorted_keys, keys, side="left")
+    counts = np.searchsorted(sorted_keys, keys, side="right") - left
+    ridx = np.repeat(np.arange(len(keys)), counts)
+    base = np.repeat(np.cumsum(counts) - counts, counts)
+    flat = np.repeat(left, counts) + (np.arange(len(ridx)) - base)
+    return ridx, flat
+
+
 def pip_broadcast_fused(
     points,
     poly_rows: list,
@@ -204,15 +219,9 @@ def pip_broadcast_fused(
                         if lvl == rf
                         else kgeo.latlng_to_cell(la[valid], lo[valid], lvl)
                     )
-                    left = np.searchsorted(cc, anc, side="left")
-                    right = np.searchsorted(cc, anc, side="right")
-                    counts = right - left
-                    total = int(counts.sum())
-                    if total == 0:
+                    ridx, flat = match_sorted(cc, anc)
+                    if len(ridx) == 0:
                         continue
-                    ridx = np.repeat(np.arange(len(anc)), counts)
-                    base = np.repeat(np.cumsum(counts) - counts, counts)
-                    flat = np.repeat(left, counts) + (np.arange(total) - base)
                     rows_parts.append(vidx[ridx])
                     poly_parts.append(cp[flat])
                     int_parts.append(ci[flat])

@@ -102,6 +102,21 @@ def test_minhash_verify_intersects_each_pair_once(spark):
     assert final.count("array_intersect(") == 1, final
 
 
+def test_minhash_pair_list_is_built_in_the_call(spark):
+    """The candidate pair list is checkpointed eagerly: it is built
+    before the call returns. A lazy checkpoint left it to the first
+    action, whose AQE stages computed the same checkpoint partition
+    twice at once."""
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    mh = textops.minhash_lsh_dedup(docs, jaccard_threshold=0.4)
+    leaves = mh._jdf.queryExecution().analyzed().collectLeaves()
+    ckpts = [
+        leaves.apply(i) for i in range(leaves.size())
+        if leaves.apply(i).nodeName() == "LogicalRDD"
+    ]
+    assert ckpts and all(c.rdd().isCheckpointed() for c in ckpts)
+
+
 def _text_exchanges(df):
     """Every Exchange node of ``df``'s physical plan that carries a
     string column, each with whether a left-semi join sits below it."""

@@ -301,9 +301,9 @@ class TestKnnJoin:
              Row(query_id=2, lat=51.5, lng=-0.1),
              Row(query_id=3, lat=0.0, lng=0.0)]
         )
-        qdf, qt, pts, cells = self._strategy_inputs(spark, queries, 5)
+        qdf, qt, pts, _ = self._strategy_inputs(spark, queries, 5)
         nested = joins._score_all(pts, qdf, 5)
-        cert = joins._knn_broadcast(qt, cells, 5, 5)
+        cert = joins._knn_broadcast(qt, pts, 5, 5)
         key = lambda rows: {
             (r._qid, r._rank): (r._pid, r._dist) for r in rows
         }
@@ -314,8 +314,8 @@ class TestKnnJoin:
             [Row(query_id=1, lat=40.75, lng=-73.99),
              Row(query_id=2, lat=51.5, lng=-0.1)]
         )
-        qdf, qt, _, cells = self._strategy_inputs(spark, queries, 5)
-        fast = joins._knn_broadcast(qt, cells, 4, 5)
+        qdf, qt, pts, cells = self._strategy_inputs(spark, queries, 5)
+        fast = joins._knn_broadcast(qt, pts, 4, 5)
         slow = joins._knn_iterative(qdf, cells, 4, 5)
         key = lambda rows: {(r._qid, r._rank): r._pid for r in rows}
         assert key(fast.collect()) == key(slow.collect())
