@@ -1,22 +1,34 @@
 """Spatial joins (north-rule ops, SURVEY §2.3/§2.4).
 
-* ``pip_join``: exact point-in-polygon join. H3 polyfill **cover** cells
-  (centroid-inside ∪ boundary band — a lossless candidate superset) are
-  exploded on the polygon side and equi-joined against the points' cells,
-  then refined with an exact even-odd ray cast. The H3 stage only prunes;
-  the refinement restores exact PIP semantics, so results match a naive
-  theta-join while shuffling only co-located cells. Small polygon sides
-  are broadcast (no shuffle of the points at all).
+The three point joins share one probe pass (``probe_pass``): a single
+``mapInArrow`` pass over the points encodes each located point at each
+level's resolution, matches its cell against broadcast sorted int64
+cells with their owners, and hands the matches to the join's own refine
+step. The point side never shuffles, and no BroadcastHashJoin or
+per-column UDF sits around the pass.
 
-* ``knn_join``: exact k-nearest-neighbors. Both strategies certify a
-  query once its k-th neighbor lies within the margin of an int64 H3
-  disk around it. Up to 1024 queries, the disks are broadcast and one
-  fused Python pass over the points (``_cert_candidates``: encode,
-  sorted-cell probe, NumPy prune, like ``pip_join``'s) feeds one bounded
-  collect; exact distances and ranks come from the JVM's
-  ``haversine_km`` over a local relation on the driver. Larger query
-  sides run ``_ring_round`` joins at coarsening resolutions. Whatever
-  stays uncertified is scored against every point (``_score_all``).
+* ``pip_join``: exact point-in-polygon join. The levels are the H3
+  polyfill **cover** cells (centroid-inside ∪ boundary band, a lossless
+  candidate superset), one level per cover resolution, each cell
+  flagged when it is proven interior. The refine passes interior
+  candidates and ray-casts the boundary band. A polygon side too large
+  to broadcast joins by shuffle instead.
+
+* ``knn_join``: exact k-nearest-neighbors. Up to 1024 queries, one
+  probe pass scores candidates in NumPy and prunes them per task; one
+  bounded collect brings them to the driver, where exact distances and
+  ranks come from the JVM's ``haversine_km`` over a local relation.
+  Above ``STRAGGLER_QUERIES`` queries the level is each query's int64
+  H3 disk, and a query is certified once its k-th neighbor lies within
+  the disk's margin. A side of at most ``STRAGGLER_QUERIES``, and
+  whatever the disks left uncertified, owns every res-0 cell instead:
+  every point is then a candidate. Larger query sides run
+  ``_ring_round`` joins at coarsening resolutions.
+
+* ``radius_join``: the level is each query's ring-certificate disk, the
+  refine a NumPy haversine prune, and the JVM's
+  ``round(haversine_km, 6) <= r`` filter over the pass's rows the exact
+  answer.
 """
 
 from __future__ import annotations
@@ -38,8 +50,10 @@ EARTH_RADIUS_KM = 6371.007180918475
 # BROADCAST_QUERIES queries take the broadcast certificate round; more
 # run the iterative rounds
 BROADCAST_QUERIES = 1024
-# at most this many queries the certificate round left open are scored
-# against every point (_score_all) instead of taking the iterative rounds
+# a query side of at most this many, and at most this many queries the
+# certificate round left open, are scored against every point (each
+# owns every res-0 cell) instead of by a certificate or the iterative
+# rounds
 STRAGGLER_QUERIES = 32
 # disk radius of the broadcast certificate round
 CERT_RINGS = 8
@@ -47,13 +61,13 @@ CERT_RINGS = 8
 # about k per query); a call that would bring more takes the iterative
 # rounds instead
 DRIVER_KNN_ROWS = 1 << 18
-# NumPy distances prune the certificate round's candidates only within
-# this slack of a k-th distance; it must exceed twice the worst
+# NumPy distances prune kNN and radius candidates only within this slack
+# of a k-th distance or of the radius; it must exceed twice the worst
 # difference between _np_haversine_km and the JVM's haversine_km
 SLACK_KM = 1e-2
-# (point, query) pairs one task of the certificate round scores at once:
-# bounds its Python memory when disks overlap heavily (coarse
-# resolutions, many queries)
+# (point, cell) matches one slice of a probe_pass scores at once: bounds
+# a task's Python memory when cells overlap heavily (coarse resolutions,
+# many queries or polygons)
 PAIR_CHUNK = 1 << 20
 _OUT = ("_qid", "_pid", "_dist", "_rank")
 
@@ -141,7 +155,7 @@ def pip_join(
         # side, so one collect powers EVERYTHING — key validation, cover
         # cells computed in-process by the kernel (Spark builds broadcast
         # relations on the driver the same way), and the fused
-        # encode+join+refine single-pass map (see pip_broadcast_fused).
+        # encode+join+refine single-pass map (see _pip_broadcast).
         # Guardrail: the collect is bounded at max_broadcast_rows + 1 —
         # a misdeclared huge polygon side falls back to the shuffle path
         # instead of OOMing the driver.
@@ -176,22 +190,9 @@ def pip_join(
         key_field = next(
             f for f in polygons.schema.fields if f.name == poly_key
         )
-        if resolution is None:
-            # adaptive covers: size each polygon's cover resolution to
-            # its own footprint (resolution=None is the default path)
-            res_list = [
-                adaptive_cover_res(
-                    [[(p["lat"], p["lng"]) for p in ring] for ring in r[geometry_col]]
-                )
-                if r[geometry_col]
-                else 0
-                for r in rows
-            ]
-        else:
-            res_list = [resolution] * len(rows)
-        out = udfs.pip_broadcast_fused(
+        out = _pip_broadcast(
             points, rows, poly_key, key_field, geometry_col,
-            res_list, lat_col, lng_col,
+            resolution, lat_col, lng_col,
         )
         extra = [c for c in attr_cols if c != poly_key]
         if extra:
@@ -278,33 +279,151 @@ def pip_join(
     return cand_int.unionByName(refined_bnd).drop("_cell", "_interior")
 
 
-def write_bucketed(
-    df: DataFrame, table: str, cell_col: str, n_buckets: int = 64
-) -> None:
-    """Persist a table bucketed + sorted by its H3 cell column — the
-    co-location contract for repeated cell joins at 100 TB: every join
-    between two tables bucketed (same column, same bucket count) plans
-    with NO Exchange and NO Sort on either side."""
-    (
-        df.write.bucketBy(n_buckets, cell_col)
-        .sortBy(cell_col)
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(table)
+def probe_pass(
+    points: DataFrame, lat: str, lng: str, levels: list, data, refine,
+    schema,
+) -> DataFrame:
+    """One ``mapInArrow`` pass over ``points`` that probes broadcast
+    sorted cells: the shared shape of the broadcast ``pip_join``, the
+    ``knn_join`` rounds and ``radius_join``.
+
+    ``levels`` holds ``_level`` tuples ``(resolution, sorted int64
+    cells, owners, *payload)``. Each Arrow batch is sliced so that a
+    slice matches at most ``PAIR_CHUNK`` cells; in each slice the points
+    with a located (non-null, non-NaN) ``lat``/``lng`` encode at each
+    level's resolution and probe its cells (``udfs.match_sorted``).
+    ``refine(data, matches)`` runs once per task. ``matches`` yields,
+    per slice with a match, ``(slice, rows, lat, lng, owners,
+    *payload)``: each match's row in the slice, that point's
+    coordinates, and its cell's owner and payload. ``refine`` yields
+    Arrow batches of ``schema`` and may keep state across a task's
+    slices. ``levels`` and ``data`` ship in one broadcast, captured by
+    the returned frame's closure: the ContextCleaner reclaims it once
+    the caller drops the frame."""
+    import numpy as np
+
+    from ..kernel import geo as kgeo
+    from .udfs import match_sorted
+
+    # a point matches at most `most` cells, so a slice of
+    # PAIR_CHUNK // most rows matches at most PAIR_CHUNK
+    most = sum(int(_runs(lv[1])[1].max(initial=0)) for lv in levels)
+    step = max(1, PAIR_CHUNK // max(most, 1))
+    bc = points.sparkSession.sparkContext.broadcast((levels, data))
+
+    def fn(batches):
+        lvls, dat = bc.value
+
+        def matches():
+            for b in (
+                batch.slice(at, step)
+                for batch in batches
+                for at in range(0, batch.num_rows, step)
+            ):
+                la, lo = (
+                    pc.fill_null(b.column(c).cast(pa.float64()), math.nan)
+                    .to_numpy()
+                    for c in (lat, lng)
+                )
+                vi = np.flatnonzero(~(np.isnan(la) | np.isnan(lo)))
+                if len(vi) == 0 or not lvls:
+                    continue
+                found = []
+                for res, cells, *tail in lvls:
+                    ri, fi = match_sorted(
+                        cells, kgeo.latlng_to_cell(la[vi], lo[vi], res)
+                    )
+                    found.append((vi[ri], *(t[fi] for t in tail)))
+                rows, *tail = map(np.concatenate, zip(*found))
+                if len(rows):
+                    yield (b, rows, la[rows], lo[rows], *tail)
+
+        yield from refine(dat, matches())
+
+    return points.mapInArrow(fn, schema)
+
+
+def _level(res: int, cells, owners, *payload) -> tuple:
+    """A ``probe_pass`` level: ``cells`` at ``res`` sorted, with their
+    owners (and any payload arrays) in the same order."""
+    import numpy as np
+
+    order = np.argsort(cells, kind="stable")
+    return (
+        res, cells[order], owners[order].astype(np.int32),
+        *(p[order] for p in payload),
     )
 
 
-def bucketed_cell_join(
-    spark,
-    left_table: str,
-    right_table: str,
-    cell_col: str,
-    how: str = "inner",
+def _pip_broadcast(
+    points: DataFrame,
+    poly_rows: list,
+    poly_key: str,
+    key_field,
+    geometry_col: str,
+    resolution: int | None,
+    lat_col: str,
+    lng_col: str,
 ) -> DataFrame:
-    """Join two pre-bucketed tables on their shared cell column —
-    shuffle-free by construction (verify: no `Exchange` in the plan)."""
-    return spark.table(left_table).join(
-        spark.table(right_table), cell_col, how
+    """Broadcast PIP as one ``probe_pass`` over the points. Each of the
+    collected ``poly_rows`` covers at ``resolution``, or with None at
+    the resolution ``adaptive_cover_res`` sizes to its own footprint.
+    One classified-cover BFS per resolution gives one level, whose
+    payload flags the cells proven fully inside. Their candidates are
+    matches by construction, so only boundary-band candidates pay the
+    exact ray cast. Points encode directly at each level's resolution:
+    aperture-7 bit-ancestors do not geometrically contain their
+    descendants (~6.5% of points sit in protrusions outside the
+    ancestor hexagon), so ancestor matching would break the interior
+    flag's "point is inside this cell" premise and could miss
+    candidates. Returns the points' columns + ``poly_key``, in point
+    order."""
+    import numpy as np
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import StructType
+
+    from ..functions import _rings_from_raw
+    from ..kernel import polygon as pg
+
+    polys = [r for r in poly_rows if r[geometry_col]]
+    rings = [_rings_from_raw(r[geometry_col]) for r in polys]
+    res_arr = np.asarray(
+        [
+            adaptive_cover_res(
+                [[(p["lat"], p["lng"]) for p in ring] for ring in r[geometry_col]]
+            )
+            if resolution is None
+            else resolution
+            for r in polys
+        ],
+        dtype=np.int64,
+    )
+    levels = []
+    for res in sorted(set(res_arr.tolist())):
+        idx = np.flatnonzero(res_arr == res)
+        owner, cells, interior = pg.cover_bfs([rings[i] for i in idx], res)
+        levels.append(_level(res, cells, idx[owner], interior))
+    keys = pa.array(
+        [r[poly_key] for r in polys], type=to_arrow_type(key_field.dataType)
+    )
+
+    def refine(data, matches):
+        keys, rings = data
+        for b, rows, la, lo, poly, interior in matches:
+            keep = interior.copy()
+            for g in np.unique(poly[~interior]):
+                m = ~interior & (poly == g)
+                keep[m] = pg.points_in_rings(la[m], lo[m], rings[g])
+            order = np.argsort(rows[keep], kind="stable")
+            hit = b.take(pa.array(rows[keep][order]))
+            yield pa.RecordBatch.from_arrays(
+                [*hit.columns, keys.take(pa.array(poly[keep][order]))],
+                names=[*hit.schema.names, poly_key],
+            )
+
+    return probe_pass(
+        points, lat_col, lng_col, levels, (keys, rings), refine,
+        StructType(list(points.schema.fields) + [key_field]),
     )
 
 
@@ -323,35 +442,25 @@ def knn_join(
     """Exact kNN join. Output: (query_id, point_id, dist_km, rank).
     Deterministic tie-break: (dist_km, point_id) ascending.
 
-    Two strategies, chosen by the query side's size and built on two
-    shared primitives (``_score_all``: every point against a few
-    broadcast queries; a per-query exactness certificate over the
-    points in int64 H3 disks around the queries):
+    Two strategies, chosen by the query side's size:
 
     * <= ``BROADCAST_QUERIES`` (1024) queries, however few
-      (``_knn_broadcast``): one certificate round in two jobs, the query
-      collect and one bounded collect of a fused Python pass over the
-      points (no exchange, persist or checkpoint). Its certified answer
-      is a local relation, so collecting it runs no job. Queries it
-      cannot certify (sparse regions) take ``_score_all`` when at most
-      ``STRAGGLER_QUERIES`` (32) remain, else the iterative rounds.
-      Traced on 4 cores (perfbench ``spatial_join`` seed 1: 40 hub
-      queries, 20k points, k=5, res 6), the call takes 0.67 s and 2
+      (``_knn_broadcast``): the query collect and one bounded collect of
+      a ``probe_pass`` over the points (no exchange, persist or
+      checkpoint). Its answer is a local relation, so collecting it runs
+      no job. A side of at most ``STRAGGLER_QUERIES`` (32) is scored
+      against every point; a larger one is certified per query over the
+      points in int64 H3 disks around the queries. Queries the disks
+      cannot certify (sparse regions) take one more every-point pass
+      when at most ``STRAGGLER_QUERIES`` remain, else the iterative
+      rounds. Traced on 4 cores (perfbench ``spatial_join`` seed 1: 40
+      hub queries, 20k points, k=5, res 6), the call takes 0.67 s and 2
       jobs, against 1.29 s and 6 jobs for the persisted-projection ring
       round with an eager checkpoint that it replaced.
     * larger query sides (``_knn_iterative``): ring rounds at
       ``resolution`` and every 3 resolutions coarser, ``_score_all`` for
       whatever is left at res <= 0. The open-query set stays a
       DataFrame; only counts reach the driver.
-
-    ``_score_all`` is not a strategy of its own for small query sides:
-    each task sorts all of its |points| x |queries| rows, so its cost
-    grows with the point count. Measured on 4 cores (k=5, res 6, hub
-    queries, best 3 of 4 calls with collect), it took 1.46-1.51 s for
-    32 queries on 20k points against 0.72-0.81 s for the certificate
-    round, and 3.4-3.5 s for 8 queries on 200k points against 1.0-1.1 s.
-    For 8 queries on 20k points the two are even (0.68-0.87 s against
-    0.82-0.93 s).
 
     The query side is read once, by a bounded one-job collect that is
     both the size probe and the broadcast input; it writes no session
@@ -361,14 +470,9 @@ def knn_join(
     qt = _collect_queries(q, BROADCAST_QUERIES + 1)
     pts = _point_side(points, point_id, p_lat, p_lng)
     if qt.num_rows == 0:
-        # no query: nothing to encode or certify. limit(0) plans as an
-        # empty local relation, so collecting it runs no job
-        return q.select(
-            F.col("_qid").alias(query_id),
-            F.lit(None).cast(pts.schema["_pid"].dataType).alias(point_id),
-            F.lit(None).cast("double").alias("dist_km"),
-            F.lit(None).cast("int").alias("rank"),
-        ).limit(0)
+        return _no_rows(
+            q, pts, query_id, point_id, dist_km="double", rank="int"
+        )
     if qt.num_rows <= BROADCAST_QUERIES:
         out = _knn_broadcast(qt, pts, k, resolution)
     else:
@@ -396,9 +500,22 @@ def _point_side(
 ) -> DataFrame:
     return points.select(
         F.col(point_id).alias("_pid"),
-        F.col(p_lat).alias("_plat"),
-        F.col(p_lng).alias("_plng"),
+        F.col(p_lat).cast("double").alias("_plat"),
+        F.col(p_lng).cast("double").alias("_plng"),
     )
+
+
+def _no_rows(
+    q: DataFrame, pts: DataFrame, query_id: str, point_id: str, **cols: str
+) -> DataFrame:
+    """The typed empty answer of a join called with no query: the query
+    id, the point id and ``cols`` (name -> Spark type). limit(0) plans
+    as an empty local relation, so collecting it runs no job."""
+    return q.select(
+        F.col("_qid").alias(query_id),
+        F.lit(None).cast(pts.schema["_pid"].dataType).alias(point_id),
+        *(F.lit(None).cast(t).alias(c) for c, t in cols.items()),
+    ).limit(0)
 
 
 def _collect_queries(q: DataFrame, n: int) -> pa.Table:
@@ -451,7 +568,7 @@ def _score_all(pts: DataFrame, queries: DataFrame, k: int) -> DataFrame:
     (_pid, _plat, _plng) points in one codegen pass. The rank-limit
     pushdown (WindowGroupLimit) keeps each task's top k per query, so
     the exchange after the |Q|-fold row inflation moves O(tasks·|Q|·k)
-    rows, not the inflated scan. Serves the straggler pass and the
+    rows, not the inflated scan. Serves ``_knn_iterative``'s
     coarsest-resolution fallback. Points with a null or NaN coordinate
     are skipped, as on the ring-round path (a null distance would sort
     first)."""
@@ -499,28 +616,31 @@ def _certified(ranked: DataFrame) -> DataFrame:
     return ranked.filter(F.col("_ok") & (F.col("_rank") == 1)).select("_qid")
 
 
-def _query_disks(
-    spark, qt: pa.Table, resolution: int, n_rings: int
-) -> DataFrame:
-    """(_qid, _qlat, _qlng, _cell) rows: every cell of each collected
-    query's ``n_rings``-disk at ``resolution``, computed in-process by
-    the kernel. Cells ride as int64, so the equi-join probes a long
-    column instead of allocating a hex string per point row; they are
-    dropped before any result surfaces. Built from Arrow, so the frame
-    is a local relation (no per-row pickling through py4j)."""
-    import numpy as np
-
+def _disk_level(qt: pa.Table, resolution: int, rings: int) -> tuple:
+    """The ``probe_pass`` level of the ``rings``-disk at ``resolution``
+    around each (_qlat, _qlng) query of ``qt``, owned by its position."""
     from ..kernel import geo as kgeo
     from ..kernel import traversal as tv
 
-    qcells = kgeo.latlng_to_cell(
-        qt["_qlat"].to_numpy(), qt["_qlng"].to_numpy(), resolution
+    owner, cells = tv.grid_disk_grouped(
+        kgeo.latlng_to_cell(
+            qt["_qlat"].to_numpy(), qt["_qlng"].to_numpy(), resolution
+        ),
+        rings,
     )
-    owner, cells = tv.grid_disk_grouped(qcells, n_rings)
-    disks = qt.take(owner).append_column(
-        "_cell", pa.array(cells.view(np.int64))
-    )
-    return spark.createDataFrame(disks)
+    return _level(resolution, cells, owner)
+
+
+def _globe_level(n: int) -> tuple:
+    """The ``probe_pass`` level in which each of ``n`` queries owns all
+    122 res-0 cells: every located point is a candidate of every
+    query."""
+    import numpy as np
+
+    from ..kernel import index as ix
+
+    base = ix.build_cell(np.arange(122), 0, np.full((122, 15), 7))
+    return _level(0, np.tile(base, n), np.repeat(np.arange(n), len(base)))
 
 
 def _np_haversine_km(lat1, lng1, lat2, lng2):
@@ -574,71 +694,30 @@ def _prune(qi, d, k: int):
     return keep
 
 
-def _cert_candidates(
-    pts: DataFrame, qt: pa.Table, k: int, resolution: int
+def _knn_candidates(
+    pts: DataFrame, qt: pa.Table, k: int, level: tuple
 ) -> DataFrame:
-    """The certificate round's candidates, in one ``mapInArrow`` pass
-    over the (_pid, _plat, _plng) points (no exchange). The queries'
-    ``CERT_RINGS``-disks at ``resolution`` ship as a broadcast of sorted
-    int64 cells with their owners' positions in ``qt``. Each batch
-    (sliced to at most ``PAIR_CHUNK`` pairs) encodes its points, probes
-    the disks (``udfs.match_sorted``) and
-    scores the matches with ``_np_haversine_km``; each task keeps, per
-    query, the rows ``_prune`` keeps. Rows: (_qi, the query's position
-    in ``qt``; _pid, _plat, _plng; _d, the NumPy distance). Points with
-    a null or NaN coordinate never match, as their cell is null on the
-    ring-round path."""
-    import numpy as np
+    """A kNN round's candidates: one ``probe_pass`` over the (_pid,
+    _plat, _plng) points against ``level``, whose owners are positions
+    in ``qt``. Each slice's matches are scored with
+    ``_np_haversine_km``; each task keeps, per query, the rows
+    ``_prune`` keeps. Rows: (_qi, the query's position in ``qt``; _pid,
+    _plat, _plng; _d, the NumPy distance)."""
     from pyspark.sql.types import (
         DoubleType, IntegerType, StructField, StructType,
     )
 
-    from ..kernel import geo as kgeo
-    from ..kernel import traversal as tv
-    from .udfs import match_sorted
-
-    qla = qt["_qlat"].to_numpy()
-    qlo = qt["_qlng"].to_numpy()
-    owner, cells = tv.grid_disk_grouped(
-        kgeo.latlng_to_cell(qla, qlo, resolution), CERT_RINGS
-    )
-    order = np.argsort(cells, kind="stable")
-    cells = cells[order]
-    # a point lies in at most `most` disks, so a slice of
-    # PAIR_CHUNK // most rows scores at most PAIR_CHUNK pairs
-    most = int(_runs(cells)[1].max())
-    step = max(1, PAIR_CHUNK // most)
-    # captured by the returned frame's closure: ContextCleaner reclaims
-    # the broadcast once the caller drops the frame
-    bc = pts.sparkSession.sparkContext.broadcast(
-        (cells, owner[order].astype(np.int32), qla, qlo)
-    )
     schema = StructType([
         StructField("_qi", IntegerType()),
-        pts.schema["_pid"],
-        StructField("_plat", DoubleType()),
-        StructField("_plng", DoubleType()),
+        *pts.schema.fields,
         StructField("_d", DoubleType()),
     ])
 
-    def fn(batches):
-        cc, co, qa, qo = bc.value
+    def refine(data, matches):
+        qla, qlo = data
         kept = None
-        for b in (
-            batch.slice(at, step)
-            for batch in batches
-            for at in range(0, batch.num_rows, step)
-        ):
-            la = pc.fill_null(b.column("_plat"), math.nan).to_numpy()
-            lo = pc.fill_null(b.column("_plng"), math.nan).to_numpy()
-            vi = np.flatnonzero(~(np.isnan(la) | np.isnan(lo)))
-            if len(vi) == 0:
-                continue
-            ri, fi = match_sorted(
-                cc, kgeo.latlng_to_cell(la[vi], lo[vi], resolution)
-            )
-            rows, qi = vi[ri], co[fi]
-            d = _np_haversine_km(qa[qi], qo[qi], la[rows], lo[rows])
+        for b, rows, la, lo, qi in matches:
+            d = _np_haversine_km(qla[qi], qlo[qi], la, lo)
             hit = b.take(pa.array(rows))
             part = pa.table(
                 [qi, *hit.columns, d], names=["_qi", *hit.schema.names, "_d"]
@@ -650,34 +729,43 @@ def _cert_candidates(
         if kept is not None:
             yield from kept.combine_chunks().to_batches()
 
-    return pts.select(
-        "_pid",
-        F.col("_plat").cast("double").alias("_plat"),
-        F.col("_plng").cast("double").alias("_plng"),
-    ).mapInArrow(fn, schema)
+    return probe_pass(
+        pts, "_plat", "_plng", [level],
+        (qt["_qlat"].to_numpy(), qt["_qlng"].to_numpy()), refine, schema,
+    )
 
 
 def _knn_broadcast(
     qt: pa.Table, pts: DataFrame, k: int, resolution: int
 ) -> DataFrame:
-    """Certificate strategy for a collected query side ``qt`` over the
-    (_pid, _plat, _plng) points: one ``_cert_candidates`` pass, whose
+    """Broadcast strategy for a collected query side ``qt`` over the
+    (_pid, _plat, _plng) points: one ``_knn_candidates`` pass, whose
     kept rows reach the driver in one bounded collect (past
     ``DRIVER_KNN_ROWS`` the call takes the iterative rounds instead).
     There they are pruned once more across tasks and scored exactly by
     ``haversine_km`` over a local relation (folded into the relation on
     the driver, so that read runs no job either); ranks follow
-    (dist_km, point_id). A query is certified when it has k candidates
-    and its k-th lies within the disk's margin, as in ``_ring_round``.
-    The certified answer is a local relation; the rest take
-    ``_score_all`` when at most ``STRAGGLER_QUERIES`` remain (one pass
-    beats several ring rounds that each rescan the points), else the
-    iterative rounds."""
+    (dist_km, point_id). The answer is a local relation.
+
+    A side of at most ``STRAGGLER_QUERIES`` owns every res-0 cell
+    (``_globe_level``): every point is a candidate, so every query is
+    answered exactly with no certificate. A larger side probes the
+    queries' ``CERT_RINGS``-disks at ``resolution``; a query is
+    certified when it has k candidates and its k-th lies within the
+    disk's margin, as in ``_ring_round``. The uncertified rest takes
+    the every-cell pass when at most ``STRAGGLER_QUERIES`` remain (one
+    pass beats several ring rounds that each rescan the points), else
+    the iterative rounds."""
     import numpy as np
 
     spark = pts.sparkSession
+    exhaustive = qt.num_rows <= STRAGGLER_QUERIES
+    level = (
+        _globe_level(qt.num_rows) if exhaustive
+        else _disk_level(qt, resolution, CERT_RINGS)
+    )
     kept = bounded_collect(
-        _cert_candidates(pts, qt, k, resolution), DRIVER_KNN_ROWS + 1
+        _knn_candidates(pts, qt, k, level), DRIVER_KNN_ROWS + 1
     )
     if kept.num_rows > DRIVER_KNN_ROWS:
         return _iterate(spark.createDataFrame(qt), pts, k, resolution)
@@ -710,11 +798,12 @@ def _knn_broadcast(
     qs, ds = first[qi][order], dist[order]
     starts, counts = _runs(qs)
     rank = np.arange(len(qs)) - np.repeat(starts, counts) + 1
-    full = counts >= k
-    ok_q = np.zeros(qt.num_rows, dtype=bool)
-    ok_q[qs[starts[full]]] = ds[starts[full] + k - 1] <= (
-        (CERT_RINGS - 1) * min_cell_width_km(resolution)
-    )
+    ok_q = np.full(qt.num_rows, exhaustive)
+    if not exhaustive:
+        full = counts >= k
+        ok_q[qs[starts[full]]] = ds[starts[full] + k - 1] <= (
+            (CERT_RINGS - 1) * min_cell_width_km(resolution)
+        )
     top = ok_q[qs] & (rank <= k)
     sel = order[top]
     done = spark.createDataFrame(pa.table({
@@ -726,10 +815,11 @@ def _knn_broadcast(
     left = qt.filter(pa.array(~ok_q[first]))
     if left.num_rows == 0:
         return done
-    sq = spark.createDataFrame(left)
     if left.num_rows <= STRAGGLER_QUERIES:
-        return done.unionByName(_score_all(pts, sq, k))
-    return done.unionByName(_iterate(sq, pts, k, resolution))
+        return done.unionByName(_knn_broadcast(left, pts, k, resolution))
+    return done.unionByName(
+        _iterate(spark.createDataFrame(left), pts, k, resolution)
+    )
 
 
 def _iterate(
@@ -810,17 +900,21 @@ def radius_join(
     Exact by the ring certificate (same geometry as knn_join): a point
     whose res-cell lies outside the k-ring disk of the query cell is at
     least (k-1) * min_cell_width away, so k = floor(R/width)+2 makes the
-    broadcast disk a guaranteed superset of the R-ball; the haversine
-    residual filter makes it exact. `resolution=None` picks the finest
-    resolution whose disk needs <= max_ring rings (tightest candidate
-    set that still broadcasts small).
+    disk a guaranteed superset of the R-ball. `resolution=None` picks
+    the finest resolution whose disk needs <= max_ring rings (tightest
+    candidate set that still broadcasts small).
 
-    100 TB shape: the point side is ONE narrow projection + equi-join
-    against a broadcast cell list + a native filter — no point-side
-    shuffle at all; output streams straight from the join. The query
-    side is declared-small (<= max_queries, enforced by a bounded
-    limit-collect, same guardrail discipline as pip_join).
+    100 TB shape: one ``probe_pass`` over the points against the
+    broadcast disks, whose refine keeps the pairs within NumPy
+    haversine ``radius_km + SLACK_KM`` (a prune only: it never drops a
+    pair the exact filter keeps), then the JVM's rounded ``haversine_km
+    <= radius_km`` filter over the pass's rows. No point-side shuffle
+    and no BroadcastHashJoin; output streams straight from the pass.
+    The query side is declared-small (<= max_queries, enforced by a
+    bounded limit-collect, same guardrail discipline as pip_join).
     """
+    from pyspark.sql.types import StructType
+
     if radius_km <= 0:
         raise ValueError(f"radius_km must be positive, got {radius_km}")
     if resolution is None:
@@ -840,22 +934,41 @@ def radius_join(
                 else "use a coarser resolution or raise max_ring"
             )
         )
-    qt = _collect_queries(
-        _query_side(queries, query_id, q_lat, q_lng), max_queries + 1
-    )
+    q = _query_side(queries, query_id, q_lat, q_lng)
+    qt = _collect_queries(q, max_queries + 1)
     if qt.num_rows > max_queries:
         raise ValueError(
             f"radius_join broadcasts the query side; got > {max_queries} "
             "rows — pre-aggregate or raise max_queries explicitly"
         )
-    qdf = _query_disks(points.sparkSession, qt, resolution, k_rings)
-    # asNondeterministic: the equi-join infers IsNotNull(_cell), and
-    # pushing that filter below the projection makes the optimizer
-    # evaluate the encode UDF TWICE per point (guide §4.4 — the before
-    # plan carried two ArrowEvalPython nodes for one call site)
-    cell = H3F.latlng_to_cell_long_udf(resolution).asNondeterministic()
-    pts = _point_side(points, point_id, p_lat, p_lng).withColumn(
-        "_cell", cell(F.col("_plat"), F.col("_plng"))
+    pts = _point_side(points, point_id, p_lat, p_lng)
+    if qt.num_rows == 0:
+        return _no_rows(q, pts, query_id, point_id, dist_km="double")
+
+    def refine(data, matches):
+        qid, qla, qlo = data
+        for b, rows, la, lo, qi in matches:
+            near = _np_haversine_km(qla[qi], qlo[qi], la, lo) <= (
+                radius_km + SLACK_KM
+            )
+            qi = qi[near]
+            hit = b.take(pa.array(rows[near]))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    qid.take(pa.array(qi)), pa.array(qla[qi]),
+                    pa.array(qlo[qi]), *hit.columns,
+                ],
+                names=["_qid", "_qlat", "_qlng", *hit.schema.names],
+            )
+
+    cand = probe_pass(
+        pts, "_plat", "_plng", [_disk_level(qt, resolution, k_rings)],
+        (
+            qt["_qid"].combine_chunks(),
+            qt["_qlat"].to_numpy(), qt["_qlng"].to_numpy(),
+        ),
+        refine,
+        StructType(q.schema.fields + pts.schema.fields),
     )
     dist = F.round(
         haversine_km(
@@ -864,8 +977,7 @@ def radius_join(
         6,
     )
     return (
-        pts.join(F.broadcast(qdf), "_cell")
-        .withColumn("_dist", dist)
+        cand.withColumn("_dist", dist)
         .filter(F.col("_dist") <= F.lit(float(radius_km)))
         .select(
             F.col("_qid").alias(query_id),

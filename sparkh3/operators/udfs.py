@@ -117,8 +117,9 @@ def point_in_flat_polygon_udf():
 def match_sorted(sorted_keys, keys):
     """Every ``(i, j)`` with ``keys[i] == sorted_keys[j]``, as two index
     arrays ordered by ``i``: the probe side of a broadcast join against
-    a sorted int64 cell array. Two ``searchsorted`` bounds per key give
-    its run of matches; ``repeat`` expands the runs into flat pairs."""
+    a sorted int64 cell array (``joins.probe_pass``). Two
+    ``searchsorted`` bounds per key give its run of matches; ``repeat``
+    expands the runs into flat pairs."""
     import numpy as np
 
     left = np.searchsorted(sorted_keys, keys, side="left")
@@ -127,130 +128,6 @@ def match_sorted(sorted_keys, keys):
     base = np.repeat(np.cumsum(counts) - counts, counts)
     flat = np.repeat(left, counts) + (np.arange(len(ridx)) - base)
     return ridx, flat
-
-
-def pip_broadcast_fused(
-    points,
-    poly_rows: list,
-    poly_key: str,
-    key_field,
-    geometry_col: str,
-    resolutions: list,
-    lat_col: str,
-    lng_col: str,
-):
-    """Fused broadcast PIP: encode + cover-cell hash join + exact
-    ray-cast refine in ONE mapInPandas pass over the points.
-
-    The polygon side (per-resolution sorted cover-cell arrays for
-    searchsorted matching, ring arrays) ships once per executor as a
-    Spark broadcast — the same data movement as a BroadcastHashJoin, but
-    with a single Python eval node instead of two UDF stages around a
-    JVM join, so each Arrow batch is touched exactly once.
-
-    `resolutions` gives the cover resolution PER polygon (adaptive
-    covers: big polygons use coarse cells, small ones fine cells without
-    blowing up either side). Points encode once at the finest level;
-    coarser levels match on the point cell's ancestor (vectorized bit
-    math). Returns points columns + `poly_key`.
-    """
-    import numpy as np
-    from pyspark.sql.types import StructType
-
-    from ..functions import _rings_from_raw
-    from ..kernel import geo as kgeo
-    from ..kernel import polygon as pg
-
-    keys: list = []
-    rings_list: list = []
-    res_list: list = []
-    for r, res_p in zip(poly_rows, resolutions):
-        raw = r[geometry_col]
-        if raw is None or len(raw) == 0:
-            continue
-        keys.append(r[poly_key])
-        rings_list.append(_rings_from_raw(raw))
-        res_list.append(res_p)
-    # one classified-cover BFS per cover resolution: interior cells
-    # (proven fully inside) let their points skip the exact ray cast
-    # entirely — only boundary-band candidates pay it
-    res_arr = np.asarray(res_list, dtype=np.int64)
-    levels = []
-    for lvl in sorted(set(res_list)):
-        idx = np.flatnonzero(res_arr == lvl)
-        owner, cc, ci = pg.cover_bfs([rings_list[i] for i in idx], lvl)
-        order = np.argsort(cc, kind="stable")
-        levels.append((lvl, cc[order], idx[owner][order], ci[order]))
-    res_fine = max(res_list) if res_list else 0
-    # lifetime note: the broadcast is captured by the returned frame's
-    # UDF closure, so Spark's ContextCleaner reclaims it once the caller
-    # drops the DataFrame (broadcasts, unlike cache entries, are
-    # GC-tracked) — no explicit destroy() needed or safe here
-    bc = points.sparkSession.sparkContext.broadcast(
-        (levels, res_fine, keys, rings_list)
-    )
-    out_schema = StructType(list(points.schema.fields) + [key_field])
-    in_cols = [f.name for f in points.schema.fields]
-
-    def fn(batches):
-        lvls, rf, ks, rl = bc.value
-        karr = np.asarray(ks, dtype=object)
-        for pdf in batches:
-            la = pdf[lat_col].to_numpy(dtype=np.float64, na_value=np.nan)
-            lo = pdf[lng_col].to_numpy(dtype=np.float64, na_value=np.nan)
-            valid = ~(np.isnan(la) | np.isnan(lo))
-            rows_parts = []
-            poly_parts = []
-            int_parts = []
-            if valid.any() and lvls:
-                cells = kgeo.latlng_to_cell(la[valid], lo[valid], rf)
-                vidx = np.where(valid)[0]
-                for lvl, cc, cp, ci in lvls:
-                    # DIRECT encode at each cover level: aperture-7
-                    # bit-ancestors do not geometrically contain their
-                    # descendants (~6.5% of points sit in protrusions
-                    # outside the ancestor hexagon), so ancestor
-                    # matching would break the interior bypass's
-                    # "point is inside this cell" premise and could
-                    # miss candidates whose true coarse cell differs
-                    # from the ancestor
-                    anc = (
-                        cells
-                        if lvl == rf
-                        else kgeo.latlng_to_cell(la[valid], lo[valid], lvl)
-                    )
-                    ridx, flat = match_sorted(cc, anc)
-                    if len(ridx) == 0:
-                        continue
-                    rows_parts.append(vidx[ridx])
-                    poly_parts.append(cp[flat])
-                    int_parts.append(ci[flat])
-            if not rows_parts:
-                yield pdf.iloc[:0].assign(**{poly_key: []})[
-                    in_cols + [poly_key]
-                ]
-                continue
-            rows_idx = np.concatenate(rows_parts)
-            poly_idx = np.concatenate(poly_parts)
-            # interior-cell candidates are matches by construction (the
-            # whole cell is inside) — ray-cast only the boundary band
-            keep = np.concatenate(int_parts).copy()
-            todo = ~keep
-            pla = la[rows_idx]
-            plo = lo[rows_idx]
-            for g in np.unique(poly_idx[todo]):
-                m = todo & (poly_idx == g)
-                keep[m] = pg.points_in_rings(pla[m], plo[m], rl[g])
-            rows_idx = rows_idx[keep]
-            poly_idx = poly_idx[keep]
-            order = np.argsort(rows_idx, kind="stable")
-            rows_idx = rows_idx[order]
-            poly_idx = poly_idx[order]
-            out = pdf.iloc[rows_idx].copy()
-            out[poly_key] = karr[poly_idx]
-            yield out[in_cols + [poly_key]]
-
-    return points.mapInPandas(fn, out_schema)
 
 
 def k_ring_udf_int(k: int):

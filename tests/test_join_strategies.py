@@ -1,7 +1,8 @@
 """kNN strategy boundaries and join-layer concurrency.
 
 knn_join picks one of two strategies by the size of its query side
-(<= 1024: one broadcast certificate round, whose <= 32 uncertified
+(<= 1024: one broadcast probe pass, which scores every point for <= 32
+queries and otherwise runs a certificate round whose <= 32 uncertified
 queries score every point; more: iterative ring rounds). The answers
 must not depend on that choice, so they are checked against DuckDB haversine SQL with the same
 (dist_km, point_id) tie-break on both sides of each threshold, over
@@ -288,7 +289,7 @@ def test_joins_concurrent_callers_share_one_session(spark, data):
     assert all(serial[name] for name in names)
 
 
-# -- the certificate round's fused pass (_knn_broadcast) ----------------
+# -- the broadcast strategy's probe passes (_knn_broadcast) ---------------
 
 
 def test_match_sorted_equals_brute_force():
@@ -389,15 +390,12 @@ def _queries(coords) -> pd.DataFrame:
 
 
 def _calls(monkeypatch, name: str) -> list:
-    """Record the calls of joins.<name>, still running it. The calls
-    of _score_all that _knn_iterative makes (its points carry _cell0)
-    are not recorded: only the certificate round's straggler pass."""
+    """Record the calls of joins.<name>, still running it."""
     seen = []
     real = getattr(joins, name)
 
     def spy(*args):
-        if not (name == "_score_all" and "_cell0" in args[0].columns):
-            seen.append(args)
+        seen.append(args)
         return real(*args)
 
     monkeypatch.setattr(joins, name, spy)
@@ -408,7 +406,9 @@ def test_fused_duplicates_straddle_kth_rank(spark, monkeypatch):
     """Five points share one spot. A query there ties all five at
     distance 0, so k = 3 and 4 cut through the tie (broken by point_id)
     and k = 6 takes them all; a query 55 m away ties them at a non-zero
-    distance. Neither leaves a straggler."""
+    distance. Both passes rank them: the every-point pass, and the
+    certificate round (forced with STRAGGLER_QUERIES = 0), where neither
+    query is left for the iterative rounds."""
     rng = np.random.default_rng(5)
     base = [(40.0, -74.0)] * 5 + [(40.001, -74.0), (40.0, -74.3)]
     rest = np.column_stack(
@@ -417,11 +417,14 @@ def test_fused_duplicates_straddle_kth_rank(spark, monkeypatch):
     coords = np.vstack([base, rest])
     ids = rng.permutation(len(coords)).astype(np.int64) * 11 + 2
     points = pd.DataFrame({"point_id": ids, "lat": coords[:, 0], "lng": coords[:, 1]})
-    stragglers = _calls(monkeypatch, "_score_all")
-    for k in (3, 4, 6):
-        _fused_vs_reference(
-            spark, points, _queries([(40.0005, -74.0), (40.0, -74.0)]), k, 6
-        )
+    stragglers = _calls(monkeypatch, "_iterate")
+    for cut in (joins.STRAGGLER_QUERIES, 0):
+        monkeypatch.setattr(joins, "STRAGGLER_QUERIES", cut)
+        for k in (3, 4, 6):
+            _fused_vs_reference(
+                spark, points, _queries([(40.0005, -74.0), (40.0, -74.0)]),
+                k, 6,
+            )
     assert stragglers == []
 
 
@@ -441,8 +444,10 @@ def test_fused_duplicate_query_ids(spark, data):
 @pytest.mark.parametrize("side", [-1.0, 1.0])
 def test_fused_kth_at_the_margin(spark, monkeypatch, side):
     """A query whose k-th distance sits SLACK_KM / 2 inside the disk's
-    margin is certified by the fused pass; SLACK_KM / 2 outside, it is
-    a straggler. The answer is exact on both sides."""
+    margin is certified by the certificate round (forced with
+    STRAGGLER_QUERIES = 0); SLACK_KM / 2 outside, it is a straggler,
+    which then takes the iterative rounds. The answer is exact on both
+    sides."""
     res, k = 5, 3
     margin = (joins.CERT_RINGS - 1) * joins.min_cell_width_km(res)
     lat0, lng0 = 10.0, 20.0
@@ -452,7 +457,8 @@ def test_fused_kth_at_the_margin(spark, monkeypatch, side):
         "point_id": np.arange(4, dtype=np.int64) + 100,
         "lat": lats, "lng": [lng0] * 4,
     })
-    stragglers = _calls(monkeypatch, "_score_all")
+    monkeypatch.setattr(joins, "STRAGGLER_QUERIES", 0)
+    stragglers = _calls(monkeypatch, "_iterate")
     fused = _fused_vs_reference(spark, points, _queries([(lat0, lng0)]), k, res)
     assert [r[1] for r in fused] == [100, 101, 102]
     assert len(stragglers) == (0 if side < 0 else 1)
@@ -460,9 +466,11 @@ def test_fused_kth_at_the_margin(spark, monkeypatch, side):
 
 @pytest.mark.parametrize("pair_chunk", [joins.PAIR_CHUNK, 7])
 def test_fused_near_antipodal_candidates_res0(spark, monkeypatch, pair_chunk):
-    """At res 0 the CERT_RINGS disk covers the globe: candidates include
-    points within a few meters of the query's antipode. Every point
-    matches all 3 disks, so a PAIR_CHUNK of 7 scores 2-row slices."""
+    """At res 0 the CERT_RINGS disk covers the globe, as the every-point
+    pass's cells do: candidates include points within a few meters of
+    the query's antipode, in both passes (the certificate round forced
+    with STRAGGLER_QUERIES = 0). Every point matches all 3 queries, so
+    a PAIR_CHUNK of 7 scores 2-row slices."""
     monkeypatch.setattr(joins, "PAIR_CHUNK", pair_chunk)
     rng = np.random.default_rng(9)
     qs = [(12.5, 30.0), (-45.0, -170.0), (89.9, 0.0)]
@@ -480,7 +488,9 @@ def test_fused_near_antipodal_candidates_res0(spark, monkeypatch, pair_chunk):
         "lat": coords[:, 0], "lng": coords[:, 1],
     })
     # k past the random points: the antipodal ones rank
-    _fused_vs_reference(spark, points, _queries(qs), 70, 0)
+    for cut in (joins.STRAGGLER_QUERIES, 0):
+        monkeypatch.setattr(joins, "STRAGGLER_QUERIES", cut)
+        _fused_vs_reference(spark, points, _queries(qs), 70, 0)
 
 
 def test_fused_string_point_ids(spark, data):
@@ -493,7 +503,7 @@ def test_fused_string_point_ids(spark, data):
 
 def test_fused_null_nan_point_coordinates(spark, data, monkeypatch):
     """Points with a null or NaN coordinate are never neighbors, neither
-    for certified queries nor for the straggler pass."""
+    for certified queries nor for the every-point straggler pass."""
     pts, pool, _ = data
     bad = pd.DataFrame({
         "point_id": np.arange(4, dtype=np.int64) + 10**9,
@@ -501,29 +511,33 @@ def test_fused_null_nan_point_coordinates(spark, data, monkeypatch):
         "lng": [-74.0, -74.0, None, np.nan],
     })
     mixed = pd.concat([pts, bad], ignore_index=True)
-    stragglers = _calls(monkeypatch, "_score_all")
+    stragglers = _calls(monkeypatch, "_globe_level")
     _fused_vs_reference(spark, mixed, pool.iloc[:33], K, RES)
     assert stragglers, "some of these queries are stragglers"
 
 
 @pytest.mark.parametrize(
-    "n, path, arg", [(8, "_score_all", 1), (40, "_iterate", 0)]
+    "n, path, arg", [(8, "_globe_level", 0), (40, "_iterate", 0)]
 )
 def test_fused_all_straggler_sides(spark, monkeypatch, n, path, arg):
-    """Points in one cluster, queries an ocean away: no query certifies.
-    8 stragglers take _score_all, 40 the iterative rounds."""
+    """Points in one cluster, n queries an ocean away: none certifies.
+    Beside 32 queries in the cluster, which all certify, 8 stragglers
+    take one every-point pass; 40 take the iterative rounds."""
     rng = np.random.default_rng(n)
     points = pd.DataFrame({
         "point_id": np.arange(400, dtype=np.int64),
         "lat": rng.uniform(39.0, 41.0, 400),
         "lng": rng.uniform(-75.0, -73.0, 400),
     })
-    queries = _queries(np.column_stack(
-        [rng.uniform(-50.0, -40.0, n), rng.uniform(-30.0, 30.0, n)]
-    ))
+    queries = _queries(np.vstack([
+        np.column_stack([rng.uniform(39.5, 40.5, 32), rng.uniform(-74.5, -73.5, 32)]),
+        np.column_stack([rng.uniform(-50.0, -40.0, n), rng.uniform(-30.0, 30.0, n)]),
+    ]))
     seen = _calls(monkeypatch, path)
     _fused_vs_reference(spark, points, queries, K, RES)
-    assert [c[arg].count() for c in seen] == [n]
+    # _globe_level takes the straggler count, _iterate the query frame
+    left = [c[arg] if path == "_globe_level" else c[arg].count() for c in seen]
+    assert left == [n]
 
 
 def test_fused_driver_row_bound(spark, data, monkeypatch):
@@ -535,7 +549,8 @@ def test_fused_driver_row_bound(spark, data, monkeypatch):
     q = joins._query_side(spark.createDataFrame(queries), "query_id", "lat", "lng")
     qt = joins._collect_queries(q, 1000)
     p = joins._point_side(pts_df, "point_id", "lat", "lng")
-    n = driver.bounded_collect(joins._cert_candidates(p, qt, K, RES), 10**6).num_rows
+    level = joins._disk_level(qt, RES, joins.CERT_RINGS)
+    n = driver.bounded_collect(joins._knn_candidates(p, qt, K, level), 10**6).num_rows
     want = _duck_knn(pts, queries, K)
     for bound, iterated in ((n, 0), (n - 1, 1)):
         monkeypatch.setattr(joins, "DRIVER_KNN_ROWS", bound)
@@ -567,3 +582,114 @@ def test_knn_certificate_round_jobs(spark, jobs_in):
     assert (call_jobs, collect_jobs) == (2, 0)
     assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == cached
     _assert_knn([tuple(r) for r in rows], points, _duck_knn(points, queries, 5))
+
+
+# -- radius_join: the NumPy prune never drops a row the JVM filter keeps --
+
+
+def _duck_radius(points: pd.DataFrame, queries: pd.DataFrame, r: float) -> set:
+    """(query_id, point_id, dist_km) of every pair with round(haversine,
+    6) <= r; DuckDB leaves out the points with a null/NaN coordinate."""
+    con = duckdb.connect()
+    try:
+        con.register("p", points)
+        con.register("q", queries)
+        rows = con.execute(
+            f"SELECT q.query_id, p.point_id, round({HAV_SQL}, 6) AS d "
+            f"FROM q, p WHERE round({HAV_SQL}, 6) <= {r!r}"
+        ).fetchall()
+    finally:
+        con.close()
+    return {(int(q), int(p), float(d)) for q, p, d in rows}
+
+
+def _radius_rows(spark, points: pd.DataFrame, queries: pd.DataFrame, r, **kw):
+    out = joins.radius_join(
+        spark.createDataFrame(queries, "query_id long, lat double, lng double"),
+        spark.createDataFrame(points, "point_id long, lat double, lng double"),
+        radius_km=r, **kw,
+    )
+    return {tuple(row) for row in out.collect()}
+
+
+def test_radius_boundary_matches_duckdb(spark):
+    """Points north of the query whose JVM distance rounds (down) to
+    exactly r, and up to r + 1e-6: the first are in the answer, the
+    second are not, as in DuckDB. A NumPy prune at r instead of
+    r + SLACK_KM would drop the first."""
+    lat0, lng0 = 10.0, 20.0
+    base = lat0 + np.degrees(25.0 / EARTH_RADIUS_KM)
+    lats = base + np.arange(400) * 2e-9
+    d = _jvm_haversine(spark, np.full(400, lat0), np.full(400, lng0), lats, np.full(400, lng0))
+    # the first point that rounds down to 6 decimals sets r
+    i = int(np.flatnonzero(np.round(d, 6) < d)[0])
+    r = float(np.round(d[i], 6))
+    at = np.flatnonzero(np.round(d, 6) == r)
+    past = np.flatnonzero(np.round(d, 6) == np.round(r + 1e-6, 6))
+    assert len(at) and len(past)
+    points = pd.DataFrame({
+        "point_id": np.arange(400, dtype=np.int64),
+        "lat": lats, "lng": np.full(400, lng0),
+    })
+    queries = _queries([(lat0, lng0)])
+    got = _radius_rows(spark, points, queries, r)
+    assert got == _duck_radius(points, queries, r)
+    ids = {p for _, p, _ in got}
+    assert i in ids and set(at.tolist()) <= ids
+    assert not ids & set(past.tolist())
+
+
+@pytest.mark.parametrize("r, max_ring", [(5000.0, 8), (20015.0, 16)])
+def test_radius_res0_near_antipodal_matches_duckdb(spark, r, max_ring):
+    """Radii of thousands of km take res-0 disks, whose candidates reach
+    points within meters of each query's antipode; at 20,015 km (just
+    under pi * R) some of those are in the answer and some are not."""
+    # too many rings at res 1, so radius_join picks res 0
+    assert r > joins.min_cell_width_km(1) * (max_ring - 1)
+    rng = np.random.default_rng(13)
+    qs = [(12.5, 30.0), (-45.0, -170.0), (89.9, 0.0)]
+    pts = []
+    for la, lo in qs:
+        anti_lo = lo - 180.0 if lo > 0 else lo + 180.0
+        for eps in (0.0, 1e-7, 1e-5, 1e-4, 1e-3, 1e-2):
+            pts.append((-la + eps, anti_lo))
+            pts.append((-la, anti_lo - eps))
+    coords = np.vstack([pts, np.column_stack([
+        np.degrees(np.arcsin(rng.uniform(-1, 1, 300))), rng.uniform(-180, 180, 300)
+    ])])
+    points = pd.DataFrame({
+        "point_id": np.arange(len(coords), dtype=np.int64),
+        "lat": coords[:, 0], "lng": coords[:, 1],
+    })
+    queries = _queries(qs)
+    got = _radius_rows(spark, points, queries, r, max_ring=max_ring)
+    want = _duck_radius(points, queries, r)
+    assert got == want
+    assert len(want) > 3
+
+
+def test_radius_null_nan_point_coordinates(spark, data):
+    """Points with a null or NaN coordinate give no row."""
+    pts, pool, _ = data
+    bad = pd.DataFrame({
+        "point_id": np.arange(4, dtype=np.int64) + 10**9,
+        "lat": [None, np.nan, 40.0, 0.0],
+        "lng": [-74.0, -74.0, None, np.nan],
+    })
+    mixed = pd.concat([pts, bad], ignore_index=True)
+    queries = pd.concat([pool.iloc[:10], _queries([(40.0, -74.0), (0.0, 0.0)])])
+    got = _radius_rows(spark, mixed, queries, 900.0)
+    assert got == _duck_radius(mixed.dropna(), queries, 900.0)
+    assert not {p for _, p, _ in got} & set(bad["point_id"])
+
+
+def test_radius_empty_query_side(spark, data, jobs_in):
+    """An empty query side returns the typed empty frame: collecting it
+    runs no job."""
+    _, pool, pts_df = data
+    q = spark.createDataFrame(pool.iloc[:5]).limit(0)
+    out, _ = jobs_in(lambda: joins.radius_join(q, pts_df, radius_km=50.0))
+    rows, collect_jobs = jobs_in(out.collect)
+    assert (rows, collect_jobs) == ([], 0)
+    one = joins.radius_join(spark.createDataFrame(pool.iloc[:1]), pts_df, 50.0)
+    assert out.dtypes == one.dtypes

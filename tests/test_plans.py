@@ -66,7 +66,7 @@ def test_broadcast_pip_join_is_one_fused_pass_no_point_shuffle(spark):
     pj = joins.pip_join(pts, E._rect_polys(spark), 4)
     plan = _plan(pj)
     assert "Exchange hashpartitioning" not in plan, plan
-    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
 
 
 def test_nonbroadcast_pip_join_uses_shuffle_join(spark):

@@ -230,37 +230,6 @@ class TestPipJoin:
             joins.pip_join(pts, polys, resolution=5)
 
 
-class TestBucketedJoin:
-    def test_bucketed_join_is_shuffle_free(self, spark, tmp_path):
-        """Two tables bucketed by the cell column join with NO Exchange
-        (the co-location contract for repeated 100 TB cell joins)."""
-        sdf = datagen.interleaved_documents(spark, SF_DIR)
-        pts = spans.extract_geometry(sdf)
-        from sparkh3 import dataframe as dfo
-
-        cells = dfo.geo_to_h3(pts, 5).select("doc_id", "h3_05", "lang")
-        a = cells.select("h3_05", F.col("doc_id").alias("id_a"))
-        b = cells.select("h3_05", F.col("lang"))
-        joins.write_bucketed(a, "_bkt_a", "h3_05", n_buckets=8)
-        joins.write_bucketed(b, "_bkt_b", "h3_05", n_buckets=8)
-        # at test scale Catalyst prefers broadcast (also shuffle-free);
-        # disable it to demonstrate the big-big case the buckets exist
-        # for: sort-merge with NO Exchange and NO Sort on either side
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            j = joins.bucketed_cell_join(spark, "_bkt_a", "_bkt_b", "h3_05")
-            plan = j._jdf.queryExecution().executedPlan().toString()
-            assert "SortMergeJoin" in plan
-            assert "Exchange" not in plan
-            # row parity with the plain (shuffling) join
-            assert j.count() == a.join(b, "h3_05").count()
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-            spark.sql("DROP TABLE IF EXISTS _bkt_a")
-            spark.sql("DROP TABLE IF EXISTS _bkt_b")
-
-
 class TestKnnJoin:
     def test_knn_empty_queries(self, spark):
         """Empty query side returns an empty, correctly-typed frame
