@@ -1,6 +1,7 @@
-"""MinHash-LSH text kernel (NumPy, no Spark): word shingles over UTF-8
-bytes, a vectorized XXH64 bit-identical to Spark's ``xxhash64``, the
-permuted-min signature and the LSH band keys.
+"""Near-duplicate text kernel (NumPy and Arrow, no Spark): word shingles
+over UTF-8 bytes, a vectorized XXH64 bit-identical to Spark's
+``xxhash64``, the MinHash permuted-min signature and LSH band keys, the
+SimHash bit-sum, and exact shingle-set overlaps for Jaccard.
 
 Shingles follow ``textops.ngrams``: tokens are maximal runs of bytes
 other than ``' '`` (0x20; tabs and newlines belong to tokens). A text
@@ -15,6 +16,8 @@ the same bytes here gives the same longs.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 _SEED = 42
 """Spark's ``xxhash64`` seed."""
@@ -191,15 +194,14 @@ def permuted_mins(
     return (np.minimum.reduceat(hv, seg, axis=1) >> np.uint64(1)).T
 
 
-def signatures(
-    data: np.ndarray, offsets: np.ndarray, n: int, a: np.ndarray, b: np.ndarray
-) -> np.ndarray:
-    """(ndocs, len(a)) uint64 MinHash signatures of the UTF-8 documents
-    ``data[offsets[d]:offsets[d + 1]]`` over their word n-gram shingles,
-    each shingle's base hash being Spark's ``xxhash64`` of it."""
+def _hashed_shingles(data: np.ndarray, offsets: np.ndarray, n: int):
+    """Yields ``(rows, h)`` runs over the shingles of the UTF-8 documents
+    ``data[offsets[d]:offsets[d + 1]]``: ``h`` are the shingles' base
+    hashes (uint64, Spark's ``xxhash64``) and ``rows`` their documents
+    (non-decreasing). A run holds at most ``SHINGLE_CHUNK`` shingles,
+    and a document may span several runs."""
     offsets = np.asarray(offsets, dtype=np.int64)
     nd = len(offsets) - 1
-    sig = np.full((nd, len(a)), np.iinfo(np.uint64).max, dtype=np.uint64)
     cost = np.cumsum(np.diff(offsets) + 1)
     d0 = 0
     while d0 < nd:
@@ -211,12 +213,103 @@ def signatures(
         )
         for c in range(0, len(doc), SHINGLE_CHUNK):
             part = slice(c, c + SHINGLE_CHUNK)
-            rows = doc[part] + d0
-            seg = np.flatnonzero(np.diff(rows, prepend=-1))
-            mins = permuted_mins(xxh64(norm, start[part], length[part]), seg, a, b)
-            sig[rows[seg]] = np.minimum(sig[rows[seg]], mins)
+            yield doc[part] + d0, xxh64(norm, start[part], length[part])
         d0 = d1
+
+
+def signatures(
+    data: np.ndarray, offsets: np.ndarray, n: int, a: np.ndarray, b: np.ndarray
+) -> np.ndarray:
+    """(ndocs, len(a)) uint64 MinHash signatures of the UTF-8 documents
+    ``data[offsets[d]:offsets[d + 1]]`` over their word n-gram shingles,
+    each shingle's base hash being Spark's ``xxhash64`` of it."""
+    sig = np.full((len(offsets) - 1, len(a)), np.iinfo(np.uint64).max, dtype=np.uint64)
+    for rows, h in _hashed_shingles(data, offsets, n):
+        seg = np.flatnonzero(np.diff(rows, prepend=-1))
+        mins = permuted_mins(h, seg, a, b)
+        sig[rows[seg]] = np.minimum(sig[rows[seg]], mins)
     return sig
+
+
+def simhashes(data: np.ndarray, offsets: np.ndarray, n: int, bits: int) -> np.ndarray:
+    """(ndocs,) int64 SimHash of each UTF-8 document over its word
+    n-gram shingles: bit b (b < bits) is set when more of the shingles'
+    base hashes (Spark's ``xxhash64``) have bit b set than clear."""
+    sums = np.zeros((len(offsets) - 1, bits), dtype=np.int64)
+    for rows, h in _hashed_shingles(data, offsets, n):
+        seg = np.flatnonzero(np.diff(rows, prepend=-1))
+        for b in range(bits):
+            sign = ((h >> np.uint64(b)) & np.uint64(1)).astype(np.int64) * 2 - 1
+            sums[rows[seg], b] += np.add.reduceat(sign, seg)
+    weights = np.uint64(1) << np.arange(bits, dtype=np.uint64)
+    return ((sums > 0) * weights).sum(axis=1, dtype=np.uint64).view(np.int64)
+
+
+def _shingle_keys(data: np.ndarray, offsets: np.ndarray, n: int):
+    """Each document's distinct shingles as sorted int64 keys
+    ``doc * u + sid``, and ``u``. Shingle ids ``sid`` come from an Arrow
+    dictionary over the shingles' bytes, so two shingles share an id
+    exactly when their bytes are equal (no hash stands in for them)."""
+    offsets = np.asarray(offsets, dtype=np.int64)
+    data = data[offsets[0] : offsets[-1]]
+    norm, start, length, doc = _shingles(data, offsets - offsets[0], n)
+    ends = np.cumsum(length)
+    buf = np.empty(int(ends[-1]) if len(ends) else 0, dtype=np.uint8)
+    # shingles overlap in ``norm``: copy each run's bytes end to end,
+    # with a byte index no longer than SHINGLE_CHUNK shingles
+    for c in range(0, len(doc), SHINGLE_CHUNK):
+        part = slice(c, c + SHINGLE_CHUNK)
+        e, ln = ends[part], length[part]
+        lo = int(e[0] - ln[0])
+        buf[lo : e[-1]] = norm[
+            np.repeat(start[part] - (e - ln), ln) + np.arange(lo, e[-1])
+        ]
+    blobs = pa.LargeBinaryArray.from_buffers(
+        pa.large_binary(),
+        len(doc),
+        [None, pa.py_buffer(np.concatenate(([0], ends))), pa.py_buffer(buf)],
+    )
+    enc = pc.dictionary_encode(blobs)
+    u = max(len(enc.dictionary), 1)
+    sid = enc.indices.to_numpy().astype(np.int64)
+    return np.unique(doc * u + sid), u
+
+
+def shingle_overlaps(
+    data: np.ndarray, offsets: np.ndarray, n: int, ia: np.ndarray, ib: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """For the document pairs ``(ia[k], ib[k])`` of the UTF-8 documents
+    ``data[offsets[d]:offsets[d + 1]]``: ``(|A ∩ B|, |A| + |B|)`` as
+    int64, A and B being the two documents' distinct word n-gram
+    shingles. Each pair probes its smaller set's keys into the larger
+    set's, in runs of at most ``SHINGLE_CHUNK`` probes."""
+    ia = np.asarray(ia, dtype=np.int64)
+    ib = np.asarray(ib, dtype=np.int64)
+    keys, u = _shingle_keys(data, offsets, n)
+    size = np.bincount(keys // u, minlength=len(offsets) - 1)
+    first = np.cumsum(size) - size
+    small = np.where(size[ia] <= size[ib], ia, ib)
+    big = ia + ib - small
+    # pairs in order of the larger set's document: consecutive probes
+    # then search the same stretch of keys, which stays in cache
+    order = np.argsort(big, kind="stable")
+    small, shift = small[order], (big[order] - small[order]) * u
+    m = size[small]
+    cost = np.cumsum(m)
+    inter = np.zeros(len(ia), dtype=np.int64)
+    k0 = 0
+    while k0 < len(ia):
+        done = int(cost[k0 - 1]) if k0 else 0
+        k1 = max(int(np.searchsorted(cost, done + SHINGLE_CHUNK, "right")), k0 + 1)
+        mk = m[k0:k1]
+        seg = np.cumsum(mk) - mk
+        pos = np.repeat(first[small[k0:k1]] - seg, mk) + np.arange(int(mk.sum()))
+        probe = keys[pos] + np.repeat(shift[k0:k1], mk)
+        at = np.minimum(np.searchsorted(keys, probe), len(keys) - 1)
+        hit = (keys[at] == probe).astype(np.int64)
+        inter[order[k0:k1]] = np.add.reduceat(hit, seg)
+        k0 = k1
+    return inter, size[ia] + size[ib]
 
 
 def _decimal_csv(vals: np.ndarray):

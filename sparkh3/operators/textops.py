@@ -3,11 +3,11 @@
 quality scoring, token counting, fingerprinting.
 
 Everything that a DuckDB oracle can replicate uses only deterministic
-native column algebra (split/filter/length arithmetic). SimHash uses
-Spark's native xxhash64 (JVM, codegen); MinHash shingles and hashes in
-NumPy inside its one Arrow UDF (``kernel.text``), with an XXH64
-bit-identical to Spark's. Both are deterministic and verified by
-property and bit-identity tests instead of a SQL oracle.
+native column algebra (split/filter/length arithmetic). MinHash and
+SimHash shingle and hash in NumPy inside one Arrow UDF each
+(``kernel.text``), with an XXH64 bit-identical to Spark's
+``xxhash64``. Both are deterministic and verified by property and
+bit-identity tests instead of a SQL oracle.
 """
 
 from __future__ import annotations
@@ -19,9 +19,17 @@ import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import arrow_udf
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import (
+    ArrayType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from ..kernel import text as ktext
+from .driver import bounded_collect
+from .graph import DRIVER_CC_PAIRS
 
 STOPWORDS = {
     "en": ["the", "a", "of", "and", "to"],
@@ -354,15 +362,8 @@ def minhash_band_keys_udf(n_hashes: int, bands: int, shingle_n: int):
 
     @arrow_udf(ArrayType(LongType()))
     def f(text: pa.Array) -> pa.Array:
-        if text.null_count:
-            text = pc.fill_null(text, "")
-        wide = pa.types.is_large_string(text.type)
-        _, off, data = text.buffers()
-        offsets = np.frombuffer(off, dtype=np.int64 if wide else np.int32)
-        offsets = offsets[text.offset : text.offset + len(text) + 1]
-        data = np.frombuffer(data, dtype=np.uint8) if data else np.empty(0, np.uint8)
         keys = ktext.band_keys(
-            ktext.signatures(data, offsets, shingle_n, A, B), bands
+            ktext.signatures(*_utf8(text), shingle_n, A, B), bands
         )
         return pa.ListArray.from_arrays(
             pa.array(np.arange(len(text) + 1, dtype=np.int32) * bands),
@@ -372,98 +373,146 @@ def minhash_band_keys_udf(n_hashes: int, bands: int, shingle_n: int):
     return f
 
 
-def minhash_lsh_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_hashes: int = 16,
-    bands: int = 4,
-    jaccard_threshold: float = 0.5,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Near-duplicate pairs via MinHash banding + exact n-gram Jaccard
-    verification. Returns (id_a, id_b, jaccard) with id_a < id_b.
+def _utf8(text: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """``(data, offsets)``: the UTF-8 bytes of a string array and the
+    offsets of its values in them, null values read as ``''``."""
+    if text.null_count:
+        text = pc.fill_null(text, "")
+    wide = pa.types.is_large_string(text.type)
+    _, off, data = text.buffers()
+    offsets = np.frombuffer(off, dtype=np.int64 if wide else np.int32)
+    offsets = offsets[text.offset : text.offset + len(text) + 1]
+    data = np.frombuffer(data, dtype=np.uint8) if data else np.empty(0, np.uint8)
+    return data, offsets
 
-    Scale shape (100 TB): one Arrow UDF (``minhash_band_keys_udf``)
-    takes the text column and returns each document's ``bands`` bucket
-    keys; its body shingles, hashes, min-hashes and bands every batch in
-    NumPy (``kernel.text``, bit-identical to the former JVM chain
-    ``transform(ngrams(text, n), xxhash64)`` -> permuted mins ->
-    ``xxhash64(concat_ws(',', band, slot...))``), so only text goes in
-    and ``bands`` longs per document come out. The keys are computed
-    exactly once — candidate pairs come from ONE groupBy over the
-    exploded ``(_id, _bucket)`` stream (in-bucket ordered combinations
-    via explode), not a bucket self-join whose two branches would each
-    re-run the key subtree. The exact-Jaccard verify broadcasts the
-    (tiny by construction) pair list into a plain document scan, so the
-    text side streams with no exchange on either verify join, and each
-    pair's intersection is computed once.
 
-    When text moves: only when ``_spread`` widened a narrow scan (a
-    single small file on a many-core host). Then the whole scan is
-    repartitioned for the band-key pass, and the candidates' text,
-    after the semi-join and before shingling, is repartitioned for the
-    verify, so both run on every core. An input that is already wide
-    gets neither, so at scale document text never enters a shuffle.
-    """
-    if not 1 <= bands <= n_hashes or n_hashes % bands != 0:
-        # bands > n_hashes degenerates every bucket to hash(band) — an
-        # O(n^2) cross product of the corpus per band; a non-divisor
-        # silently drops trailing signature hashes from banding
-        raise ValueError(
-            f"bands ({bands}) must divide n_hashes ({n_hashes})"
+DRIVER_VERIFY_BYTES = 1 << 23
+"""Candidate sets within ``graph.DRIVER_CC_PAIRS`` pairs whose documents
+hold at most this many text bytes are verified on the driver; larger
+ones run the distributed verify. The driver holds the text, its
+shingles' bytes and int64 arrays per shingle: about 40 bytes per text
+byte (8 MiB of 800-word documents under 65,536 pairs peaked at 344 MB
+more RSS)."""
+
+
+def _jaccard(counts: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, jaccard) from per-pair shingle counts ``_i`` =
+    |A ∩ B| and ``_n`` = |A| + |B|, with the union by the set identity
+    |A ∪ B| = |A| + |B| − |A ∩ B|. Both verify paths round here, in the
+    JVM, so they agree to the last digit: Spark rounds the double's
+    decimal form half up, Python's ``round`` its binary value half to
+    even (1/128 is 0.007813 in Spark, 0.007812 in Python)."""
+    jac = F.round(F.col("_i").cast("double") / (F.col("_n") - F.col("_i")), 6)
+    return (
+        counts.withColumn("jaccard", jac)
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
+def _row_pairs(tid: pa.Array, id_a: pa.Array, id_b: pa.Array):
+    """``(pair, ra, rb)``: for the id pairs ``(id_a, id_b)`` and the
+    fetched rows' ids ``tid``, one entry per combination of a row of
+    id_a[pair] (row ra) and a row of id_b[pair] (row rb), as an inner
+    join on each id gives: one per pair unless ids repeat, none for an
+    id with no row."""
+    uniq = pc.unique(tid)
+    row_id = pc.index_in(tid, uniq).to_numpy()
+    rows = np.argsort(row_id, kind="stable")
+    count = np.bincount(row_id, minlength=len(uniq))
+    first = np.cumsum(count) - count
+    ua = pc.fill_null(pc.index_in(id_a, uniq), -1).to_numpy()
+    ub = pc.fill_null(pc.index_in(id_b, uniq), -1).to_numpy()
+    pair = np.flatnonzero((ua >= 0) & (ub >= 0))
+    ua, ub = ua[pair], ub[pair]
+    m = count[ua] * count[ub]
+    rep = np.repeat(np.arange(len(pair)), m)
+    k = np.arange(int(m.sum())) - np.repeat(np.cumsum(m) - m, m)
+    nb = count[ub][rep]
+    return pair[rep], rows[first[ua][rep] + k // nb], rows[first[ub][rep] + k % nb]
+
+
+def _verify_on_driver(
+    raw: DataFrame, id_col: str, text_col: str, head: pa.Table, shingle_n: int
+) -> DataFrame | None:
+    """Exact shingle counts of the candidate pairs ``head`` (already on
+    the driver) as a local relation (id_a, id_b, _i, _n). The
+    candidates' (id, text) come up through a broadcast semi-join on
+    their ids (two jobs: the broadcast and one bounded collect), and
+    ``kernel.text.shingle_overlaps`` counts over their bytes.
+    Every row of a candidate id is fetched, and a pair counts once per
+    combination of its two ids' rows, as the distributed joins do.
+
+    Returns None, and the caller runs the distributed verify, when the
+    candidates hold more than ``DRIVER_VERIFY_BYTES`` of text (known
+    from the pair list's byte lengths before any text moves), or when
+    more than 2 * DRIVER_CC_PAIRS rows answer the fetch (the most ids
+    DRIVER_CC_PAIRS pairs can name; more only with duplicated ids)."""
+    id_a = head.column("id_a").combine_chunks()
+    id_b = head.column("id_b").combine_chunks()
+    lens = pa.table(
+        {
+            "_tid": pa.concat_arrays([id_a, id_b]),
+            "len": pa.concat_arrays(
+                [head.column(c).combine_chunks() for c in ("_la", "_lb")]
+            ),
+        }
+    )
+    per_id = lens.group_by("_tid").aggregate([("len", "max")])
+    if (pc.sum(per_id.column("len_max")).as_py() or 0) > DRIVER_VERIFY_BYTES:
+        return None
+    spark = raw.sparkSession
+    id_type = raw.schema[id_col].dataType
+    schema = StructType(
+        [
+            StructField("id_a", id_type, True),
+            StructField("id_b", id_type, True),
+            StructField("_i", IntegerType(), True),
+            StructField("_n", IntegerType(), True),
+        ]
+    )
+    pick = inter = total = np.empty(0, dtype=np.int64)
+    if len(id_a):
+        wanted = spark.createDataFrame(
+            per_id.select(["_tid"]), StructType([StructField("_tid", id_type, True)])
         )
-    keys = minhash_band_keys_udf(n_hashes, bands, shingle_n)
-    raw = df
-    df = _spread(df)
-    spread = df is not raw
-    # the UDF turns text into band keys in one pass; only the slim
-    # (_id, _bucket) stream is banded
-    banded = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(keys(F.col(text_col))).alias("_bucket"),
+        cand = raw.select(
+            F.col(id_col).alias("_tid"), F.col(text_col).alias("_t")
+        ).join(F.broadcast(wanted), "_tid", "semi")
+        docs = bounded_collect(cand, 2 * DRIVER_CC_PAIRS + 1)
+        if docs.num_rows > 2 * DRIVER_CC_PAIRS:
+            return None
+        pick, ra, rb = _row_pairs(docs.column("_tid").combine_chunks(), id_a, id_b)
+        inter, total = ktext.shingle_overlaps(
+            *_utf8(docs.column("_t").combine_chunks()), shingle_n, ra, rb
+        )
+    counts = pa.table(
+        {
+            "id_a": id_a.take(pa.array(pick)),
+            "id_b": id_b.take(pa.array(pick)),
+            "_i": pa.array(inter.astype(np.int32)),
+            "_n": pa.array(total.astype(np.int32)),
+        }
     )
-    # in-bucket ordered combinations from one grouped pass: identical
-    # pair set to the former a><b self-join on _bucket, but the banded
-    # stream (and the whole band-key subtree feeding it) is scanned
-    # once instead of twice, and one join + one exchange disappear.
-    # Degenerate giant buckets blow up either formulation identically
-    # (b^2 pairs); the per-bucket id array is b longs.
-    grouped = (
-        banded.groupBy("_bucket")
-        .agg(F.sort_array(F.collect_list("_id")).alias("_ids"))
-        .filter(F.size("_ids") >= 2)
-    )
-    pairs = (
-        grouped.select(F.explode("_ids").alias("id_a"), "_ids")
-        .select("id_a", F.explode("_ids").alias("id_b"))
-        .filter(F.col("id_a") < F.col("id_b"))
-        .distinct()
-    )
-    # exact-Jaccard verify, per-DOCUMENT shingling: the candidate list
-    # is checkpointed once (it is the small end of the operator — and
-    # the whole band-key/banding chain above therefore runs exactly
-    # once per call); the distinct ids in it semi-join the raw text
-    # scan, so each candidate document's distinct-shingle set is
-    # computed ONE time and the per-pair work is a single
-    # array_intersect. The former per-pair form re-ran the interpreted
-    # shingle chain for every pair occurrence of a document — on a
-    # duplicate-heavy corpus (250k pairs over 50k docs) that was 42 s
-    # of shingling vs ~8 s for this shape, and on sparse corpora the
-    # semi-join keeps the shingle pass proportional to the candidate
-    # set, not the corpus. Union size via the set identity
-    # |A ∪ B| = |A| + |B| − |A ∩ B| (ngram arrays have no nulls;
-    # array_union deduplicated exactly like the distinct sets), so the
-    # jaccard values are bit-identical to the old expression.
-    # eager: a lazy checkpoint is first computed by whichever AQE stages
-    # read it, and two of them (the pair_ids broadcast build and the
-    # id_a side) then compute the same partition at once, which logs
-    # "Block ... already exists" and drops that task's accumulator
-    # updates. One job up front builds the pair list exactly once
-    pairs = pairs.localCheckpoint(eager=True)
-    texts = raw.select(
-        F.col(id_col).alias("_tid"), F.col(text_col).alias("_t")
-    )
+    return spark.createDataFrame(counts, schema)
+
+
+def _verify_distributed(
+    raw: DataFrame,
+    id_col: str,
+    text_col: str,
+    pairs: DataFrame,
+    spread: bool,
+    shingle_n: int,
+) -> DataFrame:
+    """Exact shingle counts of the checkpointed candidate pairs as a
+    plan (id_a, id_b, _i, _n): the distinct ids in ``pairs`` semi-join
+    the text scan, each candidate's distinct shingles are computed once,
+    and each pair's intersection once. Shingling per document, not per
+    pair occurrence, keeps the shingle pass proportional to the
+    candidate set (a per-pair form took 42 s against ~8 s on 250k pairs
+    over 50k documents)."""
+    texts = raw.select(F.col(id_col).alias("_tid"), F.col(text_col).alias("_t"))
     pair_ids = pairs.select(
         F.explode(F.array("id_a", "id_b")).alias("_tid")
     ).distinct()
@@ -473,12 +522,15 @@ def minhash_lsh_dedup(
         # their shingling runs on every core
         par = raw.sparkSession.sparkContext.defaultParallelism
         cand = cand.repartition(par)
+    # both join sides read ``sh``: the exchange on top is computed once
+    # and reused, so the scan and the shingling below it run once
     sh = cand.select(
         "_tid",
         F.array_distinct(ngrams(F.col("_t"), shingle_n)).alias("_sh"),
-    )
-    out = (
-        pairs.join(
+    ).repartition("_tid")
+    return (
+        pairs.select("id_a", "id_b")
+        .join(
             sh.select(F.col("_tid").alias("id_a"), F.col("_sh").alias("_sa")),
             "id_a",
         )
@@ -501,80 +553,126 @@ def minhash_lsh_dedup(
                 )
             ),
         )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("_i").cast("double") / (F.col("_n") - F.col("_i")), 6
-            ),
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
     )
-    return out.select("id_a", "id_b", "jaccard")
 
 
-def simhash(text: Column, shingle_n: int = 2, bits: int = 32) -> Column:
-    """SimHash over shingle hashes — native: per bit, sign of the sum of
-    bit contributions (+1/-1) across shingles. Prefer simhash_from_hashes
-    over a materialized hash column in pipelines (avoids re-evaluating
-    the shingle chain per bit)."""
-    sh = ngrams(text, shingle_n)
-    return simhash_from_hashes(F.transform(sh, lambda s: F.xxhash64(s)), bits)
+def minhash_lsh_dedup(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n_hashes: int = 16,
+    bands: int = 4,
+    jaccard_threshold: float = 0.5,
+    shingle_n: int = 3,
+) -> DataFrame:
+    """Near-duplicate pairs via MinHash banding + exact n-gram Jaccard
+    verification. Returns (id_a, id_b, jaccard) with id_a < id_b.
+
+    Scale shape (100 TB): one Arrow UDF (``minhash_band_keys_udf``)
+    takes the text column and returns each document's ``bands`` bucket
+    keys; its body shingles, hashes, min-hashes and bands every batch in
+    NumPy (``kernel.text``, bit-identical to the former JVM chain
+    ``transform(ngrams(text, n), xxhash64)`` -> permuted mins ->
+    ``xxhash64(concat_ws(',', band, slot...))``), so only text goes in
+    and ``bands`` longs per document come out. The keys are computed
+    exactly once — candidate pairs come from ONE groupBy over the
+    exploded ``(_id, _len, _bucket)`` stream (in-bucket ordered
+    combinations via explode), not a bucket self-join whose two
+    branches would each re-run the key subtree. ``_len`` is each
+    document's UTF-8 byte length, so the pair list knows how much text
+    its candidates hold before any text moves.
+
+    The verify is dispatched by size, like ``connected_components``.
+    One job builds the pair list (a local checkpoint) and brings up to
+    ``graph.DRIVER_CC_PAIRS`` + 1 rows of it to the driver.
+    - At most ``DRIVER_CC_PAIRS`` pairs over at most
+      ``DRIVER_VERIFY_BYTES`` of candidate text: one more job fetches
+      the candidates' (id, text), and the driver counts each pair's
+      shared and total distinct shingles over their bytes
+      (``kernel.text.shingle_overlaps``). The result is a local
+      relation: collecting it runs no job.
+    - Otherwise the distinct candidate ids semi-join the text scan, each
+      candidate's distinct shingles are computed once under an exchange
+      on id that both verify joins reuse, and each pair's intersection
+      is computed once.
+    Both paths compute the Jaccard with the same JVM expression.
+
+    When text moves: on the driver path, the candidates' text (within
+    ``DRIVER_VERIFY_BYTES``) moves to the driver. Otherwise only when
+    ``_spread`` widened a narrow scan (a single small file on a
+    many-core host): then the whole scan is repartitioned for the
+    band-key pass, and the candidates' text, after the semi-join and
+    before shingling, is repartitioned for the verify, so both run on
+    every core. An input that is already wide gets neither: document
+    text never enters a shuffle, and only the candidates' shingle sets
+    cross the verify's one exchange.
+    """
+    if not 1 <= bands <= n_hashes or n_hashes % bands != 0:
+        # bands > n_hashes degenerates every bucket to hash(band) — an
+        # O(n^2) cross product of the corpus per band; a non-divisor
+        # silently drops trailing signature hashes from banding
+        raise ValueError(
+            f"bands ({bands}) must divide n_hashes ({n_hashes})"
+        )
+    keys = minhash_band_keys_udf(n_hashes, bands, shingle_n)
+    raw = df
+    df = _spread(df)
+    spread = df is not raw
+    # the UDF turns text into band keys in one pass; only the slim
+    # (_id, _len, _bucket) stream is banded
+    doc = F.struct(
+        F.col(id_col).alias("_id"),
+        F.coalesce(F.octet_length(text_col), F.lit(0)).alias("_len"),
+    )
+    banded = df.select(
+        doc.alias("_doc"), F.explode(keys(F.col(text_col))).alias("_bucket")
+    )
+    # in-bucket ordered combinations from one grouped pass: identical
+    # pair set to the former a><b self-join on _bucket, but the banded
+    # stream (and the whole band-key subtree feeding it) is scanned
+    # once instead of twice, and one join + one exchange disappear.
+    # Degenerate giant buckets blow up either formulation identically
+    # (b^2 pairs); the per-bucket array is b (id, length) structs.
+    grouped = (
+        banded.groupBy("_bucket")
+        .agg(F.collect_list("_doc").alias("_docs"))
+        .filter(F.size("_docs") >= 2)
+    )
+    pairs = (
+        grouped.select(F.explode("_docs").alias("_a"), "_docs")
+        .select("_a", F.explode("_docs").alias("_b"))
+        .filter(F.col("_a._id") < F.col("_b._id"))
+        .groupBy(F.col("_a._id").alias("id_a"), F.col("_b._id").alias("id_b"))
+        .agg(F.max("_a._len").alias("_la"), F.max("_b._len").alias("_lb"))
+    )
+    # the pair list is checkpointed so the band-key pass runs once per
+    # call, whichever verify reads it. The checkpoint is lazy and its
+    # first reader is the bounded collect below: one job builds it and
+    # brings its head to the driver (a lazy checkpoint read first by
+    # two AQE stages would compute each partition twice at once, and
+    # drop one task's accumulator updates)
+    pairs = pairs.localCheckpoint(eager=False)
+    head = bounded_collect(pairs, DRIVER_CC_PAIRS + 1)
+    counts = None
+    if head.num_rows <= DRIVER_CC_PAIRS:
+        counts = _verify_on_driver(raw, id_col, text_col, head, shingle_n)
+    if counts is None:
+        counts = _verify_distributed(raw, id_col, text_col, pairs, spread, shingle_n)
+    return _jaccard(counts, jaccard_threshold)
 
 
-def simhash_udf(bits: int = 32):
-    """array<long> shingle hashes -> simhash long, one Arrow batch of
-    NumPy (replaces `bits` interpreted F.aggregate passes)."""
+def _simhash_udf(bits: int, shingle_n: int):
+    """text -> SimHash long: one Arrow UDF whose body is
+    ``kernel.text.simhashes`` over the batch's UTF-8 buffer (the
+    ``ngrams(text, shingle_n)`` shingles, each hashed with Spark's
+    ``xxhash64``, and per bit the sign of the +1/-1 sum). Null text is
+    the empty shingle, as in ``ngrams``."""
 
-    @F.pandas_udf(LongType())
-    def f(hashes: pd.Series) -> pd.Series:
-        arrs = [
-            np.asarray(h, dtype=np.int64)
-            if h is not None and len(h) > 0
-            else None
-            for h in hashes
-        ]
-        res: list = [None] * len(arrs)
-        valid = [a for a in arrs if a is not None]
-        if valid:
-            flat = np.concatenate(valid).view(np.uint64)
-            vlens = np.array([len(a) for a in valid], dtype=np.int64)
-            starts = np.zeros(len(valid), dtype=np.int64)
-            starts[1:] = np.cumsum(vlens)[:-1]
-            out = np.zeros(len(valid), dtype=np.int64)
-            for b in range(bits):
-                bitvals = (
-                    ((flat >> np.uint64(b)) & np.uint64(1)).astype(np.int64) * 2 - 1
-                )
-                sums = np.add.reduceat(bitvals, starts)
-                out |= (sums > 0).astype(np.int64) << b
-            vi = 0
-            for i, a in enumerate(arrs):
-                if a is not None:
-                    res[i] = int(out[vi])
-                    vi += 1
-        return pd.Series(res)
+    @arrow_udf(LongType())
+    def f(text: pa.Array) -> pa.Array:
+        return pa.array(ktext.simhashes(*_utf8(text), shingle_n, bits))
 
     return f
-
-
-def simhash_from_hashes(hashes: Column, bits: int = 32) -> Column:
-    def _merge_for(bit: int):
-        mask = 1 << bit
-        return lambda acc, h: acc + F.when(
-            h.bitwiseAND(F.lit(mask)) != 0, F.lit(1)
-        ).otherwise(F.lit(-1))
-
-    bit_cols = []
-    for b in range(bits):
-        contrib = F.aggregate(hashes, F.lit(0).cast("long"), _merge_for(b))
-        bit_cols.append(
-            F.when(contrib > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-            * F.lit(1 << b).cast("long")
-        )
-    out = bit_cols[0]
-    for c in bit_cols[1:]:
-        out = out + c
-    return out
 
 
 def simhash_dedup(
@@ -599,13 +697,10 @@ def simhash_dedup(
     base_w, extra = divmod(bits, n_bands)
     widths = [base_w + (1 if i < extra else 0) for i in range(n_bands)]
     starts = [sum(widths[:i]) for i in range(n_bands)]
-    sh_udf = simhash_udf(bits=bits)
     df = _spread(df)
     base = df.select(
         F.col(id_col).alias("_id"),
-        sh_udf(
-            F.transform(ngrams(F.col(text_col), 2), lambda s: F.xxhash64(s))
-        ).alias("_sh"),
+        _simhash_udf(bits, 2)(F.col(text_col)).alias("_sh"),
     )
     banded = base.withColumn(
         "_key",

@@ -1,7 +1,9 @@
-"""MinHash text kernel, no Spark: the vectorized XXH64 against
+"""Near-duplicate text kernel, no Spark: the vectorized XXH64 against
 ``xxhash64`` values recorded from Spark and a scalar XXH64 written from
-the public spec, and the chunked shingle/signature/band-key pass against
-a per-document loop reference."""
+the public spec; the chunked shingle/signature/band-key pass against a
+per-document loop reference; SimHash against values recorded from
+Spark's JVM chain; and the exact shingle-set overlaps against Python
+sets."""
 
 import random
 
@@ -194,3 +196,77 @@ def test_band_keys_match_loop_reference(bands):
     want = [[key(k, row) for k in range(bands)] for row in sig.tolist()]
     assert kt.band_keys(sig, bands).tolist() == want
     assert kt.band_keys(sig[:0], bands).shape == (0, bands)
+
+
+# SimHash of TEXTS, then of a null text, from Spark 4.1's former JVM
+# chain ``transform(ngrams(text, n), xxhash64)`` -> per bit
+# ``aggregate(hashes, 0, acc + (bit set ? 1 : -1)) > 0``, keyed (n, bits)
+JVM_SIMHASH = {
+    (1, 32): [
+        158852868, 158852868, 158852868, 2229476737, 2214728833, 2491586245,
+        364159838, 2652571710, 2115920620, 2613538180, 2467700934,
+        2425430276, 1188381925, 158852868,
+    ],
+    (2, 32): [
+        158852868, 158852868, 158852868, 2229476737, 4132203908, 72108160,
+        536881484, 4135753864, 167782530, 16810032, 1390478797, 4111423477,
+        2546869920, 158852868,
+    ],
+    (3, 32): [
+        158852868, 158852868, 158852868, 2229476737, 4132203908, 2037299471,
+        736102264, 945305143, 2299047856, 3153084474, 1073893954, 67281828,
+        449051436, 158852868,
+    ],
+    (2, 16): [
+        59140, 59140, 59140, 7553, 28036, 18560, 10572, 39048, 10370, 32816,
+        1485, 22517, 9888, 59140,
+    ],
+}
+
+
+def _docs(texts):
+    blobs = [t.encode() for t in texts]
+    data = np.frombuffer(b"".join(blobs), dtype=np.uint8)
+    return data, np.cumsum([0] + [len(x) for x in blobs])
+
+
+@pytest.mark.parametrize("chunk", [5, kt.SHINGLE_CHUNK])
+@pytest.mark.parametrize("key", sorted(JVM_SIMHASH))
+def test_simhashes_match_jvm_chain(monkeypatch, chunk, key):
+    """A null text is read as ``''`` (one empty shingle), as ``ngrams``
+    gives ``['']``; small chunks split the 500-token text."""
+    monkeypatch.setattr(kt, "SHINGLE_CHUNK", chunk)
+    n, bits = key
+    got = kt.simhashes(*_docs(TEXTS + [""]), n, bits)
+    assert got.tolist() == JVM_SIMHASH[key]
+
+
+def _shingle_set(text: str, n: int) -> set[bytes]:
+    return {s.encode() for s in _shingles_ref(text, n)}
+
+
+@pytest.mark.parametrize("chunk", [5, 64, kt.SHINGLE_CHUNK])
+@pytest.mark.parametrize("n", [1, 2, 3])
+def test_shingle_overlaps_match_set_reference(monkeypatch, chunk, n):
+    """Exact over the bytes: texts that differ only in spacing, tabs,
+    newlines or non-BMP characters, repeated shingles, texts of at most
+    n tokens, a document paired with itself, and documents taken from
+    the middle of the buffer (offsets not starting at 0)."""
+    monkeypatch.setattr(kt, "SHINGLE_CHUNK", chunk)
+    texts = _texts() + [
+        "p q r p q r p q r",
+        "p  q r  p q r",
+        "a\tb c",
+        "a b\tc",
+        "\U0001F600 x",
+        "\U0001F601 x",
+    ]
+    data, offsets = _docs(texts)
+    rng = np.random.default_rng(n)
+    ia = rng.integers(3, len(texts), 2000)
+    ib = rng.integers(3, len(texts), 2000)
+    ia[:len(texts) - 3] = ib[:len(texts) - 3] = np.arange(3, len(texts))
+    inter, total = kt.shingle_overlaps(data, offsets[3:], n, ia - 3, ib - 3)
+    sets = [_shingle_set(t, n) for t in texts]
+    assert inter.tolist() == [len(sets[a] & sets[b]) for a, b in zip(ia, ib)]
+    assert total.tolist() == [len(sets[a]) + len(sets[b]) for a, b in zip(ia, ib)]

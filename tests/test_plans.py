@@ -8,8 +8,9 @@ Each test inspects the *executed* plan string:
 2. filters + column pruning reach the parquet scan through geo_to_h3,
 3. broadcast pip_join never shuffles the point side and runs exactly
    one fused Python pass,
-4. minhash banding exchanges carry zero text columns, and its verify
-   intersects each pair's shingle sets once,
+4. minhash banding exchanges carry zero text columns, and its
+   distributed verify shingles each candidate once and intersects each
+   pair's shingle sets once,
 5. LSH-ANN computes all tables' signatures in one corpus pass
    (bounded parquet scan count).
 """
@@ -91,10 +92,11 @@ def test_minhash_banding_shuffles_no_text(spark):
     assert keyed_on_text == 0, plan
 
 
-def test_minhash_verify_intersects_each_pair_once(spark):
+def test_minhash_verify_intersects_each_pair_once(spark, monkeypatch):
     """The exact-Jaccard verify computes a pair's array_intersect once:
     an inlined ``_i`` would appear in the projection and again in the
     filter pushed into the join condition (3 times in the final plan)."""
+    monkeypatch.setattr(textops, "DRIVER_VERIFY_BYTES", 0)
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     mh = textops.minhash_lsh_dedup(docs, jaccard_threshold=0.4)
     mh.collect()
@@ -102,11 +104,11 @@ def test_minhash_verify_intersects_each_pair_once(spark):
     assert final.count("array_intersect(") == 1, final
 
 
-def test_minhash_pair_list_is_built_in_the_call(spark):
-    """The candidate pair list is checkpointed eagerly: it is built
-    before the call returns. A lazy checkpoint left it to the first
-    action, whose AQE stages computed the same checkpoint partition
-    twice at once."""
+def test_minhash_pair_list_is_built_in_the_call(spark, monkeypatch):
+    """The candidate pair list is checkpointed before the call returns.
+    A checkpoint left to the first action had its AQE stages compute the
+    same checkpoint partition twice at once."""
+    monkeypatch.setattr(textops, "DRIVER_VERIFY_BYTES", 0)
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     mh = textops.minhash_lsh_dedup(docs, jaccard_threshold=0.4)
     leaves = mh._jdf.queryExecution().analyzed().collectLeaves()
@@ -115,6 +117,32 @@ def test_minhash_pair_list_is_built_in_the_call(spark):
         if leaves.apply(i).nodeName() == "LogicalRDD"
     ]
     assert ckpts and all(c.rdd().isCheckpointed() for c in ckpts)
+
+
+def test_minhash_verify_shingles_each_candidate_once(spark, monkeypatch):
+    """Both verify joins read the candidates' shingle sets through one
+    exchange that the second join reuses, so the shingling projection
+    (one ``regexp_extract_all``) runs once, not once per join side."""
+    monkeypatch.setattr(textops, "DRIVER_VERIFY_BYTES", 0)
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    mh = textops.minhash_lsh_dedup(docs, jaccard_threshold=0.4)
+    mh.collect()
+    final = mh._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert final.count("regexp_extract_all(") == 1, final
+
+
+def test_minhash_driver_verify_jobs(spark, jobs_in):
+    """At this scale the verify runs on the driver: the call takes 6
+    jobs (3 AQE stages of the banding, the pair list's checkpoint with
+    its head collected, the broadcast of the candidate ids and the text
+    fetch) and collecting the result, a local relation, none."""
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    mh, call_jobs = jobs_in(
+        lambda: textops.minhash_lsh_dedup(docs, jaccard_threshold=0.4)
+    )
+    rows, collect_jobs = jobs_in(mh.collect)
+    assert rows
+    assert call_jobs + collect_jobs <= 6, (call_jobs, collect_jobs)
 
 
 def _text_exchanges(df):
@@ -142,11 +170,12 @@ def _text_exchanges(df):
     return found
 
 
-def test_minhash_verify_moves_text_only_when_spread(spark):
+def test_minhash_verify_moves_text_only_when_spread(spark, monkeypatch):
     """The exact-Jaccard verify repartitions the candidates' text only
     when ``_spread`` widened a narrow scan, and then above the
     semi-join, so only candidate text moves. An input that is already
     wide keeps every text column out of every Exchange."""
+    monkeypatch.setattr(textops, "DRIVER_VERIFY_BYTES", 0)
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     wide = spark.createDataFrame(docs.toArrow())
     assert textops._spread(wide) is wide

@@ -1976,3 +1976,102 @@ class TestMinHashBandKeys:
             offsets = np.cumsum([0] + [len(x) for x in blobs])
             sig = ktext.signatures(data, offsets, n, a, b).view(np.int64)
             assert [s.tolist() for s in sig] == [want[r.i].sig for r in rows]
+
+
+HUB = " ".join(["hub1524280"] * 3)
+"""A 3-gram whose permuted hash under ``minhash_coeffs(1)`` is below
+that of every other 3-gram in ``TestMinHashVerifyPaths``: with one hash
+in one band, the documents holding it share a bucket, so every pair of
+them is a candidate whatever its Jaccard."""
+
+
+class TestMinHashVerifyPaths:
+    """The driver verify and the distributed one (forced with a negative
+    text-byte bound, which even an empty candidate set exceeds) return
+    identical rows, Jaccard digits included."""
+
+    TIE_A = HUB + " " + " ".join(f"a{i}" for i in range(63))
+    TIE_B = HUB + " " + " ".join(f"b{i}" for i in range(64))
+    """64 and 65 distinct 3-grams sharing only HUB: 1/(129 - 1), which
+    Spark rounds to 0.007813 (half up) and Python's ``round`` to
+    0.007812."""
+
+    TEXTS = [
+        TIE_A,
+        TIE_B,
+        HUB,
+        "  hub1524280   hub1524280 hub1524280 ",
+        HUB + " a\tb c\nd e\t\nf",
+        HUB + " \U0001d518\U0001d52b\U0001d526 co de x\U0001F600y",
+        HUB + " r r r r r r r r",
+        HUB + " " + " ".join(f"a{i}" for i in range(40)),
+        None,
+        "",
+        "   ",
+        "p q",
+        "p   q",
+        "a document with words of its own",
+    ]
+
+    def _frame(self, spark, id_type):
+        rows = list(enumerate(self.TEXTS, start=1))
+        rows.append((3, HUB + " another row under id 3"))
+        cast = str if id_type == "string" else int
+        return spark.createDataFrame(
+            [(cast(i), t) for i, t in rows], f"doc_id {id_type}, text string"
+        )
+
+    @staticmethod
+    def _both(df, monkeypatch, threshold):
+        """(rows, schema) of the driver path, then of the distributed one."""
+        out = []
+        for bound in (textops.DRIVER_VERIFY_BYTES, -1):
+            monkeypatch.setattr(textops, "DRIVER_VERIFY_BYTES", bound)
+            mh = textops.minhash_lsh_dedup(
+                df, n_hashes=1, bands=1, jaccard_threshold=threshold
+            )
+            plan = mh._jdf.queryExecution().executedPlan().toString()
+            local = "LocalTableScan" in plan and "Exchange" not in plan
+            assert local == (bound >= 0), plan
+            out.append((sorted(map(tuple, mh.collect())), mh.schema))
+        return out
+
+    def test_hub_is_every_hub_documents_minimum(self):
+        texts = [t for t in self.TEXTS if t and "hub" in t]
+        blobs = [t.encode() for t in texts]
+        data = np.frombuffer(b"".join(blobs), dtype=np.uint8)
+        offsets = np.cumsum([0] + [len(x) for x in blobs])
+        sig = ktext.signatures(data, offsets, 3, *ktext.minhash_coeffs(1))
+        assert (sig == sig[texts.index(HUB)]).all()
+
+    @pytest.mark.parametrize("threshold", [0.0078, 0.007813])
+    @pytest.mark.parametrize("id_type", ["bigint", "int", "string"])
+    def test_identical_rows(self, spark, monkeypatch, id_type, threshold):
+        df = self._frame(spark, id_type)
+        (drv, drv_schema), (dist, dist_schema) = self._both(df, monkeypatch, threshold)
+        assert drv == dist
+        assert [f.dataType for f in drv_schema] == [f.dataType for f in dist_schema]
+        cast = str if id_type == "string" else int
+        ids = {t: cast(i) for i, t in enumerate(self.TEXTS, start=1)}
+        a, b = sorted([ids[self.TIE_A], ids[self.TIE_B]])
+        assert (a, b, 0.007813) in drv
+        # the duplicated id pairs once per row it names
+        dup = [r for r in drv if cast(3) in r[:2] and cast(1) in r[:2]]
+        assert len(dup) == 2
+        # null, '' and all-space text are one empty shingle each
+        empty = {ids[""], ids["   "], cast(9)}
+        assert {(x, y) for x, y, j in drv if j == 1.0} >= {
+            (x, y) for x in empty for y in empty if x < y
+        }
+
+    @pytest.mark.parametrize(
+        "texts", [[], ["alpha beta gamma delta", "one two three four"]]
+    )
+    def test_no_candidates_is_the_typed_empty_frame(self, spark, monkeypatch, texts):
+        df = spark.createDataFrame(
+            list(enumerate(texts)), "doc_id bigint, text string"
+        )
+        (drv, drv_schema), (dist, dist_schema) = self._both(df, monkeypatch, 0.5)
+        assert drv == dist == []
+        assert drv_schema.names == ["id_a", "id_b", "jaccard"]
+        assert [f.dataType for f in drv_schema] == [f.dataType for f in dist_schema]
