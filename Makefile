@@ -6,11 +6,11 @@ test:
 	  timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 # Spark-free kernel checks (goldens, properties, bit layout, traversal,
-# MinHash text hashing)
+# MinHash text hashing) and the reachability guard
 kernel:
 	python -m pytest tests/test_kernel_geo.py tests/test_kernel_properties.py \
 	  tests/test_index_bits.py tests/test_traversal_polygon.py tests/test_kernel_text.py \
-	  -q -p no:cacheprovider
+	  tests/test_reachability.py -q -p no:cacheprovider
 
 # SF=sf0.001 LANES="dedup_keep dsir" gates a lane subset at another scale
 SF ?= sf0.01

@@ -197,38 +197,6 @@ def _points_cte() -> str:
     )
 
 
-def _rect_polys(spark: SparkSession) -> DataFrame:
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    poly_t = ArrayType(
-        ArrayType(
-            StructType(
-                [StructField("lng", DoubleType()), StructField("lat", DoubleType())]
-            )
-        )
-    )
-    rows = []
-    for pid, y0, y1, x0, x1 in _RECTS:
-        ring = [
-            {"lng": x0, "lat": y0},
-            {"lng": x1, "lat": y0},
-            {"lng": x1, "lat": y1},
-            {"lng": x0, "lat": y1},
-            {"lng": x0, "lat": y0},
-        ]
-        rows.append((pid, [ring]))
-    schema = StructType(
-        [StructField("poly_id", StringType()), StructField("geometry", poly_t)]
-    )
-    return spark.createDataFrame(rows, schema)
-
-
 # ---------------------------------------------------------------------------
 # queries
 # ---------------------------------------------------------------------------
@@ -549,7 +517,7 @@ def q_pip_join_rect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact point-in-polygon join (H3 cover prejoin + ray-cast refine)
     vs a pure BETWEEN oracle."""
     pts = _docs_points(spark, sf_dir)
-    out = joins.pip_join(pts, _rect_polys(spark), resolution=4)
+    out = joins.pip_join(pts, datagen.rect_polygons(spark, _RECTS), resolution=4)
     return out.select("doc_id", "poly_id")
 
 
@@ -881,13 +849,13 @@ def q_h3_cells_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_polyfill_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Polygon tiling: polyfill the rect set at res 4, exploded."""
-    out = dfo.polyfill(_rect_polys(spark), 4, explode=True)
+    out = dfo.polyfill(datagen.rect_polygons(spark, _RECTS), 4, explode=True)
     return out.select("poly_id", "h3_polyfill")
 
 
 def q_compact_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """compact/uncompact tile algebra over the polyfill tiles."""
-    tiles = dfo.polyfill(_rect_polys(spark), 4)
+    tiles = dfo.polyfill(datagen.rect_polygons(spark, _RECTS), 4)
     packed = dfo.h3_compact(tiles.select("poly_id", "h3_polyfill"), "h3_polyfill")
     return packed.select(
         "poly_id", F.explode("h3_polyfill").alias("cell")

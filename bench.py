@@ -95,38 +95,6 @@ def _points(spark, sf_dir: str, amp: int):
     )
 
 
-def _rect_polys(spark):
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    poly_t = ArrayType(
-        ArrayType(
-            StructType(
-                [StructField("lng", DoubleType()), StructField("lat", DoubleType())]
-            )
-        )
-    )
-    rows = []
-    for pid, y0, y1, x0, x1 in HUB_RECTS:
-        ring = [
-            {"lng": x0, "lat": y0},
-            {"lng": x1, "lat": y0},
-            {"lng": x1, "lat": y1},
-            {"lng": x0, "lat": y1},
-            {"lng": x0, "lat": y0},
-        ]
-        rows.append((pid, [ring]))
-    schema = StructType(
-        [StructField("poly_id", StringType()), StructField("geometry", poly_t)]
-    )
-    return spark.createDataFrame(rows, schema)
-
-
 def run_suite(spark, sf_dir: str) -> tuple[dict, int]:
     from pyspark.sql import functions as F
 
@@ -140,7 +108,7 @@ def run_suite(spark, sf_dir: str) -> tuple[dict, int]:
     pts = _points(spark, sf_dir, AMP).persist()
     n_pts = pts.count()
 
-    # q1: tile encode + skew-salted aggregate (geo_to_h3 + hot-key salting)
+    # q1: tile encode + per-cell aggregate (geo_to_h3 + one hash aggregate)
     t0 = time.time()
     cells = dfo.geo_to_h3(pts, 8)
     agg = skew.salted_cell_count(
@@ -189,7 +157,7 @@ def run_suite(spark, sf_dir: str) -> tuple[dict, int]:
 
     # q3: exact PIP join points x 12 hub polygons
     t0 = time.time()
-    pip = joins.pip_join(pts, _rect_polys(spark), resolution=4)
+    pip = joins.pip_join(pts, datagen.rect_polygons(spark, HUB_RECTS), resolution=4)
     pip.groupBy("poly_id").count().count()
     timings["q3_pip_join"] = round(time.time() - t0, 3)
     rows_total += n_pts
@@ -215,7 +183,7 @@ def run_suite(spark, sf_dir: str) -> tuple[dict, int]:
 
     # q5: polyfill tiling + compact algebra
     t0 = time.time()
-    tiles = dfo.polyfill(_rect_polys(spark).repartition(len(HUB_RECTS)), 5)
+    tiles = dfo.polyfill(datagen.rect_polygons(spark, HUB_RECTS).repartition(len(HUB_RECTS)), 5)
     packed = dfo.h3_compact(tiles.select("poly_id", "h3_polyfill"), "h3_polyfill")
     packed.select(F.explode("h3_polyfill")).count()
     timings["q5_polyfill_compact"] = round(time.time() - t0, 3)
@@ -247,6 +215,7 @@ def _warmup(spark) -> None:
     throughput — each of the 32 local workers imports numpy+kernel once)."""
     from pyspark.sql import functions as F
 
+    from sparkh3 import datagen
     from sparkh3 import functions as H3F
     from sparkh3.operators import textops, udfs
 
@@ -280,7 +249,7 @@ def _warmup(spark) -> None:
         ),
     )
     df.count()
-    _rect_polys(spark).limit(2).withColumn(
+    datagen.rect_polygons(spark, HUB_RECTS).limit(2).withColumn(
         "cv", udfs.polyfill_cover_udf(3)(F.col("geometry"))
     ).count()
 
@@ -298,6 +267,7 @@ def run_scaling_workload(spark, sf_dir: str, amp: int) -> int:
     """
     from pyspark.sql import functions as F
 
+    from sparkh3 import datagen
     from sparkh3 import functions as H3F
     from sparkh3.operators import joins, skew
 
@@ -322,7 +292,7 @@ def run_scaling_workload(spark, sf_dir: str, amp: int) -> int:
         F.sum("sum_value").alias("sum_value")
     ).count()
     pip = joins.pip_join(
-        pts, _rect_polys(spark), resolution=4, validate_key=False
+        pts, datagen.rect_polygons(spark, HUB_RECTS), resolution=4, validate_key=False
     )
     pip.groupBy("poly_id").count().count()
     pts.unpersist()

@@ -40,11 +40,9 @@ def main() -> None:
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .getOrCreate()
     )
-    from sparkh3.operators import graph, skew, textops
+    from sparkh3.operators import graph, textops
     from sparkh3.plans import checkpoint
     from sparkh3.sources import manifest
-
-    skew.apply_aqe(spark)
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     n_in = docs.count()

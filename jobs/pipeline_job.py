@@ -38,8 +38,6 @@ def main() -> None:
     from sparkh3.plans import checkpoint, tuning
     from sparkh3.sources import manifest
 
-    skew.apply_aqe(spark)
-
     # spill-aware sizing from the actual input footprint + this app's
     # resources (plans/tuning.py); runtime-settable confs only
     sc = spark.sparkContext

@@ -16,6 +16,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 # (lat_e6, lng_e6) of 12 dense hubs (urban centers; values are arbitrary
 # but fixed — they define the skew profile)
@@ -130,3 +137,23 @@ def interleaved_documents_sql() -> str:
     """DuckDB CTE body producing the identical table from the
     pre-registered `documents` view."""
     return f"{_spans_select_sql('duckdb')} documents"
+
+
+def rect_polygons(spark: SparkSession, rects) -> DataFrame:
+    """``(poly_id, geometry)`` frame of closed lng/lat rectangle rings,
+    one polygon per ``(poly_id, lat_lo, lat_hi, lng_lo, lng_hi)`` entry
+    of ``rects``."""
+    point = StructType(
+        [StructField("lng", DoubleType()), StructField("lat", DoubleType())]
+    )
+    schema = StructType(
+        [
+            StructField("poly_id", StringType()),
+            StructField("geometry", ArrayType(ArrayType(point))),
+        ]
+    )
+    rows = []
+    for pid, y0, y1, x0, x1 in rects:
+        ring = [(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)]
+        rows.append((pid, [[{"lng": x, "lat": y} for x, y in ring]]))
+    return spark.createDataFrame(rows, schema)

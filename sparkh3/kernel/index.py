@@ -347,17 +347,6 @@ def int_to_str(h: np.ndarray) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
-def cell_to_children_count(h: np.ndarray, child_res) -> np.ndarray:
-    h = _asarray(h)
-    res = get_resolution(h)
-    n = np.asarray(child_res, dtype=np.int64) - res
-    pent = is_pentagon(h)
-    # pentagon child count: 1 + 5*(7^n - 1)/6 ; hexagon: 7^n
-    hexc = 7 ** np.maximum(n, 0)
-    pentc = 1 + 5 * (hexc - 1) // 6
-    return np.where(pent, pentc, hexc)
-
-
 def cell_to_children(h, child_res: int) -> np.ndarray:
     """All children of each cell at child_res (flat array, grouped by parent).
 

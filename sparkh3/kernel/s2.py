@@ -726,17 +726,6 @@ def polygon_covering(rings, level: int) -> np.ndarray:
     return cov[~fully]
 
 
-def multipolygon_covering(polys, level: int) -> np.ndarray:
-    """Union covering of a MultiPolygon (iterable of polygons, each a
-    bare ring or ``[shell, holes...]`` ring list): the deduplicated
-    union of the per-part coverings — a superset of cells intersecting
-    any part."""
-    parts = [polygon_covering(p, level) for p in polys]
-    if not parts:
-        return np.array([], dtype=np.uint64)
-    return np.unique(np.concatenate(parts))
-
-
 def rect_covering_classified(
     lat_lo: float, lat_hi: float, lng_lo: float, lng_hi: float, level: int
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -806,34 +795,6 @@ def polygon_covering_classified(
     interior &= ~touch
     keep = ~fully
     return cov[keep], interior[keep]
-
-
-def multipolygon_covering_classified(
-    polys, level: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Union covering of a MultiPolygon with interior classification.
-    A cell is interior only if it is interior to SOME part and appears
-    in exactly ONE part's cover — under the even-odd residual semantics
-    an overlap between parts subtracts, so any cell touched by two
-    parts stays boundary (conservative; valid MultiPolygons have
-    disjoint parts and lose nothing)."""
-    covs: list[np.ndarray] = []
-    ints: list[np.ndarray] = []
-    for p in polys:
-        c, i = polygon_covering_classified(p, level)
-        covs.append(c)
-        ints.append(i)
-    if not covs:
-        e = np.array([], dtype=np.uint64)
-        return e, np.array([], dtype=bool)
-    allc = np.concatenate(covs)
-    alli = np.concatenate(ints)
-    uniq, inv, counts = np.unique(
-        allc, return_inverse=True, return_counts=True
-    )
-    inter_any = np.zeros(len(uniq), dtype=bool)
-    np.logical_or.at(inter_any, inv, alli)
-    return uniq, inter_any & (counts == 1)
 
 
 def merge_ranges(cells) -> tuple[np.ndarray, np.ndarray]:

@@ -195,20 +195,3 @@ def phash_neardup_join(
         .distinct()
     )
     return cand.filter(F.col("hamming") <= max_distance)
-
-
-def sample_frames(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling plumbing: one row per sampled timestamp
-    (decode stubbed; timestamps exact)."""
-    frames = F.sequence(
-        F.lit(0).cast("long"),
-        F.greatest(F.col("duration_ms") - 1, F.lit(0)).cast("long"),
-        F.lit(every_ms).cast("long"),
-    )
-    return (
-        # duration 0 must yield NO frames (greatest(-1, 0) would clamp
-        # the sequence end to 0 and emit a phantom frame at ts=0)
-        df.filter((F.col("kind") == "video") & (F.col("duration_ms") > 0))
-        .withColumn("frame_ts_ms", F.explode(frames))
-        .select("media_id", "frame_ts_ms", "width", "height")
-    )

@@ -336,17 +336,6 @@ def hll_registers(
     )
 
 
-def hll_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Merge two register tables built with identical p: per-bucket MAX
-    — equivalent to having sketched the union."""
-    group_col, bucket = a.columns[0], a.columns[1]
-    return (
-        a.unionByName(b)
-        .groupBy(group_col, bucket)
-        .agg(F.max("rho").alias("rho"))
-    )
-
-
 def hll_estimate(regs: DataFrame, group_col: str, p: int = 8) -> DataFrame:
     """Per-group cardinality estimate from a register table. Returns
     (group_col, n_zero, hll_estimate) with the estimate rounded to 4

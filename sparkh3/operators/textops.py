@@ -245,11 +245,6 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     return out
 
 
-def doc_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """64-bit content fingerprint (native xxhash64)."""
-    return df.withColumn("fingerprint", F.xxhash64(F.col(text_col)))
-
-
 def winnow_udf(window: int):
     """array<long> shingle hashes -> array<long> winnowed fingerprints:
     the distinct minima of every `window`-wide sliding window (the MOSS

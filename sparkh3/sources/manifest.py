@@ -204,7 +204,6 @@ def write_table(
     key_is_int: bool = False,
     target_file_bytes: int = TARGET_FILE_BYTES,
     data_subdir: str = "data",
-    properties: dict | None = None,
 ) -> dict:
     """Write a cell-keyed table with snapshot manifest. `h3_col` is a
     15-hex-char H3 string column by default; ``key_is_int=True`` takes
@@ -250,7 +249,7 @@ def write_table(
         # and a crash between the parquet write and the `current`
         # advance leaves an UNREFERENCED dir that the replayed batch
         # simply overwrites — orphaned rows can never be adopted into
-        # a later commit (exactly-once for foreachBatch sinks)
+        # a later commit
         data_subdir = f"data_a{version}"
     data_dir = root_p / data_subdir
     out = _with_key_col(df, h3_col, key_is_int)
@@ -274,7 +273,6 @@ def write_table(
         "target_file_bytes": target_file_bytes,
         "files": files,
         "total_rows": sum(f["rows"] for f in files),
-        "properties": properties or {},
         "schema": schema_json,
     }
     (root_p / "metadata" / f"v{version}.json").write_text(json.dumps(snapshot))

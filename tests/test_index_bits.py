@@ -119,7 +119,7 @@ class TestChildrenCompact:
         assert ix.is_pentagon(pent).all()
         kids = ix.cell_to_children(pent, 1)
         assert len(kids) == 6
-        assert int(ix.cell_to_children_count(pent, 2)[0]) == 1 + 5 * (49 - 1) // 6
+        assert len(ix.cell_to_children(pent, 2)) == 1 + 5 * (49 - 1) // 6
 
 
 class TestRotations:

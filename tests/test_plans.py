@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as E
 from sparkh3 import dataframe as dfo
+from sparkh3 import datagen
 from sparkh3.operators import joins, similarity, textops
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -64,7 +65,7 @@ def test_filter_and_pruning_push_through_geo_to_h3(spark):
 
 def test_broadcast_pip_join_is_one_fused_pass_no_point_shuffle(spark):
     pts = spark.createDataFrame([(1, 40.0, -74.0)], ["id", "lat", "lng"])
-    pj = joins.pip_join(pts, E._rect_polys(spark), 4)
+    pj = joins.pip_join(pts, datagen.rect_polygons(spark, E._RECTS), 4)
     plan = _plan(pj)
     assert "Exchange hashpartitioning" not in plan, plan
     assert plan.count("MapInArrow") == 1, plan
@@ -72,7 +73,7 @@ def test_broadcast_pip_join_is_one_fused_pass_no_point_shuffle(spark):
 
 def test_nonbroadcast_pip_join_uses_shuffle_join(spark):
     pts = spark.createDataFrame([(1, 40.0, -74.0)], ["id", "lat", "lng"])
-    pj = joins.pip_join(pts, E._rect_polys(spark), 4, broadcast=False)
+    pj = joins.pip_join(pts, datagen.rect_polygons(spark, E._RECTS), 4, broadcast=False)
     plan = _plan(pj)
     assert (
         "SortMergeJoin" in plan
@@ -81,15 +82,41 @@ def test_nonbroadcast_pip_join_uses_shuffle_join(spark):
     )
 
 
+def _exchanges_run_by(spark, fn):
+    """Call ``fn`` and return its result with the description of every
+    Exchange in the SQL executions it ran, read from the SQL status
+    store: the plans that actually executed, including those that ran
+    inside the call, which the returned frame's plan does not show."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty(30_000)
+    first = store.executionsCount()
+    out = fn()
+    bus.waitUntilEmpty(30_000)
+    execs = store.executionsList(first, store.executionsCount() - first)
+    found = []
+    for i in range(execs.size()):
+        nodes = store.planGraph(execs.apply(i).executionId()).allNodes()
+        found += [
+            nodes.apply(j).desc()
+            for j in range(nodes.size())
+            if nodes.apply(j).name() == "Exchange"
+        ]
+    return out, found
+
+
 def test_minhash_banding_shuffles_no_text(spark):
+    """The banding shuffles run inside the call, where the pair list's
+    checkpoint is built: read the plans of those executions. The
+    band-key exchange must be among them, and no hash exchange may be
+    keyed on the text."""
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    mh = textops.minhash_lsh_dedup(docs, jaccard_threshold=0.4)
-    plan = _plan(mh)
-    exchanges = plan.split("Exchange hashpartitioning")[1:]
-    keyed_on_text = sum(
-        "text#" in seg.split("\n")[0] for seg in exchanges
+    _, exchanges = _exchanges_run_by(
+        spark, lambda: textops.minhash_lsh_dedup(docs, jaccard_threshold=0.4)
     )
-    assert keyed_on_text == 0, plan
+    hashed = [d for d in exchanges if "hashpartitioning(" in d]
+    assert any("hashpartitioning(_bucket#" in d for d in hashed), exchanges
+    assert not [d for d in hashed if "text#" in d], hashed
 
 
 def test_minhash_verify_intersects_each_pair_once(spark, monkeypatch):

@@ -1,10 +1,7 @@
-"""Raster<->vector bridging, Callable aggregates, streaming ingestion."""
-
-import time
+"""Raster<->vector bridging, Callable aggregates, multimodal guardrails."""
 
 import pytest
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from sparkh3.operators import grouped, raster
 
@@ -51,329 +48,6 @@ class TestCallableAggregate:
         assert got == {"a": 2.0, "b": 0.0}
 
 
-class TestStreaming:
-    def test_streaming_tile_ingest(self, spark, tmp_path):
-        from sparkh3.sources import manifest
-        from sparkh3.streaming import ingest
-
-        src = tmp_path / "src"
-        src.mkdir()
-        rows = [
-            Row(ts="2024-01-01 00:00:05", lat=50.0, lng=14.0),
-            Row(ts="2024-01-01 00:00:20", lat=50.0, lng=14.0),
-            Row(ts="2024-01-01 00:02:30", lat=51.0, lng=15.0),
-            Row(ts="2024-01-01 00:05:00", lat=0.0, lng=0.0),  # closes windows
-        ]
-        batch = spark.createDataFrame(rows).withColumn(
-            "ts", F.col("ts").cast("timestamp")
-        )
-        batch.write.parquet(str(src / "part1"))
-        stream = (
-            spark.readStream.schema(batch.schema).parquet(str(src / "part1"))
-        )
-        q = ingest.start_tile_ingest(
-            stream,
-            7,
-            str(tmp_path / "tbl"),
-            str(tmp_path / "ckpt"),
-        )
-        q.awaitTermination(120)
-        snap = manifest.load_snapshot(str(tmp_path / "tbl"))
-        out = manifest.read_table(spark, str(tmp_path / "tbl"))
-        got = {
-            (str(r.window_start), r.h3_07): r.n for r in out.collect()
-        }
-        # the first window (2 events, same cell) must be present & closed
-        assert any(n == 2 for n in got.values())
-        assert snap["total_rows"] >= 1
-
-    def test_session_window_merges_and_splits(self, spark, tmp_path):
-        """Session windows per cell: events within the gap merge into
-        ONE session; a later event in the same cell opens a second
-        session; sessions emit once the watermark closes them."""
-        from sparkh3.streaming import ingest
-
-        src = tmp_path / "src3"
-        src.mkdir()
-        b1 = spark.createDataFrame(
-            [
-                # same cell, 30s apart with a 1-minute gap -> one session
-                Row(ts="2024-01-01 00:00:00", lat=50.0, lng=14.0),
-                Row(ts="2024-01-01 00:00:30", lat=50.0, lng=14.0),
-                # same cell, 10 minutes later -> a second session
-                Row(ts="2024-01-01 00:10:00", lat=50.0, lng=14.0),
-            ]
-        ).withColumn("ts", F.col("ts").cast("timestamp"))
-        # one file per batch: maxFilesPerTrigger=1 then maps file ->
-        # micro-batch deterministically (multi-file batches would split
-        # the session's events across batches in arbitrary order)
-        b1.coalesce(1).write.parquet(str(src / "b1"))
-        stream = spark.readStream.schema(b1.schema).option(
-            "maxFilesPerTrigger", "1"
-        ).parquet(str(src) + "/*")
-        out = ingest.streaming_cell_sessions(
-            stream, 7, gap="1 minute", watermark="2 minutes"
-        )
-        rows: list = []
-
-        def sink(bdf, bid):
-            rows.extend(bdf.collect())
-
-        def run_available():
-            q = (
-                out.writeStream.foreachBatch(sink)
-                .outputMode("append")
-                .option("checkpointLocation", str(tmp_path / "ckpt3"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-
-        run_available()
-        # a far-future event (different cell) advances the watermark so
-        # the earlier sessions close and emit — across a RESTART, which
-        # proves session state recovered from the checkpoint
-        spark.createDataFrame(
-            [Row(ts="2024-01-01 01:00:00", lat=0.0, lng=0.0)]
-        ).withColumn("ts", F.col("ts").cast("timestamp")).coalesce(
-            1
-        ).write.parquet(str(src / "b2"))
-        run_available()
-        sessions = {
-            (str(r.session_start), str(r.session_end)): r.n_events
-            for r in rows
-        }
-        # first session: 2 events, spans 00:00:00 -> 00:00:30 + gap
-        assert sessions[("2024-01-01 00:00:00", "2024-01-01 00:01:30")] == 2
-        # second session: the lone 00:10 event
-        assert sessions[("2024-01-01 00:10:00", "2024-01-01 00:11:00")] == 1
-
-    def test_stateful_cell_totals_across_batches(self, spark, tmp_path):
-        """applyInPandasWithState keeps per-cell running totals across
-        micro-batches: batch 2's emission includes batch 1's rows."""
-        from sparkh3.streaming import stateful
-
-        src = tmp_path / "src2"
-        src.mkdir()
-        b1 = spark.createDataFrame(
-            [Row(lat=50.0, lng=14.0, value=2.0),
-             Row(lat=50.0, lng=14.0, value=3.0)]
-        )
-        b1.write.parquet(str(src / "b1"))
-        stream = spark.readStream.schema(b1.schema).option(
-            "maxFilesPerTrigger", "1"
-        ).parquet(str(src) + "/*")
-        out = stateful.stateful_cell_totals(stream, 7)
-
-        def run_available():
-            rows: list = []
-
-            def sink(bdf, bid):
-                rows.extend(bdf.collect())
-
-            q = (
-                out.writeStream.foreachBatch(sink)
-                .outputMode("update")
-                .option("checkpointLocation", str(tmp_path / "ckpt2"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-            return rows
-
-        first = {
-            r.cell: (r.n_total, r.sum_value) for r in run_available()
-        }
-        assert list(first.values()) == [(2, 5.0)]
-        cell = next(iter(first))
-        # second batch, same cell: totals must ACCUMULATE via state
-        spark.createDataFrame(
-            [Row(lat=50.0, lng=14.0, value=10.0)]
-        ).write.parquet(str(src / "b2"))
-        got = {
-            r.cell: (r.n_total, r.sum_value) for r in run_available()
-        }
-        assert got[cell] == (3, 15.0)
-
-
-class TestTransformWithState:
-    def test_streaming_exact_dedup_across_batches(self, spark, tmp_path):
-        """Streaming exact dedup keeps keeper identity + lifetime dup
-        counts across micro-batches AND across restarted availableNow
-        runs (checkpointed state)."""
-        from pyspark.sql import Row
-
-        from sparkh3.streaming import dedup
-
-        src = tmp_path / "dsrc"
-        src.mkdir()
-        # coalesce(1): one parquet part per logical batch, so
-        # maxFilesPerTrigger=1 means one micro-batch per write below
-        spark.createDataFrame(
-            [Row(doc_id="a", text="same text"),
-             Row(doc_id="b", text="same text"),
-             Row(doc_id="c", text="other")]
-        ).coalesce(1).write.parquet(str(src / "b1"))
-        schema = "doc_id string, text string"
-        stream = spark.readStream.schema(schema).option(
-            "maxFilesPerTrigger", "1"
-        ).parquet(str(src) + "/*")
-        out = dedup.streaming_exact_dedup(stream)
-
-        def run_available():
-            rows: list = []
-
-            def sink(bdf, bid):
-                rows.extend(bdf.collect())
-
-            q = (
-                out.writeStream.foreachBatch(sink)
-                .outputMode("update")
-                .option("checkpointLocation", str(tmp_path / "dckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-            return rows
-
-        first = {r.text_hash: r for r in run_available()}
-        assert len(first) == 2
-        by_keeper = {r.keeper_id: r for r in first.values()}
-        assert by_keeper["a"].n_seen == 2 and by_keeper["a"].is_new
-        assert by_keeper["c"].n_seen == 1 and by_keeper["c"].is_new
-
-        # second run: one more dup of "same text" + a fresh doc
-        spark.createDataFrame(
-            [Row(doc_id="d", text="same text"),
-             Row(doc_id="e", text="brand new")]
-        ).coalesce(1).write.parquet(str(src / "b2"))
-        got = {r.keeper_id: r for r in run_available()}
-        # keeper survives the restart: still 'a', now 3 lifetime sights
-        assert got["a"].n_seen == 3 and not got["a"].is_new
-        assert got["e"].n_seen == 1 and got["e"].is_new
-        assert "d" not in got
-
-    def test_streaming_bloom_dedup_bounded_state(self, spark, tmp_path):
-        """Bloom-state dedup: within-batch and cross-restart dups are
-        flagged, first sights are clean, and the state blob is a fixed
-        m_bits/8 bytes regardless of how many keys the stream has seen
-        (the bounded-state contract the exact path cannot give)."""
-        from pyspark.sql import Row
-
-        from sparkh3.streaming import dedup
-
-        src = tmp_path / "bsrc"
-        src.mkdir()
-        spark.createDataFrame(
-            [Row(doc_id="a", text="same text"),
-             Row(doc_id="b", text="same text"),
-             Row(doc_id="c", text="other")]
-        ).coalesce(1).write.parquet(str(src / "b1"))
-        stream = spark.readStream.schema("doc_id string, text string").option(
-            "maxFilesPerTrigger", "1"
-        ).parquet(str(src) + "/*")
-        out = dedup.streaming_bloom_dedup(stream, m_bits=1 << 13, n_shards=4)
-
-        def run_available():
-            rows: list = []
-
-            def sink(bdf, bid):
-                rows.extend(bdf.collect())
-
-            q = (
-                out.writeStream.foreachBatch(sink)
-                .outputMode("update")
-                .option("checkpointLocation", str(tmp_path / "bckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-            return rows
-
-        first = {r.doc_id: r.maybe_dup for r in run_available()}
-        # 3 keys in 8192 bits: false positives effectively impossible
-        assert first == {"a": False, "b": True, "c": False}
-
-        spark.createDataFrame(
-            [Row(doc_id="d", text="same text"),
-             Row(doc_id="e", text="brand new")]
-        ).coalesce(1).write.parquet(str(src / "b2"))
-        second = {r.doc_id: r.maybe_dup for r in run_available()}
-        # state survived the restart: 'd' is a dup of batch-1 content
-        assert second == {"d": True, "e": False}
-
-    def test_streaming_bloom_dedup_validations(self, spark):
-        from sparkh3.streaming import dedup
-
-        src = spark.readStream.format("rate").load().selectExpr(
-            "cast(value as string) AS doc_id",
-            "cast(value as string) AS text",
-        )
-        with pytest.raises(ValueError, match="byte-aligned"):
-            dedup.streaming_bloom_dedup(src, m_bits=100, n_shards=8)
-        with pytest.raises(ValueError, match="k must be positive"):
-            dedup.streaming_bloom_dedup(src, k=0)
-
-
-class TestExactlyOnceSink:
-    def test_replayed_batch_commits_once(self, spark, tmp_path):
-        from sparkh3.sources import manifest
-        from sparkh3.streaming.ingest import idempotent_append
-
-        df = spark.createDataFrame(
-            [Row(h3_07="87283472bffffff", n=3)]
-        )
-        root = str(tmp_path / "tbl")
-        snap1 = idempotent_append(df, 0, "ckpt-a", root, "h3_07")
-        assert snap1 is not None and snap1["version"] == 1
-        # replay of the same (stream, batch): recognized, no new version
-        assert idempotent_append(df, 0, "ckpt-a", root, "h3_07") is None
-        assert manifest.load_snapshot(root)["version"] == 1
-        total1 = manifest.load_snapshot(root)["total_rows"]
-        # next batch commits normally on top
-        snap2 = idempotent_append(df, 1, "ckpt-a", root, "h3_07")
-        assert snap2["version"] == 2
-        assert snap2["total_rows"] == 2 * total1
-
-    def test_distinct_streams_are_independent(self, spark, tmp_path):
-        from sparkh3.streaming.ingest import idempotent_append
-
-        df = spark.createDataFrame([Row(h3_07="87283472bffffff", n=1)])
-        root = str(tmp_path / "tbl")
-        assert idempotent_append(df, 0, "ckpt-a", root, "h3_07") is not None
-        # same batch id from a DIFFERENT stream is not a replay
-        assert idempotent_append(df, 0, "ckpt-b", root, "h3_07") is not None
-
-    def test_restarted_query_appends_nothing_new(self, spark, tmp_path):
-        from sparkh3.sources import manifest
-        from sparkh3.streaming import ingest
-
-        src = tmp_path / "src"
-        src.mkdir()
-        rows = [
-            Row(ts="2024-01-01 00:00:05", lat=50.0, lng=14.0),
-            Row(ts="2024-01-01 00:05:00", lat=0.0, lng=0.0),
-        ]
-        batch = spark.createDataFrame(rows).withColumn(
-            "ts", F.col("ts").cast("timestamp")
-        )
-        batch.write.parquet(str(src / "p"))
-        stream_def = lambda: spark.readStream.schema(batch.schema).parquet(
-            str(src / "p")
-        )
-        q = ingest.start_tile_ingest(
-            stream_def(), 7, str(tmp_path / "tbl"), str(tmp_path / "ck")
-        )
-        q.awaitTermination(120)
-        v1 = manifest.load_snapshot(str(tmp_path / "tbl"))["version"]
-        # restart from the same checkpoint: no new input -> no commit
-        q2 = ingest.start_tile_ingest(
-            stream_def(), 7, str(tmp_path / "tbl"), str(tmp_path / "ck")
-        )
-        q2.awaitTermination(120)
-        assert manifest.load_snapshot(str(tmp_path / "tbl"))["version"] == v1
-
-
 class TestMultimodalGuardrails:
     def test_fake_features_window_is_exactly_64_bytes(self):
         from sparkh3.operators.multimodal import fake_features
@@ -381,18 +55,6 @@ class TestMultimodalGuardrails:
         base = bytes(range(64))
         assert fake_features(base + b"\x01") == fake_features(base + b"\x02")
         assert fake_features(base[:-1] + b"\x09") != fake_features(base)
-
-    def test_sample_frames_zero_duration_yields_no_frames(self, spark):
-        from sparkh3.operators.multimodal import sample_frames
-
-        df = spark.createDataFrame(
-            [("m0", "video", 0, 100, 100), ("m1", "video", 2500, 100, 100)],
-            "media_id string, kind string, duration_ms long, "
-            "width int, height int",
-        )
-        got = sample_frames(df, every_ms=1000).collect()
-        assert all(r.media_id == "m1" for r in got)
-        assert len(got) == 3  # ts 0, 1000, 2000
 
 
 def test_span_fingerprint_distinguishes_null_field_shift(spark):

@@ -317,40 +317,6 @@ class TestCovering:
         h2 = [(1.0, 8.5), (1.0, 9.5), (2.0, 9.5), (2.0, 8.5)]
         assert len(s2.polygon_covering([shell, hole, h2], 8)) > 0
 
-    def test_multipolygon_covering(self):
-        """MultiPolygon union covering (holed part + plain part):
-        equals the deduplicated union of per-part coverings, and the
-        classified variant's interior-bypass reproduces exact even-odd
-        membership over both parts."""
-        from sparkh3.kernel import polygon as kpoly
-
-        a = [(0.0, 0.0), (0.0, 4.0), (4.0, 4.0), (4.0, 0.0)]
-        b = [(20.0, 20.0), (20.0, 24.0), (24.0, 24.0), (24.0, 20.0)]
-        hole = [(1.0, 1.0), (1.0, 3.0), (3.0, 3.0), (3.0, 1.0)]
-        cov = s2.multipolygon_covering([[a, hole], b], 8)
-        u = np.unique(
-            np.concatenate(
-                [s2.polygon_covering([a, hole], 8), s2.polygon_covering(b, 8)]
-            )
-        )
-        assert np.array_equal(cov, u)
-        cells, interior = s2.multipolygon_covering_classified(
-            [[a, hole], b], 8
-        )
-        assert interior.any()
-        rng = np.random.default_rng(33)
-        la = rng.uniform(-1.0, 25.0, 40000)
-        lo = rng.uniform(-1.0, 25.0, 40000)
-        ins = kpoly.points_in_rings(la, lo, [a, hole]) | kpoly.points_in_rings(
-            la, lo, [b]
-        )
-        par = s2.cell_to_parent(s2.latlng_to_cell(la, lo, 30), 8)
-        assert np.isin(par[ins], cells).all()
-        via = np.isin(par, cells[interior]) | (
-            np.isin(par, cells[~interior]) & ins
-        )
-        assert (via == ins).all()
-
     def test_parent_level_guard(self):
         """Asking for a 'parent' FINER than the cell's own level must
         raise, not fabricate a descendant-positioned id."""

@@ -96,16 +96,6 @@ class TestTextAnalysis:
         assert got[1] & got[2]
         assert not (got[1] & got[3]) and not (got[2] & got[3])
 
-    def test_fingerprint_deterministic(self, docs):
-        a = textops.doc_fingerprint(docs).select("doc_id", "fingerprint")
-        b = textops.doc_fingerprint(docs).select("doc_id", "fingerprint")
-        assert (
-            a.join(b.withColumnRenamed("fingerprint", "f2"), "doc_id")
-            .filter(F.col("fingerprint") != F.col("f2"))
-            .count()
-            == 0
-        )
-
 
 class TestMinHashSimHash:
     @pytest.fixture(scope="class")
@@ -909,16 +899,6 @@ class TestMultimodal:
         assert all(len(r.feature) == 8 for r in rows)
         assert all(r.n_bytes == 32 for r in rows)  # sha256 payload
 
-    def test_frame_sampling(self, spark):
-        df = spark.createDataFrame(
-            [Row(media_ref=f"ref://src0/{i}") for i in range(30)]
-        )
-        media = multimodal.synthesize_media(df)
-        frames = multimodal.sample_frames(media, every_ms=5000)
-        vids = media.filter(F.col("kind") == "video").count()
-        assert frames.count() >= vids  # >= one frame per video
-        assert frames.filter(F.col("frame_ts_ms") % 5000 != 0).count() == 0
-
     def test_decode_stub_raises(self):
         with pytest.raises(NotImplementedError):
             multimodal.decode_image(b"xx")
@@ -1585,19 +1565,6 @@ class TestHyperLogLog:
         v = 256 - present
         assert row.n_zero == v
         assert row.hll_estimate == round(256.0 * math.log(256.0 / v), 4)
-
-    def test_merge_equals_union(self, spark):
-        from sparkh3.operators import sketch
-
-        a = [i * 31 + 5 for i in range(300)]
-        b = [i * 17 + 2 for i in range(300)]
-        merged = sketch.hll_merge(
-            self._regs(spark, a), self._regs(spark, b)
-        )
-        whole = self._regs(spark, a + b)
-        assert {
-            (r.bucket, r.rho) for r in merged.collect()
-        } == {(r.bucket, r.rho) for r in whole.collect()}
 
     def test_p_validation(self, spark):
         from sparkh3.operators import sketch
