@@ -5,8 +5,17 @@ Neighbors are lattice steps: each cell's face coords (cell_to_faceijk)
 plus the six unit IJK vectors, moved to the owning face by the
 icosahedron overage transform (Class III through the aperture-7r
 substrate) and encoded in one faceijk_to_cell batch — integer math, no
-trigonometry, pentagons and face crossings included. Disk and cover
-BFS levels make one such call over every frontier cell of every owner.
+trigonometry, pentagons and face crossings included. Cover BFS levels
+make one such call over every frontier cell of every owner.
+
+Disks and rings take one lattice pass (`_grid_disk`, H3's gridDisk
+fast path): each center's face coords plus the 3k(k+1) non-zero IJK
+offsets within distance k, one owning-face walk and one faceijk_to_cell
+over every row. A ring is the disk's distance-k rows, since a pentagon
+anywhere inside it bends the ring too. The lattice is the grid only away from pentagons, so an
+owner whose lattice disk holds a pentagon cell (its deleted wedge bends
+the grid), or has a row the walk left on no face (a disk wrapping the
+globe at coarse resolutions), takes the BFS (`_disk_bfs`) instead.
 
 The geometric edge probe (`_probe_neighbors`: snap a point just beyond
 each boundary-edge midpoint with latlng_to_cell) stays only behind
@@ -19,12 +28,15 @@ Goldens: reference tests/test_h3pandas.py:471-601 (k_ring / hex_ring),
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 import numpy as np
 
 from . import geo
 from . import ijk as IJK
 from . import index as ix
 from . import proj
+from .constants import MAX_DIM_BY_CII_RES
 
 _EDGE_EPS = 0.10  # fraction of center->edge-midpoint distance beyond the edge
 
@@ -150,33 +162,89 @@ def _disk_bfs(cells: np.ndarray, k: int):
     return o[order], c[order], dist[order]
 
 
+@lru_cache(maxsize=None)
+def _lattice_offsets(k: int) -> tuple[np.ndarray, np.ndarray]:
+    """The 3k(k+1) normalized IJK offsets at grid distance 1..k from the
+    origin, and each one's distance."""
+    a, b = np.meshgrid(np.arange(-k, k + 1), np.arange(-k, k + 1))
+    off = IJK.normalize(
+        np.stack([a.ravel(), b.ravel(), np.zeros(a.size, dtype=np.int64)], -1)
+    )
+    dist = off.max(axis=-1)
+    ring = (dist >= 1) & (dist <= k)
+    return off[ring], dist[ring]
+
+
+def _grid_disk(cells: np.ndarray, k: int):
+    """(owner, cell, grid distance) of every disk(k), sorted by (owner,
+    cell): one lattice pass, with the BFS for the owners it cannot
+    serve.
+
+    The lattice pass adds the disk's IJK offsets to each center's face
+    coords, moves every row to its owning face and encodes all rows in
+    one batch (the centers themselves need no encode). Away from
+    pentagons the lattice is the grid, so that is the disk. A disk
+    holding a pentagon loses the pentagon's deleted wedge (lattice
+    steps land on wrong or repeated cells), and a disk wide enough to
+    wrap past its faces (coarse resolutions, large k) leaves rows on no
+    face; those owners take `_disk_bfs`."""
+    cells = np.atleast_1d(np.asarray(cells, dtype=np.uint64))
+    n = len(cells)
+    if n == 0:
+        return _disk_bfs(cells, k)
+    res = int(ix.get_resolution(cells[:1])[0])
+    off, dist = _lattice_offsets(k)
+    m = len(off)
+    face, ijk, _ = geo.cell_to_faceijk(cells)
+    steps = IJK.normalize((ijk[:, None, :] + off[None, :, :]).reshape(-1, 3))
+    face, steps = geo.owning_faceijk(np.repeat(face, m), steps, res)
+    # rows the overage walk left past a face edge encode to nothing
+    sub = IJK.down_ap7r(steps) if res % 2 else steps
+    lost = sub.sum(axis=-1) > MAX_DIM_BY_CII_RES[res + res % 2]
+    steps[lost] = 0
+    out = np.concatenate([cells, geo.faceijk_to_cell(face, steps, res)])
+    ids = np.arange(n, dtype=np.int64)
+    owner = np.concatenate([ids, np.repeat(ids, m)])
+    lost = np.concatenate([np.zeros(n, dtype=bool), lost])
+    bfs = np.zeros(n, dtype=bool)
+    bfs[owner[lost | ix.is_pentagon(out)]] = True
+    keep = ~bfs[owner]
+    d = np.concatenate([np.zeros(n, dtype=np.int64), np.tile(dist, n)])
+    o, c, d = owner[keep], out[keep], d[keep]
+    if bfs.any():
+        idx = np.flatnonzero(bfs)
+        b_o, b_c, b_d = _disk_bfs(cells[idx], k)
+        o = np.concatenate([o, idx[b_o]])
+        c = np.concatenate([c, b_c])
+        d = np.concatenate([d, b_d])
+    order = np.lexsort((c, o))
+    return o[order], c[order], d[order]
+
+
 def grid_disk_grouped(cells: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
     """grid_disk(k) for many origins at once.
 
-    Returns (owner_idx, cell) flat arrays; each owner's group is the full
-    disk including the origin. Output size per owner: 1+3k(k+1) (less near
-    pentagons).
+    Returns (owner_idx, cell) flat arrays sorted by (owner, cell); each
+    owner's group is the full disk including the origin. Output size per
+    owner: 1+3k(k+1) (less near pentagons).
     """
-    owner, cell, _ = _disk_bfs(cells, k)
+    owner, cell, _ = _grid_disk(cells, k)
     return owner, cell
 
 
 def grid_disk_distances_grouped(
     cells: np.ndarray, k: int
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(owner_idx, cell, grid_distance) for the full disk(k) — every
-    ring 0..k from ONE BFS (the shape the kNN/radius disk builders
-    want: per-ring calls would redo the expansion per ring)."""
-    return _disk_bfs(cells, k)
+    """(owner_idx, cell, grid_distance) for the full disk(k): every ring
+    0..k from one pass."""
+    return _grid_disk(cells, k)
 
 
 def grid_ring_grouped(cells: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
-    """Hollow ring at exactly distance k — the depth-k frontier of one
-    BFS (no second disk(k-1) expansion)."""
-    cells = np.atleast_1d(np.asarray(cells, dtype=np.uint64))
-    if k == 0:
-        return np.arange(len(cells), dtype=np.int64), cells.copy()
-    owner, cell, dist = _disk_bfs(cells, k)
+    """Hollow ring at exactly distance k: the distance-k rows of the
+    disk (a pentagon inside the ring bends it, so the whole disk is
+    checked for one)."""
+    owner, cell, dist = _grid_disk(cells, k)
     m = dist == k
     return owner[m], cell[m]
 

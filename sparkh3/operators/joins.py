@@ -1,11 +1,20 @@
 """Spatial joins (north-rule ops, SURVEY §2.3/§2.4).
 
-The three point joins share one probe pass (``probe_pass``): a single
-``mapInArrow`` pass over the points encodes each located point at each
-level's resolution, matches its cell against broadcast sorted int64
-cells with their owners, and hands the matches to the join's own refine
-step. The point side never shuffles, and no BroadcastHashJoin or
-per-column UDF sits around the pass.
+The three point joins share one probe pass (``probe_pass``): it
+encodes each located point at each level's resolution, matches its cell
+against sorted int64 cells with their owners, and hands the matches to
+the join's own refine step. The point side never shuffles, and no
+BroadcastHashJoin or per-column UDF sits around the pass.
+
+Placement. A point side the optimizer sizes under
+``DRIVER_POINT_BYTES`` (its ``sizeInBytes``, read with no job) is
+collected once, bounded at ``DRIVER_POINT_ROWS`` + 1 rows, and the same
+per-batch body runs over its Arrow batches on the driver: the result is
+a local relation and no Python worker task starts, so small ``pip_join``
+and ``radius_join`` calls are eager. A larger side, a side past the row
+bound, and any frame the optimizer cannot size (one built from Python
+rows reports Long.MaxValue) runs the body as one ``mapInArrow`` pass
+whose cells ship in a broadcast.
 
 * ``pip_join``: exact point-in-polygon join. The levels are the H3
   polyfill **cover** cells (centroid-inside ∪ boundary band, a lossless
@@ -15,9 +24,10 @@ per-column UDF sits around the pass.
   to broadcast joins by shuffle instead.
 
 * ``knn_join``: exact k-nearest-neighbors. Up to 1024 queries, one
-  probe pass scores candidates in NumPy and prunes them per task; one
-  bounded collect brings them to the driver, where exact distances and
-  ranks come from the JVM's ``haversine_km`` over a local relation.
+  probe pass scores candidates in NumPy and prunes them per task. They
+  end on the driver (the driver placement, or one bounded collect of
+  the distributed pass), where exact distances and ranks come from the
+  JVM's ``haversine_km`` over a local relation.
   Above ``STRAGGLER_QUERIES`` queries the level is each query's int64
   H3 disk, and a query is certified once its k-th neighbor lies within
   the disk's margin. A side of at most ``STRAGGLER_QUERIES``, and
@@ -69,7 +79,24 @@ SLACK_KM = 1e-2
 # a task's Python memory when cells overlap heavily (coarse resolutions,
 # many queries or polygons)
 PAIR_CHUNK = 1 << 20
+# a point side probe_pass runs on the driver: optimizer estimate under
+# DRIVER_POINT_BYTES (read with no job), then one bounded collect of at
+# most DRIVER_POINT_ROWS rows (more rows drop the collect)
+DRIVER_POINT_BYTES = 8 << 20
+DRIVER_POINT_ROWS = 1 << 18
 _OUT = ("_qid", "_pid", "_dist", "_rank")
+# haversine_km over the joins' internal (_qlat, _qlng, _plat, _plng)
+# columns as SQL text: one parse, where the Column build costs one py4j
+# call per operator (the D suffix keeps the literal a double, not a
+# decimal)
+_HAVERSINE_SQL = (
+    f"{2.0 * EARTH_RADIUS_KM!r}D * asin(sqrt("
+    "sin((radians(_plat) - radians(_qlat)) / 2)"
+    " * sin((radians(_plat) - radians(_qlat)) / 2)"
+    " + cos(radians(_qlat)) * cos(radians(_plat))"
+    " * sin((radians(_plng) - radians(_qlng)) / 2)"
+    " * sin((radians(_plng) - radians(_qlng)) / 2)))"
+)
 
 
 def haversine_km(lat1: Column, lng1: Column, lat2: Column, lng2: Column) -> Column:
@@ -135,7 +162,9 @@ def pip_join(
     vectorized pass over the points (encode + broadcast cover match +
     exact ray cast; the 100 TB point side never shuffles), and
     ``resolution=None`` (default) sizes each polygon's cover resolution
-    adaptively to its footprint. With ``broadcast=False`` NOTHING is
+    adaptively to its footprint. A small point side runs that pass on
+    the driver (see ``probe_pass``), so the call is then eager and
+    returns a local relation. With ``broadcast=False`` NOTHING is
     ever collected to the driver: the cover joins by shuffle and
     refinement geometry joins back by key as flat coord arrays, so
     arbitrarily large polygon sides work (an explicit ``resolution`` is
@@ -283,9 +312,9 @@ def probe_pass(
     points: DataFrame, lat: str, lng: str, levels: list, data, refine,
     schema,
 ) -> DataFrame:
-    """One ``mapInArrow`` pass over ``points`` that probes broadcast
-    sorted cells: the shared shape of the broadcast ``pip_join``, the
-    ``knn_join`` rounds and ``radius_join``.
+    """One pass over ``points`` that probes sorted cells: the shared
+    shape of the broadcast ``pip_join``, the ``knn_join`` rounds and
+    ``radius_join``.
 
     ``levels`` holds ``_level`` tuples ``(resolution, sorted int64
     cells, owners, *payload)``. Each Arrow batch is sliced so that a
@@ -297,9 +326,41 @@ def probe_pass(
     *payload)``: each match's row in the slice, that point's
     coordinates, and its cell's owner and payload. ``refine`` yields
     Arrow batches of ``schema`` and may keep state across a task's
-    slices. ``levels`` and ``data`` ship in one broadcast, captured by
-    the returned frame's closure: the ContextCleaner reclaims it once
-    the caller drops the frame."""
+    slices.
+
+    Placement: a point side ``_driver_points`` brings up runs the same
+    body over its Arrow batches on the driver, as one task, and the
+    result is a local relation: the call is eager and starts no Python
+    worker. Any other runs as one ``mapInArrow`` pass whose ``levels``
+    and ``data`` ship in one broadcast, captured by the returned frame's
+    closure: the ContextCleaner reclaims it once the caller drops the
+    frame."""
+    local = _driver_points(points)
+    if local is not None:
+        return points.sparkSession.createDataFrame(
+            _probe_local(local, lat, lng, levels, data, refine, schema),
+            schema,
+        )
+    return _probe_mapped(points, lat, lng, levels, data, refine, schema)
+
+
+def _driver_points(points: DataFrame) -> pa.Table | None:
+    """``points`` as one Arrow table when it is small enough to probe on
+    the driver, else None. The optimizer's ``sizeInBytes`` (no job)
+    must be under ``DRIVER_POINT_BYTES`` before one bounded collect of
+    ``DRIVER_POINT_ROWS`` + 1 rows; more rows than the bound drop the
+    collect. Frames built from Python rows report Long.MaxValue, so they
+    never come up."""
+    est = points._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if est > DRIVER_POINT_BYTES:
+        return None
+    table = bounded_collect(points, DRIVER_POINT_ROWS + 1)
+    return table if table.num_rows <= DRIVER_POINT_ROWS else None
+
+
+def _prober(lat: str, lng: str, levels: list, refine):
+    """``probe_pass``'s per-task body: ``fn(levels, data, batches)``
+    yields ``refine``'s batches."""
     import numpy as np
 
     from ..kernel import geo as kgeo
@@ -309,11 +370,8 @@ def probe_pass(
     # PAIR_CHUNK // most rows matches at most PAIR_CHUNK
     most = sum(int(_runs(lv[1])[1].max(initial=0)) for lv in levels)
     step = max(1, PAIR_CHUNK // max(most, 1))
-    bc = points.sparkSession.sparkContext.broadcast((levels, data))
 
-    def fn(batches):
-        lvls, dat = bc.value
-
+    def fn(lvls, dat, batches):
         def matches():
             for b in (
                 batch.slice(at, step)
@@ -340,7 +398,32 @@ def probe_pass(
 
         yield from refine(dat, matches())
 
-    return points.mapInArrow(fn, schema)
+    return fn
+
+
+def _probe_local(
+    table: pa.Table, lat: str, lng: str, levels: list, data, refine, schema
+) -> pa.Table:
+    """``probe_pass``'s body over a collected point ``table`` on the
+    driver: the pass's rows as one Arrow table of ``schema``."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    fn = _prober(lat, lng, levels, refine)
+    out = list(fn(levels, data, table.to_batches()))
+    return (
+        pa.Table.from_batches(out) if out
+        else to_arrow_schema(schema).empty_table()
+    )
+
+
+def _probe_mapped(
+    points: DataFrame, lat: str, lng: str, levels: list, data, refine,
+    schema,
+) -> DataFrame:
+    """``probe_pass``'s body as one ``mapInArrow`` pass over ``points``."""
+    fn = _prober(lat, lng, levels, refine)
+    bc = points.sparkSession.sparkContext.broadcast((levels, data))
+    return points.mapInArrow(lambda batches: fn(*bc.value, batches), schema)
 
 
 def _level(res: int, cells, owners, *payload) -> tuple:
@@ -445,26 +528,28 @@ def knn_join(
     Two strategies, chosen by the query side's size:
 
     * <= ``BROADCAST_QUERIES`` (1024) queries, however few
-      (``_knn_broadcast``): the query collect and one bounded collect of
-      a ``probe_pass`` over the points (no exchange, persist or
-      checkpoint). Its answer is a local relation, so collecting it runs
-      no job. A side of at most ``STRAGGLER_QUERIES`` (32) is scored
-      against every point; a larger one is certified per query over the
-      points in int64 H3 disks around the queries. Queries the disks
-      cannot certify (sparse regions) take one more every-point pass
-      when at most ``STRAGGLER_QUERIES`` remain, else the iterative
-      rounds. Traced on 4 cores (perfbench ``spatial_join`` seed 1: 40
-      hub queries, 20k points, k=5, res 6), the call takes 0.67 s and 2
-      jobs, against 1.29 s and 6 jobs for the persisted-projection ring
-      round with an eager checkpoint that it replaced.
+      (``_knn_broadcast``): the query collect and one ``probe_pass``
+      body over the points (no exchange, persist or checkpoint), on the
+      driver over one bounded collect of a small point side, else as a
+      ``mapInArrow`` pass read by one bounded collect. Its answer is a
+      local relation, so collecting it runs no job. A side of at most
+      ``STRAGGLER_QUERIES`` (32) is scored against every point; a
+      larger one is certified per query over the points in int64 H3
+      disks around the queries. Queries the disks cannot certify
+      (sparse regions) take one more every-point pass when at most
+      ``STRAGGLER_QUERIES`` remain, else the iterative rounds. perfbench
+      ``spatial_join`` (40 hub queries over 20k parquet points, k=5,
+      res 6) runs the call as 2 jobs (the two collects) and no Python
+      worker.
     * larger query sides (``_knn_iterative``): ring rounds at
       ``resolution`` and every 3 resolutions coarser, ``_score_all`` for
       whatever is left at res <= 0. The open-query set stays a
       DataFrame; only counts reach the driver.
 
     The query side is read once, by a bounded one-job collect that is
-    both the size probe and the broadcast input; it writes no session
-    conf, so concurrent callers on one session do not interfere.
+    both the size probe and the broadcast input, and so is a
+    driver-placed point side; neither writes session conf, so
+    concurrent callers on one session do not interfere.
     """
     q = _query_side(queries, query_id, q_lat, q_lng)
     qt = _collect_queries(q, BROADCAST_QUERIES + 1)
@@ -474,7 +559,7 @@ def knn_join(
             q, pts, query_id, point_id, dist_km="double", rank="int"
         )
     if qt.num_rows <= BROADCAST_QUERIES:
-        out = _knn_broadcast(qt, pts, k, resolution)
+        out = _knn_broadcast(qt, pts, k, resolution, _driver_points(pts))
     else:
         out = _iterate(q, pts, k, resolution)
     return out.select(
@@ -488,21 +573,29 @@ def knn_join(
 def _query_side(
     queries: DataFrame, query_id: str, q_lat: str, q_lng: str
 ) -> DataFrame:
-    return queries.select(
-        F.col(query_id).alias("_qid"),
-        F.col(q_lat).cast("double").alias("_qlat"),
-        F.col(q_lng).cast("double").alias("_qlng"),
+    return queries.selectExpr(
+        f"{_sql_ref(query_id)} AS _qid",
+        f"CAST({_sql_ref(q_lat)} AS DOUBLE) AS _qlat",
+        f"CAST({_sql_ref(q_lng)} AS DOUBLE) AS _qlng",
     )
 
 
 def _point_side(
     points: DataFrame, point_id: str, p_lat: str, p_lng: str
 ) -> DataFrame:
-    return points.select(
-        F.col(point_id).alias("_pid"),
-        F.col(p_lat).cast("double").alias("_plat"),
-        F.col(p_lng).cast("double").alias("_plng"),
+    return points.selectExpr(
+        f"{_sql_ref(point_id)} AS _pid",
+        f"CAST({_sql_ref(p_lat)} AS DOUBLE) AS _plat",
+        f"CAST({_sql_ref(p_lng)} AS DOUBLE) AS _plng",
     )
+
+
+def _sql_ref(name: str) -> str:
+    """``name`` as SQL text that resolves as ``F.col(name)`` does: each
+    dot-separated part quoted, unless the caller quoted it already."""
+    if "`" in name:
+        return name
+    return ".".join(f"`{part}`" for part in name.split("."))
 
 
 def _no_rows(
@@ -551,12 +644,7 @@ def _top_k(cand: DataFrame, k: int) -> DataFrame:
         F.col("_dist").asc(), F.col("_pid").asc()
     )
     return (
-        cand.withColumn(
-            "_dist",
-            haversine_km(
-                F.col("_qlat"), F.col("_qlng"), F.col("_plat"), F.col("_plng")
-            ),
-        )
+        cand.withColumn("_dist", F.expr(_HAVERSINE_SQL))
         .withColumn("_rank", F.row_number().over(w))
         .filter(F.col("_rank") <= k)
     )
@@ -695,14 +783,18 @@ def _prune(qi, d, k: int):
 
 
 def _knn_candidates(
-    pts: DataFrame, qt: pa.Table, k: int, level: tuple
-) -> DataFrame:
-    """A kNN round's candidates: one ``probe_pass`` over the (_pid,
-    _plat, _plng) points against ``level``, whose owners are positions
-    in ``qt``. Each slice's matches are scored with
-    ``_np_haversine_km``; each task keeps, per query, the rows
-    ``_prune`` keeps. Rows: (_qi, the query's position in ``qt``; _pid,
-    _plat, _plng; _d, the NumPy distance)."""
+    pts: DataFrame, qt: pa.Table, k: int, level: tuple,
+    local: pa.Table | None = None,
+) -> pa.Table:
+    """A kNN round's candidates on the driver: one ``probe_pass`` body
+    over the (_pid, _plat, _plng) points against ``level``, whose owners
+    are positions in ``qt``, run over ``local`` (the point side
+    ``_driver_points`` brought up) or else as a ``mapInArrow`` pass
+    read by one bounded collect of ``DRIVER_KNN_ROWS`` + 1 rows. Each
+    slice's matches are scored with ``_np_haversine_km``; each task
+    keeps, per query, the rows ``_prune`` keeps. Rows: (_qi, the
+    query's position in ``qt``; _pid, _plat, _plng; _d, the NumPy
+    distance)."""
     from pyspark.sql.types import (
         DoubleType, IntegerType, StructField, StructType,
     )
@@ -729,23 +821,24 @@ def _knn_candidates(
         if kept is not None:
             yield from kept.combine_chunks().to_batches()
 
-    return probe_pass(
-        pts, "_plat", "_plng", [level],
+    args = (
+        "_plat", "_plng", [level],
         (qt["_qlat"].to_numpy(), qt["_qlng"].to_numpy()), refine, schema,
     )
+    if local is not None:
+        return _probe_local(local, *args)
+    return bounded_collect(_probe_mapped(pts, *args), DRIVER_KNN_ROWS + 1)
 
 
 def _knn_broadcast(
-    qt: pa.Table, pts: DataFrame, k: int, resolution: int
+    qt: pa.Table, pts: DataFrame, k: int, resolution: int,
+    local: pa.Table | None = None,
 ) -> DataFrame:
     """Broadcast strategy for a collected query side ``qt`` over the
-    (_pid, _plat, _plng) points: one ``_knn_candidates`` pass, whose
-    kept rows reach the driver in one bounded collect (past
-    ``DRIVER_KNN_ROWS`` the call takes the iterative rounds instead).
-    There they are pruned once more across tasks and scored exactly by
-    ``haversine_km`` over a local relation (folded into the relation on
-    the driver, so that read runs no job either); ranks follow
-    (dist_km, point_id). The answer is a local relation.
+    (_pid, _plat, _plng) points, ``local`` when ``_driver_points``
+    brought them up. Each round is one ``_knn_candidates`` pass, whose
+    kept rows are on the driver (past ``DRIVER_KNN_ROWS`` the round's
+    queries take the iterative rounds instead), ranked by ``_knn_rank``.
 
     A side of at most ``STRAGGLER_QUERIES`` owns every res-0 cell
     (``_globe_level``): every point is a candidate, so every query is
@@ -753,22 +846,49 @@ def _knn_broadcast(
     queries' ``CERT_RINGS``-disks at ``resolution``; a query is
     certified when it has k candidates and its k-th lies within the
     disk's margin, as in ``_ring_round``. The uncertified rest takes
-    the every-cell pass when at most ``STRAGGLER_QUERIES`` remain (one
-    pass beats several ring rounds that each rescan the points), else
-    the iterative rounds."""
+    the every-cell round when at most ``STRAGGLER_QUERIES`` remain (one
+    pass beats several ring rounds that each rescan the points; it
+    reuses ``local``, so a driver-placed point side is read once), else
+    the iterative rounds. The rounds' answers form one local relation,
+    so collecting it runs no job."""
+    spark = pts.sparkSession
+    parts, rest = [], None
+    while qt.num_rows:
+        exhaustive = qt.num_rows <= STRAGGLER_QUERIES
+        if not exhaustive and parts:
+            # too many stragglers for one every-point round
+            rest = qt
+            break
+        level = (
+            _globe_level(qt.num_rows) if exhaustive
+            else _disk_level(qt, resolution, CERT_RINGS)
+        )
+        kept = _knn_candidates(pts, qt, k, level, local)
+        if kept.num_rows > DRIVER_KNN_ROWS:
+            rest = qt
+            break
+        done, qt = _knn_rank(spark, qt, kept, k, resolution, exhaustive)
+        parts.append(done)
+    out = spark.createDataFrame(pa.concat_tables(parts)) if parts else None
+    if rest is None:
+        return out
+    rest = _iterate(spark.createDataFrame(rest), pts, k, resolution)
+    return rest if out is None else out.unionByName(rest)
+
+
+def _knn_rank(
+    spark, qt: pa.Table, kept: pa.Table, k: int, resolution: int,
+    exhaustive: bool,
+) -> tuple[pa.Table, pa.Table]:
+    """One broadcast round's answer from its candidates ``kept``: they
+    are pruned once more across tasks and scored exactly by the JVM's
+    ``haversine_km`` over a local relation (folded into the relation on
+    the driver, so that read runs no job); ranks follow (dist_km,
+    point_id). Returns the (_qid, _pid, _dist, _rank) rows of the
+    queries answered (all of them when ``exhaustive``, else those
+    certified) and the queries of ``qt`` left open."""
     import numpy as np
 
-    spark = pts.sparkSession
-    exhaustive = qt.num_rows <= STRAGGLER_QUERIES
-    level = (
-        _globe_level(qt.num_rows) if exhaustive
-        else _disk_level(qt, resolution, CERT_RINGS)
-    )
-    kept = bounded_collect(
-        _knn_candidates(pts, qt, k, level), DRIVER_KNN_ROWS + 1
-    )
-    if kept.num_rows > DRIVER_KNN_ROWS:
-        return _iterate(spark.createDataFrame(qt), pts, k, resolution)
     kept = kept.filter(
         _prune(kept["_qi"].to_numpy(), kept["_d"].to_numpy(), k)
     )
@@ -776,9 +896,7 @@ def _knn_broadcast(
     exact = spark.createDataFrame(pa.table({
         "_qlat": qt["_qlat"].take(qi), "_qlng": qt["_qlng"].take(qi),
         "_plat": kept["_plat"], "_plng": kept["_plng"],
-    })).select(haversine_km(
-        F.col("_qlat"), F.col("_qlng"), F.col("_plat"), F.col("_plng")
-    ))
+    })).selectExpr(_HAVERSINE_SQL)
     dist = np.array([r[0] for r in exact.collect()], dtype=np.float64)
     # rows rank per query id, so copies of one id rank together as in
     # the ring round's window: each id maps to its first position in qt
@@ -806,20 +924,13 @@ def _knn_broadcast(
         )
     top = ok_q[qs] & (rank <= k)
     sel = order[top]
-    done = spark.createDataFrame(pa.table({
+    done = pa.table({
         "_qid": qt["_qid"].take(qs[top]),
         "_pid": kept["_pid"].take(sel),
         "_dist": dist[sel],
         "_rank": rank[top].astype(np.int32),
-    }))
-    left = qt.filter(pa.array(~ok_q[first]))
-    if left.num_rows == 0:
-        return done
-    if left.num_rows <= STRAGGLER_QUERIES:
-        return done.unionByName(_knn_broadcast(left, pts, k, resolution))
-    return done.unionByName(
-        _iterate(spark.createDataFrame(left), pts, k, resolution)
-    )
+    })
+    return done, qt.filter(pa.array(~ok_q[first]))
 
 
 def _iterate(
@@ -909,9 +1020,11 @@ def radius_join(
     haversine ``radius_km + SLACK_KM`` (a prune only: it never drops a
     pair the exact filter keeps), then the JVM's rounded ``haversine_km
     <= radius_km`` filter over the pass's rows. No point-side shuffle
-    and no BroadcastHashJoin; output streams straight from the pass.
-    The query side is declared-small (<= max_queries, enforced by a
-    bounded limit-collect, same guardrail discipline as pip_join).
+    and no BroadcastHashJoin; output streams straight from the pass. A
+    small point side runs that pass on the driver (see ``probe_pass``),
+    so the call is then eager. The query side is declared-small (<=
+    max_queries, enforced by a bounded limit-collect, same guardrail
+    discipline as pip_join).
     """
     from pyspark.sql.types import StructType
 
@@ -970,14 +1083,10 @@ def radius_join(
         refine,
         StructType(q.schema.fields + pts.schema.fields),
     )
-    dist = F.round(
-        haversine_km(
-            F.col("_qlat"), F.col("_qlng"), F.col("_plat"), F.col("_plng")
-        ),
-        6,
-    )
     return (
-        cand.withColumn("_dist", dist)
+        cand.selectExpr(
+            "_qid", "_pid", f"round({_HAVERSINE_SQL}, 6) AS _dist"
+        )
         .filter(F.col("_dist") <= F.lit(float(radius_km)))
         .select(
             F.col("_qid").alias(query_id),

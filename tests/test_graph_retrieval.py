@@ -319,9 +319,11 @@ class TestRadiusJoin:
         with pytest.raises(ValueError):
             joins.radius_join(q, p, radius_km=5.0, max_queries=0)
 
-    def test_no_point_side_shuffle(self, spark):
+    def test_no_point_side_shuffle(self, spark, monkeypatch):
         """The 100 TB contract: the plan contains no Exchange on the
-        point side — one probe pass (a single Python node) + filter."""
+        point side — one probe pass (a single Python node) + filter. The
+        row bound at 0 keeps the pass off the driver."""
+        monkeypatch.setattr(joins, "DRIVER_POINT_ROWS", 0)
         q = spark.createDataFrame(
             [(0, 40.75, -73.99)], "query_id long, lat double, lng double"
         )

@@ -389,6 +389,14 @@ def _queries(coords) -> pd.DataFrame:
     })
 
 
+# points with a null or NaN coordinate: never a join candidate
+_BAD_POINTS = pd.DataFrame({
+    "point_id": np.arange(4, dtype=np.int64) + 10**9,
+    "lat": [None, np.nan, 40.0, 0.0],
+    "lng": [-74.0, -74.0, None, np.nan],
+})
+
+
 def _calls(monkeypatch, name: str) -> list:
     """Record the calls of joins.<name>, still running it."""
     seen = []
@@ -505,12 +513,7 @@ def test_fused_null_nan_point_coordinates(spark, data, monkeypatch):
     """Points with a null or NaN coordinate are never neighbors, neither
     for certified queries nor for the every-point straggler pass."""
     pts, pool, _ = data
-    bad = pd.DataFrame({
-        "point_id": np.arange(4, dtype=np.int64) + 10**9,
-        "lat": [None, np.nan, 40.0, 0.0],
-        "lng": [-74.0, -74.0, None, np.nan],
-    })
-    mixed = pd.concat([pts, bad], ignore_index=True)
+    mixed = pd.concat([pts, _BAD_POINTS], ignore_index=True)
     stragglers = _calls(monkeypatch, "_globe_level")
     _fused_vs_reference(spark, mixed, pool.iloc[:33], K, RES)
     assert stragglers, "some of these queries are stragglers"
@@ -550,7 +553,7 @@ def test_fused_driver_row_bound(spark, data, monkeypatch):
     qt = joins._collect_queries(q, 1000)
     p = joins._point_side(pts_df, "point_id", "lat", "lng")
     level = joins._disk_level(qt, RES, joins.CERT_RINGS)
-    n = driver.bounded_collect(joins._knn_candidates(p, qt, K, level), 10**6).num_rows
+    n = joins._knn_candidates(p, qt, K, level, joins._driver_points(p)).num_rows
     want = _duck_knn(pts, queries, K)
     for bound, iterated in ((n, 0), (n - 1, 1)):
         monkeypatch.setattr(joins, "DRIVER_KNN_ROWS", bound)
@@ -671,16 +674,11 @@ def test_radius_res0_near_antipodal_matches_duckdb(spark, r, max_ring):
 def test_radius_null_nan_point_coordinates(spark, data):
     """Points with a null or NaN coordinate give no row."""
     pts, pool, _ = data
-    bad = pd.DataFrame({
-        "point_id": np.arange(4, dtype=np.int64) + 10**9,
-        "lat": [None, np.nan, 40.0, 0.0],
-        "lng": [-74.0, -74.0, None, np.nan],
-    })
-    mixed = pd.concat([pts, bad], ignore_index=True)
+    mixed = pd.concat([pts, _BAD_POINTS], ignore_index=True)
     queries = pd.concat([pool.iloc[:10], _queries([(40.0, -74.0), (0.0, 0.0)])])
     got = _radius_rows(spark, mixed, queries, 900.0)
     assert got == _duck_radius(mixed.dropna(), queries, 900.0)
-    assert not {p for _, p, _ in got} & set(bad["point_id"])
+    assert not {p for _, p, _ in got} & set(_BAD_POINTS["point_id"])
 
 
 def test_radius_empty_query_side(spark, data, jobs_in):
@@ -693,3 +691,134 @@ def test_radius_empty_query_side(spark, data, jobs_in):
     assert (rows, collect_jobs) == ([], 0)
     one = joins.radius_join(spark.createDataFrame(pool.iloc[:1]), pts_df, 50.0)
     assert out.dtypes == one.dtypes
+
+
+# -- placement: a small point side probes on the driver ---------------------
+
+def _placement_ops(spark, pdf, pool):
+    """pip, radius and kNN (an every-point side of 8 queries and a
+    certificate side of 33) over the point frame ``pdf``; the polygons
+    and radius queries include some across the antimeridian."""
+    ring = lambda y0, x0, y1, x1: [  # noqa: E731
+        {"lat": y0, "lng": x0}, {"lat": y0, "lng": x1},
+        {"lat": y1, "lng": x1}, {"lat": y1, "lng": x0}, {"lat": y0, "lng": x0},
+    ]
+    polys = spark.createDataFrame(
+        [
+            ("r0", [ring(-60.0, -170.0, -30.0, -130.0)]),
+            ("r1", [ring(0.0, 0.0, 30.0, 40.0)]),
+            ("am", [ring(-20.0, 170.0, 20.0, -170.0)]),
+        ],
+        "poly_id string, geometry array<array<struct<lat:double,lng:double>>>",
+    )
+    rq = spark.createDataFrame(pd.concat([
+        pool.iloc[:10], _queries([(10.0, 180.0), (-35.0, -179.99), (40.0, -74.0)]),
+    ]))
+    return {
+        "pip": lambda: joins.pip_join(pdf, polys).select("point_id", "poly_id"),
+        "radius": lambda: joins.radius_join(rq, pdf, radius_km=800.0),
+        "knn8": lambda: joins.knn_join(
+            spark.createDataFrame(pool.iloc[:8]), pdf, k=K, resolution=RES),
+        "knn33": lambda: joins.knn_join(
+            spark.createDataFrame(pool.iloc[:33]), pdf, k=K, resolution=RES),
+    }
+
+
+def test_placement_rows_equal_at_the_row_bound(spark, data, monkeypatch):
+    """With DRIVER_POINT_ROWS at n - 1 the n points (null/NaN,
+    antimeridian and pole points among them) run the distributed pass;
+    at n and n + 1 they run on the driver. Every join's rows, dtypes and
+    point order are the same, and the kNN rows are DuckDB's."""
+    pts, pool, _ = data
+    mixed = pd.concat([pts, _BAD_POINTS], ignore_index=True)
+    n = len(mixed)
+    pdf = spark.createDataFrame(mixed, "point_id long, lat double, lng double")
+    ops = _placement_ops(spark, pdf, pool)
+    got = {}
+    for bound in (n - 1, n, n + 1):
+        monkeypatch.setattr(joins, "DRIVER_POINT_ROWS", bound)
+        mapped = _calls(monkeypatch, "_probe_mapped")
+        outs = {name: op() for name, op in ops.items()}
+        got[bound] = (
+            {name: [tuple(r) for r in out.collect()] for name, out in outs.items()},
+            {name: out.dtypes for name, out in outs.items()},
+        )
+        # 4 joins, the 33-query kNN with its straggler round
+        assert len(mapped) == (5 if bound < n else 0), bound
+    assert got[n - 1] == got[n] == got[n + 1]
+    rows = got[n][0]
+    # pip keeps the points' order
+    assert rows["pip"] == sorted(rows["pip"], key=lambda r: mixed.index[
+        mixed["point_id"] == r[0]][0])
+    assert all(rows[name] for name in rows)
+    assert not {r[1] for r in rows["radius"]} & set(_BAD_POINTS["point_id"])
+    located = mixed.dropna()
+    _assert_knn(rows["knn33"], located, _duck_knn(located, pool.iloc[:33], K))
+
+
+def test_placement_empty_and_unsized_point_sides(spark, data, monkeypatch):
+    """An empty point side answers the same typed empty rows on the
+    driver as in the distributed pass; a frame built from Python rows
+    reports Long.MaxValue bytes, so it is never collected."""
+    pts, pool, _ = data
+    empty = spark.createDataFrame(
+        pts, "point_id long, lat double, lng double"
+    ).limit(0)
+    ops = _placement_ops(spark, empty, pool)
+    got = {}
+    for byte_bound in (joins.DRIVER_POINT_BYTES, -1):
+        monkeypatch.setattr(joins, "DRIVER_POINT_BYTES", byte_bound)
+        assert (joins._driver_points(empty) is None) == (byte_bound < 0)
+        outs = {name: op() for name, op in ops.items()}
+        got[byte_bound] = {
+            name: (out.collect(), out.dtypes) for name, out in outs.items()
+        }
+    assert got[-1] == got[joins.DRIVER_POINT_BYTES]
+    assert all(rows == [] for rows, _ in got[-1].values())
+    monkeypatch.setattr(joins, "DRIVER_POINT_BYTES", 8 << 20)
+    rows = spark.createDataFrame([(1, 40.0, -74.0)], ["point_id", "lat", "lng"])
+    assert joins._driver_points(rows) is None
+
+
+def test_knn_stragglers_reuse_the_collected_points(spark, jobs_in, monkeypatch):
+    """32 hub queries certify and 8 an ocean away take the every-point
+    round, which reuses the point table the first round collected: the
+    call runs 2 jobs (the query and point collects), its answer, one
+    local relation, none."""
+    rng = np.random.default_rng(8)
+    points = pd.DataFrame({
+        "point_id": np.arange(400, dtype=np.int64),
+        "lat": rng.uniform(39.0, 41.0, 400),
+        "lng": rng.uniform(-75.0, -73.0, 400),
+    })
+    queries = _queries(np.vstack([
+        np.column_stack([rng.uniform(39.5, 40.5, 32), rng.uniform(-74.5, -73.5, 32)]),
+        np.column_stack([rng.uniform(-50.0, -40.0, 8), rng.uniform(-30.0, 30.0, 8)]),
+    ]))
+    pdf = spark.createDataFrame(points)
+    q = spark.createDataFrame(queries)
+    stragglers = _calls(monkeypatch, "_globe_level")
+    out, call_jobs = jobs_in(lambda: joins.knn_join(q, pdf, k=K, resolution=RES))
+    rows, collect_jobs = jobs_in(out.collect)
+    assert [c[0] for c in stragglers] == [8]
+    assert (call_jobs, collect_jobs) == (2, 0)
+    _assert_knn([tuple(r) for r in rows], points, _duck_knn(points, queries, K))
+
+
+def test_haversine_sql_text_equals_the_column_build(spark):
+    """The joins' SQL-text haversine analyzes to the same expression as
+    the public Column-built ``haversine_km``."""
+    df = spark.createDataFrame(
+        [(1.0, 2.0, 3.0, 4.0)], "_qlat double, _qlng double, _plat double, _plng double"
+    )
+
+    def analyzed(col):
+        plan = df.select(col.alias("d"))._jdf.queryExecution().analyzed()
+        return plan.projectList().head().child()
+
+    text = analyzed(F.expr(joins._HAVERSINE_SQL))
+    built = analyzed(joins.haversine_km(
+        F.col("_qlat"), F.col("_qlng"), F.col("_plat"), F.col("_plng")
+    ))
+    assert text.semanticEquals(built)
+    assert "decimal" not in text.dataType().simpleString()

@@ -63,7 +63,9 @@ def test_filter_and_pruning_push_through_geo_to_h3(spark):
     assert "value" not in m.group(1) and "user_id" not in m.group(1), plan
 
 
-def test_broadcast_pip_join_is_one_fused_pass_no_point_shuffle(spark):
+def test_broadcast_pip_join_is_one_fused_pass_no_point_shuffle(spark, monkeypatch):
+    # the distributed placement (a small point side probes on the driver)
+    monkeypatch.setattr(joins, "DRIVER_POINT_ROWS", 0)
     pts = spark.createDataFrame([(1, 40.0, -74.0)], ["id", "lat", "lng"])
     pj = joins.pip_join(pts, datagen.rect_polygons(spark, E._RECTS), 4)
     plan = _plan(pj)

@@ -378,6 +378,44 @@ class TestLatticeNeighbors:
         assert (counts == np.where(ix.is_pentagon(cells), 5, 6)).all()
 
 
+class TestLatticeDisks:
+    """The one-pass lattice disks and rings equal the BFS's. A lattice
+    disk holding a pentagon, or wrapping past its faces, is wrong; those
+    owners must take the BFS."""
+
+    @staticmethod
+    def _assert_equals_bfs(cells, k):
+        got = tv.grid_disk_distances_grouped(cells, k)
+        want = tv._disk_bfs(cells, k)
+        for g, w in zip(got, want):
+            assert np.array_equal(g, w)
+        ring = want[2] == k
+        o, c = tv.grid_ring_grouped(cells, k)
+        assert np.array_equal(o, want[0][ring])
+        assert np.array_equal(c, want[1][ring])
+
+    @pytest.mark.parametrize("res", range(16))
+    def test_full_sphere_sample(self, res):
+        rng = np.random.default_rng(2000 + res)
+        cells = _sphere_cells(rng, 100, res)
+        for k in (0, 1, 2, 4, 8):
+            self._assert_equals_bfs(cells, k)
+
+    @pytest.mark.parametrize("res", range(16))
+    def test_every_center_near_a_pentagon(self, res):
+        """Every center within k+3 of each pentagon. The deleted wedge
+        bends the lattice alike at every resolution of one class (odd
+        or even) once a disk reaches no second pentagon, so the larger
+        disks run at the coarse resolutions only: k = 4 at res 0-5 and
+        k = 8 (the kNN certificate's disk) at res 0-1, where disks
+        also wrap past their faces."""
+        for k in (0, 1, 2, 4, 8):
+            if k == 4 and res > 5 or k == 8 and res > 1:
+                continue
+            _, near = tv.grid_disk_grouped(_pentagons(res), k + 3)
+            self._assert_equals_bfs(np.unique(near), k)
+
+
 def _star(lat, lng, r_out, r_in, n=10):
     ang = np.arange(n) * 2 * np.pi / n + 0.3
     rad = np.where(np.arange(n) % 2 == 0, r_out, r_in)
