@@ -14,7 +14,8 @@ a local relation and no Python worker task starts, so small ``pip_join``
 and ``radius_join`` calls are eager. A larger side, a side past the row
 bound, and any frame the optimizer cannot size (one built from Python
 rows reports Long.MaxValue) runs the body as one ``mapInArrow`` pass
-whose cells ship in a broadcast.
+whose cells ship in a broadcast, and so does a driver pass whose output
+grows past ``DRIVER_PASS_ROWS`` rows.
 
 * ``pip_join``: exact point-in-polygon join. The levels are the H3
   polyfill **cover** cells (centroid-inside ∪ boundary band, a lossless
@@ -67,10 +68,11 @@ BROADCAST_QUERIES = 1024
 STRAGGLER_QUERIES = 32
 # disk radius of the broadcast certificate round
 CERT_RINGS = 8
-# rows the certificate round may bring to the driver (each task keeps
-# about k per query); a call that would bring more takes the iterative
-# rounds instead
-DRIVER_KNN_ROWS = 1 << 18
+# rows a probe pass may hold on the driver: the kNN certificate round's
+# candidates (each task keeps about k per query; a call that would bring
+# more takes the iterative rounds instead), and the output of a
+# driver-placed pass (past it the pass runs distributed instead)
+DRIVER_PASS_ROWS = 1 << 18
 # NumPy distances prune kNN and radius candidates only within this slack
 # of a k-th distance or of the radius; it must exceed twice the worst
 # difference between _np_haversine_km and the JVM's haversine_km
@@ -81,22 +83,15 @@ SLACK_KM = 1e-2
 PAIR_CHUNK = 1 << 20
 # a point side probe_pass runs on the driver: optimizer estimate under
 # DRIVER_POINT_BYTES (read with no job), then one bounded collect of at
-# most DRIVER_POINT_ROWS rows (more rows drop the collect)
-DRIVER_POINT_BYTES = 8 << 20
-DRIVER_POINT_ROWS = 1 << 18
+# most DRIVER_POINT_ROWS rows (more rows drop the collect). The row
+# bound is the measured crossover: on 4 cores spatial_join's three joins
+# ran faster on the driver at 2^15 parquet points (one file or four),
+# even at 2^16 in one file, and slower at 2^16 in four files and from
+# 2^17; 2^15 three-column rows estimate at 0.8 MiB (parquet) and 1 MiB
+# (in memory)
+DRIVER_POINT_BYTES = 1 << 20
+DRIVER_POINT_ROWS = 1 << 15
 _OUT = ("_qid", "_pid", "_dist", "_rank")
-# haversine_km over the joins' internal (_qlat, _qlng, _plat, _plng)
-# columns as SQL text: one parse, where the Column build costs one py4j
-# call per operator (the D suffix keeps the literal a double, not a
-# decimal)
-_HAVERSINE_SQL = (
-    f"{2.0 * EARTH_RADIUS_KM!r}D * asin(sqrt("
-    "sin((radians(_plat) - radians(_qlat)) / 2)"
-    " * sin((radians(_plat) - radians(_qlat)) / 2)"
-    " + cos(radians(_qlat)) * cos(radians(_plat))"
-    " * sin((radians(_plng) - radians(_qlng)) / 2)"
-    " * sin((radians(_plng) - radians(_qlng)) / 2)))"
-)
 
 
 def haversine_km(lat1: Column, lng1: Column, lat2: Column, lng2: Column) -> Column:
@@ -110,6 +105,14 @@ def haversine_km(lat1: Column, lng1: Column, lat2: Column, lng2: Column) -> Colu
         + F.cos(rl1) * F.cos(rl2) * F.sin(dlng / 2) * F.sin(dlng / 2)
     )
     return F.lit(2.0 * EARTH_RADIUS_KM) * F.asin(F.sqrt(a))
+
+
+def _hav() -> Column:
+    """``haversine_km`` over the joins' internal (_qlat, _qlng, _plat,
+    _plng) columns."""
+    return haversine_km(
+        F.col("_qlat"), F.col("_qlng"), F.col("_plat"), F.col("_plng")
+    )
 
 
 def _avg_hex_area_km2(res: int) -> float:
@@ -334,13 +337,14 @@ def probe_pass(
     worker. Any other runs as one ``mapInArrow`` pass whose ``levels``
     and ``data`` ship in one broadcast, captured by the returned frame's
     closure: the ContextCleaner reclaims it once the caller drops the
-    frame."""
+    frame. So does a driver pass whose output passes
+    ``DRIVER_PASS_ROWS`` rows (a wide radius over dense points): its
+    rows are dropped and the output streams from the tasks instead."""
     local = _driver_points(points)
     if local is not None:
-        return points.sparkSession.createDataFrame(
-            _probe_local(local, lat, lng, levels, data, refine, schema),
-            schema,
-        )
+        out = _probe_local(local, lat, lng, levels, data, refine, schema)
+        if out.num_rows <= DRIVER_PASS_ROWS:
+            return points.sparkSession.createDataFrame(out, schema)
     return _probe_mapped(points, lat, lng, levels, data, refine, schema)
 
 
@@ -405,11 +409,19 @@ def _probe_local(
     table: pa.Table, lat: str, lng: str, levels: list, data, refine, schema
 ) -> pa.Table:
     """``probe_pass``'s body over a collected point ``table`` on the
-    driver: the pass's rows as one Arrow table of ``schema``."""
+    driver: the pass's rows as one Arrow table of ``schema``. It stops
+    once it holds more than ``DRIVER_PASS_ROWS`` rows, as a bounded
+    collect would, so the driver never holds the output of a pass that
+    does not fit."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     fn = _prober(lat, lng, levels, refine)
-    out = list(fn(levels, data, table.to_batches()))
+    out, n = [], 0
+    for b in fn(levels, data, table.to_batches()):
+        out.append(b)
+        n += b.num_rows
+        if n > DRIVER_PASS_ROWS:
+            break
     return (
         pa.Table.from_batches(out) if out
         else to_arrow_schema(schema).empty_table()
@@ -573,29 +585,21 @@ def knn_join(
 def _query_side(
     queries: DataFrame, query_id: str, q_lat: str, q_lng: str
 ) -> DataFrame:
-    return queries.selectExpr(
-        f"{_sql_ref(query_id)} AS _qid",
-        f"CAST({_sql_ref(q_lat)} AS DOUBLE) AS _qlat",
-        f"CAST({_sql_ref(q_lng)} AS DOUBLE) AS _qlng",
+    return queries.select(
+        F.col(query_id).alias("_qid"),
+        F.col(q_lat).cast("double").alias("_qlat"),
+        F.col(q_lng).cast("double").alias("_qlng"),
     )
 
 
 def _point_side(
     points: DataFrame, point_id: str, p_lat: str, p_lng: str
 ) -> DataFrame:
-    return points.selectExpr(
-        f"{_sql_ref(point_id)} AS _pid",
-        f"CAST({_sql_ref(p_lat)} AS DOUBLE) AS _plat",
-        f"CAST({_sql_ref(p_lng)} AS DOUBLE) AS _plng",
+    return points.select(
+        F.col(point_id).alias("_pid"),
+        F.col(p_lat).cast("double").alias("_plat"),
+        F.col(p_lng).cast("double").alias("_plng"),
     )
-
-
-def _sql_ref(name: str) -> str:
-    """``name`` as SQL text that resolves as ``F.col(name)`` does: each
-    dot-separated part quoted, unless the caller quoted it already."""
-    if "`" in name:
-        return name
-    return ".".join(f"`{part}`" for part in name.split("."))
 
 
 def _no_rows(
@@ -644,7 +648,7 @@ def _top_k(cand: DataFrame, k: int) -> DataFrame:
         F.col("_dist").asc(), F.col("_pid").asc()
     )
     return (
-        cand.withColumn("_dist", F.expr(_HAVERSINE_SQL))
+        cand.withColumn("_dist", _hav())
         .withColumn("_rank", F.row_number().over(w))
         .filter(F.col("_rank") <= k)
     )
@@ -790,9 +794,10 @@ def _knn_candidates(
     over the (_pid, _plat, _plng) points against ``level``, whose owners
     are positions in ``qt``, run over ``local`` (the point side
     ``_driver_points`` brought up) or else as a ``mapInArrow`` pass
-    read by one bounded collect of ``DRIVER_KNN_ROWS`` + 1 rows. Each
-    slice's matches are scored with ``_np_haversine_km``; each task
-    keeps, per query, the rows ``_prune`` keeps. Rows: (_qi, the
+    read by one bounded collect; either way at most ``DRIVER_PASS_ROWS``
+    + 1 rows come back. Each slice's matches are scored with
+    ``_np_haversine_km``; each task keeps, per query, the rows
+    ``_prune`` keeps. Rows: (_qi, the
     query's position in ``qt``; _pid, _plat, _plng; _d, the NumPy
     distance)."""
     from pyspark.sql.types import (
@@ -827,7 +832,7 @@ def _knn_candidates(
     )
     if local is not None:
         return _probe_local(local, *args)
-    return bounded_collect(_probe_mapped(pts, *args), DRIVER_KNN_ROWS + 1)
+    return bounded_collect(_probe_mapped(pts, *args), DRIVER_PASS_ROWS + 1)
 
 
 def _knn_broadcast(
@@ -837,7 +842,7 @@ def _knn_broadcast(
     """Broadcast strategy for a collected query side ``qt`` over the
     (_pid, _plat, _plng) points, ``local`` when ``_driver_points``
     brought them up. Each round is one ``_knn_candidates`` pass, whose
-    kept rows are on the driver (past ``DRIVER_KNN_ROWS`` the round's
+    kept rows are on the driver (past ``DRIVER_PASS_ROWS`` the round's
     queries take the iterative rounds instead), ranked by ``_knn_rank``.
 
     A side of at most ``STRAGGLER_QUERIES`` owns every res-0 cell
@@ -864,7 +869,7 @@ def _knn_broadcast(
             else _disk_level(qt, resolution, CERT_RINGS)
         )
         kept = _knn_candidates(pts, qt, k, level, local)
-        if kept.num_rows > DRIVER_KNN_ROWS:
+        if kept.num_rows > DRIVER_PASS_ROWS:
             rest = qt
             break
         done, qt = _knn_rank(spark, qt, kept, k, resolution, exhaustive)
@@ -896,7 +901,7 @@ def _knn_rank(
     exact = spark.createDataFrame(pa.table({
         "_qlat": qt["_qlat"].take(qi), "_qlng": qt["_qlng"].take(qi),
         "_plat": kept["_plat"], "_plng": kept["_plng"],
-    })).selectExpr(_HAVERSINE_SQL)
+    })).select(_hav())
     dist = np.array([r[0] for r in exact.collect()], dtype=np.float64)
     # rows rank per query id, so copies of one id rank together as in
     # the ring round's window: each id maps to its first position in qt
@@ -1022,9 +1027,11 @@ def radius_join(
     <= radius_km`` filter over the pass's rows. No point-side shuffle
     and no BroadcastHashJoin; output streams straight from the pass. A
     small point side runs that pass on the driver (see ``probe_pass``),
-    so the call is then eager. The query side is declared-small (<=
-    max_queries, enforced by a bounded limit-collect, same guardrail
-    discipline as pip_join).
+    so the call is then eager and its output, at most
+    ``DRIVER_PASS_ROWS`` candidate pairs, is a local relation; a pass
+    that would make more runs distributed instead. The query side is
+    declared-small (<= max_queries, enforced by a bounded limit-collect,
+    same guardrail discipline as pip_join).
     """
     from pyspark.sql.types import StructType
 
@@ -1084,8 +1091,8 @@ def radius_join(
         StructType(q.schema.fields + pts.schema.fields),
     )
     return (
-        cand.selectExpr(
-            "_qid", "_pid", f"round({_HAVERSINE_SQL}, 6) AS _dist"
+        cand.select(
+            "_qid", "_pid", F.round(_hav(), 6).alias("_dist")
         )
         .filter(F.col("_dist") <= F.lit(float(radius_km)))
         .select(

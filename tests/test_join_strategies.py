@@ -10,7 +10,10 @@ points at the poles, across the antimeridian, at a pentagon center and
 with duplicate coordinates under different ids. The certificate
 round's fused pass is also checked directly, against _knn_iterative and
 DuckDB, on sides built to stress its NumPy prune, its certificate and
-its driver-row bound, and its job count is gated. The join guard must
+its driver-row bound, and its job count is gated. The DuckDB checks at
+the strategy thresholds and of radius_join, the driver-row bound and
+the job gate run under both point-side placements (the probe pass on
+the driver, and the distributed mapInArrow pass). The join guard must
 also stay one job and leave the session conf alone when many threads
 share one SparkSession.
 """
@@ -148,6 +151,18 @@ def _assert_knn(got_rows, points: pd.DataFrame, want: dict) -> None:
                 assert gp in {p for p, _ in w}, (q, gp, wp)
 
 
+def _placements(monkeypatch):
+    """Yield "driver", then "distributed", with every point side's probe
+    pass forced to that placement: the default byte bound (the small
+    frames here probe on the driver), then -1, which no size passes
+    (the mapInArrow pass)."""
+    default = joins.DRIVER_POINT_BYTES
+    for name, bound in (("driver", default), ("distributed", -1)):
+        monkeypatch.setattr(joins, "DRIVER_POINT_BYTES", bound)
+        yield name
+    monkeypatch.setattr(joins, "DRIVER_POINT_BYTES", default)
+
+
 @pytest.fixture(scope="module")
 def data(spark):
     pts = _points()
@@ -163,12 +178,12 @@ def _knn_rows(spark, pts_df, queries: pd.DataFrame):
 
 
 @pytest.mark.parametrize("n", [31, 32, 33, 1023, 1024, 1025])
-def test_knn_threshold_sides_match_duckdb(spark, data, n):
+def test_knn_threshold_sides_match_duckdb(spark, data, n, monkeypatch):
     pts, pool, pts_df = data
     queries = pool.iloc[:n]
-    _assert_knn(
-        _knn_rows(spark, pts_df, queries), pts, _duck_knn(pts, queries, K)
-    )
+    want = _duck_knn(pts, queries, K)
+    for _ in _placements(monkeypatch):
+        _assert_knn(_knn_rows(spark, pts_df, queries), pts, want)
 
 
 def test_each_strategy_matches_duckdb(spark, data):
@@ -544,29 +559,42 @@ def test_fused_all_straggler_sides(spark, monkeypatch, n, path, arg):
 
 
 def test_fused_driver_row_bound(spark, data, monkeypatch):
-    """At most DRIVER_KNN_ROWS candidate rows reach the driver: a call
+    """At most DRIVER_PASS_ROWS candidate rows reach the driver, from
+    the driver pass or the distributed one's bounded collect: a call
     that would bring one more takes the iterative rounds, with the same
-    answer."""
+    answer, on both placements."""
     pts, pool, pts_df = data
     queries = pool.iloc[:33]
     q = joins._query_side(spark.createDataFrame(queries), "query_id", "lat", "lng")
     qt = joins._collect_queries(q, 1000)
     p = joins._point_side(pts_df, "point_id", "lat", "lng")
     level = joins._disk_level(qt, RES, joins.CERT_RINGS)
-    n = joins._knn_candidates(p, qt, K, level, joins._driver_points(p)).num_rows
     want = _duck_knn(pts, queries, K)
-    for bound, iterated in ((n, 0), (n - 1, 1)):
-        monkeypatch.setattr(joins, "DRIVER_KNN_ROWS", bound)
-        seen = _calls(monkeypatch, "_iterate")
-        _assert_knn(_knn_rows(spark, pts_df, queries), pts, want)
-        assert len(seen) == iterated, bound
+    default = joins.DRIVER_PASS_ROWS
+    for placement in _placements(monkeypatch):
+        monkeypatch.setattr(joins, "DRIVER_PASS_ROWS", default)
+        local = joins._driver_points(p)
+        assert (local is None) == (placement == "distributed")
+        n = joins._knn_candidates(p, qt, K, level, local).num_rows
+        for bound, iterated in ((n, 0), (n - 1, 1)):
+            monkeypatch.setattr(joins, "DRIVER_PASS_ROWS", bound)
+            seen = _calls(monkeypatch, "_iterate")
+            _assert_knn(_knn_rows(spark, pts_df, queries), pts, want)
+            assert len(seen) == iterated, (placement, bound)
 
 
-def test_knn_certificate_round_jobs(spark, jobs_in):
+def _cached_ids(spark) -> set:
+    """Ids of the RDDs the session holds persisted."""
+    ids = spark.sparkContext._jsc.sc().getPersistentRDDs().keys().mkString(",")
+    return {int(i) for i in ids.split(",") if i}
+
+
+def test_knn_certificate_round_jobs(spark, jobs_in, monkeypatch):
     """40 hub queries over 20k points: the certificate round is the
-    query collect and one bounded collect of the fused pass (no persist,
-    no checkpoint, no exchange), and its answer is a local relation, so
-    collecting it runs no job."""
+    query collect and one bounded collect, of the point side on the
+    driver placement or of the fused pass on the distributed one (no
+    persist, no checkpoint, no exchange), and its answer is a local
+    relation, so collecting it runs no job."""
     rng = np.random.default_rng(40)
     hubs = np.array([(40.7, -74.0), (51.5, -0.1), (35.7, 139.7), (-33.9, 151.2)])
     h = rng.integers(0, 4, 20_000)
@@ -579,12 +607,20 @@ def test_knn_certificate_round_jobs(spark, jobs_in):
     queries = _queries(hubs[qh] + rng.normal(0.0, 0.1, (40, 2)))
     pts_df = spark.createDataFrame(points)
     q = spark.createDataFrame(queries)
-    cached = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    out, call_jobs = jobs_in(lambda: joins.knn_join(q, pts_df, k=5, resolution=6))
-    rows, collect_jobs = jobs_in(out.collect)
-    assert (call_jobs, collect_jobs) == (2, 0)
-    assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == cached
-    _assert_knn([tuple(r) for r in rows], points, _duck_knn(points, queries, 5))
+    cached = _cached_ids(spark)
+    want = _duck_knn(points, queries, 5)
+    for placement in _placements(monkeypatch):
+        mapped = _calls(monkeypatch, "_probe_mapped")
+        out, call_jobs = jobs_in(
+            lambda: joins.knn_join(q, pts_df, k=5, resolution=6)
+        )
+        rows, collect_jobs = jobs_in(out.collect)
+        assert (call_jobs, collect_jobs) == (2, 0), placement
+        assert len(mapped) == (placement == "distributed"), placement
+        # nothing the call persisted stays; the ContextCleaner may
+        # meanwhile reclaim what earlier tests left
+        assert _cached_ids(spark) <= cached, placement
+        _assert_knn([tuple(r) for r in rows], points, want)
 
 
 # -- radius_join: the NumPy prune never drops a row the JVM filter keeps --
@@ -615,7 +651,7 @@ def _radius_rows(spark, points: pd.DataFrame, queries: pd.DataFrame, r, **kw):
     return {tuple(row) for row in out.collect()}
 
 
-def test_radius_boundary_matches_duckdb(spark):
+def test_radius_boundary_matches_duckdb(spark, monkeypatch):
     """Points north of the query whose JVM distance rounds (down) to
     exactly r, and up to r + 1e-6: the first are in the answer, the
     second are not, as in DuckDB. A NumPy prune at r instead of
@@ -635,15 +671,17 @@ def test_radius_boundary_matches_duckdb(spark):
         "lat": lats, "lng": np.full(400, lng0),
     })
     queries = _queries([(lat0, lng0)])
-    got = _radius_rows(spark, points, queries, r)
-    assert got == _duck_radius(points, queries, r)
-    ids = {p for _, p, _ in got}
+    want = _duck_radius(points, queries, r)
+    for placement in _placements(monkeypatch):
+        got = _radius_rows(spark, points, queries, r)
+        assert got == want, placement
+    ids = {p for _, p, _ in want}
     assert i in ids and set(at.tolist()) <= ids
     assert not ids & set(past.tolist())
 
 
 @pytest.mark.parametrize("r, max_ring", [(5000.0, 8), (20015.0, 16)])
-def test_radius_res0_near_antipodal_matches_duckdb(spark, r, max_ring):
+def test_radius_res0_near_antipodal_matches_duckdb(spark, r, max_ring, monkeypatch):
     """Radii of thousands of km take res-0 disks, whose candidates reach
     points within meters of each query's antipode; at 20,015 km (just
     under pi * R) some of those are in the answer and some are not."""
@@ -665,20 +703,24 @@ def test_radius_res0_near_antipodal_matches_duckdb(spark, r, max_ring):
         "lat": coords[:, 0], "lng": coords[:, 1],
     })
     queries = _queries(qs)
-    got = _radius_rows(spark, points, queries, r, max_ring=max_ring)
     want = _duck_radius(points, queries, r)
-    assert got == want
+    for placement in _placements(monkeypatch):
+        got = _radius_rows(spark, points, queries, r, max_ring=max_ring)
+        assert got == want, placement
     assert len(want) > 3
 
 
-def test_radius_null_nan_point_coordinates(spark, data):
-    """Points with a null or NaN coordinate give no row."""
+def test_radius_null_nan_point_coordinates(spark, data, monkeypatch):
+    """Points with a null or NaN coordinate give no row, on either
+    placement."""
     pts, pool, _ = data
     mixed = pd.concat([pts, _BAD_POINTS], ignore_index=True)
     queries = pd.concat([pool.iloc[:10], _queries([(40.0, -74.0), (0.0, 0.0)])])
-    got = _radius_rows(spark, mixed, queries, 900.0)
-    assert got == _duck_radius(mixed.dropna(), queries, 900.0)
-    assert not {p for _, p, _ in got} & set(_BAD_POINTS["point_id"])
+    want = _duck_radius(mixed.dropna(), queries, 900.0)
+    assert not {p for _, p, _ in want} & set(_BAD_POINTS["point_id"])
+    for placement in _placements(monkeypatch):
+        got = _radius_rows(spark, mixed, queries, 900.0)
+        assert got == want, placement
 
 
 def test_radius_empty_query_side(spark, data, jobs_in):
@@ -775,9 +817,70 @@ def test_placement_empty_and_unsized_point_sides(spark, data, monkeypatch):
         }
     assert got[-1] == got[joins.DRIVER_POINT_BYTES]
     assert all(rows == [] for rows, _ in got[-1].values())
-    monkeypatch.setattr(joins, "DRIVER_POINT_BYTES", 8 << 20)
+    monkeypatch.setattr(joins, "DRIVER_POINT_BYTES", 1 << 62)
     rows = spark.createDataFrame([(1, 40.0, -74.0)], ["point_id", "lat", "lng"])
     assert joins._driver_points(rows) is None
+
+
+def test_placement_pass_output_bound(spark, monkeypatch):
+    """A driver pass holds at most DRIVER_PASS_ROWS output rows: a dense
+    radius join (every point within the radius of every query) and a
+    PIP join of overlapping polygons whose output would pass the bound
+    stop one slice past it, drop their driver rows and run the
+    distributed pass, with the same rows as at the bound. PAIR_CHUNK is
+    cut to 120 so that each pass yields slices of 120 rows."""
+    rng = np.random.default_rng(18)
+    points = pd.DataFrame({
+        "point_id": np.arange(400, dtype=np.int64),
+        "lat": rng.uniform(40.0, 41.0, 400),
+        "lng": rng.uniform(-74.5, -73.5, 400),
+    })
+    queries = _queries(np.column_stack([
+        rng.uniform(40.2, 40.8, 12), rng.uniform(-74.3, -73.7, 12)
+    ]))
+    box = [
+        {"lat": 39.5, "lng": -75.0}, {"lat": 39.5, "lng": -73.0},
+        {"lat": 41.5, "lng": -73.0}, {"lat": 41.5, "lng": -75.0},
+        {"lat": 39.5, "lng": -75.0},
+    ]
+    polys = spark.createDataFrame(
+        [(f"p{i}", [box]) for i in range(3)],
+        "poly_id string, geometry array<array<struct<lat:double,lng:double>>>",
+    )
+    pdf = spark.createDataFrame(points)
+    q = spark.createDataFrame(queries)
+    ops = {
+        "radius": (
+            lambda: joins.radius_join(q, pdf, radius_km=400.0), 12 * 400,
+        ),
+        "pip": (
+            lambda: joins.pip_join(pdf, polys).select("point_id", "poly_id"),
+            3 * 400,
+        ),
+    }
+    monkeypatch.setattr(joins, "PAIR_CHUNK", 120)
+    real = joins._probe_local
+    held = []
+
+    def spy(*args):
+        out = real(*args)
+        held.append(out.num_rows)
+        return out
+
+    monkeypatch.setattr(joins, "_probe_local", spy)
+    for name, (op, n) in ops.items():
+        got = {}
+        for bound in (n, n - 1, n // 2):
+            monkeypatch.setattr(joins, "DRIVER_PASS_ROWS", bound)
+            mapped = _calls(monkeypatch, "_probe_mapped")
+            got[bound] = sorted(tuple(r) for r in op().collect())
+            assert len(mapped) == (bound < n), (name, bound)
+            assert held[-1] == min(n, (bound // 120 + 1) * 120), (name, bound)
+        assert len(got[n]) == n, name
+        assert got[n] == got[n - 1] == got[n // 2], name
+    assert {r[:2] for r in got[n]} == {
+        (p, f"p{i}") for p in points["point_id"] for i in range(3)
+    }
 
 
 def test_knn_stragglers_reuse_the_collected_points(spark, jobs_in, monkeypatch):
@@ -803,22 +906,3 @@ def test_knn_stragglers_reuse_the_collected_points(spark, jobs_in, monkeypatch):
     assert [c[0] for c in stragglers] == [8]
     assert (call_jobs, collect_jobs) == (2, 0)
     _assert_knn([tuple(r) for r in rows], points, _duck_knn(points, queries, K))
-
-
-def test_haversine_sql_text_equals_the_column_build(spark):
-    """The joins' SQL-text haversine analyzes to the same expression as
-    the public Column-built ``haversine_km``."""
-    df = spark.createDataFrame(
-        [(1.0, 2.0, 3.0, 4.0)], "_qlat double, _qlng double, _plat double, _plng double"
-    )
-
-    def analyzed(col):
-        plan = df.select(col.alias("d"))._jdf.queryExecution().analyzed()
-        return plan.projectList().head().child()
-
-    text = analyzed(F.expr(joins._HAVERSINE_SQL))
-    built = analyzed(joins.haversine_km(
-        F.col("_qlat"), F.col("_qlng"), F.col("_plat"), F.col("_plng")
-    ))
-    assert text.semanticEquals(built)
-    assert "decimal" not in text.dataType().simpleString()
