@@ -1,7 +1,8 @@
 """Near-duplicate text kernel (NumPy and Arrow, no Spark): word shingles
 over UTF-8 bytes, a vectorized XXH64 bit-identical to Spark's
-``xxhash64``, the MinHash permuted-min signature and LSH band keys, the
-SimHash bit-sum, and exact shingle-set overlaps for Jaccard.
+``xxhash64``, the MinHash permuted-min signature, LSH band keys and
+the in-bucket candidate pairs, the SimHash bit-sum, and exact
+shingle-set overlaps for Jaccard.
 
 Shingles follow ``textops.ngrams``: tokens are maximal runs of bytes
 other than ``' '`` (0x20; tabs and newlines belong to tokens). A text
@@ -37,8 +38,6 @@ _P4 = np.uint64(0x85EBCA77C2B2AE63)
 _P5 = np.uint64(0x27D4EB2F165667C5)
 _ZERO = np.uint64(0)
 _SPACE = 32
-_COMMA = 44
-_POW10 = 10 ** np.arange(20, dtype=np.uint64)
 
 
 def _rotl(x: np.ndarray, r: int) -> np.ndarray:
@@ -312,38 +311,65 @@ def shingle_overlaps(
     return inter, size[ia] + size[ib]
 
 
-def _decimal_csv(vals: np.ndarray):
-    """The strings ``','.join(str(v) for v in row)`` of each row of the
-    (rows, fields) uint64 matrix ``vals``, as ``(buf, start, length)``
-    with ``xxh64``'s read slack."""
-    rows, fields = vals.shape
-    digits = 1 + (vals[..., None] >= _POW10[1:]).sum(axis=-1)
-    col = np.cumsum(digits + 1, axis=1) - (digits + 1)
-    length = col[:, -1] + digits[:, -1]
-    width = int(length.max())
-    buf = np.zeros(rows * width + 8, dtype=np.uint8)
-    grid = buf[: rows * width].reshape(rows, width)
-    p = np.arange(_POW10.size - 1)
-    on = p < digits[..., None]
-    place = np.maximum(digits[..., None] - 1 - p, 0)
-    digit = (vals[..., None] // _POW10[place]) % np.uint64(10) + np.uint64(48)
-    r = np.broadcast_to(np.arange(rows)[:, None, None], on.shape)
-    grid[r[on], (col[..., None] + p)[on]] = digit[on]
-    grid[np.arange(rows)[:, None], col[:, :-1] + digits[:, :-1]] = _COMMA
-    return buf, np.arange(rows) * width, length
+def bucket_pairs(keys: np.ndarray, ids: pa.Array, max_pairs: int):
+    """The LSH candidate pairs of the documents with band keys ``keys``
+    ((ndocs, bands) int64) and ids ``ids`` (an Arrow array of integers
+    or strings, one per document).
+
+    Returns ``(ra, rb)``: for each distinct pair of ids a < b such that
+    a document of id a and a document of id b share a key, the first
+    document of id a and the first of id b, in ascending (a, b) order.
+    The order is Spark's: integers by value, strings by their UTF-8
+    bytes. A null id pairs with nothing, and a document never pairs with
+    its own id. Returns None, before any pair is built, when the buckets
+    hold more than ``bands * max_pairs`` in-bucket pairs, and after,
+    when more than ``max_pairs`` pairs are distinct."""
+    nb = keys.shape[1]
+    code = pc.rank(ids, sort_keys="ascending", tiebreaker="dense").to_numpy()
+    code = code.astype(np.int64) - 1
+    rows = np.flatnonzero(pc.is_valid(ids).to_numpy(zero_copy_only=False))
+    # one entry per (key, id): an id's repeated rows, or a key repeated
+    # across its bands, join a bucket once
+    key = keys[rows].ravel()
+    c = np.repeat(code[rows], nb)
+    order = np.lexsort((c, key))
+    key, c = key[order], c[order]
+    new = np.ones(len(key), dtype=bool)
+    new[1:] = (key[1:] != key[:-1]) | (c[1:] != c[:-1])
+    key, c = key[new], c[new]
+    start = np.flatnonzero(np.diff(key, prepend=key[:1] - 1) != 0)
+    size = np.diff(start, append=len(key))
+    # in a bucket the ids ascend: each entry pairs with every later one
+    later = np.repeat(size, size) - 1 - (np.arange(len(key)) - np.repeat(start, size))
+    if int(later.sum()) > nb * max_pairs:
+        return None
+    a = np.repeat(np.arange(len(key)), later)
+    b = a + 1 + np.arange(len(a)) - np.repeat(np.cumsum(later) - later, later)
+    first = rows[np.unique(code[rows], return_index=True)[1]]
+    n = max(len(first), 1)
+    pair = np.unique(c[a] * n + c[b])
+    if len(pair) > max_pairs:
+        return None
+    return first[pair // n], first[pair % n]
 
 
 def band_keys(sig: np.ndarray, bands: int) -> np.ndarray:
     """(ndocs, bands) int64 LSH bucket keys: for band k, Spark's
     ``xxhash64`` of ``concat_ws(',', k, sig[k*r], ..., sig[k*r + r - 1])``
-    with r = n_hashes / bands. Signature values are below 2^63, so their
-    decimal strings are those of the longs Spark would format."""
+    with r = n_hashes / bands. Signature values are below 2^63, so
+    Arrow's decimal strings of them are those of the longs Spark would
+    format."""
     nd, n_hashes = sig.shape
     if nd == 0:
         return np.empty((0, bands), dtype=np.int64)
     r = n_hashes // bands
-    fields = np.empty((nd, bands, r + 1), dtype=np.uint64)
-    fields[:, :, 0] = np.arange(bands, dtype=np.uint64)
-    fields[:, :, 1:] = sig.reshape(nd, bands, r)
-    buf, start, length = _decimal_csv(fields.reshape(nd * bands, r + 1))
-    return xxh64(buf, start, length).view(np.int64).reshape(nd, bands)
+    band = np.tile(np.arange(bands, dtype=np.uint64), nd)
+    fields = (band, *sig.reshape(nd * bands, r).T)
+    csv = pc.binary_join_element_wise(
+        *(pc.cast(pa.array(f), pa.string()) for f in fields), ","
+    )
+    _, off, chars = csv.buffers()
+    off = np.frombuffer(off, dtype=np.int32)[: len(csv) + 1]
+    buf = np.zeros(int(off[-1]) + 8, dtype=np.uint8)
+    buf[:-8] = np.frombuffer(chars, dtype=np.uint8, count=int(off[-1]))
+    return xxh64(buf, off[:-1], np.diff(off)).view(np.int64).reshape(nd, bands)

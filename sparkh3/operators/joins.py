@@ -53,7 +53,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import functions as H3F
-from .driver import bounded_collect
+from .driver import bounded_collect, collect_if_small
 
 EARTH_RADIUS_KM = 6371.007180918475
 
@@ -350,16 +350,9 @@ def probe_pass(
 
 def _driver_points(points: DataFrame) -> pa.Table | None:
     """``points`` as one Arrow table when it is small enough to probe on
-    the driver, else None. The optimizer's ``sizeInBytes`` (no job)
-    must be under ``DRIVER_POINT_BYTES`` before one bounded collect of
-    ``DRIVER_POINT_ROWS`` + 1 rows; more rows than the bound drop the
-    collect. Frames built from Python rows report Long.MaxValue, so they
-    never come up."""
-    est = points._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    if est > DRIVER_POINT_BYTES:
-        return None
-    table = bounded_collect(points, DRIVER_POINT_ROWS + 1)
-    return table if table.num_rows <= DRIVER_POINT_ROWS else None
+    the driver (``driver.collect_if_small`` under ``DRIVER_POINT_BYTES``
+    and ``DRIVER_POINT_ROWS``), else None."""
+    return collect_if_small(points, DRIVER_POINT_BYTES, DRIVER_POINT_ROWS)
 
 
 def _prober(lat: str, lng: str, levels: list, refine):

@@ -2,12 +2,13 @@
 ``xxhash64`` values recorded from Spark and a scalar XXH64 written from
 the public spec; the chunked shingle/signature/band-key pass against a
 per-document loop reference; SimHash against values recorded from
-Spark's JVM chain; and the exact shingle-set overlaps against Python
-sets."""
+Spark's JVM chain; the exact shingle-set overlaps and the LSH
+in-bucket candidate pairs against Python sets."""
 
 import random
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from sparkh3.kernel import text as kt
@@ -270,3 +271,90 @@ def test_shingle_overlaps_match_set_reference(monkeypatch, chunk, n):
     sets = [_shingle_set(t, n) for t in texts]
     assert inter.tolist() == [len(sets[a] & sets[b]) for a, b in zip(ia, ib)]
     assert total.tolist() == [len(sets[a]) + len(sets[b]) for a, b in zip(ia, ib)]
+
+
+def _spark_order(v):
+    """Spark's order of an id: integers by value, strings by UTF-8 bytes."""
+    return v.encode() if isinstance(v, str) else v
+
+
+def _bucket_pairs_ref(keys, ids):
+    """Sorted id pairs a < b whose rows share a key, from Python sets."""
+    members: dict[int, set] = {}
+    for row, i in zip(keys.tolist(), ids):
+        if i is not None:
+            for k in row:
+                members.setdefault(k, set()).add(i)
+    pairs = {
+        (a, b)
+        for ms in members.values()
+        for a in ms
+        for b in ms
+        if _spark_order(a) < _spark_order(b)
+    }
+    return sorted(pairs, key=lambda p: (_spark_order(p[0]), _spark_order(p[1])))
+
+
+def _bucket_pairs(keys, ids, max_pairs=1 << 20, type=None):
+    got = kt.bucket_pairs(keys, pa.array(ids, type), max_pairs)
+    if got is None:
+        return None
+    ra, rb = got
+    # each side is the first row of its id
+    assert all(ids.index(ids[r]) == r for r in [*ra, *rb])
+    return [(ids[a], ids[b]) for a, b in zip(ra, rb)]
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_bucket_pairs_match_set_reference(seed):
+    """Colliding keys across rows and bands, duplicated ids (a row of an
+    id may share a bucket another row of it does not), null ids and
+    negative ids."""
+    rng = np.random.default_rng(seed)
+    keys = rng.integers(-6, 40, size=(300, 4)).astype(np.int64)
+    ids = rng.integers(-50, 200, 300).tolist()
+    for r in rng.choice(300, 20, replace=False):
+        ids[r] = None
+    assert _bucket_pairs(keys, ids) == _bucket_pairs_ref(keys, ids)
+
+
+def test_bucket_pairs_giant_bucket_and_repeated_pairs():
+    """One key shared by 400 rows gives all of its pairs once; two ids
+    that share every band's key, and an id repeated in one bucket, pair
+    once; past the pair bound the answer is None."""
+    n = 400
+    keys = np.arange(4 * n, dtype=np.int64).reshape(n, 4)
+    keys[:, 1] = 7
+    keys[0] = keys[1]
+    ids = list(range(n))
+    ids[5] = ids[6]
+    want = _bucket_pairs_ref(keys, ids)
+    assert len(want) == (n - 1) * (n - 2) // 2
+    assert _bucket_pairs(keys, ids) == want
+    assert _bucket_pairs(keys, ids, max_pairs=len(want)) == want
+    assert _bucket_pairs(keys, ids, max_pairs=len(want) - 1) is None
+
+
+def test_bucket_pairs_string_ids_in_utf8_byte_order():
+    """Strings order by their UTF-8 bytes, as Spark's binary collation
+    does: 'Z' < 'a', '10' < '9', and U+FFFF before U+1F600, which UTF-16
+    order would reverse."""
+    ids = ["b", "a", None, "é", "z", "Z", "10", "9", "\U0001F600", "￿", "a", ""]
+    keys = np.zeros((len(ids), 2), dtype=np.int64)
+    keys[:, 1] = np.arange(len(ids))
+    got = _bucket_pairs(keys, ids)
+    assert got == _bucket_pairs_ref(keys, ids)
+    assert ("￿", "\U0001F600") in got and ("Z", "a") in got and ("10", "9") in got
+    assert _bucket_pairs(keys, ids, type=pa.large_string()) == got
+
+
+@pytest.mark.parametrize("type", [pa.int8(), pa.int32(), pa.int64()])
+def test_bucket_pairs_empty_and_null_sides(type):
+    """No rows, only null ids, or one id per bucket give no pairs."""
+    for keys, ids in (
+        (np.empty((0, 4), dtype=np.int64), []),
+        (np.zeros((3, 4), dtype=np.int64), [None, None, None]),
+        (np.arange(12, dtype=np.int64).reshape(3, 4), [1, 2, 3]),
+        (np.zeros((2, 4), dtype=np.int64), [4, 4]),
+    ):
+        assert _bucket_pairs(keys, ids, type=type) == []

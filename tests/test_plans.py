@@ -84,11 +84,12 @@ def test_nonbroadcast_pip_join_uses_shuffle_join(spark):
     )
 
 
-def _exchanges_run_by(spark, fn):
-    """Call ``fn`` and return its result with the description of every
-    Exchange in the SQL executions it ran, read from the SQL status
-    store: the plans that actually executed, including those that ran
-    inside the call, which the returned frame's plan does not show."""
+def _nodes_run_by(spark, fn):
+    """Call ``fn`` and return its result with the (name, description) of
+    every plan node in the SQL executions it ran, read from the SQL
+    status store: the plans that actually executed, including those
+    that ran inside the call, which the returned frame's plan does not
+    show."""
     store = spark._jsparkSession.sharedState().statusStore()
     bus = spark.sparkContext._jsc.sc().listenerBus()
     bus.waitUntilEmpty(30_000)
@@ -100,22 +101,24 @@ def _exchanges_run_by(spark, fn):
     for i in range(execs.size()):
         nodes = store.planGraph(execs.apply(i).executionId()).allNodes()
         found += [
-            nodes.apply(j).desc()
+            (nodes.apply(j).name(), nodes.apply(j).desc())
             for j in range(nodes.size())
-            if nodes.apply(j).name() == "Exchange"
         ]
     return out, found
 
 
-def test_minhash_banding_shuffles_no_text(spark):
+def test_minhash_banding_shuffles_no_text(spark, monkeypatch):
     """The banding shuffles run inside the call, where the pair list's
     checkpoint is built: read the plans of those executions. The
     band-key exchange must be among them, and no hash exchange may be
-    keyed on the text."""
+    keyed on the text. A row bound of 0 keeps this small corpus off the
+    whole driver pass."""
+    monkeypatch.setattr(textops, "DRIVER_DEDUP_ROWS", 0)
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    _, exchanges = _exchanges_run_by(
+    _, nodes = _nodes_run_by(
         spark, lambda: textops.minhash_lsh_dedup(docs, jaccard_threshold=0.4)
     )
+    exchanges = [desc for name, desc in nodes if name == "Exchange"]
     hashed = [d for d in exchanges if "hashpartitioning(" in d]
     assert any("hashpartitioning(_bucket#" in d for d in hashed), exchanges
     assert not [d for d in hashed if "text#" in d], hashed
@@ -125,6 +128,7 @@ def test_minhash_verify_intersects_each_pair_once(spark, monkeypatch):
     """The exact-Jaccard verify computes a pair's array_intersect once:
     an inlined ``_i`` would appear in the projection and again in the
     filter pushed into the join condition (3 times in the final plan)."""
+    monkeypatch.setattr(textops, "DRIVER_DEDUP_ROWS", 0)
     monkeypatch.setattr(textops, "DRIVER_VERIFY_BYTES", 0)
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     mh = textops.minhash_lsh_dedup(docs, jaccard_threshold=0.4)
@@ -137,6 +141,7 @@ def test_minhash_pair_list_is_built_in_the_call(spark, monkeypatch):
     """The candidate pair list is checkpointed before the call returns.
     A checkpoint left to the first action had its AQE stages compute the
     same checkpoint partition twice at once."""
+    monkeypatch.setattr(textops, "DRIVER_DEDUP_ROWS", 0)
     monkeypatch.setattr(textops, "DRIVER_VERIFY_BYTES", 0)
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     mh = textops.minhash_lsh_dedup(docs, jaccard_threshold=0.4)
@@ -152,6 +157,7 @@ def test_minhash_verify_shingles_each_candidate_once(spark, monkeypatch):
     """Both verify joins read the candidates' shingle sets through one
     exchange that the second join reuses, so the shingling projection
     (one ``regexp_extract_all``) runs once, not once per join side."""
+    monkeypatch.setattr(textops, "DRIVER_DEDUP_ROWS", 0)
     monkeypatch.setattr(textops, "DRIVER_VERIFY_BYTES", 0)
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     mh = textops.minhash_lsh_dedup(docs, jaccard_threshold=0.4)
@@ -161,17 +167,22 @@ def test_minhash_verify_shingles_each_candidate_once(spark, monkeypatch):
 
 
 def test_minhash_driver_verify_jobs(spark, jobs_in):
-    """At this scale the verify runs on the driver: the call takes 6
-    jobs (3 AQE stages of the banding, the pair list's checkpoint with
-    its head collected, the broadcast of the candidate ids and the text
-    fetch) and collecting the result, a local relation, none."""
+    """At this scale the whole pass runs on the driver: the call takes
+    one job (the bounded collect of the corpus) and starts no Python
+    worker, and collecting the result, a local relation, takes none."""
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    mh, call_jobs = jobs_in(
-        lambda: textops.minhash_lsh_dedup(docs, jaccard_threshold=0.4)
-    )
-    rows, collect_jobs = jobs_in(mh.collect)
+
+    def run():
+        mh, call_jobs = jobs_in(
+            lambda: textops.minhash_lsh_dedup(docs, jaccard_threshold=0.4)
+        )
+        rows, collect_jobs = jobs_in(mh.collect)
+        return rows, call_jobs, collect_jobs
+
+    (rows, call_jobs, collect_jobs), nodes = _nodes_run_by(spark, run)
     assert rows
-    assert call_jobs + collect_jobs <= 6, (call_jobs, collect_jobs)
+    assert call_jobs <= 1 and collect_jobs == 0, (call_jobs, collect_jobs)
+    assert not [n for n, _ in nodes if "ArrowEvalPython" in n], nodes
 
 
 def _text_exchanges(df):
@@ -204,6 +215,7 @@ def test_minhash_verify_moves_text_only_when_spread(spark, monkeypatch):
     when ``_spread`` widened a narrow scan, and then above the
     semi-join, so only candidate text moves. An input that is already
     wide keeps every text column out of every Exchange."""
+    monkeypatch.setattr(textops, "DRIVER_DEDUP_ROWS", 0)
     monkeypatch.setattr(textops, "DRIVER_VERIFY_BYTES", 0)
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     wide = spark.createDataFrame(docs.toArrow())

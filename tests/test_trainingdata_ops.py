@@ -2,11 +2,14 @@
 analysis, similarity search, multimodal plumbing."""
 
 import random
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType
 
 from sparkh3.kernel import text as ktext
 from sparkh3.operators import multimodal, similarity, textops
@@ -1953,9 +1956,14 @@ them is a candidate whatever its Jaccard."""
 
 
 class TestMinHashVerifyPaths:
-    """The driver verify and the distributed one (forced with a negative
-    text-byte bound, which even an empty candidate set exceeds) return
-    identical rows, Jaccard digits included."""
+    """The three placements return identical rows, Jaccard digits and
+    schema included: the whole pass on the driver (a sized frame, here
+    Arrow-built, of at most ``DRIVER_DEDUP_ROWS`` rows), the Spark
+    banding with the driver verify (past the row bound, or a frame built
+    from Python rows, which reports Long.MaxValue bytes), and the
+    distributed verify (forced with a negative text-byte bound, which
+    even an empty candidate set exceeds). Each runs at the row bound
+    n - 1, n and n + 1 for a frame of n rows."""
 
     TIE_A = HUB + " " + " ".join(f"a{i}" for i in range(63))
     TIE_B = HUB + " " + " ".join(f"b{i}" for i in range(64))
@@ -1980,27 +1988,74 @@ class TestMinHashVerifyPaths:
         "a document with words of its own",
     ]
 
-    def _frame(self, spark, id_type):
+    ARROW_IDS = {"bigint": pa.int64(), "int": pa.int32(), "string": pa.string()}
+
+    def _frame(self, spark, id_type, build="rows"):
         rows = list(enumerate(self.TEXTS, start=1))
         rows.append((3, HUB + " another row under id 3"))
         cast = str if id_type == "string" else int
+        if build == "arrow":
+            return spark.createDataFrame(pa.table({
+                "doc_id": pa.array([cast(i) for i, _ in rows], self.ARROW_IDS[id_type]),
+                "text": pa.array([t for _, t in rows], pa.string()),
+            }))
         return spark.createDataFrame(
             [(cast(i), t) for i, t in rows], f"doc_id {id_type}, text string"
         )
 
     @staticmethod
-    def _both(df, monkeypatch, threshold):
-        """(rows, schema) of the driver path, then of the distributed one."""
-        out = []
-        for bound in (textops.DRIVER_VERIFY_BYTES, -1):
-            monkeypatch.setattr(textops, "DRIVER_VERIFY_BYTES", bound)
-            mh = textops.minhash_lsh_dedup(
-                df, n_hashes=1, bands=1, jaccard_threshold=threshold
-            )
-            plan = mh._jdf.queryExecution().executedPlan().toString()
-            local = "LocalTableScan" in plan and "Exchange" not in plan
-            assert local == (bound >= 0), plan
-            out.append((sorted(map(tuple, mh.collect())), mh.schema))
+    def _paths(df, threshold, sized):
+        """{(row bound, byte bound): (path, rows with repr(jaccard),
+        schema)} under the default and a negative text-byte bound, at
+        the row bounds n - 1, n and n + 1 for a ``sized`` frame of n
+        rows, and at n + 1 for an unsized one (it takes the same path at
+        any). The path is the one that answered, and it must be the one
+        the bounds choose: the whole driver pass for a sized frame
+        within both, the driver verify within the byte bound only, else
+        the distributed verify."""
+        n = df.count()
+        real = {
+            name: getattr(textops, name)
+            for name in ("_dedup_on_driver", "_verify_on_driver")
+        }
+        taken = []
+
+        def spy(name):
+            def run(*args):
+                out = real[name](*args)
+                if out is not None:
+                    taken.append(name)
+                return out
+            return run
+
+        out = {}
+        cases = [
+            (rows, bound)
+            for rows in ((n - 1, n, n + 1) if sized else (n + 1,))
+            for bound in (textops.DRIVER_VERIFY_BYTES, -1)
+        ]
+        with pytest.MonkeyPatch.context() as mp:
+            for name in real:
+                mp.setattr(textops, name, spy(name))
+            for rows, bound in cases:
+                mp.setattr(textops, "DRIVER_DEDUP_ROWS", rows)
+                mp.setattr(textops, "DRIVER_VERIFY_BYTES", bound)
+                taken.clear()
+                mh = textops.minhash_lsh_dedup(
+                    df, n_hashes=1, bands=1, jaccard_threshold=threshold
+                )
+                plan = mh._jdf.queryExecution().executedPlan().toString()
+                # an empty input plans even the distributed verify local
+                local = "LocalTableScan" in plan and "Exchange" not in plan
+                assert local >= (bound >= 0), plan
+                want = (
+                    "distributed" if bound < 0
+                    else "_dedup_on_driver" if sized and rows >= n
+                    else "_verify_on_driver"
+                )
+                assert (taken or ["distributed"]) == [want], (rows, bound)
+                got = sorted((a, b, repr(j)) for a, b, j in mh.collect())
+                out[rows, bound] = (want, got, mh.schema)
         return out
 
     def test_hub_is_every_hub_documents_minimum(self):
@@ -2011,34 +2066,81 @@ class TestMinHashVerifyPaths:
         sig = ktext.signatures(data, offsets, 3, *ktext.minhash_coeffs(1))
         assert (sig == sig[texts.index(HUB)]).all()
 
-    @pytest.mark.parametrize("threshold", [0.0078, 0.007813])
-    @pytest.mark.parametrize("id_type", ["bigint", "int", "string"])
-    def test_identical_rows(self, spark, monkeypatch, id_type, threshold):
-        df = self._frame(spark, id_type)
-        (drv, drv_schema), (dist, dist_schema) = self._both(df, monkeypatch, threshold)
-        assert drv == dist
-        assert [f.dataType for f in drv_schema] == [f.dataType for f in dist_schema]
+    def _assert_identical(self, paths, id_type):
+        """Every path's rows and schema equal, with the 1/128 tie rounded
+        half up, the duplicated id paired once per row, and the empty
+        texts equal to each other."""
+        (_, first, schema), *rest = paths.values()
+        for _, rows, sch in rest:
+            assert rows == first
+            assert [f.dataType for f in sch] == [f.dataType for f in schema]
         cast = str if id_type == "string" else int
         ids = {t: cast(i) for i, t in enumerate(self.TEXTS, start=1)}
         a, b = sorted([ids[self.TIE_A], ids[self.TIE_B]])
-        assert (a, b, 0.007813) in drv
+        assert (a, b, "0.007813") in first
         # the duplicated id pairs once per row it names
-        dup = [r for r in drv if cast(3) in r[:2] and cast(1) in r[:2]]
+        dup = [r for r in first if cast(3) in r[:2] and cast(1) in r[:2]]
         assert len(dup) == 2
         # null, '' and all-space text are one empty shingle each
         empty = {ids[""], ids["   "], cast(9)}
-        assert {(x, y) for x, y, j in drv if j == 1.0} >= {
+        assert {(x, y) for x, y, j in first if j == "1.0"} >= {
             (x, y) for x in empty for y in empty if x < y
         }
+
+    @pytest.mark.parametrize("threshold", [0.0078, 0.007813])
+    @pytest.mark.parametrize("id_type", ["bigint", "int", "string"])
+    def test_identical_rows(self, spark, id_type, threshold):
+        """A frame built from Python rows never takes the whole driver
+        pass, whatever the row bound."""
+        df = self._frame(spark, id_type)
+        paths = self._paths(df, threshold, sized=False)
+        self._assert_identical(paths, id_type)
+
+    @pytest.mark.parametrize("id_type", ["bigint", "int", "string"])
+    def test_identical_rows_arrow_built(self, spark, id_type):
+        """An Arrow-built frame takes all three paths, by its bounds."""
+        df = self._frame(spark, id_type, "arrow")
+        paths = self._paths(df, 0.007813, sized=True)
+        assert {p for p, _, _ in paths.values()} == {
+            "_dedup_on_driver", "_verify_on_driver", "distributed"
+        }
+        self._assert_identical(paths, id_type)
 
     @pytest.mark.parametrize(
         "texts", [[], ["alpha beta gamma delta", "one two three four"]]
     )
-    def test_no_candidates_is_the_typed_empty_frame(self, spark, monkeypatch, texts):
-        df = spark.createDataFrame(
+    def test_no_candidates_is_the_typed_empty_frame(self, spark, texts):
+        """Both from Python rows and Arrow-built."""
+        rows = spark.createDataFrame(
             list(enumerate(texts)), "doc_id bigint, text string"
         )
-        (drv, drv_schema), (dist, dist_schema) = self._both(df, monkeypatch, 0.5)
-        assert drv == dist == []
-        assert drv_schema.names == ["id_a", "id_b", "jaccard"]
-        assert [f.dataType for f in drv_schema] == [f.dataType for f in dist_schema]
+        arrow = spark.createDataFrame(pa.table({
+            "doc_id": pa.array(range(len(texts)), pa.int64()),
+            "text": pa.array(texts, pa.string()),
+        }))
+        for df, sized in ((rows, False), (arrow, True)):
+            paths = self._paths(df, 0.5, sized)
+            assert {p for p, _, _ in paths.values()} >= {"_verify_on_driver", "distributed"}
+            for _, got, schema in paths.values():
+                assert got == []
+                assert schema.names == ["id_a", "id_b", "jaccard"]
+                assert [f.dataType for f in schema] == [
+                    f.dataType for f in rows.schema
+                ][:1] * 2 + [DoubleType()]
+
+    def test_concurrent_callers(self, spark):
+        """Four threads on one session each get the single-thread rows
+        from an Arrow-built corpus."""
+        df = self._frame(spark, "bigint", "arrow")
+
+        def call(_):
+            mh = textops.minhash_lsh_dedup(
+                df, n_hashes=1, bands=1, jaccard_threshold=0.007813
+            )
+            return sorted((a, b, repr(j)) for a, b, j in mh.collect())
+
+        want = call(None)
+        assert want
+        with ThreadPoolExecutor(4) as pool:
+            got = list(pool.map(call, range(8)))
+        assert all(g == want for g in got)
